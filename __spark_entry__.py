@@ -42,15 +42,14 @@ def _executor(spark: SparkSession, sf_dir: str) -> QueryExecutor:
     key = sf_dir.rstrip("/")
     if key not in _CACHE:
         src = _corpus.from_documents_table(spark, key).repartition(32, "doc_id").persist()
-        idx = build_index(spark, src, do_stem=False, build_packed=True)
+        idx = build_index(spark, src, do_stem=False)
         edges = _citation_edges(spark, key)
-        # the serving deployment: EVERY query type (keyword/phrase/boolean/
-        # mixed/PRF/LinkTo) runs off the packed compressed index — the long
-        # postings table is never scanned at query time
+        # EVERY query type (keyword/phrase/boolean/mixed/PRF/LinkTo) runs
+        # off the packed compressed index — the only thing QueryExecutor
+        # serves from
         _CACHE[key] = QueryExecutor(
             spark, idx, source_df=src, citations=edges,
             packed_citations=_pagerank.pack_citations(edges),
-            use_packed=True,
         )
     return _CACHE[key]
 
@@ -230,8 +229,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # round 5 (COVERAGE.md "driver-gate budget" section maps each one):
     # keyword_stopword_heavy (tests/test_golden_queries.py stopword-heavy
     # golden), wand_keyword + phrase_wand (keyword_bm25/phrase_bm25 ALREADY
-    # serve through wand_topk/phrase_topk under use_packed=True — pinned by
-    # tests/test_wand_resume.py parity + never-scans gates),
+    # serve through the packed WAND/phrase kernels — pinned by
+    # tests/test_wand_resume.py + tests/test_packed_only.py oracle parity),
     # spelling_correction (subsumed by spelling_corrected_search + the
     # Damerau-Levenshtein property tests), packed_roundtrip_positions
     # (tests/test_wand_resume.py::test_decode_postings_roundtrip + codec
@@ -282,11 +281,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # and the discriminating fixture in tests/test_edge_cases.py)
     q["prf_search"] = lambda spark, sf: _search(spark, sf, "merge batch #3")
     # QL/JM serves off the PACKED index too (wand.ql_topk: per-shard decode,
-    # dl from dls_vb, broadcast cf — no long-table scan at query time)
+    # dl from dls_vb, broadcast cf)
     q["ql_jm_keyword"] = lambda spark, sf: (
         (lambda ex: QueryExecutor(
             spark, ex.index, source_df=ex.source_df, scorer="ql",
-            use_packed=True,
         ).search("merge value", k=10)
          .select("doc_id", F.round(F.col("score"), 4).alias("score")))(
             _executor(spark, sf)
@@ -581,7 +579,7 @@ def _fielded_executor(spark, sf) -> QueryExecutor:
         docs = _docs(spark, key).select("doc_id", "text", "source")
         fidx = build_fielded_packed(spark, docs, _FIELD_WEIGHTS, do_stem=False)
         _FIELDED_EX[key] = QueryExecutor(
-            spark, ex.index, source_df=ex.source_df, use_packed=True,
+            spark, ex.index, source_df=ex.source_df,
             fielded_index=fidx,
         )
     return _FIELDED_EX[key]
@@ -630,7 +628,7 @@ def _packed_merge_roundtrip(spark, sf) -> DataFrame:
     halves = [
         build_index(
             spark, src.filter(f"doc_id % 2 = {i}"),
-            do_stem=False, build_packed=True, cache_postings=False,
+            do_stem=False, cache_postings=False,
         )
         for i in (0, 1)
     ]

@@ -9,9 +9,7 @@ merging; what stays explicit is what the optimizer cannot infer:
 
 * **skew**: hot terms (``import``/``def``-class tokens hit >30% of docs)
   never hit an unbounded reducer: term_stats rolls up from the packed
-  (term, doc_shard) group rows (bounded by construction), and the unpacked
-  fallback aggregates two-level — ``groupBy(term, salt)`` partials then a
-  final ``groupBy(term)``.
+  (term, doc_shard) group rows (bounded by construction).
 * **bounded posting rows**: packed postings are keyed ``(term, doc_shard)``
   where ``doc_shard = doc_id // shard_size``. A term over 10^12 docs never
   produces one giant array row; every row is <= shard_size entries and the
@@ -44,7 +42,6 @@ K1 = 1.2
 B = 0.75
 DEFAULT_TERM_BUCKETS = 64
 DEFAULT_DOC_SHARD_SIZE = 1 << 20  # 1M docs per shard row at scale
-DEFAULT_SALT = 16
 
 
 @dataclass
@@ -58,9 +55,11 @@ class IndexStats:
 class Index:
     """The queryable index: a set of DataFrames + tiny driver-side stats.
 
-    Columnar split mirrors the reference's frequency/positional file split
-    (ref: src/SearchEngine/AwesomeSearchEngine.java:91-100): ``positions`` is
-    its own column, so keyword queries never read it (Parquet column pruning).
+    Queries serve from ``packed`` alone; the long ``postings`` table is a
+    build intermediate (packing, merges, streaming compaction). Positions
+    stay their own stream (``positions`` / ``pos_vb``), mirroring the
+    reference's frequency/positional file split (ref:
+    src/SearchEngine/AwesomeSearchEngine.java:91-100).
     """
 
     doc_map: DataFrame      # doc_id, repo, path, commit, lang, doc_len, content_sha256
@@ -96,14 +95,14 @@ PACKED_SCHEMA = T.StructType(
         # byte offset into each stream plus the block's first doc_id. The
         # doc_id delta stream RESTARTS at each block head, so any block
         # decodes standalone — the query side skips whole blocks without
-        # touching their bytes (see wand._shard_topk_factory).
+        # touching their bytes (see wand._wand_pass).
         T.StructField("blk_doc_off", T.ArrayType(T.IntegerType()), False),
         T.StructField("blk_tf_off", T.ArrayType(T.IntegerType()), False),
         T.StructField("blk_dl_off", T.ArrayType(T.IntegerType()), False),
         # byte offset into pos_vb at each block's first doc marker: the
         # position stream ([tf, gap...] per doc) of any block run decodes
         # standalone, so phrase queries decode positions ONLY for blocks
-        # holding doc-level candidates (wand._phrase_shard_factory)
+        # holding doc-level candidates (wand._phrase_survivors)
         T.StructField("blk_pos_off", T.ArrayType(T.IntegerType()), False),
         T.StructField("blk_first_doc", T.ArrayType(T.LongType()), False),
     ]
@@ -292,8 +291,6 @@ def build_index(
     checkpoint_dir: str | None = None,
     n_term_buckets: int = DEFAULT_TERM_BUCKETS,
     doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE,
-    salt: int = DEFAULT_SALT,
-    build_packed: bool = True,
     cache: bool = True,
     cache_postings: bool = True,
 ) -> Index:
@@ -323,8 +320,8 @@ def build_index(
     if cache and cache_postings and checkpoint_dir is None:
         # cache_postings=False skips the columnar cache-write of the long
         # posting table (the single biggest memory-bandwidth item in the
-        # build) — right when serving runs off the packed index, which is
-        # cached regardless
+        # build) — queries serve off the packed index, which is cached
+        # regardless; the long table only feeds packing and merges
         postings = postings.persist()
 
     # doc_map never needs Python: sha256 and the stopword-inclusive token
@@ -359,62 +356,45 @@ def build_index(
         avgdl=float(stats_row["avgdl"]) or 1.0,
     )
 
-    packed = None
-    if build_packed:
-        def _packed():
-            # doc_len rides along from the postings pass — no doc_map join.
-            # Hash-repartition on (term, doc_shard) + local sort groups each
-            # posting run contiguously; the streaming packer then processes
-            # whole Arrow batches (no per-group dispatch). This IS the
-            # reference's sorted k-way merge (InvertedIndexMerger.java:34-112)
-            # expressed as Spark's sort-shuffle.
-            with_shard = postings.withColumn(
-                "doc_shard", (F.col("doc_id") / F.lit(doc_shard_size)).cast("long")
-            )
-            return (
-                with_shard.repartition("term", "doc_shard")
-                .sortWithinPartitions("term", "doc_shard", "doc_id")
-                .mapInPandas(
-                    _pack_stream_factory(stats.avgdl, n_term_buckets), PACKED_SCHEMA
-                )
-            )
-
-        packed = runner.run(
-            "packed", _packed,
-            partition_by=["term_bucket"], sort_within=["term", "doc_shard"],
+    def _packed():
+        # doc_len rides along from the postings pass — no doc_map join.
+        # Hash-repartition on (term, doc_shard) + local sort groups each
+        # posting run contiguously; the streaming packer then processes
+        # whole Arrow batches (no per-group dispatch). This IS the
+        # reference's sorted k-way merge (InvertedIndexMerger.java:34-112)
+        # expressed as Spark's sort-shuffle.
+        with_shard = postings.withColumn(
+            "doc_shard", (F.col("doc_id") / F.lit(doc_shard_size)).cast("long")
         )
-        if cache and checkpoint_dir is None:
-            # without this, every packed-path query replays the whole
-            # repartition+sort+pack pipeline (minutes at 10^6 docs)
-            packed = packed.persist()
+        return (
+            with_shard.repartition("term", "doc_shard")
+            .sortWithinPartitions("term", "doc_shard", "doc_id")
+            .mapInPandas(
+                _pack_stream_factory(stats.avgdl, n_term_buckets), PACKED_SCHEMA
+            )
+        )
 
-    if packed is not None:
-        # the pack shuffle already grouped every posting by term: df/cf are a
-        # cheap rollup of the (term, doc_shard) group rows — one aggregation
-        # over #groups rows instead of a second full pass over #postings
-        def _term_stats():
-            return (
-                packed.groupBy("term")
-                .agg(
-                    F.sum("n").cast("long").alias("df"),
-                    F.sum("cf").alias("cf"),
-                )
-                .withColumn("term_bucket", term_bucket_col(F.col("term"), n_term_buckets))
+    packed = runner.run(
+        "packed", _packed,
+        partition_by=["term_bucket"], sort_within=["term", "doc_shard"],
+    )
+    if cache and checkpoint_dir is None:
+        # without this, every query replays the whole
+        # repartition+sort+pack pipeline (minutes at 10^6 docs)
+        packed = packed.persist()
+
+    # the pack shuffle already grouped every posting by term: df/cf are a
+    # cheap rollup of the (term, doc_shard) group rows — one aggregation
+    # over #groups rows instead of a second full pass over #postings
+    def _term_stats():
+        return (
+            packed.groupBy("term")
+            .agg(
+                F.sum("n").cast("long").alias("df"),
+                F.sum("cf").alias("cf"),
             )
-    else:
-        # no packed table: two-level salted aggregation — partials on
-        # (term, salt) bound any single reducer's input even for a term
-        # present in most documents
-        def _term_stats():
-            partial = (
-                postings.groupBy("term", F.pmod(F.col("doc_id"), F.lit(salt)).alias("_salt"))
-                .agg(F.count(F.lit(1)).alias("pdf"), F.sum("tf").alias("pcf"))
-            )
-            return (
-                partial.groupBy("term")
-                .agg(F.sum("pdf").alias("df"), F.sum("pcf").alias("cf"))
-                .withColumn("term_bucket", term_bucket_col(F.col("term"), n_term_buckets))
-            )
+            .withColumn("term_bucket", term_bucket_col(F.col("term"), n_term_buckets))
+        )
 
     term_stats = runner.run(
         "term_stats", _term_stats,

@@ -1,33 +1,39 @@
-"""Query executor: AST -> composed DataFrame plan -> top-k.
+"""Query executor: AST -> one packed-index plan -> top-k.
 
 Spark-native rendition of the reference's QueryProcessor dispatch
-(ref: src/querying/QueryProcessor.java:139-169, 194-331):
+(ref: src/querying/QueryProcessor.java:139-169, 194-331). Like the
+reference, which answers every query type from its one compressed inverted
+index (InvertedIndexReader.java:111-162), every plan here reads the packed
+index (wand.py) — the long ``postings`` table is a build intermediate only:
 
-* keyword      -> postings filter (term-bucket pruned) + BM25 groupBy/agg
-* AND/OR/NOT   -> inner join / unionByName+distinct / left_anti on doc_id
-* phrase       -> chained doc_id joins with position-adjacency array algebra
-* prefix tok*  -> range filter on the sorted term column
-* LinkTo:ID    -> citation edge filter
+* keyword      -> block-max WAND (``wand.wand_topk``)
+* phrase       -> per-shard positional decode of the survivors' blocks
+* Mixed        -> phrase survivors seed the keyword WAND pass
+* prefix tok*  -> expanded from the cached vocabulary, else a term range
+* AND/OR/NOT   -> per-shard numpy set algebra (``wand.boolean_docs``)
+* LinkTo:ID    -> packed citation index (or raw edges), cogrouped by shard
+                  into a Boolean
 * spelling     -> Damerau-Levenshtein correction when a term has no postings
 * PRF #N       -> two-pass search, +10 most frequent tokens of the generated
                   snippets of the top-N docs at weight 0.25
+* scorer="ql"  -> the same shapes through ``wand.ql_topk``
 
-Every plan stays declarative: term lookups prune partitions via term_bucket,
-keyword scoring never touches the positions column (columnar pruning = the
-reference's frequency/positional file split), small per-query tables are
-broadcast.
+Every query is ONE Spark action: term lookups prune partitions via
+term_bucket, per-query term stats arrive by broadcast join.
 """
 
 from __future__ import annotations
 
 from collections import Counter
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import queries as Q
-from . import scoring
+from . import wand
 from .build import Index, DEFAULT_TERM_BUCKETS, _py_term_bucket
+from .scoring import PRF_WEIGHT
 from .spell import correct_terms
 from .textproc import preprocess_query_terms, tokenize_text
 
@@ -45,15 +51,25 @@ class QueryExecutor:
         source_df: DataFrame | None = None,
         scorer: str = "bm25",
         n_term_buckets: int = DEFAULT_TERM_BUCKETS,
-        use_packed: bool = False,
+        use_packed: bool = True,
         fielded_index=None,
     ):
+        # ``use_packed`` has one legal value: the packed index is the only
+        # thing queries are served from
+        if not use_packed or index.packed is None:
+            raise ValueError(
+                "QueryExecutor serves from the packed index only "
+                "(use_packed=True, an index with packed postings)"
+            )
+        if scorer not in ("bm25", "ql"):
+            raise ValueError(f"scorer must be 'bm25' or 'ql', not {scorer!r}")
         self.spark = spark
         self.index = index
-        # a fields.FieldedPackedIndex built over the SAME corpus: keyword
-        # queries then rank zone-weighted (the reference's QueryProcessor
-        # always applies ContentType weights, ref: DocumentRanker.java:
-        # 138-167); spelling/vocab/snippets/PRF keep using ``index``
+        # a fields.FieldedPackedIndex built over the SAME corpus: ranked
+        # queries then rank zone-weighted under bm25 (the reference's
+        # QueryProcessor always applies ContentType weights, ref:
+        # DocumentRanker.java:138-167); spelling/vocab/snippets/PRF keep
+        # using ``index``
         self.fielded_index = fielded_index
         self.citations = citations
         self.packed_citations = packed_citations
@@ -62,7 +78,6 @@ class QueryExecutor:
         self.n_buckets = n_term_buckets
         self._corrections: dict[str, str] = {}
         self.last_corrections: dict[str, str] = {}  # surfaced to formatters
-        self._query_terms: list[str] = []
         # driver-side vocabulary for O(1) existence checks (None = too big)
         self._vocab: frozenset[str] | None = None
         self._vocab_checked = False
@@ -71,36 +86,11 @@ class QueryExecutor:
         # per-query existence semi-filter — see bloom.py for the semantics
         self._bloom = None
         self._bloom_checked = False
-        # serve pure keyword/phrase queries from the packed compressed index
-        # (block-max WAND / positional decode) instead of the long table
-        self.use_packed = use_packed and index.packed is not None
 
     # ---- term access -----------------------------------------------------
 
     def _tokenize_query(self, text: str) -> list[str]:
         return preprocess_query_terms(text, do_stem=self.index.do_stem)
-
-    def _postings_for_terms(self, terms: list[str], *, with_positions: bool) -> DataFrame:
-        """Exact-term postings with partition pruning on term_bucket."""
-        buckets = sorted({_py_term_bucket(t, self.n_buckets) for t in terms})
-        cols = ["term", "doc_id", "tf"] + (["positions"] if with_positions else [])
-        return (
-            self.index.postings
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-            .select(*cols)
-        )
-
-    def _postings_for_prefix(self, prefix: str) -> DataFrame:
-        """tok* -> all matching terms' postings (ref: QueryProcessor.java:382-385).
-        Range filter on the term column; Parquet min/max stats prune files
-        because postings are written sorted by term within partitions."""
-        return (
-            self.index.postings
-            .filter((F.col("term") >= prefix) & (F.col("term") < prefix + "￿"))
-            .filter(F.col("term").startswith(prefix))
-            .select("term", "doc_id", "tf")
-        )
 
     def resolve_terms(
         self, terms: list[str], dedupe: bool = True
@@ -186,87 +176,65 @@ class QueryExecutor:
         # pass, QueryProcessor.java:397-417)
         return correct_terms(missing, self.index.term_stats)
 
-    # ---- leaf/composite doc-set + match plans ---------------------------
+    # ---- query specs ------------------------------------------------------
 
     PREFIX_EXPAND_MAX = 1000
 
-    def _keyword_matches(self, kw: Q.Keyword) -> DataFrame:
-        exact, prefixes, _ = self.resolve_terms(kw.terms)
-        parts = []
-        if exact:
-            parts.append(self._postings_for_terms(exact, with_positions=False))
+    def _expand_prefixes(self, prefixes: list[str]) -> tuple[list[str], list[str]]:
+        """Split prefix terms into (terms expanded from the cached
+        dictionary, prefixes left as term ranges). A prefix stays a range
+        when there is no cached vocab or it matches more than
+        PREFIX_EXPAND_MAX terms; the packed plans then select every term in
+        [p, p + U+FFFF) (``wand.term_rows``)."""
+        vocab = self._get_vocab() if prefixes else None
+        expanded: list[str] = []
+        ranges: list[str] = []
         for p in prefixes:
-            # dictionary-assisted expansion: resolve the matching terms from
-            # the (cached) term dictionary, then do bucket-pruned exact
-            # lookups instead of scanning the whole posting table; falls back
-            # to the range scan for huge vocabularies or explosive prefixes
-            vocab = self._get_vocab()
-            if vocab is not None:
-                matching = sorted(t for t in vocab if t.startswith(p))
-                if not matching:
-                    continue
-                if len(matching) <= self.PREFIX_EXPAND_MAX:
-                    parts.append(
-                        self._postings_for_terms(matching, with_positions=False)
-                    )
-                    continue
-            parts.append(self._postings_for_prefix(p))
-        if not parts:
-            return self._empty_matches()
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+            matching = None if vocab is None else sorted(t for t in vocab if t.startswith(p))
+            if matching is None or len(matching) > self.PREFIX_EXPAND_MAX:
+                ranges.append(p)
+            else:
+                expanded.extend(matching)
+        return expanded, ranges
 
-    def _phrase_matches(self, ph: Q.Phrase) -> DataFrame:
-        """Positional adjacency via array algebra (ref: QueryProcessor.java:
-        223-293): doc survives if for each consecutive term pair some
-        pos2 == pos1 + 1. Carries the running set of end-positions forward."""
-        terms, _, _ = self.resolve_terms(ph.terms, dedupe=False)
-        if not terms:
-            return self._empty_matches()
-        if len(terms) == 1:
-            return self._postings_for_terms(terms, with_positions=False)
-        base = (
-            self._postings_for_terms([terms[0]], with_positions=True)
-            .select("doc_id", F.col("positions").alias("_cur"))
-        )
-        for t in terms[1:]:
-            nxt = self._postings_for_terms([t], with_positions=True).select(
-                "doc_id", F.col("positions").alias("_next")
-            )
-            base = (
-                base.join(nxt, "doc_id")
-                .withColumn(
-                    "_cur",
-                    F.array_intersect(
-                        F.transform(F.col("_cur"), lambda x: x + 1), F.col("_next")
-                    ),
-                )
-                .filter(F.size("_cur") > 0)
-                .drop("_next")
-            )
-        phrase_docs = base.select("doc_id")
-        # score all phrase terms' postings restricted to surviving docs
-        return self._postings_for_terms(terms, with_positions=False).join(
-            phrase_docs, "doc_id", "left_semi"
-        )
+    def _keyword_terms(self, terms: list[str]) -> tuple[list[str], tuple[str, ...]]:
+        """Keyword bag -> (exact terms, corrected + vocab-expanded; prefix
+        ranges)."""
+        exact, prefixes, _ = self.resolve_terms(terms)
+        expanded, ranges = self._expand_prefixes(prefixes)
+        return exact + expanded, tuple(ranges)
 
-    def _doc_set(self, ast) -> DataFrame:
-        """Boolean algebra on doc_id sets (ref: UnrankedQueryResult.java:170-240)."""
+    def _ranked_spec(self, ast) -> wand.QuerySpec:
+        """Keyword / Phrase / Mixed AST -> the kernels' QuerySpec. Phrase
+        terms keep order and multiplicity; a prefix inside a phrase is
+        dropped (the parser keeps it as a token, phrases match exact terms)."""
+        if isinstance(ast, Q.Keyword):
+            return wand.QuerySpec([], *self._keyword_terms(ast.terms))
+        if isinstance(ast, Q.Phrase):
+            return wand.QuerySpec(self.resolve_terms(ast.terms, dedupe=False)[0], [])
+        ph_terms = self.resolve_terms(ast.phrase.terms, dedupe=False)[0]
+        return wand.QuerySpec(ph_terms, *self._keyword_terms(ast.keyword.terms))
+
+    def _bool_spec(self, ast, links: list):
+        """Boolean AST -> nested spec for wand.boolean_docs. Keyword leaves
+        become ("terms", exact[, prefix ranges]); LinkTo leaves become
+        ("link", target) and append their (target, doc_id) rows to
+        ``links``. The parser never puts a phrase inside a Boolean."""
         if isinstance(ast, Q.Boolean):
-            left = self._doc_set(ast.left)
-            right = self._doc_set(ast.right)
-            if ast.op == "AND":
-                return left.join(right, "doc_id", "left_semi")
-            if ast.op == "OR":
-                return left.unionByName(right).distinct()
-            if ast.op == "NOT":
-                return left.join(right, "doc_id", "left_anti")
-            raise ValueError(ast.op)
+            return (
+                ast.op.lower(),
+                self._bool_spec(ast.left, links),
+                self._bool_spec(ast.right, links),
+            )
         if isinstance(ast, Q.LinkTo):
-            return self._linkto_docs(ast)
-        return self._matches(ast).select("doc_id").distinct()
+            links.append(
+                self._linkto_docs(ast).select(
+                    F.lit(ast.doc_id).cast("long").alias("target"), "doc_id"
+                )
+            )
+            return ("link", ast.doc_id)
+        terms, ranges = self._keyword_terms(ast.terms)
+        return ("terms", terms, ranges) if ranges else ("terms", terms)
 
     def _linkto_docs(self, ast: Q.LinkTo) -> DataFrame:
         """LinkTo serves off the PACKED citation index when present
@@ -282,58 +250,6 @@ class QueryExecutor:
             raise ValueError("LinkTo query requires a citations DataFrame")
         return self.citations.filter(F.col("dst") == ast.doc_id).select(
             F.col("src").alias("doc_id")
-        )
-
-    def _matches(self, ast) -> DataFrame:
-        if isinstance(ast, Q.Keyword):
-            return self._keyword_matches(ast)
-        if isinstance(ast, Q.Phrase):
-            return self._phrase_matches(ast)
-        if isinstance(ast, Q.Mixed):
-            return self._phrase_matches(ast.phrase).unionByName(
-                self._keyword_matches(ast.keyword)
-            )
-        raise ValueError(f"no matches plan for {type(ast)}")
-
-    def _empty_matches(self) -> DataFrame:
-        return self.spark.createDataFrame([], "term string, doc_id long, tf int")
-
-    # ---- ranking ---------------------------------------------------------
-
-    def _term_pred(self, extra_terms: list[str] | None = None):
-        """Predicate restricting the broadcast term-stats side to this
-        query's terms (exact + corrected + prefix ranges + PRF extras)."""
-        terms = set(self._query_terms or [])
-        terms |= {self._corrections.get(t, t) for t in terms}
-        terms |= set(extra_terms or [])
-        exact = sorted(t for t in terms if not t.endswith("*"))
-        prefixes = sorted(t[:-1] for t in terms if t.endswith("*"))
-        pred = None
-        if exact:
-            pred = F.col("term").isin(exact)
-        for p in prefixes:
-            cond = (F.col("term") >= p) & (F.col("term") < p + "￿")
-            pred = cond if pred is None else (pred | cond)
-        return pred
-
-    def _score(
-        self,
-        matches: DataFrame,
-        weight_col: str | None = None,
-        extra_terms: list[str] | None = None,
-    ) -> DataFrame:
-        st = self.index.stats
-        pred = self._term_pred(extra_terms)
-        if self.scorer == "bm25":
-            return scoring.bm25_score(
-                matches, self.index.doc_map, self.index.term_stats,
-                n_docs=st.n_docs, avgdl=st.avgdl, weight_col=weight_col,
-                term_pred=pred,
-            )
-        return scoring.ql_jm_score(
-            matches, self.index.doc_map, self.index.term_stats,
-            total_tokens=st.total_tokens, weight_col=weight_col,
-            term_pred=pred,
         )
 
     RESULT_SCHEMA = "doc_id long, score double"
@@ -388,16 +304,12 @@ class QueryExecutor:
         Applied corrections are exposed as ``last_corrections``. The returned
         DataFrame is localized (k rows)."""
         pq = Q.parse(query, tokenize=self._tokenize_query)
-        self._corrections = {}
-        self._query_terms = Q.collect_terms(pq.ast)
-        exact_q = [t for t in self._query_terms if not t.endswith("*")]
-        if exact_q:
-            # _find_corrections checks existence against the cached vocab or
-            # the once-built Bloom filter (zero per-query actions either way)
-            self._corrections = self._find_corrections(exact_q)
+        exact_q = [t for t in Q.collect_terms(pq.ast) if not t.endswith("*")]
+        # _find_corrections checks existence against the cached vocab or the
+        # once-built Bloom filter (zero per-query actions either way)
+        self._corrections = self._find_corrections(exact_q) if exact_q else {}
         self.last_corrections = dict(self._corrections)
-        rows = self._run_once(pq, k)
-        return self._localize(rows)
+        return self._localize(self._run_once(pq, k))
 
     def search_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Batched serving: the whole workload in ONE Spark action.
@@ -416,12 +328,8 @@ class QueryExecutor:
         per-query kernels, one window for the global per-query top-k.
         Rank+score identical to calling ``search`` per query
         (tests/test_batch.py). Under ``scorer="ql"`` the batch serves
-        keyword bags through ``wand.ql_topk_many`` (QL has no phrase/Mixed
-        form — same as the single-query executor)."""
-        if not self.use_packed or self.scorer not in ("bm25", "ql"):
-            raise ValueError("search_many requires use_packed=True and bm25|ql")
-        from . import wand as _wand
-
+        keyword bags through ``wand.ql_topk_many``; QL phrase and Mixed
+        queries go through ``search``."""
         batchable = (
             (Q.Keyword,) if self.scorer == "ql" else (Q.Keyword, Q.Phrase, Q.Mixed)
         )
@@ -442,29 +350,18 @@ class QueryExecutor:
         self._corrections = self._find_corrections(exact_q) if exact_q else {}
         self.last_corrections = dict(self._corrections)
 
-        def _kw_terms(terms: list[str], text: str) -> list[str]:
-            exact, prefixes, _ = self.resolve_terms(terms)
-            expanded = self._expand_prefixes(prefixes)
-            if expanded is None:
+        specs: dict[str, tuple[list[str], list[str]]] = {}
+        for qid, pq in parsed.items():
+            spec = self._ranked_spec(pq.ast)
+            if spec.prefixes:
                 raise ValueError(
-                    f"batch prefix term in {text!r} is not "
+                    f"batch prefix term in {queries[qid]!r} is not "
                     "dictionary-expandable (no cached vocab or explosive "
                     "prefix) — run it through search()"
                 )
-            return exact + expanded
-
-        specs: dict[str, tuple[list[str], list[str]]] = {}
-        for qid, pq in parsed.items():
-            if isinstance(pq.ast, Q.Keyword):
-                specs[qid] = ([], _kw_terms(pq.ast.terms, queries[qid]))
-            elif isinstance(pq.ast, Q.Phrase):
-                ph, _, _ = self.resolve_terms(pq.ast.terms, dedupe=False)
-                specs[qid] = (ph, [])
-            else:  # Mixed
-                ph, _, _ = self.resolve_terms(pq.ast.phrase.terms, dedupe=False)
-                specs[qid] = (ph, _kw_terms(pq.ast.keyword.terms, queries[qid]))
+            specs[qid] = (spec.phrase, spec.keywords)
         if self.scorer == "ql":
-            return _wand.ql_topk_many(
+            return wand.ql_topk_many(
                 self.spark, self.index,
                 {qid: kw for qid, (_, kw) in specs.items()}, k=k,
                 n_term_buckets=self.n_buckets,
@@ -479,247 +376,77 @@ class QueryExecutor:
                 self.spark, self.fielded_index, specs, k=k,
                 n_term_buckets=self.n_buckets,
             )
-        return _wand.batch_topk(
+        return wand.batch_topk(
             self.spark, self.index, specs, k=k,
             n_term_buckets=self.n_buckets,
         )
 
     def _run_once(self, pq: Q.ParsedQuery, k: int) -> list:
-        if self.fielded_index is not None and self.scorer == "bm25":
-            # EVERY ranked query type gets zone weights — the reference's
-            # DocumentRanker.weightDocument iterates ContentType for
-            # keyword, phrase, Mixed, and PRF results alike
-            # (ref: DocumentRanker.java:138-167, ContentType.java:6-9).
-            # Boolean/LinkTo are unranked (recency-ordered, score NULL), so
-            # they fall through to the plain doc-set plans by design.
-            from .fields import (
-                fielded_mixed_topk,
-                fielded_phrase_topk,
-                fielded_wand_topk,
-            )
-
-            if isinstance(pq.ast, Q.Keyword):
-                if pq.prf > 0:
-                    rows = self._fielded_prf(pq, k)
-                    if rows is not None:
-                        return rows
-                else:
-                    exact, prefixes, _ = self.resolve_terms(pq.ast.terms)
-                    expanded = self._expand_prefixes(prefixes)
-                    # expanded is None only for a prefix query past the
-                    # vocab cache (no dictionary to expand against): the
-                    # query then falls through to the plain packed/
-                    # long-table plan, i.e. UNFIELDED ranking — zone
-                    # weights need enumerable prefix expansions
-                    if expanded is not None:
-                        return fielded_wand_topk(
-                            self.spark, self.fielded_index, exact + expanded,
-                            k=k, n_term_buckets=self.n_buckets,
-                        ).collect()
-            if pq.prf == 0 and isinstance(pq.ast, Q.Phrase):
-                terms, _, _ = self.resolve_terms(pq.ast.terms, dedupe=False)
-                return fielded_phrase_topk(
-                    self.spark, self.fielded_index, terms, k=k,
-                    n_term_buckets=self.n_buckets,
-                ).collect()
-            if pq.prf == 0 and isinstance(pq.ast, Q.Mixed):
-                ph_terms, _, _ = self.resolve_terms(
-                    pq.ast.phrase.terms, dedupe=False
-                )
-                exact, prefixes, _ = self.resolve_terms(pq.ast.keyword.terms)
-                expanded = self._expand_prefixes(prefixes)
-                if ph_terms and expanded is not None:
-                    return fielded_mixed_topk(
-                        self.spark, self.fielded_index, ph_terms,
-                        exact + expanded, k=k, n_term_buckets=self.n_buckets,
-                    ).collect()
-        if self.use_packed and self.scorer == "ql":
-            # QL/JM keyword queries serve off the packed index too (VERDICT
-            # r4 #8): dl rides in dls_vb, cf arrives broadcast like idf
-            from . import wand as _wand
-
-            if pq.prf == 0 and isinstance(pq.ast, Q.Keyword):
-                exact, prefixes, _ = self.resolve_terms(pq.ast.terms)
-                expanded = self._expand_prefixes(prefixes)
-                if expanded is not None:
-                    return _wand.ql_topk(
-                        self.spark, self.index, exact + expanded, k=k,
-                        n_term_buckets=self.n_buckets,
-                    ).collect()
-        if self.use_packed and self.scorer == "bm25":
-            from . import wand as _wand
-
-            if pq.prf > 0 and isinstance(pq.ast, Q.Keyword):
-                rows = self._packed_prf(pq, k)
-                if rows is not None:
-                    return rows
-            if pq.prf == 0 and isinstance(pq.ast, Q.Keyword):
-                exact, prefixes, _ = self.resolve_terms(pq.ast.terms)
-                expanded = self._expand_prefixes(prefixes)
-                if expanded is not None:
-                    return _wand.wand_topk(
-                        self.spark, self.index, exact + expanded, k=k,
-                        n_term_buckets=self.n_buckets,
-                    ).collect()
-            if pq.prf == 0 and isinstance(pq.ast, Q.Phrase):
-                terms, _, _ = self.resolve_terms(pq.ast.terms, dedupe=False)
-                return _wand.phrase_topk(
-                    self.spark, self.index, terms, k=k,
-                    n_term_buckets=self.n_buckets,
-                ).collect()
-            if pq.prf == 0 and isinstance(pq.ast, Q.Mixed):
-                ph_terms, _, _ = self.resolve_terms(
-                    pq.ast.phrase.terms, dedupe=False
-                )
-                exact, prefixes, _ = self.resolve_terms(pq.ast.keyword.terms)
-                expanded = self._expand_prefixes(prefixes)
-                if ph_terms and expanded is not None:
-                    return _wand.mixed_topk(
-                        self.spark, self.index, ph_terms, exact + expanded,
-                        k=k, n_term_buckets=self.n_buckets,
-                    ).collect()
-            if pq.prf == 0 and isinstance(pq.ast, Q.Boolean):
-                spec = self._packed_bool_spec(pq.ast)
-                if spec is not None:
-                    return _wand.boolean_docs(
-                        self.spark, self.index, spec, k=k,
-                        n_term_buckets=self.n_buckets,
-                    ).collect()
-        if Q.is_unranked(pq.ast):
-            docs = self._doc_set(pq.ast)
+        ast = pq.ast
+        if isinstance(ast, Q.LinkTo):
             return (
-                docs.withColumn("score", F.lit(None).cast("double"))
+                self._linkto_docs(ast)
+                .withColumn("score", F.lit(None).cast("double"))
                 .orderBy(F.col("doc_id").desc())
                 .limit(k)
                 .collect()
             )
-        matches = self._matches(pq.ast)
-        scored = scoring.top_k(self._score(matches), k)
-        if pq.prf > 0:
-            top = scored.collect()
-            prf_terms = self._prf_terms(pq, top, pq.prf)
-            if prf_terms:
-                pq.prf_terms = prf_terms
-                all_matches = matches.withColumn("weight", F.lit(1.0)).unionByName(
-                    self._postings_for_terms(prf_terms, with_positions=False)
-                    .withColumn("weight", F.lit(scoring.PRF_WEIGHT))
-                )
-                scored = scoring.top_k(
-                    self._score(all_matches, weight_col="weight", extra_terms=prf_terms),
-                    k,
-                )
-            else:
-                return top
-        return scored.collect()
-
-    def _packed_prf(self, pq: Q.ParsedQuery, k: int) -> list | None:
-        """Two-pass pseudo-relevance feedback entirely off the packed index:
-        pass-1 is block-max WAND, expansion terms come from the generated
-        snippets (identical driver-side machinery as the DataFrame path),
-        pass-2 is WAND again with expansion terms down-weighted to 0.25 —
-        the weight folds into idf because BM25 contributions are linear in it
-        (ref: DocumentRanker.java:175-185 weights PRF terms the same way).
-        Returns None when a prefix can't be dictionary-expanded — the caller
-        falls back to the long-table plan."""
-        from . import wand as _wand
-
-        exact, prefixes, _ = self.resolve_terms(pq.ast.terms)
-        expanded = self._expand_prefixes(prefixes)
-        if expanded is None:
-            return None
-        base = exact + expanded
-        top = _wand.wand_topk(
-            self.spark, self.index, base, k=k, n_term_buckets=self.n_buckets
-        ).collect()
-        prf_terms = self._prf_terms(pq, top, pq.prf)
-        if not prf_terms:
-            return top
-        pq.prf_terms = prf_terms
-        # _prf_terms filters against the RAW query tokens, so an expansion
-        # term can coincide with a CORRECTED base term; the long-table plan
-        # then scores it at weight 1.0 + 0.25 (both unioned posting sets) —
-        # mirror that exactly
-        base_set = set(base)
-        weights = {
-            t: (1.0 + scoring.PRF_WEIGHT) if t in base_set else scoring.PRF_WEIGHT
-            for t in prf_terms
-        }
-        all_terms = base + [t for t in prf_terms if t not in base_set]
-        return _wand.wand_topk(
-            self.spark, self.index, all_terms, k=k,
-            n_term_buckets=self.n_buckets, weights=weights,
-        ).collect()
-
-    def _fielded_prf(self, pq: Q.ParsedQuery, k: int) -> list | None:
-        """Two-pass PRF with zone weights on BOTH passes (the reference
-        weights PRF results by ContentType like any other ranked result —
-        DocumentRanker.java:138-167): pass 1 is fielded block-max WAND,
-        expansion terms come from the generated snippets (shared driver-side
-        machinery), pass 2 folds the 0.25 expansion weight into the
-        broadcast idf ON TOP of w_f. Returns None when a prefix can't be
-        dictionary-expanded (caller falls back to unfielded plans)."""
-        from .fields import fielded_wand_topk
-
-        exact, prefixes, _ = self.resolve_terms(pq.ast.terms)
-        expanded = self._expand_prefixes(prefixes)
-        if expanded is None:
-            return None
-        base = exact + expanded
-        top = fielded_wand_topk(
-            self.spark, self.fielded_index, base, k=k,
-            n_term_buckets=self.n_buckets,
-        ).collect()
-        prf_terms = self._prf_terms(pq, top, pq.prf)
-        if not prf_terms:
-            return top
-        pq.prf_terms = prf_terms
-        # same weight convention as _packed_prf: an expansion term that
-        # coincides with a base term scores at 1.0 + 0.25 (the long-table
-        # plan unions both posting sets)
-        base_set = set(base)
-        weights = {
-            t: (1.0 + scoring.PRF_WEIGHT) if t in base_set else scoring.PRF_WEIGHT
-            for t in prf_terms
-        }
-        all_terms = base + [t for t in prf_terms if t not in base_set]
-        return fielded_wand_topk(
-            self.spark, self.fielded_index, all_terms, k=k,
-            n_term_buckets=self.n_buckets, term_weights=weights,
-        ).collect()
-
-    def _expand_prefixes(self, prefixes: list[str]) -> list[str] | None:
-        """Resolve prefix terms against the cached dictionary. [] when there
-        are none; None when expansion isn't possible (no cached vocab or an
-        explosive prefix) — caller falls back to the range-scan plan."""
-        if not prefixes:
-            return []
-        vocab = self._get_vocab()
-        if vocab is None:
-            return None
-        out: list[str] = []
-        for p in prefixes:
-            matching = sorted(t for t in vocab if t.startswith(p))
-            if len(matching) > self.PREFIX_EXPAND_MAX:
-                return None
-            out.extend(matching)
-        return out
-
-    def _packed_bool_spec(self, ast):
-        """Boolean AST -> nested spec for wand.boolean_docs, or None when a
-        leaf isn't a plain keyword bag (prefix/phrase/LinkTo fall back to the
-        DataFrame doc-set plans)."""
-        if isinstance(ast, Q.Keyword):
-            exact, prefixes, _ = self.resolve_terms(ast.terms)
-            if prefixes:
-                return None
-            return ("terms", exact)
         if isinstance(ast, Q.Boolean):
-            left = self._packed_bool_spec(ast.left)
-            right = self._packed_bool_spec(ast.right)
-            if left is None or right is None:
-                return None
-            return (ast.op.lower(), left, right)
-        return None
+            links: list[DataFrame] = []
+            spec = self._bool_spec(ast, links)
+            return wand.boolean_docs(
+                self.spark, self.index, spec, k=k, n_term_buckets=self.n_buckets,
+                links=reduce(DataFrame.unionByName, links) if links else None,
+            ).collect()
+        spec = self._ranked_spec(ast)
+        top = self._rank(spec, k)
+        if pq.prf == 0:
+            return top
+        # two-pass pseudo-relevance feedback: pass 2 adds the expansion
+        # terms as keywords at 0.25 (ref: DocumentRanker.java:175-185).
+        # _prf_terms filters against the RAW query tokens, so an expansion
+        # term can coincide with a corrected or prefix-matched base keyword;
+        # it then scores at 1.0 + 0.25
+        prf_terms = self._prf_terms(pq, top, pq.prf)
+        if not prf_terms:
+            return top
+        pq.prf_terms = prf_terms
+        weights = {
+            t: (1.0 + PRF_WEIGHT) if spec.is_keyword(t) else PRF_WEIGHT
+            for t in prf_terms
+        }
+        keywords = spec.keywords + [t for t in prf_terms if not spec.is_keyword(t)]
+        return self._rank(spec._replace(keywords=keywords, weights=weights), k)
+
+    def _rank(self, spec: wand.QuerySpec, k: int) -> list:
+        """One ranked plan for ``spec``: QL/JM under scorer="ql"; under bm25
+        zone-weighted on a fielded executor (EVERY ranked query type, like
+        the reference's DocumentRanker.weightDocument, ref:
+        DocumentRanker.java:138-167 — never a silent unfielded fallback),
+        else plain block-max WAND, seeded by phrase survivors when the spec
+        has a phrase."""
+        args = (spec.phrase, spec.keywords) if spec.phrase else (spec.keywords,)
+        if self.scorer == "ql":
+            df = wand.ql_topk(
+                self.spark, self.index, spec.keywords, k, self.n_buckets,
+                phrase_terms=spec.phrase, prefixes=spec.prefixes,
+                weights=spec.weights,
+            )
+        elif self.fielded_index is not None:
+            from .fields import fielded_mixed_topk, fielded_wand_topk
+
+            fn = fielded_mixed_topk if spec.phrase else fielded_wand_topk
+            df = fn(
+                self.spark, self.fielded_index, *args, k, self.n_buckets,
+                spec.weights, spec.prefixes,
+            )
+        else:
+            fn = wand.mixed_topk if spec.phrase else wand.wand_topk
+            df = fn(
+                self.spark, self.index, *args, k, self.n_buckets,
+                spec.weights, spec.prefixes,
+            )
+        return df.collect()
 
     def _prf_terms(self, pq: Q.ParsedQuery, top_rows: list, depth: int) -> list[str]:
         """Pseudo-relevance feedback: most frequent new tokens of the

@@ -167,8 +167,8 @@ def fielded_bm25_topk(
 def _fielded_phrase_pairs(postings: DataFrame, terms: list[str]) -> DataFrame:
     """(doc_id, field) pairs where the exact phrase occurs WITHIN that field
     (positions never chain across zone boundaries — each field tokenizes
-    independently). Same adjacency algebra as the unfielded DataFrame plan
-    (executor._phrase_matches), keyed on (doc_id, field)."""
+    independently). The DataFrame form of ``wand._phrase_survivors``'s
+    adjacency check, keyed on (doc_id, field)."""
     base = (
         postings.filter(F.col("term") == terms[0])
         .select("doc_id", "field", F.col("positions").alias("_cur"))
@@ -376,33 +376,14 @@ def build_fielded_packed(
     )
 
 
-def _fielded_rows_with_idf(
-    fidx: FieldedPackedIndex,
-    terms: list[str],
-    n_term_buckets: int,
-    term_weights: dict[str, float] | None = None,
-) -> DataFrame:
-    """Bucket-pruned packed fielded rows of ``terms``: idf arrives
-    broadcast-joined and pre-multiplied by w_f (and the optional per-term
-    weight — PRF expansion at 0.25), ``avgdl`` is the row's FIELD's avgdl
-    (overrides ``wand._wand_pass``'s scalar). Shared by every fielded packed
-    query type."""
-    from .build import _py_term_bucket
+def _fielded_rows(fidx: FieldedPackedIndex, n_term_buckets: int):
+    """Row selector for every fielded packed plan: (terms, prefixes) ->
+    ``wand.term_rows`` over the fielded table, idf pre-multiplied by w_f and
+    an ``avgdl`` column holding the row's FIELD avgdl (overrides
+    ``wand._wand_pass``'s scalar; phrase evaluation groups rows by field)."""
+    from .wand import term_rows
 
-    buckets = sorted({_py_term_bucket(t, n_term_buckets) for t in terms})
-    ts = (
-        fidx.term_stats.filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .withColumn("idf", idf_col(F.col("df"), fidx.n_docs))
-        .select("term", "idf")
-    )
-    if term_weights:
-        tw = F.create_map(
-            *[F.lit(x) for t, w in term_weights.items() for x in (t, float(w))]
-        )
-        ts = ts.withColumn(
-            "idf", F.col("idf") * F.coalesce(tw[F.col("term")], F.lit(1.0))
-        )
+    idf = idf_col(F.col("df"), fidx.n_docs).alias("idf")
     wmap = F.create_map(
         *[F.lit(x) for f, w in sorted(fidx.field_weights.items())
           for x in (f, float(w))]
@@ -411,10 +392,8 @@ def _fielded_rows_with_idf(
         *[F.lit(x) for f, a in sorted(fidx.avgdl_by_field.items())
           for x in (f, float(a))]
     )
-    return (
-        fidx.packed.filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(ts), "term")
+    return lambda terms, prefixes: (
+        term_rows(fidx.packed, fidx.term_stats, terms, n_term_buckets, [idf], prefixes)
         .withColumn("idf", F.col("idf") * wmap[F.col("field")])
         .withColumn("avgdl", amap[F.col("field")])
     )
@@ -427,65 +406,21 @@ def fielded_wand_topk(
     k: int = 10,
     n_term_buckets: int = DEFAULT_TERM_BUCKETS,
     term_weights: dict[str, float] | None = None,
+    prefixes=(),
 ) -> DataFrame:
     """Zone-weighted BM25 top-k entirely off the packed fielded index — ONE
     Spark action, rank+score identical to ``fielded_bm25_topk`` (pinned by
     tests/test_fields.py): each (field, term) list enters the block-max WAND
-    loop as an independent list whose broadcast idf column arrives
-    pre-multiplied by w_f (and the optional per-term ``term_weights`` —
-    fielded PRF pass 2 down-weights expansion terms this way) and whose
-    per-row ``avgdl`` column overrides the dl normalizer inside
-    ``wand._wand_pass``. Skipping stays exact because each list's block_max
-    was packed against the same avgdl. Bucket-pruned scan + broadcast join +
-    per-shard applyInPandas + tiny global top-k — the same 100 TB shape as
-    ``wand.wand_topk``."""
-    from . import wand as _wand
+    loop as an independent list whose idf arrives pre-multiplied by w_f (and
+    by the optional per-term ``term_weights`` — fielded PRF pass 2
+    down-weights expansion terms this way) and whose per-row ``avgdl``
+    column overrides the dl normalizer inside ``wand._wand_pass``. Skipping
+    stays exact because each list's block_max was packed against the same
+    avgdl. Every term in a ``prefixes`` range is a query term too."""
+    from .wand import QuerySpec, _ranked_topk
 
-    if not terms:
-        return spark.createDataFrame([], _wand.RESULT_SCHEMA)
-    packed = _fielded_rows_with_idf(fidx, terms, n_term_buckets, term_weights)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _wand._shard_topk_factory(1.0, k), _wand.RESULT_SCHEMA
-    )
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
-def _fielded_phrase_eval(left, phrase_terms: list[str], avgdl_by_field):
-    """Per-shard fielded phrase evaluation: run ``wand._phrase_eval`` once
-    per FIELD present in the shard (the phrase must occur within a single
-    zone — positions never chain across zone boundaries) and merge-add the
-    per-field survivor scores. Each field's rows carry w_f-folded idf, and
-    the eval normalizes dl against that FIELD's avgdl, so the merged vector
-    is exactly sum_f w_f * sum_t idf*tfnorm_f over phrase-holding zones."""
-    import numpy as np
-
-    from . import wand as _wand
-
-    cand_ids = np.zeros(0, dtype=np.int64)
-    cand_scores = np.zeros(0, dtype=np.float64)
-    for f, grp in left.groupby("field", sort=True):
-        rows = {r["term"]: r for _, r in grp.iterrows()}
-        surv, sc = _wand._phrase_eval(
-            rows, phrase_terms, float(avgdl_by_field[f])
-        )
-        cand_ids, cand_scores = _wand._merge_scores(
-            cand_ids, cand_scores, surv, sc
-        )
-    return cand_ids, cand_scores
-
-
-def _fielded_phrase_shard_factory(terms: list[str], avgdl_by_field, k: int):
-    from . import wand as _wand
-
-    def shard_phrase(left: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return _wand._local_topk(
-                np.zeros(0, np.int64), np.zeros(0, np.float64), k
-            )
-        cand_ids, cand_scores = _fielded_phrase_eval(left, terms, avgdl_by_field)
-        return _wand._local_topk(cand_ids, cand_scores, k)
-
-    return shard_phrase
+    spec = QuerySpec([], list(terms), tuple(prefixes), term_weights)
+    return _ranked_topk(spark, _fielded_rows(fidx, n_term_buckets), spec, 1.0, k)
 
 
 def fielded_phrase_topk(
@@ -499,50 +434,9 @@ def fielded_phrase_topk(
     Spark action): the reference weights phrase results by ContentType
     exactly like keyword results (ref: DocumentRanker.java:138-167) — a doc
     scores w_f * sum_t idf*tfnorm_f for every zone f where the phrase
-    occurs. Rank+score identical to ``fielded_phrase_bm25_topk`` (pinned by
-    tests/test_fields.py)."""
-    from . import wand as _wand
-
-    if not terms:
-        return spark.createDataFrame([], _wand.RESULT_SCHEMA)
-    distinct_terms = list(dict.fromkeys(terms))
-    packed = _fielded_rows_with_idf(fidx, distinct_terms, n_term_buckets)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _fielded_phrase_shard_factory(terms, dict(fidx.avgdl_by_field), k),
-        _wand.RESULT_SCHEMA,
-    )
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
-def _fielded_mixed_shard_factory(
-    phrase_terms: list[str], keyword_terms: list[str], avgdl_by_field, k: int
-):
-    from . import wand as _wand
-
-    kw_distinct = set(dict.fromkeys(keyword_terms))
-
-    def shard_mixed(left: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return _wand._local_topk(
-                np.zeros(0, np.int64), np.zeros(0, np.float64), k
-            )
-        cand_ids, cand_scores = _fielded_phrase_eval(
-            left, phrase_terms, avgdl_by_field
-        )
-        kw_rows = [
-            (float(r["idf"]), np.asarray(r["block_max"], dtype=np.float64), r)
-            for _, r in left.iterrows()
-            if r["term"] in kw_distinct
-        ]
-        if kw_rows:
-            # avgdl arg is unused: every fielded row carries its own avgdl
-            # column, which _wand_pass prefers over the scalar
-            cand_ids, cand_scores = _wand._wand_pass(
-                kw_rows, 1.0, k, cand_ids, cand_scores
-            )
-        return _wand._local_topk(cand_ids, cand_scores, k)
-
-    return shard_mixed
+    occurs (phrases never span zones). Rank+score identical to
+    ``fielded_phrase_bm25_topk`` (pinned by tests/test_fields.py)."""
+    return fielded_mixed_topk(spark, fidx, terms, [], k, n_term_buckets)
 
 
 def fielded_mixed_topk(
@@ -552,80 +446,20 @@ def fielded_mixed_topk(
     keyword_terms: list[str],
     k: int = 10,
     n_term_buckets: int = DEFAULT_TERM_BUCKETS,
+    weights: dict[str, float] | None = None,
+    prefixes=(),
 ) -> DataFrame:
     """Zone-weighted Mixed top-k off the packed fielded index (ONE Spark
     action): per-field phrase survivors seed the candidate vector with their
     zone-weighted phrase-term mass, then every (field, keyword-term) list
     enters the block-max WAND loop as an independent list (w_f-folded idf,
     per-row avgdl). A term in both lists double-counts for survivors exactly
-    like the unioned long-table plan (``fielded_mixed_bm25_topk``)."""
-    from . import wand as _wand
+    like the unioned long-table plan (``fielded_mixed_bm25_topk``).
+    ``weights``/``prefixes`` apply to the keyword part."""
+    from .wand import QuerySpec, _ranked_topk
 
-    if not phrase_terms and not keyword_terms:
-        return spark.createDataFrame([], _wand.RESULT_SCHEMA)
-    all_terms = list(dict.fromkeys([*phrase_terms, *keyword_terms]))
-    packed = _fielded_rows_with_idf(fidx, all_terms, n_term_buckets)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _fielded_mixed_shard_factory(
-            phrase_terms, keyword_terms, dict(fidx.avgdl_by_field), k
-        ),
-        _wand.RESULT_SCHEMA,
-    )
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
-def _fielded_batch_shard_factory(
-    specs: dict[str, tuple[list[str], list[str]]], avgdl_by_field, k: int
-):
-    """applyInPandas: the UNION of all batch queries' (field, term) packed
-    rows in one doc_shard -> per-query zone-weighted local top-k. Each query
-    runs its single-query fielded kernel — keyword lists through
-    ``wand._wand_pass`` (per-row avgdl + w_f-folded idf), phrases through
-    ``_fielded_phrase_eval``, Mixed seeding WAND with the per-field phrase
-    survivors — over the ONE shared scan."""
-    from . import wand as _wand
-
-    ordered = [
-        (qid, list(ph), set(dict.fromkeys(kw)))
-        for qid, (ph, kw) in specs.items()
-    ]
-
-    def shard_batch(left: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return _wand._empty_batch_pdf()
-        triples = [
-            (
-                r["term"],
-                (float(r["idf"]), np.asarray(r["block_max"], dtype=np.float64), r),
-            )
-            for _, r in left.iterrows()
-        ]
-        parts = []
-        for qid, ph, kwset in ordered:
-            if ph:
-                cand_ids, cand_scores = _fielded_phrase_eval(
-                    left, ph, avgdl_by_field
-                )
-                if not kwset and cand_ids.size == 0:
-                    continue
-            else:
-                cand_ids = np.zeros(0, dtype=np.int64)
-                cand_scores = np.zeros(0, dtype=np.float64)
-            kw_rows = [tr for t, tr in triples if t in kwset]
-            if kw_rows:
-                # avgdl arg unused: every fielded row carries its own avgdl
-                cand_ids, cand_scores = _wand._wand_pass(
-                    kw_rows, 1.0, k, cand_ids, cand_scores
-                )
-            elif kwset and cand_ids.size == 0:
-                continue
-            pdf = _wand._local_topk(cand_ids, cand_scores, k)
-            if len(pdf):
-                pdf.insert(0, "query_id", qid)
-                parts.append(pdf)
-        return pd.concat(parts, ignore_index=True) if parts else _wand._empty_batch_pdf()
-
-    return shard_batch
+    spec = QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
+    return _ranked_topk(spark, _fielded_rows(fidx, n_term_buckets), spec, 1.0, k)
 
 
 def fielded_batch_topk(
@@ -642,14 +476,6 @@ def fielded_batch_topk(
     never silently ranks unfielded). Per-query results are rank+score
     identical to fielded_wand_topk / fielded_phrase_topk / fielded_mixed_topk
     (tests/test_batch.py)."""
-    from . import wand as _wand
+    from .wand import _ranked_batch
 
-    all_terms = sorted({t for ph, kw in specs.values() for t in [*ph, *kw]})
-    if not all_terms:
-        return spark.createDataFrame([], _wand.BATCH_TOPK_SCHEMA)
-    packed = _fielded_rows_with_idf(fidx, all_terms, n_term_buckets)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _fielded_batch_shard_factory(specs, dict(fidx.avgdl_by_field), k),
-        _wand.BATCH_RESULT_SCHEMA,
-    )
-    return _wand._batch_global_topk(local, k)
+    return _ranked_batch(spark, _fielded_rows(fidx, n_term_buckets), specs, 1.0, k)

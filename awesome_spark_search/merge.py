@@ -191,7 +191,7 @@ def merge_packed_indexes(
     probe when the caller guarantees disjointness (monotonic watermark)."""
     assert len(indexes) >= 2, "need at least two indexes to merge"
     assert all(ix.packed is not None for ix in indexes), (
-        "merge_packed_indexes requires packed indexes (build_packed=True)"
+        "merge_packed_indexes requires indexes with packed postings"
     )
     shard_sizes = {ix.doc_shard_size for ix in indexes}
     assert len(shard_sizes) == 1, (

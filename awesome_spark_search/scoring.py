@@ -1,5 +1,4 @@
-"""Relevance scoring as Catalyst column expressions (the hot path is 100%
-JVM-side / whole-stage-codegen; no Python in scoring).
+"""Relevance scoring constants and the JVM idf expression.
 
 Primary scorer (north rule): BM25
     score(d) = sum_t idf(t) * tf / (tf + k1*(1 - b + b*dl/avgdl))
@@ -9,15 +8,16 @@ Secondary scorer (reference fidelity): query-likelihood with Jelinek-Mercer
 smoothing, lambda=0.2 (ref: src/querying/ranking/DocumentRanker.java:33,
 138-167): score(d) = sum_t log((1-l)*tf/dl + l*cf/C).
 
-Both consume the same matched-postings shape:
-    (doc_id, term, tf [, weight]) x doc_map(doc_len) x term_stats(df, cf)
-and aggregate with groupBy(doc_id) — partial aggregation map-side, one
-shuffle keyed on doc_id, top-k via TakeOrderedAndProject.
+Both are evaluated per doc_shard over the packed index (wand.py): idf (BM25)
+or the global cf (QL) arrives as a broadcast-joined column computed from
+term_stats with ``idf_col``; top-k order is (score DESC, doc_id ASC) — the
+reference's HashMap iteration order is nondeterministic (ref:
+DocumentRanker.java:90-94), so the rebuild pins this tie-break and the test
+oracle encodes it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 K1 = 1.2
@@ -28,72 +28,3 @@ PRF_WEIGHT = 0.25  # down-weight for PRF-added terms (ref: DocumentRanker.java:3
 
 def idf_col(df_col, n_docs: int):
     return F.log((F.lit(float(n_docs)) - df_col + F.lit(0.5)) / (df_col + F.lit(0.5)) + F.lit(1.0))
-
-
-def bm25_score(
-    matches: DataFrame,
-    doc_map: DataFrame,
-    term_stats: DataFrame,
-    *,
-    n_docs: int,
-    avgdl: float,
-    weight_col: str | None = None,
-    term_pred=None,
-) -> DataFrame:
-    """matches(doc_id, term, tf[, weight]) -> (doc_id, score).
-
-    ``term_pred`` restricts the broadcast side to the query's terms BEFORE the
-    exchange — broadcasting the full dictionary would be fatal at a 100M-term
-    vocabulary. doc_map join is doc_id-equi; at scale it is the one shuffle
-    of the query.
-    """
-    ts = term_stats.select("term", "df")
-    if term_pred is not None:
-        ts = ts.filter(term_pred)
-    ts = F.broadcast(ts)
-    j = (
-        matches.join(ts, "term")
-        .join(doc_map.select("doc_id", "doc_len"), "doc_id")
-    )
-    tfnorm = F.col("tf") / (
-        F.col("tf")
-        + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("doc_len") / F.lit(float(avgdl)))
-    )
-    contrib = idf_col(F.col("df"), n_docs) * tfnorm
-    if weight_col is not None:
-        contrib = contrib * F.col(weight_col)
-    return j.groupBy("doc_id").agg(F.sum(contrib).alias("score"))
-
-
-def ql_jm_score(
-    matches: DataFrame,
-    doc_map: DataFrame,
-    term_stats: DataFrame,
-    *,
-    total_tokens: int,
-    weight_col: str | None = None,
-    lam: float = JM_LAMBDA,
-    term_pred=None,
-) -> DataFrame:
-    """Query-likelihood / Jelinek-Mercer (reference scorer)."""
-    ts = term_stats.select("term", "cf")
-    if term_pred is not None:
-        ts = ts.filter(term_pred)
-    ts = F.broadcast(ts)
-    j = (
-        matches.join(ts, "term")
-        .join(doc_map.select("doc_id", "doc_len"), "doc_id")
-    )
-    inner = (
-        F.lit(1.0 - lam) * F.col("tf") / F.greatest(F.col("doc_len"), F.lit(1))
-        + F.lit(lam) * F.col("cf") / F.lit(float(max(total_tokens, 1)))
-    )
-    prf_factor = F.col(weight_col) if weight_col is not None else F.lit(1.0)
-    return j.groupBy("doc_id").agg(F.sum(prf_factor * F.log(inner)).alias("score"))
-
-
-def top_k(scored: DataFrame, k: int) -> DataFrame:
-    """Deterministic top-k: (score DESC, doc_id ASC). The reference's HashMap
-    iteration order is nondeterministic (ref: DocumentRanker.java:90-94); the
-    rebuild pins this tie-break and the test oracle encodes it."""
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)

@@ -239,7 +239,6 @@ class IncrementalIndexer:
         self,
         base: "Index | None" = None,
         *,
-        build_packed: bool = False,
         doc_shard_size: int | None = None,
     ):
         """Materialize a queryable Index over base + streamed deltas — the
@@ -247,11 +246,9 @@ class IncrementalIndexer:
         corpus. term_stats/stats re-derive from the merged postings (cheap
         aggregations; at scale run per compaction, not per query).
 
-        ``build_packed=True`` additionally packs the merged postings into
-        the delta+VByte block-directory form (same streaming packer as the
-        batch build), so a continuously-ingested corpus serves the
-        block-max WAND / positional phrase / boolean packed paths too —
-        run it per compaction, like term_stats."""
+        The merged postings pack into the delta+VByte block-directory form
+        (same streaming packer as the batch build) — the form every query
+        serves from — so run it per compaction, like term_stats."""
         from .build import (
             DEFAULT_DOC_SHARD_SIZE,
             Index,
@@ -283,22 +280,18 @@ class IncrementalIndexer:
         stats = IndexStats(row["n"], row["t"], float(row["a"]) or 1.0)
         doc_map = doc_map.persist()
         postings = postings.persist()
-        packed = None
         shard = doc_shard_size or DEFAULT_DOC_SHARD_SIZE
-        if build_packed:
-            packed = (
-                postings.join(doc_map.select("doc_id", "doc_len"), "doc_id")
-                .withColumn(
-                    "doc_shard", (F.col("doc_id") / F.lit(shard)).cast("long")
-                )
-                .select("term", "doc_shard", "doc_id", "tf", "positions", "doc_len")
-                .repartition("term", "doc_shard")
-                .sortWithinPartitions("term", "doc_shard", "doc_id")
-                .mapInPandas(
-                    _pack_stream_factory(stats.avgdl, self.n_buckets), PACKED_SCHEMA
-                )
-                .persist()
+        packed = (
+            postings.join(doc_map.select("doc_id", "doc_len"), "doc_id")
+            .withColumn("doc_shard", (F.col("doc_id") / F.lit(shard)).cast("long"))
+            .select("term", "doc_shard", "doc_id", "tf", "positions", "doc_len")
+            .repartition("term", "doc_shard")
+            .sortWithinPartitions("term", "doc_shard", "doc_id")
+            .mapInPandas(
+                _pack_stream_factory(stats.avgdl, self.n_buckets), PACKED_SCHEMA
             )
+            .persist()
+        )
         return Index(
             doc_map=doc_map,
             postings=postings,

@@ -4,8 +4,9 @@ the engine with plain `spark.sql` alongside the Python API.
     register_index_views(spark, index)
     spark.sql("SELECT term, df FROM term_stats ORDER BY df DESC LIMIT 10")
 
-Plus a convenience BM25 SQL generator mirroring scoring.bm25_score for
-exploratory SQL use (the Python executor remains the production path).
+Plus a convenience BM25 SQL generator over the long postings view (the
+formula of scoring.py) for exploratory SQL use; the Python executor, which
+serves from the packed index, remains the production path.
 """
 
 from __future__ import annotations
@@ -17,7 +18,8 @@ from .scoring import K1, B
 
 
 def register_index_views(spark: SparkSession, index: Index, prefix: str = "") -> list[str]:
-    """Registers doc_map / postings / term_stats (+ packed if present).
+    """Registers doc_map / postings / term_stats / packed (a table set to
+    None is skipped).
     Returns the view names."""
     names = []
     for name, df in (

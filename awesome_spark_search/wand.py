@@ -1,4 +1,7 @@
-"""Block-max WAND top-k over the packed (compressed) index.
+"""Query serving over the packed (compressed) index — every query plan of
+``executor.QueryExecutor`` lives here: block-max WAND (keyword), phrase,
+Mixed, QL/JM, Boolean doc sets, and their batched forms, all reading term
+rows through ``term_rows``.
 
 The reference prunes scoring candidates with a most-distinct-terms-first
 heuristic (ref: src/querying/ranking/DocumentRanker.java:66-78). The rebuild's
@@ -24,6 +27,9 @@ Spark shape — scalable by construction:
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +38,7 @@ from pyspark.sql import types as T
 
 from . import codec
 from .build import Index, _py_term_bucket, K1, B
-from .scoring import idf_col
+from .scoring import JM_LAMBDA, idf_col
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -217,61 +223,143 @@ def _local_topk(cand_ids: np.ndarray, cand_scores: np.ndarray, k: int) -> pd.Dat
     return pd.DataFrame({"doc_id": cand_ids[sel], "score": cand_scores[sel]})
 
 
-def _term_rows(left: pd.DataFrame) -> list:
-    """Packed pandas rows -> [(idf, block_max ndarray, row), ...]."""
-    return [
-        (float(r["idf"]), np.asarray(r["block_max"], dtype=np.float64), r)
-        for _, r in left.iterrows()
-    ]
+def _no_scores() -> tuple[np.ndarray, np.ndarray]:
+    return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
 
 
-def _shard_topk_factory(avgdl: float, k: int):
-    """Returns the applyInPandas fn: packed rows of one doc_shard ->
-    local top-k (the ``_wand_pass`` loop with empty seeds). Doc lengths are
-    decoded from the blob itself (dls_vb), so no doc_map join/cogroup happens
-    at query time; per-term idf arrives as a column (broadcast-joined) so the
-    whole query is ONE Spark action."""
+class QuerySpec(NamedTuple):
+    """One ranked query as the shard kernels see it. ``phrase`` keeps order
+    and multiplicity (adjacency is checked term by term); ``keywords`` are
+    exact terms; every term inside a ``prefixes`` range is a keyword too
+    (prefixes the driver could not expand from its cached vocabulary);
+    ``weights`` scale per-keyword-term contributions (PRF expansion terms,
+    ref: DocumentRanker.java:38), unlisted terms at 1.0."""
 
-    def shard_topk(left: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return _local_topk(np.zeros(0, np.int64), np.zeros(0, np.float64), k)
-        cand_ids, cand_scores = _wand_pass(
-            _term_rows(left), avgdl, k,
-            np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64),
-        )
-        return _local_topk(cand_ids, cand_scores, k)
+    phrase: list
+    keywords: list
+    prefixes: tuple = ()
+    weights: dict | None = None
 
-    return shard_topk
+    def is_keyword(self, term: str) -> bool:
+        return term in self.keywords or term.startswith(self.prefixes)
 
 
-def _packed_with_idf(
-    index: Index, terms: list[str], n_term_buckets: int,
-    weights: dict[str, float] | None = None,
+def _term_filter(
+    table: DataFrame, terms: list[str], n_term_buckets: int, prefixes=()
 ) -> DataFrame:
-    """Bucket-pruned packed rows of ``terms`` with a broadcast-joined idf
-    column (weights, when given, are folded into idf — BM25 contributions
-    are linear in idf, so ``w * idf`` IS the weighted score; the PRF pass-2
-    down-weights its expansion terms this way, ref DocumentRanker.java:38)."""
-    st = index.stats
+    """Rows of a term-keyed table (packed or term_stats) for exact ``terms``
+    plus every term in the ranges [p, p + U+FFFF) of ``prefixes``. Exact
+    terms prune term_bucket partitions and push the term filter to the scan;
+    a prefix range cannot prune buckets (the hash spreads it over all of
+    them) but still pushes down as a min/max-prunable range."""
     buckets = sorted({_py_term_bucket(t, n_term_buckets) for t in terms})
-    ts = (
-        index.term_stats.filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .withColumn("idf", idf_col(F.col("df"), st.n_docs))
-        .select("term", "idf")
-    )
-    if weights:
-        wmap = F.create_map(
-            *[F.lit(x) for t, w in weights.items() for x in (t, float(w))]
+    if not prefixes:
+        return table.filter(F.col("term_bucket").isin(buckets)).filter(
+            F.col("term").isin(terms)
         )
-        ts = ts.withColumn(
-            "idf", F.col("idf") * F.coalesce(wmap[F.col("term")], F.lit(1.0))
-        )
-    return (
-        index.packed.filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(ts), "term")
+    conds = [(F.col("term") >= p) & (F.col("term") < p + "\uffff") for p in prefixes]
+    if terms:
+        conds.append(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
+    return table.filter(reduce(lambda a, b: a | b, conds))
+
+
+def term_rows(
+    packed: DataFrame,
+    term_stats: DataFrame,
+    terms: list[str],
+    n_term_buckets: int,
+    stat_cols: list,
+    prefixes=(),
+) -> DataFrame:
+    """THE term-row selector of every ranked packed plan: the packed rows of
+    ``terms`` and ``prefixes`` (``_term_filter``) with ``stat_cols`` —
+    expressions over the same terms' term_stats rows (idf for BM25, the
+    global cf for QL) — broadcast-joined on, so a query stays ONE Spark
+    action with no driver-side stats collect."""
+    ts = _term_filter(term_stats, terms, n_term_buckets, prefixes).select(
+        "term", *stat_cols
     )
+    return _term_filter(packed, terms, n_term_buckets, prefixes).join(
+        F.broadcast(ts), "term"
+    )
+
+
+def _idf_rows(index: Index, n_term_buckets: int):
+    """Row selector for BM25 plans over ``index``: (terms, prefixes) ->
+    packed rows with an idf column."""
+    idf = idf_col(F.col("df"), index.stats.n_docs).alias("idf")
+    return lambda terms, prefixes: term_rows(
+        index.packed, index.term_stats, terms, n_term_buckets, [idf], prefixes
+    )
+
+
+def _shard_rows(left: pd.DataFrame, avgdl: float):
+    """One doc_shard's packed rows, parsed once and in (term, field) order so
+    every plan sums a document's contributions in the same order:
+    ``(term, (idf, block_max, row))`` triples for WAND, and per-field
+    ``(avgdl, {term: row})`` maps for phrase evaluation (fielded rows carry
+    their zone's avgdl; unfielded rows form one map with the index avgdl)."""
+    fielded = "field" in left.columns
+    left = left.sort_values(["term", "field"] if fielded else "term", kind="stable")
+    triples, groups = [], {}
+    for _, r in left.iterrows():
+        t = r["term"]
+        triples.append((t, (float(r["idf"]), np.asarray(r["block_max"], dtype=np.float64), r)))
+        field, adl = (r["field"], float(r["avgdl"])) if fielded else ("", avgdl)
+        groups.setdefault(field, (adl, {}))[1][t] = r
+    return triples, [groups[f] for f in sorted(groups)]
+
+
+def _bm25_scores(shard, spec: QuerySpec, avgdl: float, k: int):
+    """One query over one parsed shard (ref: QueryProcessor.java:328-331
+    dispatches phrase + keywords against the same index): phrase survivors
+    — per zone on fielded rows, phrases never span zones — seed the
+    candidates with their phrase-term BM25 mass, then the block-max WAND
+    loop adds every keyword term at its weight, to survivors too (a term in
+    both lists counts twice for them). Seeding first keeps skipping exact:
+    afterwards keyword bounds are the only remaining mass."""
+    triples, groups = shard
+    ids, scores = _no_scores()
+    if spec.phrase:
+        for adl, rows in groups:
+            ids, scores = _merge_scores(ids, scores, *_phrase_eval(rows, spec.phrase, adl))
+    w = spec.weights or {}
+    kw_rows = [
+        (idf * w.get(t, 1.0), bm, r) for t, (idf, bm, r) in triples if spec.is_keyword(t)
+    ]
+    if kw_rows:
+        ids, scores = _wand_pass(kw_rows, avgdl, k, ids, scores)
+    return ids, scores
+
+
+def _topk_factory(spec: QuerySpec, avgdl: float, k: int):
+    """applyInPandas: one doc_shard's packed rows -> that shard's top-k of
+    one query (``_bm25_scores``). Doc lengths decode from the blob (dls_vb),
+    so no doc_map join happens at query time."""
+
+    def shard(left: pd.DataFrame) -> pd.DataFrame:
+        return _local_topk(*_bm25_scores(_shard_rows(left, avgdl), spec, avgdl, k), k)
+
+    # the UDF's name is the per-shard step's label in the physical plan
+    shard.__name__ = (
+        "shard_topk" if not spec.phrase
+        else "shard_mixed" if spec.keywords or spec.prefixes
+        else "shard_phrase"
+    )
+    return shard
+
+
+def _ranked_topk(spark, select, spec: QuerySpec, avgdl: float, k: int) -> DataFrame:
+    """ONE Spark action: the query's rows (``select(terms, prefixes)``), the
+    per-shard kernel, and a tiny global TakeOrderedAndProject over
+    n_shards * k local rows."""
+    terms = list(dict.fromkeys([*spec.phrase, *spec.keywords]))
+    if not terms and not spec.prefixes:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    local = select(terms, spec.prefixes).groupBy("doc_shard").applyInPandas(
+        _topk_factory(spec, avgdl, k), RESULT_SCHEMA
+    )
+    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
 def wand_topk(
@@ -281,24 +369,57 @@ def wand_topk(
     k: int = 10,
     n_term_buckets: int = 64,
     weights: dict[str, float] | None = None,
+    prefixes=(),
 ) -> DataFrame:
-    """Top-k BM25 via block-max WAND on the packed index. Result is
-    rank-identical to the DataFrame BM25 path (verified in tests).
-    ``weights`` scales per-term contributions (PRF expansion terms at 0.25);
-    unlisted terms default to 1.0.
-
-    ONE Spark action: the per-term idf is attached via a broadcast join of
-    the (bucket-pruned, term-filtered) term_stats rows onto the packed rows
-    instead of a separate driver-side collect — halves the per-query fixed
-    cost on the serving path."""
-    assert index.packed is not None, "index built without packed postings"
-    if not terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    packed = _packed_with_idf(index, terms, n_term_buckets, weights)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _shard_topk_factory(index.stats.avgdl, k), RESULT_SCHEMA
+    """Top-k BM25 via block-max WAND on the packed index, rank+score
+    identical to the oracle (tests/oracle.py). ``weights`` scales per-term
+    contributions (PRF expansion terms at 0.25; BM25 is linear in idf, so
+    the kernel multiplies idf); every term in a ``prefixes`` range is a
+    query term too. ONE Spark action (``term_rows``)."""
+    return _ranked_topk(
+        spark, _idf_rows(index, n_term_buckets),
+        QuerySpec([], list(terms), tuple(prefixes), weights), index.stats.avgdl, k,
     )
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+
+
+def mixed_topk(
+    spark: SparkSession,
+    index: Index,
+    phrase_terms: list[str],
+    keyword_terms: list[str],
+    k: int = 10,
+    n_term_buckets: int = 64,
+    weights: dict[str, float] | None = None,
+    prefixes=(),
+) -> DataFrame:
+    """Mixed-query top-k ('"exact phrase" extra words') off the packed
+    index, ONE Spark action: every term's packed rows arrive in one
+    bucket-pruned scan and each doc_shard runs phrase-eval + seeded WAND in
+    a single applyInPandas pass (``_bm25_scores``). ``weights``/``prefixes``
+    apply to the keyword part, as in ``wand_topk``."""
+    return _ranked_topk(
+        spark, _idf_rows(index, n_term_buckets),
+        QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights),
+        index.stats.avgdl, k,
+    )
+
+
+def phrase_topk(
+    spark: SparkSession,
+    index: Index,
+    terms: list[str],
+    k: int = 10,
+    n_term_buckets: int = 64,
+) -> DataFrame:
+    """Exact-phrase top-k BM25 off the packed (compressed) index: positions
+    decode only for the phrase's terms, per doc-shard, and each shard emits
+    a bounded local top-k. A phrase term missing from the whole index means
+    no shard holds every term, so each returns empty on its own — no
+    driver-side existence collect."""
+    return _ranked_topk(
+        spark, _idf_rows(index, n_term_buckets), QuerySpec(list(terms), []),
+        index.stats.avgdl, k,
+    )
 
 
 BATCH_RESULT_SCHEMA = T.StructType(
@@ -322,59 +443,30 @@ BATCH_TOPK_SCHEMA = T.StructType(
 )
 
 
-def _batch_shard_factory(
-    specs: dict[str, tuple[list[str], list[str]]], avgdl: float, k: int
-):
-    """applyInPandas: the UNION of all batch queries' packed rows in one
-    doc_shard -> per-query local top-k. ``specs`` maps query_id ->
-    (phrase_terms, keyword_terms): keyword-only queries run their own
-    ``_wand_pass`` (block skipping stays per-query exact), phrase-only
-    queries run ``_phrase_eval``, Mixed queries seed WAND with the phrase
-    survivors — each exactly the single-query kernel. What is shared is the
-    expensive part: the single bucket-pruned scan, the shuffle, and the
-    per-action fixed cost."""
-    ordered = [
-        (qid, list(ph), list(dict.fromkeys(kw)))
-        for qid, (ph, kw) in specs.items()
-    ]
+def _empty_batch_pdf() -> pd.DataFrame:
+    return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
+        {"query_id": "object", "doc_id": "int64", "score": "float64"}
+    )
 
-    def shard_batch(left: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return _empty_batch_pdf()
-        rows = {r["term"]: r for _, r in left.iterrows()}
-        triples = {
-            t: (float(r["idf"]), np.asarray(r["block_max"], dtype=np.float64), r)
-            for t, r in rows.items()
-        }
-        parts = []
-        for qid, ph, kw in ordered:
-            if ph:
-                cand_ids, cand_scores = _phrase_eval(rows, ph, avgdl)
-                if not kw and cand_ids.size == 0:
-                    continue
-            else:
-                cand_ids = np.zeros(0, dtype=np.int64)
-                cand_scores = np.zeros(0, dtype=np.float64)
-            kw_rows = [triples[t] for t in kw if t in rows]
-            if kw_rows:
-                cand_ids, cand_scores = _wand_pass(
-                    kw_rows, avgdl, k, cand_ids, cand_scores
-                )
-            elif kw and cand_ids.size == 0:
-                continue  # keyword terms absent from this shard, no phrase seeds
-            pdf = _local_topk(cand_ids, cand_scores, k)
-            if len(pdf):
-                pdf.insert(0, "query_id", qid)
-                parts.append(pdf)
-        return pd.concat(parts, ignore_index=True) if parts else _empty_batch_pdf()
 
-    return shard_batch
+def _batch_pdf(scored, k: int) -> pd.DataFrame:
+    """(query_id, (ids, scores)) pairs of one shard -> its per-query local
+    top-k rows."""
+    parts = []
+    for qid, (ids, scores) in scored:
+        pdf = _local_topk(ids, scores, k)
+        if len(pdf):
+            pdf.insert(0, "query_id", qid)
+            parts.append(pdf)
+    return pd.concat(parts, ignore_index=True) if parts else _empty_batch_pdf()
 
 
 def _batch_global_topk(local: DataFrame, k: int) -> DataFrame:
     """Per-query global top-k over the shard-local batch rows: one window
     (n_shards * k * n_queries tiny rows; Spark pushes a WindowGroupLimit
-    below the exchange so each partition pre-prunes to k)."""
+    below the exchange so each partition pre-prunes to k), then the final
+    presentation sort by (query_id, rank) — two hash exchanges plus that
+    sort's range exchange."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(
@@ -388,6 +480,28 @@ def _batch_global_topk(local: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _ranked_batch(spark, select, specs: dict, avgdl: float, k: int) -> DataFrame:
+    """Batched BM25 top-k: ONE bucket-pruned scan of the union of every
+    query's terms; each doc_shard runs every query's own kernel
+    (``_bm25_scores`` — block skipping stays per-query exact) over the SAME
+    rows, parsed once; one window for the per-query global top-k."""
+    specs = {qid: QuerySpec(list(ph), list(kw)) for qid, (ph, kw) in specs.items()}
+    all_terms = sorted({t for s in specs.values() for t in [*s.phrase, *s.keywords]})
+    if not all_terms:
+        return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
+
+    def shard_batch(left: pd.DataFrame) -> pd.DataFrame:
+        shard = _shard_rows(left, avgdl)
+        return _batch_pdf(
+            ((qid, _bm25_scores(shard, s, avgdl, k)) for qid, s in specs.items()), k
+        )
+
+    local = select(all_terms, ()).groupBy("doc_shard").applyInPandas(
+        shard_batch, BATCH_RESULT_SCHEMA
+    )
+    return _batch_global_topk(local, k)
+
+
 def batch_topk(
     spark: SparkSession,
     index: Index,
@@ -397,23 +511,12 @@ def batch_topk(
 ) -> DataFrame:
     """Batched top-k over MIXED query types in ONE Spark action: each
     ``specs`` value is (phrase_terms, keyword_terms) — ([], kw) is a plain
-    keyword query, (ph, []) an exact phrase, (ph, kw) a Mixed query. One
-    bucket-pruned packed scan of the union of every query's terms, one
-    per-shard applyInPandas running each query's own kernel, one window for
-    the per-query global top-k. Per-query results are rank+score identical
-    to wand_topk / phrase_topk / mixed_topk (tests/test_batch.py)."""
-    assert index.packed is not None, "index built without packed postings"
-    all_terms = sorted(
-        {t for ph, kw in specs.values() for t in [*ph, *kw]}
+    keyword query, (ph, []) an exact phrase, (ph, kw) a Mixed query.
+    Per-query results are rank+score identical to wand_topk / phrase_topk /
+    mixed_topk (tests/test_batch.py)."""
+    return _ranked_batch(
+        spark, _idf_rows(index, n_term_buckets), specs, index.stats.avgdl, k
     )
-    if not all_terms:
-        return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
-    packed = _packed_with_idf(index, all_terms, n_term_buckets)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _batch_shard_factory(specs, index.stats.avgdl, k),
-        BATCH_RESULT_SCHEMA,
-    )
-    return _batch_global_topk(local, k)
 
 
 def wand_topk_many(
@@ -428,15 +531,11 @@ def wand_topk_many(
     The serving cost of a single query at scale is dominated by fixed
     per-action work (job scheduling, the packed scan's task launch, one
     shuffle) — amortizing it across a workload is the real queries/sec lever
-    on a 1000-executor cluster (the reference serves queries one at a time
-    from a REPL, src/SearchCli.java; batching is the Spark-first upgrade of
-    that loop). Every batch query's packed rows arrive in one bucket-pruned
-    scan (union of all terms), each doc_shard runs the per-query block-max
-    WAND loops over the SAME scanned rows, and the global per-query top-k is
-    a single window over n_shards * k * n_queries tiny local rows. Results
-    are rank+score identical to per-query ``wand_topk`` (pinned by
-    tests/test_batch.py). Keyword-only sugar over ``batch_topk``, which also
-    carries phrase and Mixed queries in the same action."""
+    on a 1000-executor cluster (the reference answers one query per call,
+    src/SearchEngine/SearchEngineTest.java:19-56 driving
+    AwesomeSearchEngine.java; batching is the Spark-first upgrade of that
+    loop). Keyword-only sugar over ``batch_topk``, which also carries phrase
+    and Mixed queries in the same action."""
     return batch_topk(
         spark, index, {qid: ([], ts) for qid, ts in term_sets.items()},
         k=k, n_term_buckets=n_term_buckets,
@@ -445,8 +544,8 @@ def wand_topk_many(
 
 def _ql_decode_row(r, lam: float, C: float) -> tuple[np.ndarray, np.ndarray]:
     """One packed row -> (doc_ids, per-doc QL/JM contributions). THE
-    single-vs-batched exactness contract: both shard factories score through
-    this one expression (ref formula: DocumentRanker.java:33 —
+    single-vs-batched exactness contract: every QL plan scores through this
+    one expression (ref formula: DocumentRanker.java:33 —
     log((1-l)*tf/dl + l*cf/C), dl floored at 1)."""
     ids = codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
     tfs = codec.vbyte_decode(bytes(r["tfs_vb"])).astype(np.float64)
@@ -459,54 +558,44 @@ def _ql_decode_row(r, lam: float, C: float) -> tuple[np.ndarray, np.ndarray]:
     return ids, contrib
 
 
-def _packed_with_cf(
-    index: Index, terms: list[str], n_term_buckets: int
-) -> DataFrame:
-    """Bucket-pruned packed rows of ``terms`` with the broadcast-joined
-    GLOBAL collection frequency (aliased cf_global: packed group rows carry
-    a per-(term, doc_shard) cf; the JM background model needs the term's
-    corpus-wide cf). The QL analog of ``_packed_with_idf``, shared by the
-    single-query and batched plans."""
-    buckets = sorted({_py_term_bucket(t, n_term_buckets) for t in terms})
-    ts = (
-        index.term_stats.filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .select("term", F.col("cf").alias("cf_global"))
+def _ql_shard(left: pd.DataFrame, lam: float, C: float):
+    """One doc_shard's rows -> ({term: row}, {term: decoded contributions}).
+    QL has no admission bound like BM25's idf*block_max (contributions are
+    negative log-mixtures), so every row decodes in full — once per shard,
+    shared by every query of a batch (exact: contributions are per-(term,
+    doc) values independent of the query mix)."""
+    rows = {r["term"]: r for _, r in left.iterrows()}
+    return rows, {t: _ql_decode_row(r, lam, C) for t, r in rows.items()}
+
+
+def _ql_scores(shard, spec: QuerySpec):
+    """One query's QL/JM scores over one decoded shard, summed in sorted
+    term order on every plan (single query and batch alike): phrase terms
+    add at the phrase survivors only, keyword terms (exact or in a prefix
+    range) at every doc, multiplied by their weight (PRF). A term in both
+    lists counts twice for survivors, like the BM25 Mixed kernel."""
+    rows, decoded = shard
+    surv = _phrase_survivors(rows, spec.phrase)[0] if spec.phrase else None
+    w = spec.weights or {}
+    ids, scores = _no_scores()
+    for t in sorted(decoded):
+        t_ids, c = decoded[t]
+        if surv is not None and t in spec.phrase:
+            m = _sorted_member(surv, t_ids)
+            ids, scores = _merge_scores(ids, scores, t_ids[m], c[m])
+        if spec.is_keyword(t):
+            ids, scores = _merge_scores(ids, scores, t_ids, c * w[t] if t in w else c)
+    return ids, scores
+
+
+def _cf_rows(index: Index, terms, n_term_buckets: int, prefixes=()) -> DataFrame:
+    """Packed rows with the broadcast GLOBAL collection frequency (aliased
+    cf_global: packed group rows carry a per-(term, doc_shard) cf; the JM
+    background model needs the term's corpus-wide cf)."""
+    return term_rows(
+        index.packed, index.term_stats, terms, n_term_buckets,
+        [F.col("cf").alias("cf_global")], prefixes,
     )
-    return (
-        index.packed.filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(ts), "term")
-    )
-
-
-def _empty_batch_pdf() -> pd.DataFrame:
-    return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-        {"query_id": "object", "doc_id": "int64", "score": "float64"}
-    )
-
-
-def _ql_shard_factory(lam: float, total_tokens: int, k: int):
-    """applyInPandas: packed rows of one doc_shard -> local QL/JM top-k.
-    No block skipping: QL contributions are negative log-mixtures, so there
-    is no admission bound like BM25's idf*block_max — the pass is a full
-    decode of the (bucket-pruned) query terms' lists, still one bounded
-    shard per Python invocation."""
-    C = float(max(total_tokens, 1))
-
-    def shard_ql(left: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return _local_topk(np.zeros(0, np.int64), np.zeros(0, np.float64), k)
-        cand_ids = np.zeros(0, dtype=np.int64)
-        cand_scores = np.zeros(0, dtype=np.float64)
-        for _, r in left.iterrows():
-            ids, contrib = _ql_decode_row(r, lam, C)
-            cand_ids, cand_scores = _merge_scores(
-                cand_ids, cand_scores, ids, contrib
-            )
-        return _local_topk(cand_ids, cand_scores, k)
-
-    return shard_ql
 
 
 def ql_topk(
@@ -516,63 +605,33 @@ def ql_topk(
     k: int = 10,
     n_term_buckets: int = 64,
     lam: float | None = None,
+    *,
+    phrase_terms=(),
+    prefixes=(),
+    weights: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Query-likelihood / Jelinek-Mercer top-k entirely off the packed index
-    (ref scorer: src/querying/ranking/DocumentRanker.java:33, 138-167 —
-    score(d) = sum_t log((1-l)*tf/dl + l*cf/C)). ONE Spark action, identical
-    shape to ``wand_topk``: bucket-pruned packed scan, broadcast-joined cf
-    column, per-shard decode (dl rides in dls_vb, so no doc_map join), tiny
-    global top-k. Rank+score identical to ``scoring.ql_jm_score`` over the
-    long table — sum over MATCHED terms only, dl floored at 1."""
-    from .scoring import JM_LAMBDA
-
-    assert index.packed is not None, "index built without packed postings"
-    if not terms:
+    """Query-likelihood / Jelinek-Mercer top-k off the packed index (ref
+    scorer: src/querying/ranking/DocumentRanker.java:33, 138-167 —
+    score(d) = sum_t log((1-l)*tf/dl + l*cf/C) over MATCHED terms, dl
+    floored at 1). ``terms`` are the keyword terms; ``phrase_terms``,
+    ``prefixes`` and ``weights`` give the phrase, prefix and PRF forms
+    (``_ql_scores``). ONE Spark action, ``wand_topk``'s shape: term_rows
+    with a broadcast cf column, per-shard decode (dl rides in dls_vb, so no
+    doc_map join), tiny global top-k."""
+    spec = QuerySpec(list(phrase_terms), list(terms), tuple(prefixes), weights)
+    all_terms = list(dict.fromkeys([*spec.phrase, *spec.keywords]))
+    if not all_terms and not spec.prefixes:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    if lam is None:
-        lam = JM_LAMBDA
-    st = index.stats
-    packed = _packed_with_cf(index, terms, n_term_buckets)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _ql_shard_factory(lam, st.total_tokens, k), RESULT_SCHEMA
-    )
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
-def _ql_batch_shard_factory(
-    term_sets: dict[str, list[str]], lam: float, total_tokens: int, k: int
-):
-    """applyInPandas: batched QL/JM over one doc_shard. Unlike the WAND
-    batch (where block skipping is per-query), QL always decodes a term's
-    full lists — so the decode is done ONCE per term and SHARED by every
-    query in the batch that uses it (exact: contributions are per-(term,
-    doc) values independent of the query mix)."""
-    C = float(max(total_tokens, 1))
-    ordered = [(qid, list(dict.fromkeys(ts))) for qid, ts in term_sets.items()]
+    lam = JM_LAMBDA if lam is None else lam
+    C = float(max(index.stats.total_tokens, 1))
 
     def shard_ql(left: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return _empty_batch_pdf()
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for _, r in left.iterrows():
-            decoded[r["term"]] = _ql_decode_row(r, lam, C)
-        parts = []
-        for qid, terms in ordered:
-            cand_ids = np.zeros(0, dtype=np.int64)
-            cand_scores = np.zeros(0, dtype=np.float64)
-            for t in terms:
-                if t in decoded:
-                    ids, contrib = decoded[t]
-                    cand_ids, cand_scores = _merge_scores(
-                        cand_ids, cand_scores, ids, contrib
-                    )
-            pdf = _local_topk(cand_ids, cand_scores, k)
-            if len(pdf):
-                pdf.insert(0, "query_id", qid)
-                parts.append(pdf)
-        return pd.concat(parts, ignore_index=True) if parts else _empty_batch_pdf()
+        return _local_topk(*_ql_scores(_ql_shard(left, lam, C), spec), k)
 
-    return shard_ql
+    local = _cf_rows(index, all_terms, n_term_buckets, spec.prefixes).groupBy(
+        "doc_shard"
+    ).applyInPandas(shard_ql, RESULT_SCHEMA)
+    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
 def ql_topk_many(
@@ -584,49 +643,25 @@ def ql_topk_many(
     lam: float | None = None,
 ) -> DataFrame:
     """Batched QL/JM keyword top-k in ONE Spark action — the ``ql_topk``
-    shape (bucket-pruned packed scan, broadcast global cf, per-shard decode)
-    shared by the whole batch, with each term's lists decoded once per shard
-    regardless of how many queries use it. Per-query rank+score identical to
-    ``ql_topk`` (tests/test_batch.py)."""
-    from .scoring import JM_LAMBDA
-
-    assert index.packed is not None, "index built without packed postings"
+    shape shared by the whole batch, each term's lists decoded once per
+    shard regardless of how many queries use it. Per-query scores are
+    EQUAL to ``ql_topk``'s: both sum through ``_ql_scores`` in the same
+    term order (tests/test_batch.py)."""
+    specs = {qid: QuerySpec([], list(ts)) for qid, ts in term_sets.items()}
     all_terms = sorted({t for ts in term_sets.values() for t in ts})
     if not all_terms:
         return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
-    if lam is None:
-        lam = JM_LAMBDA
-    st = index.stats
-    packed = _packed_with_cf(index, all_terms, n_term_buckets)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _ql_batch_shard_factory(term_sets, lam, st.total_tokens, k),
-        BATCH_RESULT_SCHEMA,
+    lam = JM_LAMBDA if lam is None else lam
+    C = float(max(index.stats.total_tokens, 1))
+
+    def shard_ql(left: pd.DataFrame) -> pd.DataFrame:
+        shard = _ql_shard(left, lam, C)
+        return _batch_pdf(((qid, _ql_scores(shard, s)) for qid, s in specs.items()), k)
+
+    local = _cf_rows(index, all_terms, n_term_buckets).groupBy("doc_shard").applyInPandas(
+        shard_ql, BATCH_RESULT_SCHEMA
     )
     return _batch_global_topk(local, k)
-
-
-def mixed_topk(
-    spark: SparkSession,
-    index: Index,
-    phrase_terms: list[str],
-    keyword_terms: list[str],
-    k: int = 10,
-    n_term_buckets: int = 64,
-) -> DataFrame:
-    """Mixed-query top-k ('"exact phrase" extra words') entirely off the
-    packed index, ONE Spark action: every term's packed rows arrive in one
-    bucket-pruned scan, and each doc_shard runs phrase-eval + seeded WAND in
-    a single applyInPandas pass (ref: QueryProcessor.java:328-331)."""
-    assert index.packed is not None, "index built without packed postings"
-    if not phrase_terms and not keyword_terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    all_terms = list(dict.fromkeys([*phrase_terms, *keyword_terms]))
-    packed = _packed_with_idf(index, all_terms, n_term_buckets)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _mixed_shard_factory(phrase_terms, keyword_terms, index.stats.avgdl, k),
-        RESULT_SCHEMA,
-    )
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
 def _positions_for_docs(
@@ -684,24 +719,22 @@ def _sliced_posting_values(
     return out
 
 
-def _phrase_eval(
-    rows: dict, terms: list[str], avgdl: float
-) -> tuple[np.ndarray, np.ndarray]:
-    """Exact-phrase evaluation within one doc_shard (ref adjacency
-    semantics: QueryProcessor.java:223-293). ``rows`` maps term -> packed
-    pandas row (idf joined in). Returns (survivor doc_ids sorted ASC, their
-    summed BM25 scores over the phrase's distinct terms) — empty arrays when
-    a term is missing from the shard or no doc holds the phrase.
+def _phrase_survivors(rows: dict, terms: list[str]):
+    """Exact-phrase survivors within one doc_shard (ref adjacency semantics:
+    QueryProcessor.java:223-293). ``rows`` maps term -> packed pandas row.
+    Returns (survivor doc_ids sorted ASC, {term: doc_ids}, {term: tfs}) over
+    the phrase's distinct terms — no survivors when a term is missing from
+    the shard or no doc holds the phrase.
 
     Two-stage decode, scalable at 1M-posting shards: stage 1 intersects the
     cheap doc_id blobs of all phrase terms (docs missing any term can never
     match); stage 2 decodes POSITIONS only for the blocks that contain the
     surviving docs, via the blk_pos_off directory — the position stream is
     the largest blob and for selective phrases almost none of it is read."""
-    no_match = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64))
+    none = np.zeros(0, dtype=np.int64)
     distinct_terms = list(dict.fromkeys(terms))
     if any(t not in rows for t in distinct_terms):
-        return no_match
+        return none, {}, {}
     # stage 1: doc-level intersection from the doc_id blobs only
     ids = {
         t: codec.delta_vbyte_decode_blocked(bytes(rows[t]["doc_ids_vb"]))
@@ -711,34 +744,45 @@ def _phrase_eval(
     for t in distinct_terms[1:]:
         surv = np.intersect1d(surv, ids[t], assume_unique=True)
         if surv.size == 0:
-            return no_match
+            return none, ids, {}
     tfs = {
         t: codec.vbyte_decode(bytes(rows[t]["tfs_vb"])).astype(np.int64)
         for t in distinct_terms
     }
-    if len(terms) > 1:
-        # stage 2: candidate-block-only position decode per term
-        pos = {
-            t: _positions_for_docs(rows[t], ids[t], tfs[t], surv)
-            for t in distinct_terms
-        }
-        # ordered positional adjacency: cur = positions where a prefix of
-        # the phrase ends; survive docs where every step keeps a match
-        cur = {int(d): pos[terms[0]][int(d)] for d in surv}
-        for t in terms[1:]:
-            nxt = pos[t]
-            cur = {
-                d: hits
-                for d, p in cur.items()
-                if len(hits := np.intersect1d(p + 1, nxt[d], assume_unique=True))
-            }
-            if not cur:
-                return no_match
-        survivors = np.fromiter(sorted(cur), np.int64)
-    else:
+    if len(terms) == 1:
         # a one-word "phrase" matches wherever the word occurs — no
         # adjacency to check, so the position stream is never touched
-        survivors = surv
+        return surv, ids, tfs
+    # stage 2: candidate-block-only position decode per term
+    pos = {
+        t: _positions_for_docs(rows[t], ids[t], tfs[t], surv)
+        for t in distinct_terms
+    }
+    # ordered positional adjacency: cur = positions where a prefix of the
+    # phrase ends; survive docs where every step keeps a match
+    cur = {int(d): pos[terms[0]][int(d)] for d in surv}
+    for t in terms[1:]:
+        nxt = pos[t]
+        cur = {
+            d: hits
+            for d, p in cur.items()
+            if len(hits := np.intersect1d(p + 1, nxt[d], assume_unique=True))
+        }
+        if not cur:
+            return none, ids, tfs
+    return np.fromiter(sorted(cur), np.int64), ids, tfs
+
+
+def _phrase_eval(
+    rows: dict, terms: list[str], avgdl: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """The BM25 step over ``_phrase_survivors``: (survivor doc_ids, their
+    summed BM25 scores over the phrase's distinct terms; ``rows`` carry the
+    idf column)."""
+    survivors, ids, tfs = _phrase_survivors(rows, terms)
+    if survivors.size == 0:
+        return _no_scores()
+    distinct_terms = list(ids)
     # doc lengths decode from the first term's blob (survivors are a
     # subset of every phrase term's posting list), sliced to survivors'
     # blocks via blk_dl_off — at 1M-posting shards the full-blob varint
@@ -758,103 +802,34 @@ def _phrase_eval(
     return survivors, scores
 
 
-def _phrase_shard_factory(terms: list[str], avgdl: float, k: int):
-    """applyInPandas: packed rows of the phrase terms in one doc_shard ->
-    local top-k of docs containing the exact phrase (``_phrase_eval``). idf
-    arrives as a joined column (one Spark action per query, like wand_topk)."""
-
-    def shard_phrase(left: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return _local_topk(np.zeros(0, np.int64), np.zeros(0, np.float64), k)
-        rows = {r["term"]: r for _, r in left.iterrows()}
-        survivors, scores = _phrase_eval(rows, terms, avgdl)
-        return _local_topk(survivors, scores, k)
-
-    return shard_phrase
-
-
-def _mixed_shard_factory(
-    phrase_terms: list[str], keyword_terms: list[str], avgdl: float, k: int
-):
-    """applyInPandas: packed rows of ALL the query's terms in one doc_shard
-    -> local top-k of the Mixed query (ref: QueryProcessor.java:328-331
-    dispatches phrase + remaining keywords against the same index).
-
-    Semantics mirror the DataFrame plan (``QueryExecutor._matches`` unions
-    phrase-survivor postings with keyword postings before scoring): phrase
-    survivors seed the candidate set with their phrase-term BM25 mass, then
-    the block-max WAND loop adds every keyword term's contributions — to all
-    matching docs, survivors included (a term in both lists counts twice for
-    survivors, exactly like the unioned long-table plan). Seeding first keeps
-    the skip criterion exact: after the seeds, keyword bounds are the only
-    remaining mass, so the standard admission invariant applies unchanged."""
-    kw_distinct = list(dict.fromkeys(keyword_terms))
-
-    def shard_mixed(left: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return _local_topk(np.zeros(0, np.int64), np.zeros(0, np.float64), k)
-        rows = {r["term"]: r for _, r in left.iterrows()}
-        cand_ids, cand_scores = _phrase_eval(rows, phrase_terms, avgdl)
-        kw_rows = [
-            (
-                float(rows[t]["idf"]),
-                np.asarray(rows[t]["block_max"], dtype=np.float64),
-                rows[t],
-            )
-            for t in kw_distinct
-            if t in rows
-        ]
-        if kw_rows:
-            cand_ids, cand_scores = _wand_pass(
-                kw_rows, avgdl, k, cand_ids, cand_scores
-            )
-        return _local_topk(cand_ids, cand_scores, k)
-
-    return shard_mixed
-
-
-def phrase_topk(
-    spark: SparkSession,
-    index: Index,
-    terms: list[str],
-    k: int = 10,
-    n_term_buckets: int = 64,
-) -> DataFrame:
-    """Exact-phrase top-k BM25 entirely off the packed (compressed) index:
-    positions decode only for the phrase's terms, per doc-shard, and each
-    shard emits a bounded local top-k (north rule: positional query support
-    over the delta+VByte posting blobs)."""
-    assert index.packed is not None, "index built without packed postings"
-    if not terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    distinct_terms = list(dict.fromkeys(terms))
-    # a phrase term missing from the whole index means no shard has all the
-    # terms, so every shard returns empty via its own completeness check —
-    # no driver-side existence collect needed
-    packed = _packed_with_idf(index, distinct_terms, n_term_buckets)
-    local = packed.groupBy("doc_shard").applyInPandas(
-        _phrase_shard_factory(terms, index.stats.avgdl, k), RESULT_SCHEMA
-    )
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
 DOCSET_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType(), False)])
 
 
-def _eval_docset(spec, by_term: dict) -> np.ndarray:
-    """Evaluate a boolean spec against per-term sorted doc_id arrays of ONE
-    doc_shard. spec = ("terms", [t...]) | (op, left, right), op in and/or/not.
-    Doc-sets partition cleanly by shard, so shard-local evaluation is exact."""
+def _spec_leaves(spec) -> tuple[list[str], list[str]]:
+    """All exact terms and prefixes of a boolean spec's keyword leaves."""
     if spec[0] == "terms":
-        arrs = [by_term[t] for t in spec[1] if t in by_term]
-        if not arrs:
-            return np.zeros(0, np.int64)
-        out = arrs[0]
-        for a in arrs[1:]:
-            out = np.union1d(out, a)
-        return out
-    left = _eval_docset(spec[1], by_term)
-    right = _eval_docset(spec[2], by_term)
+        return list(spec[1]), list(spec[2]) if len(spec) > 2 else []
+    if spec[0] == "link":
+        return [], []
+    lt, lp = _spec_leaves(spec[1])
+    rt, rp = _spec_leaves(spec[2])
+    return lt + rt, lp + rp
+
+
+def _eval_docset(spec, by_term: dict, by_link: dict) -> np.ndarray:
+    """Evaluate a boolean spec against per-term sorted doc_id arrays of ONE
+    doc_shard. spec = ("terms", [t...][, (prefix...)]) — docs holding any
+    listed term or any term in a prefix range — | ("link", target) — docs
+    citing target — | (op, left, right), op in and/or/not. Doc-sets
+    partition cleanly by shard, so shard-local evaluation is exact."""
+    if spec[0] == "terms":
+        prefixes = tuple(spec[2]) if len(spec) > 2 else ()
+        arrs = [a for t, a in by_term.items() if t in spec[1] or t.startswith(prefixes)]
+        return reduce(np.union1d, arrs) if arrs else np.zeros(0, np.int64)
+    if spec[0] == "link":
+        return by_link.get(spec[1], np.zeros(0, np.int64))
+    left = _eval_docset(spec[1], by_term, by_link)
+    right = _eval_docset(spec[2], by_term, by_link)
     if spec[0] == "and":
         return np.intersect1d(left, right, assume_unique=True)
     if spec[0] == "or":
@@ -870,35 +845,47 @@ def boolean_docs(
     spec,
     k: int = 10,
     n_term_buckets: int = 64,
+    links: DataFrame | None = None,
 ) -> DataFrame:
     """Boolean doc-set query over the packed index: per-shard decode of the
-    involved terms' doc_id blobs, numpy set algebra, recency top-k
-    (doc_id DESC — ref: QueryProcessor.java:112-114). Returns (doc_id, score
-    NULL)."""
-    assert index.packed is not None
-
-    def all_terms(s):
-        return list(s[1]) if s[0] == "terms" else all_terms(s[1]) + all_terms(s[2])
-
-    terms = sorted(set(all_terms(spec)))
-    if not terms:
+    involved terms' doc_id blobs, numpy set algebra (``_eval_docset``),
+    recency top-k (doc_id DESC — ref: QueryProcessor.java:112-114).
+    ``links`` carries the spec's LinkTo leaves as (target, doc_id) rows;
+    keyed by doc_shard they join the term rows through a cogroup, so the
+    query stays ONE Spark action. Returns (doc_id, score NULL)."""
+    terms, prefixes = _spec_leaves(spec)
+    terms = sorted(set(terms))
+    if not terms and not prefixes and links is None:
         return spark.createDataFrame([], "doc_id long, score double")
-    buckets = sorted({_py_term_bucket(t, n_term_buckets) for t in terms})
-    packed = (
-        index.packed.filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .select("doc_shard", "term", "doc_ids_vb")
+    packed = _term_filter(index.packed, terms, n_term_buckets, prefixes).select(
+        "doc_shard", "term", "doc_ids_vb"
     )
 
-    def shard_eval(left: pd.DataFrame) -> pd.DataFrame:
-        by_term: dict = {}
-        for _, r in left.iterrows():
-            by_term[r["term"]] = codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
-        out = _eval_docset(spec, by_term)
+    def shard_docs(left: pd.DataFrame, linked: pd.DataFrame | None) -> pd.DataFrame:
+        by_term = {
+            r["term"]: codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
+            for _, r in left.iterrows()
+        }
+        by_link = (
+            {t: np.unique(g["doc_id"].to_numpy(np.int64)) for t, g in linked.groupby("target")}
+            if linked is not None else {}
+        )
+        out = _eval_docset(spec, by_term, by_link)
         out = np.sort(out)[::-1][:k]  # shard-local recency top-k
         return pd.DataFrame({"doc_id": out})
 
-    local = packed.groupBy("doc_shard").applyInPandas(shard_eval, DOCSET_SCHEMA)
+    if links is None:
+        def shard_eval(left: pd.DataFrame) -> pd.DataFrame:
+            return shard_docs(left, None)
+
+        local = packed.groupBy("doc_shard").applyInPandas(shard_eval, DOCSET_SCHEMA)
+    else:
+        keyed = links.withColumn(
+            "doc_shard", (F.col("doc_id") / F.lit(index.doc_shard_size)).cast("long")
+        )
+        local = packed.groupBy("doc_shard").cogroup(keyed.groupBy("doc_shard")).applyInPandas(
+            shard_docs, DOCSET_SCHEMA
+        )
     return (
         local.orderBy(F.col("doc_id").desc())
         .limit(k)

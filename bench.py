@@ -95,12 +95,10 @@ def run(sf_dir: str, cpus: int, do_stem: bool = True) -> dict:
     n_docs = src.count()
 
     def _build():
-        # cache_postings=False: every timed query below serves off the packed
-        # index (ALL query types — keyword/phrase/boolean/prefix/mixed/PRF —
-        # dispatch to packed plans now); skipping the long-table cache-write
-        # keeps the build number about indexing, not double-buffering.
-        idx = build_index(spark, src, do_stem=do_stem, build_packed=True,
-                          cache_postings=False)
+        # cache_postings=False: every query serves off the packed index,
+        # so skipping the long-table cache-write keeps the build number
+        # about indexing, not double-buffering.
+        idx = build_index(spark, src, do_stem=do_stem, cache_postings=False)
         # force full materialization: packed.count() runs the whole
         # tokenize->postings->pack chain in ONE action; doc_map is narrow,
         # term_stats a tiny rollup off the cached packed table
@@ -110,9 +108,9 @@ def run(sf_dir: str, cpus: int, do_stem: bool = True) -> dict:
         return idx
 
     idx = timed("index_build", _build, reps=1)
-    # packed serving mode: keyword/phrase/boolean/prefix run off the
-    # compressed index (WAND, positional decode, doc-set algebra)
-    ex = QueryExecutor(spark, idx, source_df=src, use_packed=True)
+    # every query type serves off the compressed index (WAND, positional
+    # decode, doc-set algebra)
+    ex = QueryExecutor(spark, idx, source_df=src)
 
     # one untimed warmup query: first search pays Python-worker startup and
     # plan codegen; steady-state latency is the meaningful number
@@ -223,7 +221,7 @@ def run(sf_dir: str, cpus: int, do_stem: bool = True) -> dict:
 
         def _build_big():
             bidx = build_index(
-                spark, big_src, do_stem=True, build_packed=True,
+                spark, big_src, do_stem=True,
                 doc_shard_size=4096, cache_postings=False,
             )
             bidx.packed.count(); bidx.doc_map.count(); bidx.term_stats.count()

@@ -36,7 +36,6 @@ def main(argv=None) -> int:
     ap.add_argument("--no-stem", action="store_true")
     ap.add_argument("--term-buckets", type=int, default=64)
     ap.add_argument("--doc-shard-size", type=int, default=1 << 20)
-    ap.add_argument("--no-packed", action="store_true")
     args = ap.parse_args(argv)
 
     spark = SparkSession.builder.appName("ass-build-index").getOrCreate()
@@ -52,7 +51,6 @@ def main(argv=None) -> int:
         checkpoint_dir=os.path.join(args.out, "stages"),
         n_term_buckets=args.term_buckets,
         doc_shard_size=args.doc_shard_size,
-        build_packed=not args.no_packed,
     )
     summary = {
         "n_docs": idx.stats.n_docs,

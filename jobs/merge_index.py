@@ -53,8 +53,11 @@ def main(argv=None) -> int:
     spark = SparkSession.builder.appName("ass-merge-index").getOrCreate()
     indexes = [load_index(spark, r) for r in args.roots]
     for r, ix in zip(args.roots, indexes):
-        if ix.packed is None:
-            raise SystemExit(f"{r}: no packed stage — rebuild with packing on")
+        if ix is None:
+            raise SystemExit(f"{r}: no packed stage — rebuild it with jobs/build_index.py")
+        # serving never reads the long table; the merged root still carries
+        # it as the build intermediate later merges and compactions fold
+        ix.postings = spark.read.parquet(os.path.join(r, "stages", "postings"))
 
     # bucket-count validation (ADVICE r4): every stage must agree on the
     # term_bucket layout. Sources record theirs in build_summary.json

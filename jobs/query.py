@@ -3,7 +3,11 @@
 Usage:
     spark-submit --py-files awesome_spark_search.zip jobs/query.py \
         --index /path/to/index_root --source /path/to/source_table \
-        [--k 10] [--scorer bm25|ql] [--wand] "query one" '"a phrase"' ...
+        [--k 10] [--scorer bm25|ql] [--batch] "query one" '"a phrase"' ...
+
+Every query serves from the index's packed postings (stages/packed); an
+index without them, or a query the chosen mode cannot serve, ends with a
+one-line error on stderr and exit code 2.
 
 Prints one JSON line per query: {"query", "k", "wall_ms", "corrections",
 "results": [{"doc_id", "score"}, ...]}. With --batch, every query serves in
@@ -22,20 +26,24 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 from awesome_spark_search.build import Index, IndexStats
 from awesome_spark_search.executor import QueryExecutor
-from awesome_spark_search.wand import wand_topk
 
 
-def load_index(spark: SparkSession, root: str) -> Index:
+def load_index(spark: SparkSession, root: str) -> Index | None:
+    """The serving view of an index root: packed postings, term_stats and
+    doc_map (the long postings stage is a build intermediate and is not
+    read). None when the root has no readable stages/packed."""
     stages = os.path.join(root, "stages")
+    try:
+        packed = spark.read.parquet(os.path.join(stages, "packed"))
+    except AnalysisException:
+        return None
     doc_map = spark.read.parquet(os.path.join(stages, "doc_map"))
-    postings = spark.read.parquet(os.path.join(stages, "postings"))
     term_stats = spark.read.parquet(os.path.join(stages, "term_stats"))
-    packed_dir = os.path.join(stages, "packed")
-    packed = spark.read.parquet(packed_dir) if os.path.isdir(packed_dir) else None
     row = doc_map.selectExpr(
         "count(1) as n", "coalesce(sum(doc_len),0) as t", "coalesce(avg(doc_len),0.0) as a"
     ).collect()[0]
@@ -48,9 +56,50 @@ def load_index(spark: SparkSession, root: str) -> Index:
         if s.get("doc_shard_size"):
             kw["doc_shard_size"] = s["doc_shard_size"]
     return Index(
-        doc_map=doc_map, postings=postings, term_stats=term_stats,
+        doc_map=doc_map, postings=None, term_stats=term_stats,
         packed=packed, stats=stats, **kw,
     )
+
+
+def _lines(ex: QueryExecutor, queries: list[str], k: int, batch: bool):
+    """The JSON output dicts, one per query."""
+    if not batch:
+        for q in queries:
+            t0 = time.perf_counter()
+            rows = ex.search(q, k=k).collect()
+            yield {
+                "query": q,
+                "k": k,
+                "wall_ms": round((time.perf_counter() - t0) * 1000, 1),
+                # applied spelling corrections, surfaced like the reference's
+                # result-object corrections map (UnrankedQueryResult.java)
+                "corrections": ex.last_corrections,
+                "results": [{"doc_id": r["doc_id"], "score": r["score"]} for r in rows],
+            }
+        return
+    qmap = {f"q{i}": q for i, q in enumerate(queries)}
+    t0 = time.perf_counter()
+    rows = ex.search_many(qmap, k=k).collect()
+    wall = round((time.perf_counter() - t0) * 1000, 1)
+    by_qid: dict[str, list] = {}
+    for r in rows:
+        by_qid.setdefault(r["query_id"], []).append(r)
+    for i, q in enumerate(queries):
+        # corrections restricted to THIS query's tokens (the batch map
+        # covers every query; per-line output mirrors single-query mode)
+        q_terms = set(ex._tokenize_query(q))
+        yield {
+            "query": q,
+            "k": k,
+            "batch_wall_ms": wall,  # ONE action served the whole batch
+            "corrections": {
+                t: c for t, c in ex.last_corrections.items() if t in q_terms
+            },
+            "results": [
+                {"doc_id": r["doc_id"], "score": r["score"]}
+                for r in by_qid.get(f"q{i}", [])
+            ],
+        }
 
 
 def main(argv=None) -> int:
@@ -59,80 +108,33 @@ def main(argv=None) -> int:
     ap.add_argument("--source", default=None, help="source table (PRF/snippets)")
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--scorer", choices=["bm25", "ql"], default="bm25")
-    ap.add_argument("--wand", action="store_true", help="block-max WAND path")
     ap.add_argument(
         "--batch", action="store_true",
-        help="serve ALL queries in ONE Spark action (search_many over the "
-        "packed index; ranked one-pass types only - keyword/phrase/mixed)",
+        help="serve ALL queries in ONE Spark action (search_many; ranked "
+        "one-pass types only - keyword/phrase/mixed, keyword only under ql)",
     )
     ap.add_argument("--no-stem", action="store_true")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args(argv)
 
-    if args.batch and args.scorer != "bm25":
-        ap.error("--batch serves the BM25 scorer only")
-
     spark = SparkSession.builder.appName("ass-query").getOrCreate()
     idx = load_index(spark, args.index)
-    idx.do_stem = not args.no_stem
-    src = spark.read.parquet(args.source) if args.source else None
-    if args.batch and idx.packed is None:
+    if idx is None:
         print(
-            f"error: --batch needs packed postings, but the index at "
-            f"{args.index!r} was built without them (no stages/packed)",
+            f"error: the index at {args.index!r} has no packed postings "
+            "(stages/packed); rebuild it with jobs/build_index.py",
             file=sys.stderr,
         )
         return 2
-    ex = QueryExecutor(
-        spark, idx, source_df=src, scorer=args.scorer, use_packed=args.batch,
-    )
-
-    if args.batch:
-        qmap = {f"q{i}": q for i, q in enumerate(args.queries)}
-        t0 = time.perf_counter()
-        rows = ex.search_many(qmap, k=args.k).collect()
-        wall = round((time.perf_counter() - t0) * 1000, 1)
-        by_qid: dict[str, list] = {}
-        for r in rows:
-            by_qid.setdefault(r["query_id"], []).append(r)
-        for i, q in enumerate(args.queries):
-            # corrections restricted to THIS query's tokens (the batch map
-            # covers every query; per-line output mirrors single-query mode)
-            q_terms = set(ex._tokenize_query(q))
-            out = {
-                "query": q,
-                "k": args.k,
-                "batch_wall_ms": wall,  # ONE action served the whole batch
-                "corrections": {
-                    t: c for t, c in ex.last_corrections.items() if t in q_terms
-                },
-                "results": [
-                    {"doc_id": r["doc_id"], "score": r["score"]}
-                    for r in by_qid.get(f"q{i}", [])
-                ],
-            }
-            print(json.dumps(out))
-        return 0
-
-    for q in args.queries:
-        t0 = time.perf_counter()
-        if args.wand:
-            terms = ex._tokenize_query(q)
-            rows = wand_topk(spark, idx, terms, k=args.k).collect()
-        else:
-            rows = ex.search(q, k=args.k).collect()
-        out = {
-            "query": q,
-            "k": args.k,
-            "wall_ms": round((time.perf_counter() - t0) * 1000, 1),
-            # applied spelling corrections, surfaced like the reference's
-            # result-object corrections map (UnrankedQueryResult.java)
-            "corrections": {} if args.wand else ex.last_corrections,
-            "results": [
-                {"doc_id": r["doc_id"], "score": r["score"]} for r in rows
-            ],
-        }
-        print(json.dumps(out))
+    idx.do_stem = not args.no_stem
+    src = spark.read.parquet(args.source) if args.source else None
+    ex = QueryExecutor(spark, idx, source_df=src, scorer=args.scorer)
+    try:
+        for line in _lines(ex, args.queries, args.k, args.batch):
+            print(json.dumps(line))
+    except ValueError as e:  # a query this mode cannot serve
+        print(f"error: {e}", file=sys.stderr)
+        return 2
     return 0
 
 

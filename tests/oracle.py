@@ -10,7 +10,9 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-from awesome_spark_search.textproc import tokenize_text
+from awesome_spark_search import queries as Q
+from awesome_spark_search.snippets import generate_snippet
+from awesome_spark_search.textproc import preprocess_query_terms, tokenize_text
 
 K1, B = 1.2, 0.75
 JM_LAMBDA = 0.2
@@ -67,14 +69,19 @@ class OracleIndex:
         ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
         return ranked[:k]
 
-    def ql_topk(self, terms: list[str], k: int = 10):
+    def ql_topk(self, terms: list[str], k: int = 10,
+                restrict: set[int] | None = None,
+                weights: dict[str, float] | None = None):
         scores: dict[int, float] = defaultdict(float)
         for t in sorted(self.match_terms(terms)):
+            w = (weights or {}).get(t, 1.0)
             cf = self.cf(t)
             for doc_id, poss in self.postings[t].items():
+                if restrict is not None and doc_id not in restrict:
+                    continue
                 tf = len(poss)
                 dl = max(self.doc_len[doc_id], 1)
-                scores[doc_id] += math.log(
+                scores[doc_id] += w * math.log(
                     (1 - JM_LAMBDA) * tf / dl + JM_LAMBDA * cf / max(self.total_tokens, 1)
                 )
         ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
@@ -100,3 +107,73 @@ class OracleIndex:
             if ok:
                 out.add(d)
         return out
+
+    # ---- the whole query language (QueryExecutor.search) -----------------
+
+    def search(self, query: str, k: int = 10, *, scorer: str = "bm25",
+               corrections: dict[str, str] | None = None,
+               contents: dict[int, str] | None = None,
+               citations: dict[int, set[int]] | None = None):
+        """Expected ``QueryExecutor.search`` rows: [(doc_id, score)], score
+        None for the recency-ordered Boolean/LinkTo types. ``corrections``
+        is the applied spelling map (the Damerau-Levenshtein choice has its
+        own tests), ``contents`` the doc texts PRF snippets come from,
+        ``citations`` maps a LinkTo target to its citing doc ids."""
+
+        def fix(terms):
+            return [(corrections or {}).get(t, t) for t in terms]
+
+        pq = Q.parse(query, tokenize=lambda s: preprocess_query_terms(s, do_stem=self.do_stem))
+        ast = pq.ast
+        if Q.is_unranked(ast):
+            docs = self._docset(ast, fix, citations or {})
+            return [(d, None) for d in sorted(docs, reverse=True)[:k]]
+        phrase, keywords = [], []
+        if isinstance(ast, (Q.Phrase, Q.Mixed)):
+            ph = ast if isinstance(ast, Q.Phrase) else ast.phrase
+            phrase = [t for t in fix(ph.terms) if not t.endswith("*")]
+        if isinstance(ast, (Q.Keyword, Q.Mixed)):
+            keywords = fix(ast.terms if isinstance(ast, Q.Keyword) else ast.keyword.terms)
+        top = self._ranked(scorer, phrase, keywords)
+        if not pq.prf:
+            return top[:k]
+        # PRF: the 10 most frequent new tokens of the top docs' snippets,
+        # at 0.25 (1.25 where one coincides with a base keyword)
+        raw = Q.collect_terms(ast)
+        snippet_terms = sorted({t for t in fix(raw) if not t.endswith("*")})
+        joined = " ".join(
+            generate_snippet((contents or {}).get(d, ""), snippet_terms, do_stem=self.do_stem)
+            for d, _ in top[: min(pq.prf, k)]
+        )
+        counts = Counter(t for t, _ in tokenize_text(joined, do_stem=self.do_stem)[1])
+        ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        prf = [t for t, _ in ranked if t not in set(raw)][:10]
+        if not prf:
+            return top[:k]
+        base = self.match_terms(keywords)
+        weights = {t: 1.25 if t in base else 0.25 for t in prf}
+        return self._ranked(scorer, phrase, keywords + prf, weights)[:k]
+
+    def _ranked(self, scorer, phrase, keywords, weights=None):
+        """Phrase terms scored at the phrase's survivors plus keyword terms
+        at every doc (a term in both counts twice for survivors)."""
+        topk = self.bm25_topk if scorer == "bm25" else self.ql_topk
+        scores: dict[int, float] = defaultdict(float)
+        if phrase:
+            missing = any(t not in self.postings for t in phrase)
+            surv = set() if missing else self.phrase_docs(phrase)
+            for d, s in topk(list(dict.fromkeys(phrase)), len(self.doc_len), restrict=surv):
+                scores[d] += s
+        if keywords:
+            for d, s in topk(keywords, len(self.doc_len), weights=weights):
+                scores[d] += s
+        return sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
+
+    def _docset(self, ast, fix, citations) -> set[int]:
+        if isinstance(ast, Q.Boolean):
+            left = self._docset(ast.left, fix, citations)
+            right = self._docset(ast.right, fix, citations)
+            return {"AND": left & right, "OR": left | right, "NOT": left - right}[ast.op]
+        if isinstance(ast, Q.LinkTo):
+            return set(citations.get(ast.doc_id, set()))
+        return set().union(*(self.postings[t] for t in self.match_terms(fix(ast.terms))))

@@ -1,8 +1,11 @@
 """Batched multi-query serving (wand.wand_topk_many / executor.search_many):
 the whole query workload in ONE Spark action, rank+score identical to
-per-query search(). The reference serves queries one at a time from a REPL
-loop (src/SearchCli.java); batching amortizes the per-action fixed cost —
+per-query search(). The reference answers one query per call
+(src/SearchEngine/SearchEngineTest.java:19-56 driving
+AwesomeSearchEngine.java); batching amortizes the per-action fixed cost —
 the real queries/sec lever at cluster scale."""
+
+import dataclasses
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,7 +30,7 @@ BATCH = {
 @pytest.fixture(scope="module")
 def packed_index(spark):
     src = spark.createDataFrame(corpus.generate_pandas(N_DOCS, seed=42))
-    idx = build_index(spark, src, do_stem=True, build_packed=True, doc_shard_size=64)
+    idx = build_index(spark, src, do_stem=True, doc_shard_size=64)
     idx.doc_shard_size = 64
     return idx
 
@@ -61,7 +64,7 @@ def test_search_many_matches_search(spark, packed_index):
         q7='"merge sort buffer"',
         q8='"merge sort" scan',
     )
-    ex = QueryExecutor(spark, packed_index, use_packed=True)
+    ex = QueryExecutor(spark, packed_index)
     got = ex.search_many(batch, k=10).collect()
     # the index is stemmed, so the correction target is the stemmed form —
     # exactly what single-query search("mrege") applies too
@@ -77,22 +80,15 @@ def test_search_many_matches_search(spark, packed_index):
             assert abs(g["score"] - w["score"]) < 1e-9, qid
 
 
-def test_search_many_is_lazy_and_never_scans_long_postings(
-    spark, packed_index, monkeypatch
-):
+def test_search_many_is_lazy_and_never_scans_long_postings(spark, packed_index):
     """The batch is ONE user-level action by construction (a single collect
     on one composed plan); pinned here: building the plan schedules NO Spark
     job (laziness — a typo-free batch has zero driver-side actions once the
     vocab is warm; a typo'd term costs the usual single batched correction
-    job, same as search()), and the long postings table is never touched."""
-    ex = QueryExecutor(spark, packed_index, use_packed=True)
+    job, same as search()), and the long postings table is not needed."""
+    idx = dataclasses.replace(packed_index, postings=None)
+    ex = QueryExecutor(spark, idx)
     ex._get_vocab()  # warm the vocab cache (one-time per executor, not per query)
-
-    def boom(*a, **k):
-        raise AssertionError("long postings table scanned in batch mode")
-
-    monkeypatch.setattr(ex, "_postings_for_terms", boom)
-    monkeypatch.setattr(ex, "_postings_for_prefix", boom)
     clean = {k: v for k, v in BATCH.items() if k != "q4"}  # q4 is a typo
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup() or [])
@@ -102,19 +98,22 @@ def test_search_many_is_lazy_and_never_scans_long_postings(
 
 
 def test_search_many_rejects_unbatchable_types(spark, packed_index):
-    ex = QueryExecutor(spark, packed_index, use_packed=True)
+    ex = QueryExecutor(spark, packed_index)
     with pytest.raises(ValueError, match="one-pass queries only"):
         ex.search_many({"b": "buffer AND merge"})  # unranked (recency)
     with pytest.raises(ValueError, match="one-pass queries only"):
         ex.search_many({"l": "LinkTo:42"})
     with pytest.raises(ValueError, match="one-pass queries only"):
         ex.search_many({"p": "buffer merge #3"})  # PRF is two-pass
+    # the packed index is the only serving path: there is nothing to opt out to
     with pytest.raises(ValueError, match="use_packed"):
-        QueryExecutor(spark, packed_index).search_many({"k": "buffer"})
+        QueryExecutor(spark, packed_index, use_packed=False)
+    with pytest.raises(ValueError, match="packed"):
+        QueryExecutor(spark, dataclasses.replace(packed_index, packed=None))
 
 
 def test_empty_batch_and_empty_terms(spark, packed_index):
-    ex = QueryExecutor(spark, packed_index, use_packed=True)
+    ex = QueryExecutor(spark, packed_index)
     empty = ex.search_many({}, k=5)
     # degenerate batches keep the full 4-column result shape — a downstream
     # select of 'rank' must not break only when the batch happens to be empty
@@ -151,9 +150,9 @@ def test_search_many_fielded_stays_zone_weighted(spark):
     idx = build_index(
         spark,
         df.select("doc_id", F.concat_ws(" ", "body", "title").alias("content")),
-        do_stem=False, build_packed=True,
+        do_stem=False,
     )
-    ex = QueryExecutor(spark, idx, use_packed=True, fielded_index=fidx)
+    ex = QueryExecutor(spark, idx, fielded_index=fidx)
     batch = {
         "kw": "merge buffer gamma",
         "ph": '"merge buffer"',
@@ -171,7 +170,7 @@ def test_search_many_fielded_stays_zone_weighted(spark):
             assert abs(g["score"] - w["score"]) < 1e-9, qid
     # and the batch really is zone-weighted: it must differ from the
     # UNFIELDED batch over the concatenated-field index for some query
-    unfielded = QueryExecutor(spark, idx, use_packed=True).search_many(
+    unfielded = QueryExecutor(spark, idx).search_many(
         batch, k=10
     ).collect()
     assert [(r["query_id"], r["doc_id"], r["score"]) for r in got] != [
@@ -181,11 +180,12 @@ def test_search_many_fielded_stays_zone_weighted(spark):
 
 def test_search_many_ql_matches_search(spark, packed_index):
     """Batched QL/JM (keyword-only, shared per-term decode across the batch)
-    must be rank+score identical to per-query search() under scorer='ql' —
-    including the no-hit query, a typo'd query (batched correction), and a
+    must return EXACTLY per-query search()'s ranks and scores under
+    scorer='ql' (both sum contributions in sorted term order) — including
+    the no-hit query, a typo'd query (batched correction), and a
     dictionary-expanded prefix, the same coverage as the bm25 batch test."""
     batch = dict(BATCH, q5="mrege", q6="token*")
-    ex = QueryExecutor(spark, packed_index, scorer="ql", use_packed=True)
+    ex = QueryExecutor(spark, packed_index, scorer="ql")
     got = ex.search_many(batch, k=10).collect()
     by_qid: dict[str, list] = {}
     for r in got:
@@ -193,9 +193,9 @@ def test_search_many_ql_matches_search(spark, packed_index):
     for qid, q in batch.items():
         want = ex.search(q, k=10).collect()
         rows = by_qid.get(qid, [])
-        assert [r["doc_id"] for r in rows] == [w["doc_id"] for w in want], qid
-        for g, w in zip(rows, want):
-            assert abs(g["score"] - w["score"]) < 1e-9, qid
-    # phrase/Mixed are not a QL form (same as the single-query executor)
+        assert [(r["doc_id"], r["score"]) for r in rows] == [
+            (w["doc_id"], w["score"]) for w in want
+        ], qid
+    # QL batches keyword bags only; QL phrase/Mixed serve through search()
     with pytest.raises(ValueError, match="keyword only under ql"):
         ex.search_many({"p": '"merge sort"'})

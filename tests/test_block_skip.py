@@ -1,8 +1,8 @@
 """Block-LEVEL skipping inside the packed WAND scorer.
 
-Gates two properties of wand._shard_topk_factory (ref skipping-areas analog:
-src/io/index/UncompressedIndexWriter.java:101-118 writes per-block skip
-metadata; the read side :106-124 seeks past blocks):
+Gates two properties of the shard kernel wand._topk_factory (ref
+skipping-areas analog: src/io/index/UncompressedIndexWriter.java:101-118
+writes per-block skip metadata; the read side :106-124 seeks past blocks):
 
 1. EXACTNESS — the shard top-k (ids AND scores) is identical to a
    brute-force numpy BM25 over the same postings, on random corpora.
@@ -84,7 +84,7 @@ def test_skewed_corpus_skips_blocks_10x():
     }
     avgdl = 100.0
     packed = _pack_for_query(postings, doc_lens, avgdl, n_docs)
-    fn = wand._shard_topk_factory(avgdl, k=10)
+    fn = wand._topk_factory(wand.QuerySpec([], list(postings)), avgdl, k=10)
 
     wand.reset_decode_stats()
     out = fn(packed)
@@ -112,7 +112,7 @@ def test_block_skip_exact_vs_brute_force(seed):
         postings[f"t{t}"] = [(d, int(rng.integers(1, 9))) for d in ids]
     avgdl = float(np.mean(list(doc_lens.values())))
     packed = _pack_for_query(postings, doc_lens, avgdl, n_docs)
-    fn = wand._shard_topk_factory(avgdl, k=10)
+    fn = wand._topk_factory(wand.QuerySpec([], list(postings)), avgdl, k=10)
     out = fn(packed)
     want_ids, want_scores = _brute_force(postings, doc_lens, avgdl, n_docs, 10)
     assert out["doc_id"].tolist() == want_ids
@@ -171,7 +171,7 @@ def test_phrase_positions_decode_candidate_blocks_only():
     packed["idf"] = [
         _idf(n_docs if t == "aa" else 8, n_docs) for t in packed["term"]
     ]
-    fn = wand._phrase_shard_factory(["aa", "bb"], avgdl=50.0, k=10)
+    fn = wand._topk_factory(wand.QuerySpec(["aa", "bb"], []), avgdl=50.0, k=10)
     wand.reset_decode_stats()
     out = fn(packed)
     # total position-stream entries = sum(tf + 1 marker) over all postings
@@ -217,7 +217,7 @@ def test_block_skip_exact_property(corpus):
     postings, doc_lens, n_docs, k = corpus
     avgdl = float(np.mean(list(doc_lens.values())))
     packed = _pack_for_query(postings, doc_lens, avgdl, n_docs)
-    out = wand._shard_topk_factory(avgdl, k)(packed)
+    out = wand._topk_factory(wand.QuerySpec([], list(postings)), avgdl, k)(packed)
     want_ids, want_scores = _brute_force(postings, doc_lens, avgdl, n_docs, k)
     assert out["doc_id"].tolist() == want_ids
     np.testing.assert_allclose(out["score"].to_numpy(), want_scores, rtol=0, atol=1e-12)

@@ -9,7 +9,7 @@ from awesome_spark_search.executor import QueryExecutor
 
 def _build(spark, rows, **kw):
     src = spark.createDataFrame(rows, "doc_id long, content string")
-    return build_index(spark, src, do_stem=False, build_packed=True,
+    return build_index(spark, src, do_stem=False,
                        doc_shard_size=4, **kw)
 
 

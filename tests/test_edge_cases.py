@@ -10,7 +10,7 @@ from awesome_spark_search.executor import QueryExecutor
 
 def _build(spark, rows, **kw):
     src = spark.createDataFrame(rows, "doc_id long, content string")
-    return build_index(spark, src, do_stem=False, build_packed=True,
+    return build_index(spark, src, do_stem=False,
                        doc_shard_size=4, **kw)
 
 
@@ -230,7 +230,7 @@ def test_prf_terms_come_from_snippets_not_full_content(spark):
     src = spark.createDataFrame(rows, "doc_id long, content string")
     from awesome_spark_search.build import build_index as _bi
 
-    idx = _bi(spark, src, do_stem=False, build_packed=False)
+    idx = _bi(spark, src, do_stem=False)
     ex = QueryExecutor(spark, idx, source_df=src)
     top = ex.search("alpha", k=3).collect()
     pq = Q.parse("alpha #3", tokenize=ex._tokenize_query)

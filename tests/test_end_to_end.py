@@ -21,7 +21,7 @@ def corpus_pdf():
 @pytest.fixture(scope="module")
 def index(spark, corpus_pdf):
     src = spark.createDataFrame(corpus_pdf)
-    return build_index(spark, src, do_stem=True, build_packed=False)
+    return build_index(spark, src, do_stem=True)
 
 
 @pytest.fixture(scope="module")

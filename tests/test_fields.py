@@ -196,9 +196,9 @@ def test_executor_serves_fielded_keyword(spark):
             "doc_id",
             F.concat_ws(" ", "body", "title").alias("content"),
         ),
-        do_stem=False, build_packed=True,
+        do_stem=False,
     )
-    ex = QueryExecutor(spark, idx, use_packed=True, fielded_index=fidx)
+    ex = QueryExecutor(spark, idx, fielded_index=fidx)
     got = ex.search("merge buffer gamma", k=10).collect()
     want = fielded_wand_topk(
         spark, fidx, ["merge", "buffer", "gamma"], k=10
@@ -295,10 +295,10 @@ def _fielded_executor(spark, df, weights):
     src = df.select(
         "doc_id", F.concat_ws(" ", "body", "title").alias("content")
     )
-    idx = build_index(spark, src, do_stem=False, build_packed=True)
+    idx = build_index(spark, src, do_stem=False)
     fidx = build_fielded_packed(spark, df, weights, do_stem=False)
     return QueryExecutor(
-        spark, idx, source_df=src, use_packed=True, fielded_index=fidx
+        spark, idx, source_df=src, fielded_index=fidx
     ), fidx
 
 
@@ -315,7 +315,6 @@ def test_executor_fielded_never_falls_back_to_unfielded(spark, monkeypatch):
     def boom(*a, **k):
         raise AssertionError("unfielded ranking path used by fielded executor")
 
-    monkeypatch.setattr(ex, "_score", boom)
     monkeypatch.setattr(wand_mod, "wand_topk", boom)
     monkeypatch.setattr(wand_mod, "phrase_topk", boom)
     monkeypatch.setattr(wand_mod, "mixed_topk", boom)

@@ -23,7 +23,7 @@ def corpus_pdf():
 @pytest.fixture(scope="module")
 def executor(spark, corpus_pdf):
     src = spark.createDataFrame(corpus_pdf)
-    idx = build_index(spark, src, do_stem=True, build_packed=False)
+    idx = build_index(spark, src, do_stem=True)
     return QueryExecutor(spark, idx, source_df=src)
 
 

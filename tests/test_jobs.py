@@ -12,14 +12,18 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _run(args, timeout=420):
+def _run(args, timeout=420, returncode=0):
     proc = subprocess.run(
         [sys.executable, *args],
         capture_output=True, text=True, cwd=REPO, timeout=timeout,
         env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
     )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    return proc.stdout
+    assert proc.returncode == returncode, proc.stderr[-4000:]
+    return proc.stdout if returncode == 0 else proc.stderr
+
+
+def _json_lines(stdout):
+    return [json.loads(l) for l in stdout.strip().splitlines() if l.startswith("{")]
 
 
 @pytest.fixture(scope="module")
@@ -64,15 +68,33 @@ def test_build_then_query_jobs(corpus_dir, tmp_path_factory):
         scores = [r["score"] for r in l["results"]]
         assert scores == sorted(scores, reverse=True)
 
-    # WAND path against the same on-disk index must agree on ranking
-    stdout4 = _run([
-        "jobs/query.py", "--index", out, "--source", corpus_dir, "--wand",
-        "buffer merge",
-    ])
-    wand_line = [json.loads(l) for l in stdout4.strip().splitlines() if l.startswith("{")][0]
-    assert [r["doc_id"] for r in wand_line["results"]] == [
-        r["doc_id"] for r in lines[0]["results"]
-    ]
+    # the default path serves the packed block-max WAND plan AND applies
+    # spelling corrections: a typo'd query ranks like its correction
+    typo, fixed = _json_lines(_run([
+        "jobs/query.py", "--index", out, "--source", corpus_dir, "mrege", "merge",
+    ]))
+    assert typo["corrections"] == {"mrege": "merg"} and fixed["corrections"] == {}
+    assert typo["results"] and typo["results"] == fixed["results"]
+
+    # --batch --scorer ql (keyword bags via ql_topk_many) returns EXACTLY the
+    # per-query QL lines
+    ql_args = ["--index", out, "--source", corpus_dir, "--scorer", "ql",
+               "buffer merge", "token*"]
+    ql_lines = _json_lines(_run(["jobs/query.py", *ql_args]))
+    ql_batch = _json_lines(_run(["jobs/query.py", "--batch", *ql_args]))
+    assert all(l["results"] for l in ql_lines)
+    assert [l["results"] for l in ql_batch] == [l["results"] for l in ql_lines]
+
+    # clean errors, no tracebacks: a query --batch cannot serve, and an index
+    # root without packed postings
+    err = _run([
+        "jobs/query.py", "--index", out, "--batch", "buffer AND merge",
+    ], returncode=2)
+    assert "error:" in err and "one-pass queries only" in err
+    assert "Traceback" not in err
+    empty = str(tmp_path_factory.mktemp("no_index"))
+    err = _run(["jobs/query.py", "--index", empty, "buffer"], returncode=2)
+    assert "no packed postings" in err and "Traceback" not in err
 
     # --batch: BOTH queries (a keyword bag + a phrase) in ONE Spark action
     # off the on-disk packed index, result parity with the per-query lines

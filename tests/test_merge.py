@@ -25,7 +25,7 @@ def _split_indexes(spark, n=120, parity=True, shard=16):
     else:
         a = src.filter(f"doc_id < {n // 2}")
         b = src.filter(f"doc_id >= {n // 2}")
-    kw = dict(do_stem=False, build_packed=True, doc_shard_size=shard)
+    kw = dict(do_stem=False, doc_shard_size=shard)
     full = build_index(spark, src, **kw)
     ia = build_index(spark, a, **kw)
     ib = build_index(spark, b, **kw)
@@ -130,7 +130,7 @@ def test_empty_delta_merge_is_identity(spark):
     identical to the base — stats unchanged, bounds still exact."""
     pdf = corpus.generate_pandas(60, seed=3)
     src = spark.createDataFrame(pdf)
-    kw = dict(do_stem=False, build_packed=True, doc_shard_size=16)
+    kw = dict(do_stem=False, doc_shard_size=16)
     base = build_index(spark, src, **kw)
     empty = build_index(spark, src.filter("doc_id < 0"), **kw)
     merged = merge_packed_indexes(spark, [base, empty])
@@ -155,7 +155,7 @@ def test_overlapping_doc_ids_rejected(spark):
 
 def test_streamed_delta_merges_onto_batch_base(spark, tmp_path):
     """The incremental-deployment composition: a batch-built base + a
-    streamed delta (IncrementalIndexer.to_index(build_packed=True)) fold
+    streamed delta (IncrementalIndexer.to_index()) fold
     with merge_packed_indexes into an index that serves identically to a
     full rebuild — delta compaction without re-reading the base corpus."""
     from awesome_spark_search.executor import QueryExecutor
@@ -172,13 +172,13 @@ def test_streamed_delta_merges_onto_batch_base(spark, tmp_path):
     ]
     base = build_index(
         spark, spark.createDataFrame(base_docs, "doc_id long, content string"),
-        do_stem=False, build_packed=True, doc_shard_size=2,
+        do_stem=False, doc_shard_size=2,
     )
     ingest = IncrementalIndexer(spark, str(tmp_path / "delta"), do_stem=False)
     ingest.foreach_batch(
         spark.createDataFrame(delta_docs, "doc_id long, content string"), 0
     )
-    delta = ingest.to_index(build_packed=True, doc_shard_size=2)
+    delta = ingest.to_index(doc_shard_size=2)
     merged = merge_packed_indexes(spark, [base, delta])
 
     full = build_index(
@@ -186,12 +186,12 @@ def test_streamed_delta_merges_onto_batch_base(spark, tmp_path):
         spark.createDataFrame(
             base_docs + delta_docs, "doc_id long, content string"
         ),
-        do_stem=False, build_packed=True, doc_shard_size=2,
+        do_stem=False, doc_shard_size=2,
     )
     assert merged.stats.n_docs == 5
     assert abs(merged.stats.avgdl - full.stats.avgdl) < 1e-12
-    ex_m = QueryExecutor(spark, merged, use_packed=True)
-    ex_f = QueryExecutor(spark, full, use_packed=True)
+    ex_m = QueryExecutor(spark, merged)
+    ex_f = QueryExecutor(spark, full)
     for q in ["merge buffer", '"table value"', "merge AND value", "scan OR value"]:
         got = [(r["doc_id"], r["score"]) for r in ex_m.search(q, k=10).collect()]
         want = [(r["doc_id"], r["score"]) for r in ex_f.search(q, k=10).collect()]
@@ -277,7 +277,7 @@ def test_fielded_merge_with_empty_field_source_matches_rebuild(spark):
 def test_three_way_merge(spark):
     pdf = corpus.generate_pandas(90, seed=11)
     src = spark.createDataFrame(pdf)
-    kw = dict(do_stem=False, build_packed=True, doc_shard_size=8)
+    kw = dict(do_stem=False, doc_shard_size=8)
     full = build_index(spark, src, **kw)
     parts = [
         build_index(spark, src.filter(f"doc_id % 3 = {i}"), **kw)

@@ -1,0 +1,130 @@
+"""Packed-only serving: with the long postings table gone
+(``index.postings = None``), search() answers EVERY query type off the
+packed index — under bm25, under ql, and on a fielded executor — rank+score
+identical to the pure-Python oracle (tests/oracle.py). With
+``VOCAB_CACHE_MAX = 0`` no prefix can be expanded from a cached vocabulary,
+so prefixes reach the packed plans as term ranges."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from awesome_spark_search import corpus
+from awesome_spark_search.build import build_index
+from awesome_spark_search.executor import QueryExecutor
+from awesome_spark_search.pagerank import pack_citations
+
+from oracle import OracleIndex
+
+N_DOCS = 250
+TARGET = 3  # LinkTo target, cited by every doc d with d % 7 == 3
+CITING = {TARGET: {d for d in range(N_DOCS) if d % 7 == TARGET and d != TARGET}}
+
+
+@pytest.fixture(scope="module")
+def pdf():
+    return corpus.generate_pandas(N_DOCS, seed=42)
+
+
+@pytest.fixture(scope="module")
+def src(spark, pdf):
+    return spark.createDataFrame(pdf)
+
+
+@pytest.fixture(scope="module")
+def index(spark, src):
+    idx = build_index(spark, src, do_stem=True, doc_shard_size=64)
+    idx.postings = None  # serving must never need the long table
+    return idx
+
+
+@pytest.fixture(scope="module")
+def citations(spark):
+    edges = [(d, TARGET) for d in CITING[TARGET]] + [(d, 5) for d in range(0, N_DOCS, 11)]
+    return pack_citations(spark.createDataFrame(edges, "src long, dst long"))
+
+
+@pytest.fixture(scope="module")
+def oracle(pdf):
+    return OracleIndex(dict(zip(pdf["doc_id"], pdf["content"])), do_stem=True)
+
+
+RANKED = [
+    "buffer merge scan",       # keyword
+    "token*",                  # prefix
+    "mrege",                   # corrected (-> merg)
+    '"merge sort"',            # phrase
+    '"merge sort" buffer',     # Mixed
+    '"merge sort" token*',     # Mixed with a prefix keyword
+    "buffer merge #3",         # PRF
+    "token* scan #3",          # PRF over a prefix
+]
+UNRANKED = [
+    "token* AND merge",        # Boolean with a prefix leaf
+    f"merge AND LinkTo:{TARGET}",
+    f"LinkTo:{TARGET} NOT merge",
+    f"LinkTo:{TARGET}",
+]
+
+
+def _rows(ex, query):
+    return [(r["doc_id"], r["score"]) for r in ex.search(query, k=10).collect()]
+
+
+def assert_rows_equal(got, want, query):
+    """Same ranking; scores within 1e-9, NULL exactly where expected."""
+    assert [d for d, _ in got] == [d for d, _ in want], query
+    for (_, g), (_, w) in zip(got, want):
+        assert (g is None) if w is None else abs(g - w) < 1e-9, query
+
+
+@pytest.mark.parametrize("vocab_cache", [True, False])
+@pytest.mark.parametrize("scorer", ["bm25", "ql"])
+def test_every_query_type_serves_packed_only(
+    spark, index, src, citations, oracle, pdf, scorer, vocab_cache
+):
+    ex = QueryExecutor(
+        spark, index, source_df=src, packed_citations=citations, scorer=scorer
+    )
+    if not vocab_cache:
+        ex.VOCAB_CACHE_MAX = 0  # prefixes stay term ranges
+    contents = dict(zip(pdf["doc_id"], pdf["content"]))
+    for query in RANKED + UNRANKED:
+        got = _rows(ex, query)
+        want = oracle.search(
+            query, scorer=scorer, corrections=ex.last_corrections,
+            contents=contents, citations=CITING,
+        )
+        assert want, query  # the fixture must exercise the query type
+        assert_rows_equal(got, want, query)
+    ex.search("mrege")
+    assert ex.last_corrections == {"mrege": "merg"}
+
+
+def test_fielded_executor_serves_packed_only(spark, index, citations):
+    """A fielded executor ranks every query type zone-weighted off the
+    packed fielded index; with prefixes as term ranges it must return
+    EXACTLY what the same executor returns with the vocabulary cached."""
+    from awesome_spark_search.fields import build_fielded_packed
+
+    pdf = corpus.generate_pandas(N_DOCS, seed=42)
+    pdf["title"] = [" ".join(c.split()[:5]) for c in pdf["content"]]
+    fsrc = spark.createDataFrame(pdf[["doc_id", "content", "title"]])
+    fidx = build_fielded_packed(
+        spark, fsrc, {"content": 1.0, "title": 0.5}, do_stem=True, doc_shard_size=64
+    )
+    plain = fsrc.select("doc_id", F.concat_ws(" ", "content", "title").alias("content"))
+    idx = build_index(spark, plain, do_stem=True, doc_shard_size=64)
+    idx.postings = None
+
+    def executor():
+        return QueryExecutor(
+            spark, idx, source_df=plain, packed_citations=citations,
+            fielded_index=fidx,
+        )
+
+    cached, ranges = executor(), executor()
+    ranges.VOCAB_CACHE_MAX = 0
+    for query in RANKED + UNRANKED:
+        want = _rows(cached, query)
+        assert want, query
+        assert _rows(ranges, query) == want, query

@@ -82,7 +82,7 @@ def test_streamed_index_answers_queries_like_batch(spark, tmp_path, doc_pdf):
 
     streamed = QueryExecutor(spark, ingest.to_index())
     batch = QueryExecutor(
-        spark, build_index(spark, full, do_stem=True, build_packed=False)
+        spark, build_index(spark, full, do_stem=True)
     )
     for q in ["buffer", "buffer merge scan", '"merge sort buffer"', "token*"]:
         got = streamed.search(q, k=10).collect()
@@ -386,7 +386,7 @@ def test_tombstone_delete_reingest_and_query(spark, tmp_path):
 
 
 def test_streamed_index_serves_packed_wand(spark, tmp_path):
-    """to_index(build_packed=True) packs the merged postings with the same
+    """to_index() packs the merged postings with the same
     streaming packer as the batch build: the packed WAND/phrase/boolean
     serving paths run over a continuously-ingested corpus and rank
     identically to a batch build of the same final docs (including a
@@ -414,7 +414,7 @@ def test_streamed_index_serves_packed_wand(spark, tmp_path):
         ),
         1,
     )
-    sidx = ingest.to_index(build_packed=True, doc_shard_size=2)
+    sidx = ingest.to_index(doc_shard_size=2)
     assert sidx.packed is not None
 
     final_docs = [
@@ -425,10 +425,10 @@ def test_streamed_index_serves_packed_wand(spark, tmp_path):
     bidx = build_index(
         spark,
         spark.createDataFrame(final_docs, "doc_id long, content string"),
-        do_stem=False, build_packed=True, doc_shard_size=2,
+        do_stem=False, doc_shard_size=2,
     )
-    ex_s = QueryExecutor(spark, sidx, use_packed=True)
-    ex_b = QueryExecutor(spark, bidx, use_packed=True)
+    ex_s = QueryExecutor(spark, sidx)
+    ex_b = QueryExecutor(spark, bidx)
     for q in ["merge buffer", '"table value"', "merge AND buffer", "scan OR value"]:
         got = [(r["doc_id"], r["score"]) for r in ex_s.search(q, k=10).collect()]
         want = [(r["doc_id"], r["score"]) for r in ex_b.search(q, k=10).collect()]
@@ -446,7 +446,7 @@ def test_tombstone_and_reingest_against_batch_base(spark, tmp_path):
         [(0, "apple pie crust"), (1, "banana bread loaf slice crumb")],
         "doc_id long, content string",
     )
-    base = build_index(spark, base_src, do_stem=False, build_packed=False)
+    base = build_index(spark, base_src, do_stem=False)
     ingest = IncrementalIndexer(spark, str(tmp_path / "delta_base"), do_stem=False)
     ingest.delete_docs([0], batch_id=0)
     ingest.foreach_batch(  # doc 1 re-ingested SHORTER

@@ -12,9 +12,9 @@ from awesome_spark_search.views import bm25_sql, register_index_views
 
 def test_sql_bm25_matches_executor(spark):
     src = spark.createDataFrame(corpus.generate_pandas(200, seed=31))
-    idx = build_index(spark, src, do_stem=True, build_packed=False)
+    idx = build_index(spark, src, do_stem=True)
     names = register_index_views(spark, idx)
-    assert set(names) == {"doc_map", "postings", "term_stats"}
+    assert set(names) == {"doc_map", "postings", "term_stats", "packed"}
     terms = preprocess_query_terms("buffer merge scan", do_stem=True)
     got = spark.sql(bm25_sql(terms, idx, k=10)).collect()
     want = QueryExecutor(spark, idx).search("buffer merge scan", k=10).collect()

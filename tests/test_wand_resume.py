@@ -1,6 +1,8 @@
-"""Block-max WAND rank-parity vs the DataFrame BM25 path, and
-checkpoint-resume semantics of the stage runner (SURVEY.md §5 items 4-5)."""
+"""Packed serving (block-max WAND, phrase, Mixed, PRF, QL, Boolean) vs the
+pure-Python oracle, and checkpoint-resume semantics of the stage runner
+(SURVEY.md §5 items 4-5)."""
 
+import dataclasses
 import json
 import os
 
@@ -13,6 +15,8 @@ from awesome_spark_search.executor import QueryExecutor
 from awesome_spark_search.textproc import preprocess_query_terms
 from awesome_spark_search.wand import wand_topk
 
+from oracle import OracleIndex
+
 N_DOCS = 250
 
 
@@ -20,37 +24,55 @@ N_DOCS = 250
 def packed_index(spark):
     src = spark.createDataFrame(corpus.generate_pandas(N_DOCS, seed=42))
     # tiny doc_shard_size so the test actually exercises multi-shard merging
-    return build_index(spark, src, do_stem=True, build_packed=True, doc_shard_size=64)
+    return build_index(spark, src, do_stem=True, doc_shard_size=64)
+
+
+@pytest.fixture(scope="module")
+def packed_src(spark):
+    # same generator + seed as packed_index's corpus: doc_ids line up
+    return spark.createDataFrame(corpus.generate_pandas(N_DOCS, seed=42))
+
+
+@pytest.fixture(scope="module")
+def contents():
+    pdf = corpus.generate_pandas(N_DOCS, seed=42)
+    return dict(zip(pdf["doc_id"], pdf["content"]))
+
+
+@pytest.fixture(scope="module")
+def oracle(contents):
+    return OracleIndex(contents, do_stem=True)
+
+
+def _assert_matches(rows, want, query):
+    assert [r["doc_id"] for r in rows] == [d for d, _ in want], query
+    for r, (_, w) in zip(rows, want):
+        if w is None:
+            assert r["score"] is None, query
+        else:
+            assert abs(r["score"] - w) < 1e-9, query
 
 
 @pytest.mark.parametrize(
     "query",
     ["buffer", "buffer merge scan", "compress encode varint", "posting list merge sort"],
 )
-def test_wand_matches_dataframe_bm25(spark, packed_index, query):
+def test_wand_matches_dataframe_bm25(spark, packed_index, oracle, query):
+    """wand_topk (block skipping on) is rank+score identical to exhaustive
+    BM25 (the oracle)."""
     terms = preprocess_query_terms(query, do_stem=True)
-    ex = QueryExecutor(spark, packed_index)
-    want = ex.search(query, k=10).collect()
-    # doc_shard_size must match the index build's
-    packed_index.doc_shard_size = 64
     got = wand_topk(spark, packed_index, terms, k=10).collect()
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
-    for g, w in zip(got, want):
-        assert abs(g["score"] - w["score"]) < 1e-9
+    _assert_matches(got, oracle.bm25_topk(terms, 10), query)
 
 
 @pytest.mark.parametrize("query", ['"merge sort buffer"', '"merge sort"'])
-def test_phrase_topk_matches_dataframe_path(spark, packed_index, query):
+def test_phrase_topk_matches_dataframe_path(spark, packed_index, oracle, query):
     from awesome_spark_search.wand import phrase_topk
 
     terms = preprocess_query_terms(query.strip('"'), do_stem=True)
-    ex = QueryExecutor(spark, packed_index)
-    want = ex.search(query, k=10).collect()
-    packed_index.doc_shard_size = 64
     got = phrase_topk(spark, packed_index, terms, k=10).collect()
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
-    for g, w in zip(got, want):
-        assert abs(g["score"] - w["score"]) < 1e-9
+    assert got, query
+    _assert_matches(got, oracle.search(query), query)
 
 
 @pytest.mark.parametrize(
@@ -65,25 +87,13 @@ def test_phrase_topk_matches_dataframe_path(spark, packed_index, query):
         "token*",
     ],
 )
-def test_packed_serving_mode_matches_dataframe_path(spark, packed_index, query):
-    """QueryExecutor(use_packed=True) must agree with the DataFrame path for
-    every dispatchable query type, including the spelling-correction retry
-    and the boolean fallback."""
-    packed_index.doc_shard_size = 64
-    df_ex = QueryExecutor(spark, packed_index)
-    pk_ex = QueryExecutor(spark, packed_index, use_packed=True)
-    want = df_ex.search(query, k=10).collect()
-    got = pk_ex.search(query, k=10).collect()
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
-    for g, w in zip(got, want):
-        if w["score"] is not None:
-            assert abs(g["score"] - w["score"]) < 1e-9, query
-
-
-@pytest.fixture(scope="module")
-def packed_src(spark):
-    # same generator + seed as packed_index's corpus: doc_ids line up
-    return spark.createDataFrame(corpus.generate_pandas(N_DOCS, seed=42))
+def test_packed_serving_mode_matches_dataframe_path(spark, packed_index, oracle, query):
+    """search() agrees with the oracle for every dispatchable query type,
+    including the spelling correction and the Boolean set algebra."""
+    ex = QueryExecutor(spark, packed_index)
+    got = ex.search(query, k=10).collect()
+    assert got, query
+    _assert_matches(got, oracle.search(query, corrections=ex.last_corrections), query)
 
 
 @pytest.mark.parametrize(
@@ -97,68 +107,44 @@ def packed_src(spark):
     ],
 )
 def test_packed_mixed_and_prf_match_dataframe_path(
-    spark, packed_index, packed_src, query
+    spark, packed_index, packed_src, oracle, contents, query
 ):
-    """Mixed and PRF queries must produce identical rankings and scores off
-    the packed index (mixed_topk seeded-WAND / weighted two-pass WAND) as off
-    the long postings table."""
-    packed_index.doc_shard_size = 64
-    df_ex = QueryExecutor(spark, packed_index, source_df=packed_src)
-    pk_ex = QueryExecutor(
-        spark, packed_index, source_df=packed_src, use_packed=True
-    )
-    want = df_ex.search(query, k=10).collect()
-    got = pk_ex.search(query, k=10).collect()
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
-    for g, w in zip(got, want):
-        assert abs(g["score"] - w["score"]) < 1e-9, query
+    """Mixed (seeded WAND) and PRF (weighted two-pass WAND) queries rank
+    and score like the oracle."""
+    ex = QueryExecutor(spark, packed_index, source_df=packed_src)
+    got = ex.search(query, k=10).collect()
+    assert got, query
+    _assert_matches(got, oracle.search(query, contents=contents), query)
 
 
 @pytest.mark.parametrize("query", ["buffer", "buffer merge scan", "token*"])
-def test_packed_ql_matches_dataframe_path(spark, packed_index, query):
-    """The QL/JM scorer must rank+score identically off the packed index
-    (wand.ql_topk: per-shard decode, dl from dls_vb, broadcast cf) as off
-    the long postings table (scoring.ql_jm_score)."""
-    packed_index.doc_shard_size = 64
-    df_ex = QueryExecutor(spark, packed_index, scorer="ql")
-    pk_ex = QueryExecutor(spark, packed_index, scorer="ql", use_packed=True)
-    want = df_ex.search(query, k=10).collect()
-    got = pk_ex.search(query, k=10).collect()
-    assert len(want) > 0
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], query
-    for g, w in zip(got, want):
-        assert abs(g["score"] - w["score"]) < 1e-9, query
+def test_packed_ql_matches_dataframe_path(spark, packed_index, oracle, query):
+    """The QL/JM scorer ranks+scores off the packed index (wand.ql_topk:
+    per-shard decode, dl from dls_vb, broadcast cf) like the oracle."""
+    ex = QueryExecutor(spark, packed_index, scorer="ql")
+    got = ex.search(query, k=10).collect()
+    assert len(got) > 0
+    _assert_matches(got, oracle.search(query, scorer="ql"), query)
 
 
 @pytest.mark.parametrize("scorer", ["bm25", "ql"])
 def test_packed_serving_never_scans_long_postings(
-    spark, packed_index, packed_src, monkeypatch, scorer
+    spark, packed_index, packed_src, scorer
 ):
-    """In packed serving mode (the cache_postings=False deployment) NO query
-    type may touch the long postings table — keyword, phrase, boolean, mixed,
-    and PRF all dispatch to the packed plans, under BOTH scorers for the
-    query types each scorer serves."""
-    packed_index.doc_shard_size = 64
-    ex = QueryExecutor(
-        spark, packed_index, source_df=packed_src, use_packed=True,
-        scorer=scorer,
-    )
-
-    def boom(*a, **k):
-        raise AssertionError("long postings table scanned in packed mode")
-
-    monkeypatch.setattr(ex, "_postings_for_terms", boom)
-    monkeypatch.setattr(ex, "_postings_for_prefix", boom)
-    queries = ["buffer merge scan", "token*"]
-    if scorer == "bm25":
-        queries += [
-            '"merge sort"',
-            "buffer AND merge",
-            '"merge sort" buffer',
-            "buffer merge #3",
-        ]
-    for query in queries:
-        ex.search(query, k=5).collect()
+    """Serving needs no long postings table (the cache_postings=False
+    deployment): with it removed, every query type still answers under
+    BOTH scorers (tests/test_packed_only.py checks the answers)."""
+    idx = dataclasses.replace(packed_index, postings=None)
+    ex = QueryExecutor(spark, idx, source_df=packed_src, scorer=scorer)
+    for query in [
+        "buffer merge scan",
+        "token*",
+        '"merge sort"',
+        "buffer AND merge",
+        '"merge sort" buffer',
+        "buffer merge #3",
+    ]:
+        assert ex.search(query, k=5).collect(), query
 
 
 def test_packed_linkto_via_search(spark, packed_index):
@@ -172,7 +158,7 @@ def test_packed_linkto_via_search(spark, packed_index):
     )
     ex = QueryExecutor(
         spark, packed_index,
-        packed_citations=pack_citations(edges), use_packed=True,
+        packed_citations=pack_citations(edges),
     )
     got = ex.search("LinkTo:42", k=10).collect()
     assert [r["doc_id"] for r in got] == [7, 1]  # recency: doc_id DESC
@@ -182,7 +168,6 @@ def test_packed_linkto_via_search(spark, packed_index):
 def test_phrase_topk_no_match(spark, packed_index):
     from awesome_spark_search.wand import phrase_topk
 
-    packed_index.doc_shard_size = 64
     assert phrase_topk(spark, packed_index, ["buffer", "zzznope"], k=10).collect() == []
 
 
@@ -213,7 +198,6 @@ def test_decode_postings_roundtrip(spark, packed_index):
 
 
 def test_wand_unknown_term_empty(spark, packed_index):
-    packed_index.doc_shard_size = 64
     got = wand_topk(spark, packed_index, ["zzzznotaterm"], k=10).collect()
     assert got == []
 
@@ -231,7 +215,7 @@ def test_checkpoint_resume_skips_completed_stages(spark, tmp_path):
     src = spark.createDataFrame(corpus.generate_pandas(80, seed=3))
     ckpt = str(tmp_path / "stages")
 
-    idx1 = build_index(spark, src, do_stem=False, checkpoint_dir=ckpt, build_packed=False)
+    idx1 = build_index(spark, src, do_stem=False, checkpoint_dir=ckpt)
     first = {r["term"]: (r["df"], r["cf"]) for r in idx1.term_stats.collect()}
     manifests = _manifests(ckpt)
     assert {"doc_map._manifest.json",
@@ -251,7 +235,7 @@ def test_checkpoint_resume_skips_completed_stages(spark, tmp_path):
             os.remove(p)
     postings_mtime = os.path.getmtime(os.path.join(ckpt, "postings._manifest.json"))
 
-    idx2 = build_index(spark, src, do_stem=False, checkpoint_dir=ckpt, build_packed=False)
+    idx2 = build_index(spark, src, do_stem=False, checkpoint_dir=ckpt)
     second = {r["term"]: (r["df"], r["cf"]) for r in idx2.term_stats.collect()}
 
     # identical results after resume
@@ -268,6 +252,6 @@ def test_checkpoint_idempotent_rebuild(spark, tmp_path):
     """Full rerun over a complete checkpoint dir re-runs nothing."""
     src = spark.createDataFrame(corpus.generate_pandas(40, seed=5))
     ckpt = str(tmp_path / "stages2")
-    build_index(spark, src, do_stem=False, checkpoint_dir=ckpt, build_packed=False)
-    idx2 = build_index(spark, src, do_stem=False, checkpoint_dir=ckpt, build_packed=False)
+    build_index(spark, src, do_stem=False, checkpoint_dir=ckpt)
+    idx2 = build_index(spark, src, do_stem=False, checkpoint_dir=ckpt)
     assert idx2.build_metrics == []

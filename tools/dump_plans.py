@@ -1,7 +1,8 @@
 """Dump formatted physical plans of the headline operators to PLANS.md —
 the .explain('formatted') evidence behind the plan-gate tests
-(tests/test_plans.py): partition pruning, filter pushdown, column pruning,
-query-term-filtered broadcasts, single-shuffle shapes.
+(tests/test_plans.py): every query type serves from the packed index, with
+partition pruning, filter pushdown, query-term-filtered broadcasts and
+single-shuffle shapes.
 
 Usage: python tools/dump_plans.py [out.md]
 """
@@ -20,10 +21,12 @@ def main() -> int:
 
     from awesome_spark_search import corpus, dedup
     from awesome_spark_search.build import build_index
-    from awesome_spark_search.executor import QueryExecutor
     from awesome_spark_search.session import get_spark
     from awesome_spark_search.wand import (
+        boolean_docs,
         mixed_topk,
+        phrase_topk,
+        ql_topk,
         ql_topk_many,
         wand_topk,
         wand_topk_many,
@@ -34,8 +37,7 @@ def main() -> int:
     ckpt = tempfile.mkdtemp(prefix="ass_plans_")
     src = spark.createDataFrame(corpus.generate_pandas(300, seed=21))
     idx = build_index(spark, src, do_stem=True, checkpoint_dir=ckpt,
-                      build_packed=True, doc_shard_size=64)
-    ex = QueryExecutor(spark, idx)
+                      doc_shard_size=64)
 
     def fmt(df) -> str:
         s = df._sc._jvm.PythonSQLUtils.explainString(
@@ -56,10 +58,6 @@ def main() -> int:
         return fielded_wand_topk(spark, fidx, ["buffer", "merge"], k=10)
 
     sections = [
-        ("Pruned term lookup (keyword postings scan)",
-         "PartitionFilters on term_bucket + PushedFilters on term; ReadSchema "
-         "has no positions column (the frequency/positional split).",
-         ex._postings_for_terms(["buffer", "merge"], with_positions=False)),
         ("Block-max WAND top-10 over the packed index",
          "ONE action: broadcast of the term-filtered idf rows joined onto "
          "bucket-pruned packed blobs, per-shard applyInPandas, global "
@@ -69,16 +67,22 @@ def main() -> int:
          "The whole workload shares one bucket-pruned packed scan (union of "
          "all terms) and one per-shard applyInPandas running each query's "
          "block-max WAND loop; the per-query global top-k is a window over "
-         "n_shards*k*n_queries local rows. Exactly TWO shuffle exchanges at "
-         "any batch size (the per-shard repartition and the tiny window).",
+         "n_shards*k*n_queries local rows. At any batch size: two hash "
+         "exchanges (the per-shard repartition and the tiny window) plus the "
+         "final presentation sort's range exchange.",
          wand_topk_many(
              spark, idx,
              {"q0": ["buffer", "merge"], "q1": ["scan"],
               "q2": ["buffer", "scan"]},
              k=10,
          )),
+        ("QL/JM top-10 (phrase, Mixed and PRF forms share this plan)",
+         "WAND's one-action shape under the QL scorer: broadcast of the "
+         "term-filtered GLOBAL cf rows, per-shard full decode (no admission "
+         "bound for QL), global TakeOrderedAndProject.",
+         ql_topk(spark, idx, ["buffer", "merg", "scan"], k=10)),
         ("Batched QL/JM (keyword bags, shared per-term decode)",
-         "Same two-exchange batch shape under the QL scorer: broadcast of "
+         "The batch shape under the QL scorer: broadcast of "
          "the term-filtered GLOBAL cf rows, per-shard decode shared by every "
          "query that uses a term (exact for QL - nothing skips), window "
          "top-k.",
@@ -92,12 +96,25 @@ def main() -> int:
          "one bucket-pruned scan and each doc_shard runs phrase-eval + "
          "candidate-seeded WAND inside a single applyInPandas.",
          mixed_topk(spark, idx, ["buffer", "merge"], ["scan"], k=10)),
-        ("Weighted WAND (PRF pass-2, expansion terms at 0.25)",
-         "Identical plan shape to plain WAND — the 0.25 expansion weight "
-         "folds into the broadcast idf column, so PRF's second pass costs "
-         "exactly one more WAND action, nothing new in the plan.",
-         wand_topk(spark, idx, ["buffer", "merge", "scan"], k=10,
-                   weights={"scan": 0.25})),
+        ("Exact phrase over the packed index",
+         "The same one-action shape: the phrase terms' rows, per-shard "
+         "doc-id intersection, then positions decoded only for candidate "
+         "blocks.",
+         phrase_topk(spark, idx, ["merg", "sort"], k=10)),
+        ("Prefix past the cached vocabulary (term range)",
+         "A prefix that cannot be expanded on the driver selects the term "
+         "range [p, p + U+FFFF): no term_bucket pruning, the range pushes "
+         "down to both scans; the rest is the WAND plan. PRF's weighted "
+         "second pass has this plan too (weights scale idf in the kernel).",
+         wand_topk(spark, idx, ["scan"], k=10, weights={"scan": 0.25},
+                   prefixes=("tok",))),
+        ("Boolean doc-set algebra (AND/OR/NOT)",
+         "Bucket-pruned scan of the doc-id blobs only, per-shard numpy set "
+         "algebra, recency top-k. LinkTo leaves cogroup their citing docs "
+         "onto the same shards.",
+         boolean_docs(spark, idx, ("and", ("terms", ["merg"]),
+                                   ("not", ("terms", ["buffer"]),
+                                    ("terms", ["scan"]))), k=10)),
         ("Fielded (zone-weighted) BM25 over the packed fielded index",
          "Same one-action WAND shape with two extra codegen columns: w_f "
          "multiplies the broadcast idf, a field->avgdl literal map supplies "

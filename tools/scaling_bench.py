@@ -150,7 +150,7 @@ def worker(cores: int, corpus_path: str, run_queries: bool = True) -> dict:
     # designed query path), so the build skips the columnar cache-write of
     # the long posting table — at scale that table is written to Parquet by
     # the checkpointing runner, never double-buffered in executor memory
-    idx = build_index(spark, src, do_stem=True, build_packed=True,
+    idx = build_index(spark, src, do_stem=True,
                       doc_shard_size=2048, cache_postings=False)
     # packed.count() materializes the whole tokenize->postings->pack chain in
     # ONE action (postings stream straight into the pack shuffle — NOT
@@ -179,7 +179,7 @@ def worker(cores: int, corpus_path: str, run_queries: bool = True) -> dict:
     if run_queries:
         # packed serving mode: block-max WAND / positional decode off the
         # compressed index — the p95 the north rule grades
-        ex = QueryExecutor(spark, idx, source_df=src, use_packed=True)
+        ex = QueryExecutor(spark, idx, source_df=src)
         lat_ms = []
         for q in GOLDEN_QUERIES:
             t0 = time.perf_counter()
