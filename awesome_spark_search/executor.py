@@ -6,7 +6,7 @@ reference, which answers every query type from its one compressed inverted
 index (InvertedIndexReader.java:111-162), every plan here reads the packed
 index (wand.py) — the long ``postings`` table is a build intermediate only:
 
-* keyword      -> block-max WAND (``wand.wand_topk``)
+* keyword      -> block-max WAND
 * phrase       -> per-shard positional decode of the survivors' blocks
 * Mixed        -> phrase survivors seed the keyword WAND pass
 * prefix tok*  -> expanded from the cached vocabulary, else a term range
@@ -19,11 +19,18 @@ index (wand.py) — the long ``postings`` table is a build intermediate only:
 * scorer="ql"  -> the same shapes through ``wand.ql_topk``
 
 Every query is ONE Spark action: term lookups prune partitions via
-term_bucket, per-query term stats arrive by broadcast join.
+term_bucket, per-query term stats arrive by broadcast join. ``search`` and
+``search_many`` share one front end — parse, ONE spelling-correction pass,
+``wand.QuerySpec``s, one scorer/fielded dispatch (``_plans``) — and every
+ranked plan comes out of one builder (``wand._ranked_rows``); a single
+query ends in a TakeOrderedAndProject, a batch in a per-query window.
+Corrections travel as values, never as executor state, so concurrent
+``search`` calls on one executor are safe.
 """
 
 from __future__ import annotations
 
+import threading
 from collections import Counter
 from functools import reduce
 
@@ -32,7 +39,7 @@ from pyspark.sql import functions as F
 
 from . import queries as Q
 from . import wand
-from .build import Index, DEFAULT_TERM_BUCKETS, _py_term_bucket
+from .build import Index, DEFAULT_TERM_BUCKETS
 from .scoring import PRF_WEIGHT
 from .spell import correct_terms
 from .textproc import preprocess_query_terms, tokenize_text
@@ -76,62 +83,55 @@ class QueryExecutor:
         self.source_df = source_df
         self.scorer = scorer
         self.n_buckets = n_term_buckets
-        self._corrections: dict[str, str] = {}
-        self.last_corrections: dict[str, str] = {}  # surfaced to formatters
+        # the latest call's corrections, surfaced to formatters (last call
+        # wins when calls overlap; each call's own map is a local value)
+        self.last_corrections: dict[str, str] = {}
         # driver-side vocabulary for O(1) existence checks (None = too big)
         self._vocab: frozenset[str] | None = None
         self._vocab_checked = False
         self._n_terms: int | None = None
-        # past VOCAB_CACHE_MAX: a Bloom filter (built once) replaces the
-        # per-query existence semi-filter — see bloom.py for the semantics
+        # past VOCAB_CACHE_MAX: a Bloom filter (built once) answers
+        # existence — see bloom.py for the semantics
         self._bloom = None
         self._bloom_checked = False
+        self._dictionary_lock = threading.Lock()  # one-time vocab/Bloom load
 
     # ---- term access -----------------------------------------------------
 
     def _tokenize_query(self, text: str) -> list[str]:
         return preprocess_query_terms(text, do_stem=self.index.do_stem)
 
+    @staticmethod
     def resolve_terms(
-        self, terms: list[str], dedupe: bool = True
-    ) -> tuple[list[str], list[str], dict[str, str]]:
-        """Split exact/prefix terms, applying the active correction map
-        (ref: QueryProcessor.java:397-417 corrects tokens with no postings;
-        ``search`` discovers corrections up front — cached-vocab O(1) or a
-        per-query existence semi-filter). Returns
-        (exact, prefixes, corrections_applied).
-        ``dedupe=False`` preserves order+multiplicity (phrase semantics)."""
-        exact, prefixes = [], []
-        for t in terms:
-            if t.endswith("*"):
-                prefixes.append(t[:-1])
-            else:
-                exact.append(self._corrections.get(t, t))
-        if dedupe:
-            seen = set()
-            exact = [t for t in exact if not (t in seen or seen.add(t))]
-        return exact, prefixes, dict(self._corrections)
+        terms: list[str], corrections: dict[str, str], dedupe: bool = True
+    ) -> tuple[list[str], list[str]]:
+        """Split exact/prefix terms, applying ``corrections`` (ref:
+        QueryProcessor.java:397-417 corrects tokens with no postings; the
+        front end discovers corrections up front, ``_corrections_for``).
+        Returns (exact, prefixes). ``dedupe=False`` preserves
+        order+multiplicity (phrase semantics)."""
+        exact = [corrections.get(t, t) for t in terms if not t.endswith("*")]
+        prefixes = [t[:-1] for t in terms if t.endswith("*")]
+        return (list(dict.fromkeys(exact)) if dedupe else exact), prefixes
 
     VOCAB_CACHE_MAX = 1_000_000  # driver-side dictionary cutoff (~60MB)
-
-    USE_VOCAB_BLOOM = True  # huge-vocab existence via a one-time Bloom build
 
     def _get_vocab(self) -> frozenset[str] | None:
         """Driver-cached term dictionary when it is small enough; the
         existence check then costs zero Spark actions per query. For huge
         vocabularies (10^8-term code corpora) this returns None and the
         existence check uses a Bloom filter built ONCE per index
-        (``_get_bloom``) — still zero per-query actions; with the Bloom
-        disabled it falls back to a per-query isin semi-filter."""
-        if not self._vocab_checked:
-            self._vocab_checked = True
-            if self.index.stats.n_docs:
-                self._n_terms = self.index.term_stats.count()
-                if self._n_terms <= self.VOCAB_CACHE_MAX:
-                    self._vocab = frozenset(
-                        r["term"]
-                        for r in self.index.term_stats.select("term").collect()
-                    )
+        (``_get_bloom``) — still zero per-query actions."""
+        with self._dictionary_lock:
+            if not self._vocab_checked:
+                if self.index.stats.n_docs:
+                    self._n_terms = self.index.term_stats.count()
+                    if self._n_terms <= self.VOCAB_CACHE_MAX:
+                        self._vocab = frozenset(
+                            r["term"]
+                            for r in self.index.term_stats.select("term").collect()
+                        )
+                self._vocab_checked = True
         return self._vocab
 
     def _get_bloom(self):
@@ -140,35 +140,28 @@ class QueryExecutor:
         tokens still always enter the correction job; a false positive
         (~2^-11) only suppresses one correction, never invents one
         (bloom.py has the full argument + the 100 TB build shape)."""
-        if not self._bloom_checked:
-            self._bloom_checked = True
-            if self.USE_VOCAB_BLOOM and self._n_terms:
-                from .bloom import build_term_bloom
+        with self._dictionary_lock:
+            if not self._bloom_checked:
+                if self._n_terms:
+                    from .bloom import build_term_bloom
 
-                self._bloom = build_term_bloom(self.index.term_stats, self._n_terms)
+                    self._bloom = build_term_bloom(self.index.term_stats, self._n_terms)
+                self._bloom_checked = True
         return self._bloom
 
     def _find_corrections(self, terms: list[str]) -> dict[str, str]:
         """For exact terms absent from the dictionary, find the best
-        Damerau-Levenshtein correction (ref: SpellingCorrector.java:38-48)."""
+        Damerau-Levenshtein correction (ref: SpellingCorrector.java:38-48).
+        Existence is checked against the cached vocab or the once-built Bloom
+        filter — zero per-query actions either way; an empty index has
+        neither, and every term counts as absent."""
         exact = sorted({t for t in terms if not t.endswith("*")})
         if not exact:
             return {}
-        vocab = self._get_vocab()
-        if vocab is not None:
-            present = {t for t in exact if t in vocab}
-        elif (bloom := self._get_bloom()) is not None:
-            present = {t for t in exact if t in bloom}
-        else:
-            buckets = sorted({_py_term_bucket(t, self.n_buckets) for t in exact})
-            present = {
-                r["term"]
-                for r in self.index.term_stats
-                .filter(F.col("term_bucket").isin(buckets))
-                .filter(F.col("term").isin(exact))
-                .select("term").collect()
-            }
-        missing = [t for t in exact if t not in present]
+        known = self._get_vocab()
+        if known is None:
+            known = self._get_bloom() or frozenset()
+        missing = [t for t in exact if t not in known]
         if not missing:
             return {}
         # ONE correction job regardless of typo count (batched dictionary
@@ -197,25 +190,27 @@ class QueryExecutor:
                 expanded.extend(matching)
         return expanded, ranges
 
-    def _keyword_terms(self, terms: list[str]) -> tuple[list[str], tuple[str, ...]]:
+    def _keyword_terms(
+        self, terms: list[str], corrections: dict[str, str]
+    ) -> tuple[list[str], tuple[str, ...]]:
         """Keyword bag -> (exact terms, corrected + vocab-expanded; prefix
         ranges)."""
-        exact, prefixes, _ = self.resolve_terms(terms)
+        exact, prefixes = self.resolve_terms(terms, corrections)
         expanded, ranges = self._expand_prefixes(prefixes)
         return exact + expanded, tuple(ranges)
 
-    def _ranked_spec(self, ast) -> wand.QuerySpec:
+    def _ranked_spec(self, ast, corrections: dict[str, str]) -> wand.QuerySpec:
         """Keyword / Phrase / Mixed AST -> the kernels' QuerySpec. Phrase
         terms keep order and multiplicity; a prefix inside a phrase is
         dropped (the parser keeps it as a token, phrases match exact terms)."""
         if isinstance(ast, Q.Keyword):
-            return wand.QuerySpec([], *self._keyword_terms(ast.terms))
+            return wand.QuerySpec([], *self._keyword_terms(ast.terms, corrections))
         if isinstance(ast, Q.Phrase):
-            return wand.QuerySpec(self.resolve_terms(ast.terms, dedupe=False)[0], [])
-        ph_terms = self.resolve_terms(ast.phrase.terms, dedupe=False)[0]
-        return wand.QuerySpec(ph_terms, *self._keyword_terms(ast.keyword.terms))
+            return wand.QuerySpec(self.resolve_terms(ast.terms, corrections, dedupe=False)[0], [])
+        ph_terms = self.resolve_terms(ast.phrase.terms, corrections, dedupe=False)[0]
+        return wand.QuerySpec(ph_terms, *self._keyword_terms(ast.keyword.terms, corrections))
 
-    def _bool_spec(self, ast, links: list):
+    def _bool_spec(self, ast, corrections: dict[str, str], links: list):
         """Boolean AST -> nested spec for wand.boolean_docs. Keyword leaves
         become ("terms", exact[, prefix ranges]); LinkTo leaves become
         ("link", target) and append their (target, doc_id) rows to
@@ -223,8 +218,8 @@ class QueryExecutor:
         if isinstance(ast, Q.Boolean):
             return (
                 ast.op.lower(),
-                self._bool_spec(ast.left, links),
-                self._bool_spec(ast.right, links),
+                self._bool_spec(ast.left, corrections, links),
+                self._bool_spec(ast.right, corrections, links),
             )
         if isinstance(ast, Q.LinkTo):
             links.append(
@@ -233,7 +228,7 @@ class QueryExecutor:
                 )
             )
             return ("link", ast.doc_id)
-        terms, ranges = self._keyword_terms(ast.terms)
+        terms, ranges = self._keyword_terms(ast.terms, corrections)
         return ("terms", terms, ranges) if ranges else ("terms", terms)
 
     def _linkto_docs(self, ast: Q.LinkTo) -> DataFrame:
@@ -297,91 +292,98 @@ class QueryExecutor:
         per index keeps it at ONE action per query too (no false negatives
         on membership, so a wrong correction is never invented; a false
         positive (~2^-11/absent term) may rarely suppress one correction —
-        see bloom.py; the cached-vocab and semi-filter paths are exact).
-        Only with
-        ``USE_VOCAB_BLOOM=False`` does it cost a per-query ``isin``
-        semi-filter of the (tiny) query-term list against term_stats.
-        Applied corrections are exposed as ``last_corrections``. The returned
-        DataFrame is localized (k rows)."""
-        pq = Q.parse(query, tokenize=self._tokenize_query)
-        exact_q = [t for t in Q.collect_terms(pq.ast) if not t.endswith("*")]
-        # _find_corrections checks existence against the cached vocab or the
-        # once-built Bloom filter (zero per-query actions either way)
-        self._corrections = self._find_corrections(exact_q) if exact_q else {}
-        self.last_corrections = dict(self._corrections)
-        return self._localize(self._run_once(pq, k))
+        see bloom.py; the cached-vocab path is exact). The returned
+        DataFrame is localized (k rows).
+
+        Thread-safe: concurrent calls on one executor each apply their own
+        corrections (passed as values, never stored on the executor). The
+        applied map is also exposed as ``last_corrections``, which is
+        last-call-wins when calls overlap."""
+        pq = self._parse(query)
+        corrections = self._corrections_for([pq])
+        return self._localize(self._run_once(pq, corrections, k))
 
     def search_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Batched serving: the whole workload in ONE Spark action.
 
         ``queries`` maps query_id -> query text; every ranked one-pass query
         type batches — keyword bags, exact phrases, and Mixed
-        ('"phrase" extra words') queries, each running its single-query
-        kernel per shard over ONE shared scan. Boolean/LinkTo (unranked) and
-        PRF (inherently two-pass) go through ``search``. Spelling
-        corrections for the ENTIRE batch resolve exactly like the
-        single-query path and still cost zero extra actions on the happy
-        path (existence via the cached vocab / once-built Bloom; one batched
-        ``correct_terms`` job only when typos exist). Returns (query_id,
-        rank, doc_id, score) — collecting it runs one job: a single
-        bucket-pruned packed scan of the union of all terms, per-shard
-        per-query kernels, one window for the global per-query top-k.
-        Rank+score identical to calling ``search`` per query
-        (tests/test_batch.py). Under ``scorer="ql"`` the batch serves
-        keyword bags through ``wand.ql_topk_many``; QL phrase and Mixed
-        queries go through ``search``."""
-        batchable = (
-            (Q.Keyword,) if self.scorer == "ql" else (Q.Keyword, Q.Phrase, Q.Mixed)
-        )
-        parsed: dict[str, Q.ParsedQuery] = {}
-        all_terms: list[str] = []
-        for qid, text in queries.items():
-            pq = Q.parse(text, tokenize=self._tokenize_query)
-            if pq.prf > 0 or not isinstance(pq.ast, batchable):
+        ('"phrase" extra words') queries, under either scorer and on a
+        fielded executor — each running its single-query kernel per shard
+        over ONE shared scan. Boolean/LinkTo (unranked) and PRF (inherently
+        two-pass) go through ``search``. Spelling corrections for the
+        ENTIRE batch resolve exactly like the single-query path and still
+        cost zero extra actions on the happy path (existence via the cached
+        vocab / once-built Bloom; one batched ``correct_terms`` job only
+        when typos exist). Returns (query_id, rank, doc_id, score) —
+        collecting it runs one job: a single bucket-pruned packed scan of
+        the union of all terms, per-shard per-query kernels, one window for
+        the global per-query top-k. Rank+score identical to calling
+        ``search`` per query (tests/test_batch.py)."""
+        parsed = {qid: self._parse(text) for qid, text in queries.items()}
+        for qid, pq in parsed.items():
+            if pq.prf > 0 or Q.is_unranked(pq.ast):
                 raise ValueError(
                     f"search_many handles ranked one-pass queries only "
-                    f"(keyword/phrase/mixed; keyword only under ql); "
-                    f"{text!r} parsed to "
+                    f"(keyword/phrase/mixed); {queries[qid]!r} parsed to "
                     f"{'PRF' if pq.prf else type(pq.ast).__name__}"
                 )
-            parsed[qid] = pq
-            all_terms.extend(Q.collect_terms(pq.ast))
-        exact_q = [t for t in all_terms if not t.endswith("*")]
-        self._corrections = self._find_corrections(exact_q) if exact_q else {}
-        self.last_corrections = dict(self._corrections)
-
-        specs: dict[str, tuple[list[str], list[str]]] = {}
-        for qid, pq in parsed.items():
-            spec = self._ranked_spec(pq.ast)
+        corrections = self._corrections_for(parsed.values())
+        specs = {qid: self._ranked_spec(pq.ast, corrections) for qid, pq in parsed.items()}
+        for qid, spec in specs.items():
             if spec.prefixes:
                 raise ValueError(
                     f"batch prefix term in {queries[qid]!r} is not "
                     "dictionary-expandable (no cached vocab or explosive "
                     "prefix) — run it through search()"
                 )
-            specs[qid] = (spec.phrase, spec.keywords)
+        _, many = self._plans()
+        return many({qid: (s.phrase, s.keywords) for qid, s in specs.items()}, k)
+
+    def _parse(self, text: str) -> Q.ParsedQuery:
+        return Q.parse(text, tokenize=self._tokenize_query)
+
+    def _corrections_for(self, parsed) -> dict[str, str]:
+        """The front end's ONE spelling pass over every exact term of
+        ``parsed`` (one query or a whole batch); also published as
+        ``last_corrections``."""
+        corrections = self._find_corrections(
+            [t for pq in parsed for t in Q.collect_terms(pq.ast)]
+        )
+        self.last_corrections = dict(corrections)
+        return corrections
+
+    def _plans(self):
+        """THE scorer/fielded dispatch of every ranked plan: this executor's
+        (one query, batch) plan pair. ``one(spec, k)`` ends in a
+        TakeOrderedAndProject over (doc_id, score); ``many({qid: (phrase,
+        keywords)}, k)`` in the per-query window (wand.py). QL/JM under
+        scorer="ql"; under bm25 zone-weighted on a fielded executor (EVERY
+        ranked query type, like the reference's
+        DocumentRanker.weightDocument, ref: DocumentRanker.java:138-167 —
+        never a silent unfielded fallback), else plain block-max WAND,
+        seeded by phrase survivors when the spec has a phrase."""
+        spark, nb = self.spark, self.n_buckets
         if self.scorer == "ql":
-            return wand.ql_topk_many(
-                self.spark, self.index,
-                {qid: kw for qid, (_, kw) in specs.items()}, k=k,
-                n_term_buckets=self.n_buckets,
+            return (
+                lambda s, k: wand.ql_topk(
+                    spark, self.index, s.keywords, k, nb,
+                    phrase_terms=s.phrase, prefixes=s.prefixes, weights=s.weights,
+                ),
+                lambda pairs, k: wand.ql_topk_many(spark, self.index, pairs, k, nb),
             )
         if self.fielded_index is not None:
-            # the fielded invariant holds for batches too: a fielded
-            # executor never silently ranks unfielded — every query in the
-            # batch scores zone-weighted off the packed fielded index
-            from .fields import fielded_batch_topk
+            from .fields import fielded_batch_topk, fielded_mixed_topk
 
-            return fielded_batch_topk(
-                self.spark, self.fielded_index, specs, k=k,
-                n_term_buckets=self.n_buckets,
-            )
-        return wand.batch_topk(
-            self.spark, self.index, specs, k=k,
-            n_term_buckets=self.n_buckets,
+            target, one, many = self.fielded_index, fielded_mixed_topk, fielded_batch_topk
+        else:
+            target, one, many = self.index, wand.mixed_topk, wand.batch_topk
+        return (
+            lambda s, k: one(spark, target, s.phrase, s.keywords, k, nb, s.weights, s.prefixes),
+            lambda pairs, k: many(spark, target, pairs, k, nb),
         )
 
-    def _run_once(self, pq: Q.ParsedQuery, k: int) -> list:
+    def _run_once(self, pq: Q.ParsedQuery, corrections: dict[str, str], k: int) -> list:
         ast = pq.ast
         if isinstance(ast, Q.LinkTo):
             return (
@@ -393,13 +395,14 @@ class QueryExecutor:
             )
         if isinstance(ast, Q.Boolean):
             links: list[DataFrame] = []
-            spec = self._bool_spec(ast, links)
+            spec = self._bool_spec(ast, corrections, links)
             return wand.boolean_docs(
                 self.spark, self.index, spec, k=k, n_term_buckets=self.n_buckets,
                 links=reduce(DataFrame.unionByName, links) if links else None,
             ).collect()
-        spec = self._ranked_spec(ast)
-        top = self._rank(spec, k)
+        spec = self._ranked_spec(ast, corrections)
+        one, _ = self._plans()
+        top = one(spec, k).collect()
         if pq.prf == 0:
             return top
         # two-pass pseudo-relevance feedback: pass 2 adds the expansion
@@ -407,48 +410,19 @@ class QueryExecutor:
         # _prf_terms filters against the RAW query tokens, so an expansion
         # term can coincide with a corrected or prefix-matched base keyword;
         # it then scores at 1.0 + 0.25
-        prf_terms = self._prf_terms(pq, top, pq.prf)
+        prf_terms = self._prf_terms(pq, corrections, top, pq.prf)
         if not prf_terms:
             return top
-        pq.prf_terms = prf_terms
         weights = {
             t: (1.0 + PRF_WEIGHT) if spec.is_keyword(t) else PRF_WEIGHT
             for t in prf_terms
         }
         keywords = spec.keywords + [t for t in prf_terms if not spec.is_keyword(t)]
-        return self._rank(spec._replace(keywords=keywords, weights=weights), k)
+        return one(spec._replace(keywords=keywords, weights=weights), k).collect()
 
-    def _rank(self, spec: wand.QuerySpec, k: int) -> list:
-        """One ranked plan for ``spec``: QL/JM under scorer="ql"; under bm25
-        zone-weighted on a fielded executor (EVERY ranked query type, like
-        the reference's DocumentRanker.weightDocument, ref:
-        DocumentRanker.java:138-167 — never a silent unfielded fallback),
-        else plain block-max WAND, seeded by phrase survivors when the spec
-        has a phrase."""
-        args = (spec.phrase, spec.keywords) if spec.phrase else (spec.keywords,)
-        if self.scorer == "ql":
-            df = wand.ql_topk(
-                self.spark, self.index, spec.keywords, k, self.n_buckets,
-                phrase_terms=spec.phrase, prefixes=spec.prefixes,
-                weights=spec.weights,
-            )
-        elif self.fielded_index is not None:
-            from .fields import fielded_mixed_topk, fielded_wand_topk
-
-            fn = fielded_mixed_topk if spec.phrase else fielded_wand_topk
-            df = fn(
-                self.spark, self.fielded_index, *args, k, self.n_buckets,
-                spec.weights, spec.prefixes,
-            )
-        else:
-            fn = wand.mixed_topk if spec.phrase else wand.wand_topk
-            df = fn(
-                self.spark, self.index, *args, k, self.n_buckets,
-                spec.weights, spec.prefixes,
-            )
-        return df.collect()
-
-    def _prf_terms(self, pq: Q.ParsedQuery, top_rows: list, depth: int) -> list[str]:
+    def _prf_terms(
+        self, pq: Q.ParsedQuery, corrections: dict[str, str], top_rows: list, depth: int
+    ) -> list[str]:
         """Pseudo-relevance feedback: most frequent new tokens of the
         GENERATED SNIPPETS of the top-N docs, concatenated in rank order
         (ref: QueryProcessor.java:427-438 — extendPrfQuery feeds each top
@@ -482,7 +456,7 @@ class QueryExecutor:
         }
         base = set(Q.collect_terms(pq.ast))
         query_terms = sorted(
-            {self._corrections.get(t, t) for t in base if not t.endswith("*")}
+            {corrections.get(t, t) for t in base if not t.endswith("*")}
         )
         concatenated = " ".join(
             generate_snippet(

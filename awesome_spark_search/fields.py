@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import wand
 from .build import (
     B,
     DEFAULT_TERM_BUCKETS,
@@ -381,8 +382,6 @@ def _fielded_rows(fidx: FieldedPackedIndex, n_term_buckets: int):
     ``wand.term_rows`` over the fielded table, idf pre-multiplied by w_f and
     an ``avgdl`` column holding the row's FIELD avgdl (overrides
     ``wand._wand_pass``'s scalar; phrase evaluation groups rows by field)."""
-    from .wand import term_rows
-
     idf = idf_col(F.col("df"), fidx.n_docs).alias("idf")
     wmap = F.create_map(
         *[F.lit(x) for f, w in sorted(fidx.field_weights.items())
@@ -393,7 +392,7 @@ def _fielded_rows(fidx: FieldedPackedIndex, n_term_buckets: int):
           for x in (f, float(a))]
     )
     return lambda terms, prefixes: (
-        term_rows(fidx.packed, fidx.term_stats, terms, n_term_buckets, [idf], prefixes)
+        wand.term_rows(fidx.packed, fidx.term_stats, terms, n_term_buckets, [idf], prefixes)
         .withColumn("idf", F.col("idf") * wmap[F.col("field")])
         .withColumn("avgdl", amap[F.col("field")])
     )
@@ -417,10 +416,10 @@ def fielded_wand_topk(
     column overrides the dl normalizer inside ``wand._wand_pass``. Skipping
     stays exact because each list's block_max was packed against the same
     avgdl. Every term in a ``prefixes`` range is a query term too."""
-    from .wand import QuerySpec, _ranked_topk
-
-    spec = QuerySpec([], list(terms), tuple(prefixes), term_weights)
-    return _ranked_topk(spark, _fielded_rows(fidx, n_term_buckets), spec, 1.0, k)
+    spec = wand.QuerySpec([], list(terms), tuple(prefixes), term_weights)
+    return wand._topk(wand._ranked_rows(
+        spark, _fielded_rows(fidx, n_term_buckets), {"q": spec}, *wand._bm25(1.0, k), k
+    ), k)
 
 
 def fielded_phrase_topk(
@@ -455,11 +454,12 @@ def fielded_mixed_topk(
     enters the block-max WAND loop as an independent list (w_f-folded idf,
     per-row avgdl). A term in both lists double-counts for survivors exactly
     like the unioned long-table plan (``fielded_mixed_bm25_topk``).
-    ``weights``/``prefixes`` apply to the keyword part."""
-    from .wand import QuerySpec, _ranked_topk
-
-    spec = QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
-    return _ranked_topk(spark, _fielded_rows(fidx, n_term_buckets), spec, 1.0, k)
+    ``weights``/``prefixes`` apply to the keyword part; ([], kw) is a
+    keyword query, as in ``wand.mixed_topk``."""
+    spec = wand.QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
+    return wand._topk(wand._ranked_rows(
+        spark, _fielded_rows(fidx, n_term_buckets), {"q": spec}, *wand._bm25(1.0, k), k
+    ), k)
 
 
 def fielded_batch_topk(
@@ -476,6 +476,7 @@ def fielded_batch_topk(
     never silently ranks unfielded). Per-query results are rank+score
     identical to fielded_wand_topk / fielded_phrase_topk / fielded_mixed_topk
     (tests/test_batch.py)."""
-    from .wand import _ranked_batch
-
-    return _ranked_batch(spark, _fielded_rows(fidx, n_term_buckets), specs, 1.0, k)
+    return wand._batch_global_topk(wand._ranked_rows(
+        spark, _fielded_rows(fidx, n_term_buckets), wand._pairs(specs),
+        *wand._bm25(1.0, k), k,
+    ), k)

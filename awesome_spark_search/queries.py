@@ -16,7 +16,7 @@ DataFrame plans (executor.py).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -52,7 +52,6 @@ class ParsedQuery:
     ast: object
     prf: int = 0  # pseudo-relevance-feedback depth (0 = off)
     raw: str = ""
-    prf_terms: list[str] = field(default_factory=list)  # filled by PRF pass
 
 
 _PRF_RE = re.compile(r"\s#(\d+)\s*$")

@@ -15,8 +15,10 @@ Spark shape — scalable by construction:
   inside the blob (dls_vb), so a query is ONE applyInPandas over the few
   matching packed rows — no doc_map join; every Python invocation sees one
   shard's worth of data (bounded by shard_size regardless of corpus size).
-* each shard emits its local top-k; the global top-k is a tiny
-  TakeOrderedAndProject over n_shards*k rows.
+* one plan builder (``_ranked_rows``) serves every scorer, one query or a
+  batch: each shard emits every query's local top-k; the global top-k of
+  one query is a tiny TakeOrderedAndProject over n_shards*k rows, that of
+  a batch a per-query window.
 * inside a shard the evaluation is numpy-vectorized document-at-a-time over
   terms ordered by descending bound: once the k-th best exact score exceeds
   the cumulative bound of the remaining terms, docs not already seen cannot
@@ -39,14 +41,6 @@ from pyspark.sql import types as T
 from . import codec
 from .build import Index, _py_term_bucket, K1, B
 from .scoring import JM_LAMBDA, idf_col
-
-RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
-
 
 # decoded-postings instrumentation (per-process; in distributed runs each
 # Python worker counts its own shards — the test calls the shard fn directly)
@@ -332,111 +326,9 @@ def _bm25_scores(shard, spec: QuerySpec, avgdl: float, k: int):
     return ids, scores
 
 
-def _topk_factory(spec: QuerySpec, avgdl: float, k: int):
-    """applyInPandas: one doc_shard's packed rows -> that shard's top-k of
-    one query (``_bm25_scores``). Doc lengths decode from the blob (dls_vb),
-    so no doc_map join happens at query time."""
-
-    def shard(left: pd.DataFrame) -> pd.DataFrame:
-        return _local_topk(*_bm25_scores(_shard_rows(left, avgdl), spec, avgdl, k), k)
-
-    # the UDF's name is the per-shard step's label in the physical plan
-    shard.__name__ = (
-        "shard_topk" if not spec.phrase
-        else "shard_mixed" if spec.keywords or spec.prefixes
-        else "shard_phrase"
-    )
-    return shard
-
-
-def _ranked_topk(spark, select, spec: QuerySpec, avgdl: float, k: int) -> DataFrame:
-    """ONE Spark action: the query's rows (``select(terms, prefixes)``), the
-    per-shard kernel, and a tiny global TakeOrderedAndProject over
-    n_shards * k local rows."""
-    terms = list(dict.fromkeys([*spec.phrase, *spec.keywords]))
-    if not terms and not spec.prefixes:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    local = select(terms, spec.prefixes).groupBy("doc_shard").applyInPandas(
-        _topk_factory(spec, avgdl, k), RESULT_SCHEMA
-    )
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
-def wand_topk(
-    spark: SparkSession,
-    index: Index,
-    terms: list[str],
-    k: int = 10,
-    n_term_buckets: int = 64,
-    weights: dict[str, float] | None = None,
-    prefixes=(),
-) -> DataFrame:
-    """Top-k BM25 via block-max WAND on the packed index, rank+score
-    identical to the oracle (tests/oracle.py). ``weights`` scales per-term
-    contributions (PRF expansion terms at 0.25; BM25 is linear in idf, so
-    the kernel multiplies idf); every term in a ``prefixes`` range is a
-    query term too. ONE Spark action (``term_rows``)."""
-    return _ranked_topk(
-        spark, _idf_rows(index, n_term_buckets),
-        QuerySpec([], list(terms), tuple(prefixes), weights), index.stats.avgdl, k,
-    )
-
-
-def mixed_topk(
-    spark: SparkSession,
-    index: Index,
-    phrase_terms: list[str],
-    keyword_terms: list[str],
-    k: int = 10,
-    n_term_buckets: int = 64,
-    weights: dict[str, float] | None = None,
-    prefixes=(),
-) -> DataFrame:
-    """Mixed-query top-k ('"exact phrase" extra words') off the packed
-    index, ONE Spark action: every term's packed rows arrive in one
-    bucket-pruned scan and each doc_shard runs phrase-eval + seeded WAND in
-    a single applyInPandas pass (``_bm25_scores``). ``weights``/``prefixes``
-    apply to the keyword part, as in ``wand_topk``."""
-    return _ranked_topk(
-        spark, _idf_rows(index, n_term_buckets),
-        QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights),
-        index.stats.avgdl, k,
-    )
-
-
-def phrase_topk(
-    spark: SparkSession,
-    index: Index,
-    terms: list[str],
-    k: int = 10,
-    n_term_buckets: int = 64,
-) -> DataFrame:
-    """Exact-phrase top-k BM25 off the packed (compressed) index: positions
-    decode only for the phrase's terms, per doc-shard, and each shard emits
-    a bounded local top-k. A phrase term missing from the whole index means
-    no shard holds every term, so each returns empty on its own — no
-    driver-side existence collect."""
-    return _ranked_topk(
-        spark, _idf_rows(index, n_term_buckets), QuerySpec(list(terms), []),
-        index.stats.avgdl, k,
-    )
-
-
-BATCH_RESULT_SCHEMA = T.StructType(
+SHARD_ROWS_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
-
-# the FINAL batch result shape (shard-local rows get a rank from the global
-# window); the empty-batch early return must match it so downstream selects
-# of 'rank' work on degenerate batches too
-BATCH_TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.StringType(), False),
-        T.StructField("rank", T.IntegerType(), False),
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("score", T.DoubleType(), False),
     ]
@@ -461,6 +353,55 @@ def _batch_pdf(scored, k: int) -> pd.DataFrame:
     return pd.concat(parts, ignore_index=True) if parts else _empty_batch_pdf()
 
 
+def _shard_step(specs: dict[str, QuerySpec], parse, score, k: int):
+    """applyInPandas body of ``_ranked_rows``: one doc_shard's rows, parsed
+    once (``parse``), scored for every spec (``score``) -> each query's
+    shard-local top-k rows."""
+
+    def shard_topk(left: pd.DataFrame) -> pd.DataFrame:
+        shard = parse(left)
+        return _batch_pdf(((qid, score(shard, s)) for qid, s in specs.items()), k)
+
+    return shard_topk
+
+
+def _ranked_rows(spark, select, specs: dict[str, QuerySpec], parse, score, k: int) -> DataFrame:
+    """THE ranked-plan builder of every scorer, for one query or a batch:
+    ONE scan of the union of all specs' terms and prefix ranges
+    (``select(terms, prefixes)``, a ``term_rows`` selector), then per
+    doc_shard ``_shard_step`` -> shard-local (query_id, doc_id, score) rows.
+    The caller adds the global top-k tail: ``_topk`` for one query,
+    ``_batch_global_topk`` for a batch. Block skipping stays per-query
+    exact: every spec runs its own kernel over the shared rows."""
+    terms = list(dict.fromkeys(t for s in specs.values() for t in [*s.phrase, *s.keywords]))
+    prefixes = tuple(dict.fromkeys(p for s in specs.values() for p in s.prefixes))
+    if not terms and not prefixes:
+        return spark.createDataFrame([], SHARD_ROWS_SCHEMA)
+    return select(terms, prefixes).groupBy("doc_shard").applyInPandas(
+        _shard_step(specs, parse, score, k), SHARD_ROWS_SCHEMA
+    )
+
+
+def _bm25(avgdl: float, k: int):
+    """BM25's (parse, score) pair for ``_ranked_rows``: ``_shard_rows`` and
+    ``_bm25_scores``. Doc lengths decode from the blob (dls_vb), so no
+    doc_map join happens at query time."""
+    return (
+        lambda left: _shard_rows(left, avgdl),
+        lambda shard, spec: _bm25_scores(shard, spec, avgdl, k),
+    )
+
+
+def _topk(local: DataFrame, k: int) -> DataFrame:
+    """One query's global top-k: a tiny TakeOrderedAndProject over the
+    n_shards * k shard-local rows."""
+    return (
+        local.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(k)
+        .select("doc_id", "score")
+    )
+
+
 def _batch_global_topk(local: DataFrame, k: int) -> DataFrame:
     """Per-query global top-k over the shard-local batch rows: one window
     (n_shards * k * n_queries tiny rows; Spark pushes a WindowGroupLimit
@@ -480,26 +421,72 @@ def _batch_global_topk(local: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _ranked_batch(spark, select, specs: dict, avgdl: float, k: int) -> DataFrame:
-    """Batched BM25 top-k: ONE bucket-pruned scan of the union of every
-    query's terms; each doc_shard runs every query's own kernel
-    (``_bm25_scores`` — block skipping stays per-query exact) over the SAME
-    rows, parsed once; one window for the per-query global top-k."""
-    specs = {qid: QuerySpec(list(ph), list(kw)) for qid, (ph, kw) in specs.items()}
-    all_terms = sorted({t for s in specs.values() for t in [*s.phrase, *s.keywords]})
-    if not all_terms:
-        return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
+def _pairs(specs: dict) -> dict[str, QuerySpec]:
+    """A batch entry point's {query_id: (phrase_terms, keyword_terms)}."""
+    return {qid: QuerySpec(list(ph), list(kw)) for qid, (ph, kw) in specs.items()}
 
-    def shard_batch(left: pd.DataFrame) -> pd.DataFrame:
-        shard = _shard_rows(left, avgdl)
-        return _batch_pdf(
-            ((qid, _bm25_scores(shard, s, avgdl, k)) for qid, s in specs.items()), k
-        )
 
-    local = select(all_terms, ()).groupBy("doc_shard").applyInPandas(
-        shard_batch, BATCH_RESULT_SCHEMA
-    )
-    return _batch_global_topk(local, k)
+def wand_topk(
+    spark: SparkSession,
+    index: Index,
+    terms: list[str],
+    k: int = 10,
+    n_term_buckets: int = 64,
+    weights: dict[str, float] | None = None,
+    prefixes=(),
+) -> DataFrame:
+    """Top-k BM25 via block-max WAND on the packed index, rank+score
+    identical to the oracle (tests/oracle.py). ``weights`` scales per-term
+    contributions (PRF expansion terms at 0.25; BM25 is linear in idf, so
+    the kernel multiplies idf); every term in a ``prefixes`` range is a
+    query term too. ONE Spark action (``term_rows``)."""
+    spec = QuerySpec([], list(terms), tuple(prefixes), weights)
+    return _topk(_ranked_rows(
+        spark, _idf_rows(index, n_term_buckets), {"q": spec},
+        *_bm25(index.stats.avgdl, k), k,
+    ), k)
+
+
+def mixed_topk(
+    spark: SparkSession,
+    index: Index,
+    phrase_terms: list[str],
+    keyword_terms: list[str],
+    k: int = 10,
+    n_term_buckets: int = 64,
+    weights: dict[str, float] | None = None,
+    prefixes=(),
+) -> DataFrame:
+    """One ranked BM25 query of any type off the packed index, ONE Spark
+    action: ([], kw) is a keyword query, (ph, []) an exact phrase, (ph, kw)
+    a Mixed query ('"exact phrase" extra words'). Every term's packed rows
+    arrive in one bucket-pruned scan and each doc_shard runs phrase-eval +
+    seeded WAND in a single applyInPandas pass (``_bm25_scores``).
+    ``weights``/``prefixes`` apply to the keyword part, as in
+    ``wand_topk``."""
+    spec = QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
+    return _topk(_ranked_rows(
+        spark, _idf_rows(index, n_term_buckets), {"q": spec},
+        *_bm25(index.stats.avgdl, k), k,
+    ), k)
+
+
+def phrase_topk(
+    spark: SparkSession,
+    index: Index,
+    terms: list[str],
+    k: int = 10,
+    n_term_buckets: int = 64,
+) -> DataFrame:
+    """Exact-phrase top-k BM25 off the packed (compressed) index: positions
+    decode only for the phrase's terms, per doc-shard, and each shard emits
+    a bounded local top-k. A phrase term missing from the whole index means
+    no shard holds every term, so each returns empty on its own — no
+    driver-side existence collect."""
+    return _topk(_ranked_rows(
+        spark, _idf_rows(index, n_term_buckets), {"q": QuerySpec(list(terms), [])},
+        *_bm25(index.stats.avgdl, k), k,
+    ), k)
 
 
 def batch_topk(
@@ -511,22 +498,11 @@ def batch_topk(
 ) -> DataFrame:
     """Batched top-k over MIXED query types in ONE Spark action: each
     ``specs`` value is (phrase_terms, keyword_terms) — ([], kw) is a plain
-    keyword query, (ph, []) an exact phrase, (ph, kw) a Mixed query.
-    Per-query results are rank+score identical to wand_topk / phrase_topk /
-    mixed_topk (tests/test_batch.py)."""
-    return _ranked_batch(
-        spark, _idf_rows(index, n_term_buckets), specs, index.stats.avgdl, k
-    )
-
-
-def wand_topk_many(
-    spark: SparkSession,
-    index: Index,
-    term_sets: dict[str, list[str]],
-    k: int = 10,
-    n_term_buckets: int = 64,
-) -> DataFrame:
-    """Batched top-k BM25: the whole query BATCH in ONE Spark action.
+    keyword query, (ph, []) an exact phrase, (ph, kw) a Mixed query. The
+    batch shares one bucket-pruned scan of the union of its terms, each
+    shard parsed once; per-query results are rank+score identical to
+    wand_topk / phrase_topk / mixed_topk, which run the same builder and
+    kernel (tests/test_batch.py).
 
     The serving cost of a single query at scale is dominated by fixed
     per-action work (job scheduling, the packed scan's task launch, one
@@ -534,12 +510,11 @@ def wand_topk_many(
     on a 1000-executor cluster (the reference answers one query per call,
     src/SearchEngine/SearchEngineTest.java:19-56 driving
     AwesomeSearchEngine.java; batching is the Spark-first upgrade of that
-    loop). Keyword-only sugar over ``batch_topk``, which also carries phrase
-    and Mixed queries in the same action."""
-    return batch_topk(
-        spark, index, {qid: ([], ts) for qid, ts in term_sets.items()},
-        k=k, n_term_buckets=n_term_buckets,
-    )
+    loop)."""
+    return _batch_global_topk(_ranked_rows(
+        spark, _idf_rows(index, n_term_buckets), _pairs(specs),
+        *_bm25(index.stats.avgdl, k), k,
+    ), k)
 
 
 def _ql_decode_row(r, lam: float, C: float) -> tuple[np.ndarray, np.ndarray]:
@@ -588,14 +563,23 @@ def _ql_scores(shard, spec: QuerySpec):
     return ids, scores
 
 
-def _cf_rows(index: Index, terms, n_term_buckets: int, prefixes=()) -> DataFrame:
-    """Packed rows with the broadcast GLOBAL collection frequency (aliased
-    cf_global: packed group rows carry a per-(term, doc_shard) cf; the JM
-    background model needs the term's corpus-wide cf)."""
-    return term_rows(
-        index.packed, index.term_stats, terms, n_term_buckets,
-        [F.col("cf").alias("cf_global")], prefixes,
+def _cf_rows(index: Index, n_term_buckets: int):
+    """Row selector for QL plans over ``index``: (terms, prefixes) -> packed
+    rows with the broadcast GLOBAL collection frequency (aliased cf_global:
+    packed group rows carry a per-(term, doc_shard) cf; the JM background
+    model needs the term's corpus-wide cf)."""
+    cf = F.col("cf").alias("cf_global")
+    return lambda terms, prefixes: term_rows(
+        index.packed, index.term_stats, terms, n_term_buckets, [cf], prefixes
     )
+
+
+def _ql(index: Index, lam: float | None):
+    """QL/JM's (parse, score) pair for ``_ranked_rows``: ``_ql_shard`` and
+    ``_ql_scores``."""
+    lam = JM_LAMBDA if lam is None else lam
+    C = float(max(index.stats.total_tokens, 1))
+    return lambda left: _ql_shard(left, lam, C), _ql_scores
 
 
 def ql_topk(
@@ -619,49 +603,28 @@ def ql_topk(
     with a broadcast cf column, per-shard decode (dl rides in dls_vb, so no
     doc_map join), tiny global top-k."""
     spec = QuerySpec(list(phrase_terms), list(terms), tuple(prefixes), weights)
-    all_terms = list(dict.fromkeys([*spec.phrase, *spec.keywords]))
-    if not all_terms and not spec.prefixes:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    lam = JM_LAMBDA if lam is None else lam
-    C = float(max(index.stats.total_tokens, 1))
-
-    def shard_ql(left: pd.DataFrame) -> pd.DataFrame:
-        return _local_topk(*_ql_scores(_ql_shard(left, lam, C), spec), k)
-
-    local = _cf_rows(index, all_terms, n_term_buckets, spec.prefixes).groupBy(
-        "doc_shard"
-    ).applyInPandas(shard_ql, RESULT_SCHEMA)
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return _topk(_ranked_rows(
+        spark, _cf_rows(index, n_term_buckets), {"q": spec}, *_ql(index, lam), k
+    ), k)
 
 
 def ql_topk_many(
     spark: SparkSession,
     index: Index,
-    term_sets: dict[str, list[str]],
+    specs: dict[str, tuple[list[str], list[str]]],
     k: int = 10,
     n_term_buckets: int = 64,
     lam: float | None = None,
 ) -> DataFrame:
-    """Batched QL/JM keyword top-k in ONE Spark action — the ``ql_topk``
-    shape shared by the whole batch, each term's lists decoded once per
-    shard regardless of how many queries use it. Per-query scores are
-    EQUAL to ``ql_topk``'s: both sum through ``_ql_scores`` in the same
-    term order (tests/test_batch.py)."""
-    specs = {qid: QuerySpec([], list(ts)) for qid, ts in term_sets.items()}
-    all_terms = sorted({t for ts in term_sets.values() for t in ts})
-    if not all_terms:
-        return spark.createDataFrame([], BATCH_TOPK_SCHEMA)
-    lam = JM_LAMBDA if lam is None else lam
-    C = float(max(index.stats.total_tokens, 1))
-
-    def shard_ql(left: pd.DataFrame) -> pd.DataFrame:
-        shard = _ql_shard(left, lam, C)
-        return _batch_pdf(((qid, _ql_scores(shard, s)) for qid, s in specs.items()), k)
-
-    local = _cf_rows(index, all_terms, n_term_buckets).groupBy("doc_shard").applyInPandas(
-        shard_ql, BATCH_RESULT_SCHEMA
-    )
-    return _batch_global_topk(local, k)
+    """Batched QL/JM top-k in ONE Spark action, with ``batch_topk``'s
+    (phrase_terms, keyword_terms) specs — keyword, phrase and Mixed queries
+    alike. Each term's lists decode once per shard regardless of how many
+    queries use them. Per-query scores are EQUAL to ``ql_topk``'s: both run
+    the same builder and sum through ``_ql_scores`` in the same term order
+    (tests/test_batch.py)."""
+    return _batch_global_topk(_ranked_rows(
+        spark, _cf_rows(index, n_term_buckets), _pairs(specs), *_ql(index, lam), k
+    ), k)
 
 
 def _positions_for_docs(

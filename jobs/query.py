@@ -111,7 +111,7 @@ def main(argv=None) -> int:
     ap.add_argument(
         "--batch", action="store_true",
         help="serve ALL queries in ONE Spark action (search_many; ranked "
-        "one-pass types only - keyword/phrase/mixed, keyword only under ql)",
+        "one-pass types only - keyword/phrase/mixed)",
     )
     ap.add_argument("--no-stem", action="store_true")
     ap.add_argument("queries", nargs="+")

@@ -1,4 +1,4 @@
-"""Batched multi-query serving (wand.wand_topk_many / executor.search_many):
+"""Batched multi-query serving (wand.batch_topk / executor.search_many):
 the whole query workload in ONE Spark action, rank+score identical to
 per-query search(). The reference answers one query per call
 (src/SearchEngine/SearchEngineTest.java:19-56 driving
@@ -14,7 +14,7 @@ from awesome_spark_search import corpus
 from awesome_spark_search.build import build_index
 from awesome_spark_search.executor import QueryExecutor
 from awesome_spark_search.textproc import preprocess_query_terms
-from awesome_spark_search.wand import wand_topk, wand_topk_many
+from awesome_spark_search.wand import batch_topk, wand_topk
 
 N_DOCS = 250
 
@@ -39,7 +39,9 @@ def test_batch_matches_per_query_wand(spark, packed_index):
     term_sets = {
         qid: preprocess_query_terms(q, do_stem=True) for qid, q in BATCH.items()
     }
-    got = wand_topk_many(spark, packed_index, term_sets, k=10).collect()
+    got = batch_topk(
+        spark, packed_index, {qid: ([], ts) for qid, ts in term_sets.items()}, k=10
+    ).collect()
     by_qid: dict[str, list] = {}
     for r in got:
         by_qid.setdefault(r["query_id"], []).append(r)
@@ -49,8 +51,8 @@ def test_batch_matches_per_query_wand(spark, packed_index):
         rows = by_qid.get(qid, [])
         assert [r["doc_id"] for r in rows] == [w["doc_id"] for w in want], qid
         assert [r["rank"] for r in rows] == list(range(1, len(want) + 1)), qid
-        for g, w in zip(rows, want):
-            assert abs(g["score"] - w["score"]) < 1e-9, qid
+        # one builder, one kernel: the batch scores are EQUAL
+        assert [r["score"] for r in rows] == [w["score"] for w in want], qid
 
 
 def test_search_many_matches_search(spark, packed_index):
@@ -75,9 +77,9 @@ def test_search_many_matches_search(spark, packed_index):
     for qid, q in batch.items():
         want = ex.search(q, k=10).collect()
         rows = by_qid.get(qid, [])
-        assert [r["doc_id"] for r in rows] == [w["doc_id"] for w in want], qid
-        for g, w in zip(rows, want):
-            assert abs(g["score"] - w["score"]) < 1e-9, qid
+        assert [(r["doc_id"], r["score"]) for r in rows] == [
+            (w["doc_id"], w["score"]) for w in want
+        ], qid
 
 
 def test_search_many_is_lazy_and_never_scans_long_postings(spark, packed_index):
@@ -179,12 +181,15 @@ def test_search_many_fielded_stays_zone_weighted(spark):
 
 
 def test_search_many_ql_matches_search(spark, packed_index):
-    """Batched QL/JM (keyword-only, shared per-term decode across the batch)
-    must return EXACTLY per-query search()'s ranks and scores under
-    scorer='ql' (both sum contributions in sorted term order) — including
-    the no-hit query, a typo'd query (batched correction), and a
-    dictionary-expanded prefix, the same coverage as the bm25 batch test."""
-    batch = dict(BATCH, q5="mrege", q6="token*")
+    """Batched QL/JM (shared per-term decode across the batch) must return
+    EXACTLY per-query search()'s ranks and scores under scorer='ql' (both
+    sum contributions in sorted term order) — including the no-hit query,
+    a typo'd query (batched correction), a dictionary-expanded prefix, an
+    exact phrase and a Mixed query, the same coverage as the bm25 batch
+    test."""
+    batch = dict(
+        BATCH, q5="mrege", q6="token*", q7='"merge sort buffer"', q8='"merge sort" scan'
+    )
     ex = QueryExecutor(spark, packed_index, scorer="ql")
     got = ex.search_many(batch, k=10).collect()
     by_qid: dict[str, list] = {}
@@ -196,6 +201,4 @@ def test_search_many_ql_matches_search(spark, packed_index):
         assert [(r["doc_id"], r["score"]) for r in rows] == [
             (w["doc_id"], w["score"]) for w in want
         ], qid
-    # QL batches keyword bags only; QL phrase/Mixed serve through search()
-    with pytest.raises(ValueError, match="keyword only under ql"):
-        ex.search_many({"p": '"merge sort"'})
+    assert by_qid.get("q7") and by_qid.get("q8")  # the phrase forms do match

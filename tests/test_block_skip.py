@@ -1,6 +1,7 @@
 """Block-LEVEL skipping inside the packed WAND scorer.
 
-Gates two properties of the shard kernel wand._topk_factory (ref
+Gates two properties of the BM25 shard step of the ranked-plan builder,
+``wand._shard_step`` with ``wand._bm25``'s parse/score pair (ref
 skipping-areas analog: src/io/index/UncompressedIndexWriter.java:101-118
 writes per-block skip metadata; the read side :106-124 seeks past blocks):
 
@@ -23,6 +24,11 @@ import pytest
 
 from awesome_spark_search import codec, wand
 from awesome_spark_search.build import _pack_many, K1, B
+
+
+def _shard_fn(spec, avgdl: float, k: int):
+    """The builder's per-shard step for one BM25 query."""
+    return wand._shard_step({"q": spec}, *wand._bm25(avgdl, k), k)
 
 
 def _idf(df: int, n_docs: int) -> float:
@@ -84,7 +90,7 @@ def test_skewed_corpus_skips_blocks_10x():
     }
     avgdl = 100.0
     packed = _pack_for_query(postings, doc_lens, avgdl, n_docs)
-    fn = wand._topk_factory(wand.QuerySpec([], list(postings)), avgdl, k=10)
+    fn = _shard_fn(wand.QuerySpec([], list(postings)), avgdl, k=10)
 
     wand.reset_decode_stats()
     out = fn(packed)
@@ -112,7 +118,7 @@ def test_block_skip_exact_vs_brute_force(seed):
         postings[f"t{t}"] = [(d, int(rng.integers(1, 9))) for d in ids]
     avgdl = float(np.mean(list(doc_lens.values())))
     packed = _pack_for_query(postings, doc_lens, avgdl, n_docs)
-    fn = wand._topk_factory(wand.QuerySpec([], list(postings)), avgdl, k=10)
+    fn = _shard_fn(wand.QuerySpec([], list(postings)), avgdl, k=10)
     out = fn(packed)
     want_ids, want_scores = _brute_force(postings, doc_lens, avgdl, n_docs, 10)
     assert out["doc_id"].tolist() == want_ids
@@ -171,7 +177,7 @@ def test_phrase_positions_decode_candidate_blocks_only():
     packed["idf"] = [
         _idf(n_docs if t == "aa" else 8, n_docs) for t in packed["term"]
     ]
-    fn = wand._topk_factory(wand.QuerySpec(["aa", "bb"], []), avgdl=50.0, k=10)
+    fn = _shard_fn(wand.QuerySpec(["aa", "bb"], []), avgdl=50.0, k=10)
     wand.reset_decode_stats()
     out = fn(packed)
     # total position-stream entries = sum(tf + 1 marker) over all postings
@@ -217,7 +223,7 @@ def test_block_skip_exact_property(corpus):
     postings, doc_lens, n_docs, k = corpus
     avgdl = float(np.mean(list(doc_lens.values())))
     packed = _pack_for_query(postings, doc_lens, avgdl, n_docs)
-    out = wand._topk_factory(wand.QuerySpec([], list(postings)), avgdl, k)(packed)
+    out = _shard_fn(wand.QuerySpec([], list(postings)), avgdl, k)(packed)
     want_ids, want_scores = _brute_force(postings, doc_lens, avgdl, n_docs, k)
     assert out["doc_id"].tolist() == want_ids
     np.testing.assert_allclose(out["score"].to_numpy(), want_scores, rtol=0, atol=1e-12)

@@ -108,14 +108,3 @@ def test_huge_vocab_happy_path_one_action(spark):
     assert [(r["doc_id"], r["score"]) for r in rows] == [
         (r["doc_id"], r["score"]) for r in want
     ]
-
-
-def test_bloom_disabled_falls_back_to_semifilter(spark):
-    idx = _build(spark, [(0, "buffer merge"), (1, "merge scan")])
-    ex = QueryExecutor(spark, idx)
-    ex.VOCAB_CACHE_MAX = 0
-    ex.USE_VOCAB_BLOOM = False
-    rows = ex.search("bufer", k=5).collect()
-    assert ex._bloom is None
-    assert ex.last_corrections == {"bufer": "buffer"}
-    assert {r["doc_id"] for r in rows} == {0}

@@ -63,8 +63,8 @@ def test_single_doc_corpus(spark):
 def test_spell_correction_exact_at_any_vocab_size(spark):
     """With the driver vocabulary cache disabled (VOCAB_CACHE_MAX=0, the
     10^8-term-corpus regime), a PARTIALLY matching query must still get its
-    misspelled token corrected via the per-query term_stats existence
-    semi-filter — reference corrects every posting-less token, not only fully
+    misspelled token corrected via the once-built Bloom filter's existence
+    check — reference corrects every posting-less token, not only fully
     empty results (ref: QueryProcessor.java:397-417)."""
     idx = _build(
         spark,
@@ -234,6 +234,6 @@ def test_prf_terms_come_from_snippets_not_full_content(spark):
     ex = QueryExecutor(spark, idx, source_df=src)
     top = ex.search("alpha", k=3).collect()
     pq = Q.parse("alpha #3", tokenize=ex._tokenize_query)
-    terms = ex._prf_terms(pq, top, 3)
+    terms = ex._prf_terms(pq, {}, top, 3)
     assert "zzfiller" not in terms
     assert {"beacon", "signal"} <= set(terms)

@@ -76,10 +76,10 @@ def test_build_then_query_jobs(corpus_dir, tmp_path_factory):
     assert typo["corrections"] == {"mrege": "merg"} and fixed["corrections"] == {}
     assert typo["results"] and typo["results"] == fixed["results"]
 
-    # --batch --scorer ql (keyword bags via ql_topk_many) returns EXACTLY the
-    # per-query QL lines
+    # --batch --scorer ql (keyword, prefix and phrase via ql_topk_many)
+    # returns EXACTLY the per-query QL lines
     ql_args = ["--index", out, "--source", corpus_dir, "--scorer", "ql",
-               "buffer merge", "token*"]
+               "buffer merge", "token*", '"merge sort"']
     ql_lines = _json_lines(_run(["jobs/query.py", *ql_args]))
     ql_batch = _json_lines(_run(["jobs/query.py", "--batch", *ql_args]))
     assert all(l["results"] for l in ql_lines)

@@ -32,11 +32,12 @@ def test_batch_plan_shape(spark, packed_ckpt_index):
     exchanges — the per-shard applyInPandas repartition and the tiny
     (n_shards * k * n_queries rows) window for the per-query global top-k —
     plus the final presentation sort's one range exchange."""
-    from awesome_spark_search.wand import wand_topk_many
+    from awesome_spark_search.wand import batch_topk
 
-    df = wand_topk_many(
+    df = batch_topk(
         spark, packed_ckpt_index,
-        {"q0": ["buffer", "merge"], "q1": ["scan"], "q2": ["buffer", "scan"]},
+        {"q0": ([], ["buffer", "merge"]), "q1": ([], ["scan"]),
+         "q2": ([], ["buffer", "scan"])},
         k=5,
     )
     plan = _plan(df)

@@ -23,13 +23,13 @@ def main() -> int:
     from awesome_spark_search.build import build_index
     from awesome_spark_search.session import get_spark
     from awesome_spark_search.wand import (
+        batch_topk,
         boolean_docs,
         mixed_topk,
         phrase_topk,
         ql_topk,
         ql_topk_many,
         wand_topk,
-        wand_topk_many,
     )
 
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "PLANS.md")
@@ -60,20 +60,22 @@ def main() -> int:
     sections = [
         ("Block-max WAND top-10 over the packed index",
          "ONE action: broadcast of the term-filtered idf rows joined onto "
-         "bucket-pruned packed blobs, per-shard applyInPandas, global "
+         "bucket-pruned packed blobs, per-shard applyInPandas (the one "
+         "ranked-plan builder's shard step, emitting query_id rows), global "
          "TakeOrderedAndProject.",
          wand_topk(spark, idx, ["buffer", "merge", "scan"], k=10)),
         ("Batched multi-query top-k (3 queries, ONE action)",
-         "The whole workload shares one bucket-pruned packed scan (union of "
-         "all terms) and one per-shard applyInPandas running each query's "
-         "block-max WAND loop; the per-query global top-k is a window over "
-         "n_shards*k*n_queries local rows. At any batch size: two hash "
+         "The same builder as the single-query plans: the whole workload "
+         "shares one bucket-pruned packed scan (union of all terms) and one "
+         "per-shard applyInPandas running each query's block-max WAND loop; "
+         "only the tail differs - the per-query global top-k is a window "
+         "over n_shards*k*n_queries local rows. At any batch size: two hash "
          "exchanges (the per-shard repartition and the tiny window) plus the "
          "final presentation sort's range exchange.",
-         wand_topk_many(
+         batch_topk(
              spark, idx,
-             {"q0": ["buffer", "merge"], "q1": ["scan"],
-              "q2": ["buffer", "scan"]},
+             {"q0": ([], ["buffer", "merge"]), "q1": ([], ["scan"]),
+              "q2": ([], ["buffer", "scan"])},
              k=10,
          )),
         ("QL/JM top-10 (phrase, Mixed and PRF forms share this plan)",
@@ -81,14 +83,14 @@ def main() -> int:
          "term-filtered GLOBAL cf rows, per-shard full decode (no admission "
          "bound for QL), global TakeOrderedAndProject.",
          ql_topk(spark, idx, ["buffer", "merg", "scan"], k=10)),
-        ("Batched QL/JM (keyword bags, shared per-term decode)",
+        ("Batched QL/JM (keyword, phrase and Mixed; shared per-term decode)",
          "The batch shape under the QL scorer: broadcast of "
          "the term-filtered GLOBAL cf rows, per-shard decode shared by every "
          "query that uses a term (exact for QL - nothing skips), window "
          "top-k.",
          ql_topk_many(
              spark, idx,
-             {"q0": ["buffer", "merge"], "q1": ["scan", "buffer"]},
+             {"q0": ([], ["buffer", "merge"]), "q1": (["merg", "sort"], ["scan"])},
              k=10,
          )),
         ("Mixed phrase+keyword over the packed index (one per-shard pass)",
