@@ -48,7 +48,7 @@ def _executor(spark: SparkSession, sf_dir: str) -> QueryExecutor:
         # off the packed compressed index — the only thing QueryExecutor
         # serves from
         _CACHE[key] = QueryExecutor(
-            spark, idx, source_df=src, citations=edges,
+            spark, idx, source_df=src,
             packed_citations=_pagerank.pack_citations(edges),
         )
     return _CACHE[key]

@@ -18,10 +18,17 @@ merging; what stays explicit is what the optimizer cannot infer:
   (``term_bucket`` partition column), so a query's term lookup prunes to
   q buckets (the role of the reference's seek list, via partition pruning +
   Parquet min/max stats).
+* **one repack path**: every packed table — this build, the streaming
+  ``IncrementalIndexer.to_index``, the fielded build and both merges — goes
+  through ``repack`` (a (term, doc_shard) or (field, term, doc_shard)
+  sort-shuffle streamed through one tail-buffered mapInPandas body); the
+  plain producers share ``index_stats`` (one stats aggregate, one avgdl
+  floor) and ``packed_term_stats`` (df/cf from the packed groups).
 
-At 100 TB: tokenize is a narrow map (Arrow batches), the single wide shuffle
-is groupBy(term, doc_id) with map-side partial aggregation, and every later
-stage groups on keys that include doc_shard/term_bucket, keeping state bounded.
+At 100 TB: tokenize is a narrow map (Arrow batches) with no shuffle, the
+single wide shuffle is the pack's (term, doc_shard) sort-shuffle, and every
+later stage groups on keys that include doc_shard/term_bucket, keeping state
+bounded.
 """
 
 from __future__ import annotations
@@ -109,46 +116,47 @@ PACKED_SCHEMA = T.StructType(
 )
 
 
-def _pack_many(pdf: pd.DataFrame, avgdl: float, n_buckets: int) -> pd.DataFrame:
-    """Pack MANY (term, doc_shard) groups from one sorted frame.
+PACK_KEYS = ["term", "doc_shard"]  # group key of a plain packed table
 
-    ``pdf`` must be sorted by (term, doc_shard, doc_id). Group detection and
-    the position gap stream are computed vectorized over the whole frame; the
-    only per-group Python is a handful of numpy slice + varint calls
-    (~50-100us/group vs ~1.3ms/group for pandas per-group dispatch).
+
+def doc_shard_col(doc_shard_size: int):
+    """``doc_id`` -> its packed ``doc_shard``: the one expression every
+    packer and the Boolean LinkTo keying (wand.boolean_docs) share, so a
+    link's shard always meets the packed rows of the same docs."""
+    return (F.col("doc_id") / F.lit(doc_shard_size)).cast("long")
+
+
+def _groups(pdf: pd.DataFrame, keys: list[str]):
+    """(start, end, key) of every run of equal ``keys`` values in a frame
+    sorted by ``keys``; ``key`` maps each key column to the run's value."""
+    cols = {c: pdf[c].to_numpy() for c in keys}
+    n = len(pdf)
+    new = np.zeros(n, dtype=bool)
+    new[:1] = True
+    for a in cols.values():
+        new[1:] |= a[1:] != a[:-1]
+    starts = np.flatnonzero(new).tolist()
+    for s, e in zip(starts, starts[1:] + [n]):
+        yield s, e, {c: a[s] for c, a in cols.items()}
+
+
+def _pack_many(
+    pdf: pd.DataFrame, keys: list[str], avgdl_of, n_buckets: int
+) -> pd.DataFrame:
+    """Pack MANY groups from one frame sorted by (*keys, doc_id).
+
+    ``keys`` is PACK_KEYS or (field, *PACK_KEYS); every key column rides
+    into the output row. ``avgdl_of(key)`` is the group's block_max length
+    normalizer (fielded tables pack each zone against its own avgdl).
+    Group detection and the position gap stream are computed vectorized
+    over the whole frame; the only per-group Python is a handful of numpy
+    slice + varint calls (~50-100us/group vs ~1.3ms/group for pandas
+    per-group dispatch).
     """
-    terms = pdf["term"].to_numpy()
-    shards = pdf["doc_shard"].to_numpy(dtype=np.int64)
     doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
     tfs = pdf["tf"].to_numpy(dtype=np.int64)
     dls = pdf["doc_len"].to_numpy(dtype=np.int64)
     n = len(pdf)
-    if n == 0:
-        return pd.DataFrame(
-            {
-                "term_bucket": pd.Series(dtype="int32"),
-                "term": pd.Series(dtype="object"),
-                "doc_shard": pd.Series(dtype="int64"),
-                "n": pd.Series(dtype="int32"),
-                "cf": pd.Series(dtype="int64"),
-                "doc_ids_vb": pd.Series(dtype="object"),
-                "tfs_vb": pd.Series(dtype="object"),
-                "dls_vb": pd.Series(dtype="object"),
-                "pos_vb": pd.Series(dtype="object"),
-                "block_max": pd.Series(dtype="object"),
-                "blk_doc_off": pd.Series(dtype="object"),
-                "blk_tf_off": pd.Series(dtype="object"),
-                "blk_dl_off": pd.Series(dtype="object"),
-                "blk_pos_off": pd.Series(dtype="object"),
-                "blk_first_doc": pd.Series(dtype="object"),
-            }
-        )
-
-    new = np.empty(n, dtype=bool)
-    new[0] = True
-    new[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-    gstart = np.flatnonzero(new)
-    gend = np.append(gstart[1:], n)
 
     # whole-frame position gap stream: per doc [tf, gap0(=pos0), gaps...]
     flat = (
@@ -164,8 +172,10 @@ def _pack_many(pdf: pd.DataFrame, avgdl: float, n_buckets: int) -> pd.DataFrame:
         gaps[1:] = np.diff(flat)
         gaps[offsets[:-1]] = flat[offsets[:-1]]
 
-    cols: dict[str, list] = {f.name: [] for f in PACKED_SCHEMA.fields}
-    for s, e in zip(gstart.tolist(), gend.tolist()):
+    cols: dict[str, list] = {
+        c: [] for c in dict.fromkeys([f.name for f in PACKED_SCHEMA.fields] + keys)
+    }
+    for s, e, key in _groups(pdf, keys):
         ids = doc_ids[s:e]
         t = tfs[s:e]
         seg = gaps[offsets[s]: offsets[e]]
@@ -176,8 +186,9 @@ def _pack_many(pdf: pd.DataFrame, avgdl: float, n_buckets: int) -> pd.DataFrame:
         mask = np.ones(len(stream), dtype=bool)
         mask[marker_idx] = False
         stream[mask] = seg.astype(np.uint64)
-        row = _encode_group(terms[s], int(shards[s]), ids, t, dls[s:e],
-                            stream, avgdl, n_buckets)
+        row = _encode_group(key["term"], int(key["doc_shard"]), ids, t, dls[s:e],
+                            stream, avgdl_of(key), n_buckets)
+        row.update(key)
         for name, v in row.items():
             cols[name].append(v)
     return pd.DataFrame(cols)
@@ -242,31 +253,57 @@ def _encode_group(
     }
 
 
-def _pack_stream_factory(avgdl: float, n_buckets: int):
-    """mapInPandas packer over a partition sorted by (term, doc_shard, doc_id).
+def repack(
+    df: DataFrame, keys: list[str], order: list[str], head, schema: T.StructType
+) -> DataFrame:
+    """The one repack path every packed table goes through (build,
+    streaming, fielded, merge): hash-repartition on ``keys``, sort each
+    partition by ``keys + order``, then stream it through ``head`` — one
+    Python call per Arrow batch, never per group. ``head(pdf)`` sees WHOLE
+    groups only: each batch's last group is held back and completed with
+    the next batch (partition order is stable). This IS the reference's
+    sorted k-way merge (InvertedIndexMerger.java:34-112) expressed as
+    Spark's sort-shuffle."""
 
-    One Python call per Arrow batch; a group spanning a batch boundary is
-    buffered and completed with the next batch (partition order is stable).
-    """
-
-    def pack_iter(batches):
+    def repack_stream(batches):
         buf: pd.DataFrame | None = None
         for pdf in batches:
-            if buf is not None and len(buf):
+            if buf is not None:
                 pdf = pd.concat([buf, pdf], ignore_index=True)
             if not len(pdf):
                 continue
-            last_term = pdf["term"].iloc[-1]
-            last_shard = pdf["doc_shard"].iloc[-1]
-            tail = (pdf["term"] == last_term) & (pdf["doc_shard"] == last_shard)
+            tail = np.logical_and.reduce(
+                [pdf[c].to_numpy() == pdf[c].iat[-1] for c in keys]
+            )
             buf = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                yield _pack_many(head, avgdl, n_buckets)
-        if buf is not None and len(buf):
-            yield _pack_many(buf, avgdl, n_buckets)
+            if not tail.all():
+                yield head(pdf[~tail])
+        if buf is not None:
+            yield head(buf)
 
-    return pack_iter
+    return (
+        df.repartition(*keys)
+        .sortWithinPartitions(*keys, *order)
+        .mapInPandas(repack_stream, schema)
+    )
+
+
+def pack_postings(
+    postings: DataFrame,
+    keys: list[str],
+    schema: T.StructType,
+    avgdl_of,
+    n_buckets: int,
+    doc_shard_size: int,
+) -> DataFrame:
+    """Long posting rows (doc_id, tf, positions, doc_len and the non-shard
+    ``keys``) -> packed rows, one per ``keys`` group (doc_shard bounds
+    every group to doc_shard_size postings)."""
+    return repack(
+        postings.withColumn("doc_shard", doc_shard_col(doc_shard_size)),
+        keys, ["doc_id"],
+        lambda pdf: _pack_many(pdf, keys, avgdl_of, n_buckets), schema,
+    )
 
 
 def _py_term_bucket(term: str, n_buckets: int) -> int:
@@ -281,6 +318,38 @@ def _py_term_bucket(term: str, n_buckets: int) -> int:
 def term_bucket_col(term_col, n_buckets: int):
     """JVM-side bucket id == _py_term_bucket, pure codegen (no UDF)."""
     return F.pmod(F.crc32(F.encode(term_col, "UTF-8")), F.lit(n_buckets)).cast("int")
+
+
+def index_stats(doc_map: DataFrame, runner: StageRunner) -> IndexStats:
+    """n_docs / total_tokens / avgdl over a doc_map (doc_id, doc_len, ...),
+    aggregated as the runner's ``stats`` stage (a runner without a
+    checkpoint dir just runs it). avgdl floors to 1.0 for an empty corpus
+    (it only ever divides doc lengths)."""
+    row = runner.run(
+        "stats",
+        lambda: doc_map.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.coalesce(F.sum("doc_len"), F.lit(0)).alias("total_tokens"),
+            F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("avgdl"),
+        ),
+    ).collect()[0]
+    return IndexStats(
+        n_docs=row["n_docs"],
+        total_tokens=row["total_tokens"],
+        avgdl=float(row["avgdl"]) or 1.0,
+    )
+
+
+def packed_term_stats(packed: DataFrame, n_buckets: int) -> DataFrame:
+    """term_stats (term, df, cf, term_bucket) of a plain packed table. The
+    pack shuffle already grouped every posting by term, so df/cf are a
+    cheap rollup of the (term, doc_shard) group rows — one aggregation
+    over #groups rows instead of a pass over #postings."""
+    return (
+        packed.groupBy("term")
+        .agg(F.sum("n").cast("long").alias("df"), F.sum("cf").alias("cf"))
+        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
+    )
 
 
 def build_index(
@@ -342,36 +411,13 @@ def build_index(
         # scan over the content column ever runs
         doc_map = doc_map.persist()
 
-    def _stats_df():
-        return doc_map.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("doc_len"), F.lit(0)).alias("total_tokens"),
-            F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("avgdl"),
-        )
+    stats = index_stats(doc_map, runner)
 
-    stats_row = runner.run("stats", _stats_df).collect()[0]
-    stats = IndexStats(
-        n_docs=stats_row["n_docs"],
-        total_tokens=stats_row["total_tokens"],
-        avgdl=float(stats_row["avgdl"]) or 1.0,
-    )
-
+    # doc_len rides along from the postings pass — no doc_map join
     def _packed():
-        # doc_len rides along from the postings pass — no doc_map join.
-        # Hash-repartition on (term, doc_shard) + local sort groups each
-        # posting run contiguously; the streaming packer then processes
-        # whole Arrow batches (no per-group dispatch). This IS the
-        # reference's sorted k-way merge (InvertedIndexMerger.java:34-112)
-        # expressed as Spark's sort-shuffle.
-        with_shard = postings.withColumn(
-            "doc_shard", (F.col("doc_id") / F.lit(doc_shard_size)).cast("long")
-        )
-        return (
-            with_shard.repartition("term", "doc_shard")
-            .sortWithinPartitions("term", "doc_shard", "doc_id")
-            .mapInPandas(
-                _pack_stream_factory(stats.avgdl, n_term_buckets), PACKED_SCHEMA
-            )
+        return pack_postings(
+            postings, PACK_KEYS, PACKED_SCHEMA, lambda key: stats.avgdl,
+            n_term_buckets, doc_shard_size,
         )
 
     packed = runner.run(
@@ -383,21 +429,8 @@ def build_index(
         # repartition+sort+pack pipeline (minutes at 10^6 docs)
         packed = packed.persist()
 
-    # the pack shuffle already grouped every posting by term: df/cf are a
-    # cheap rollup of the (term, doc_shard) group rows — one aggregation
-    # over #groups rows instead of a second full pass over #postings
-    def _term_stats():
-        return (
-            packed.groupBy("term")
-            .agg(
-                F.sum("n").cast("long").alias("df"),
-                F.sum("cf").alias("cf"),
-            )
-            .withColumn("term_bucket", term_bucket_col(F.col("term"), n_term_buckets))
-        )
-
     term_stats = runner.run(
-        "term_stats", _term_stats,
+        "term_stats", lambda: packed_term_stats(packed, n_term_buckets),
         partition_by=["term_bucket"], sort_within=["term"],
     )
 

@@ -11,7 +11,7 @@ index (wand.py) — the long ``postings`` table is a build intermediate only:
 * Mixed        -> phrase survivors seed the keyword WAND pass
 * prefix tok*  -> expanded from the cached vocabulary, else a term range
 * AND/OR/NOT   -> per-shard numpy set algebra (``wand.boolean_docs``)
-* LinkTo:ID    -> packed citation index (or raw edges), cogrouped by shard
+* LinkTo:ID    -> packed citation index, cogrouped by shard
                   into a Boolean
 * spelling     -> Damerau-Levenshtein correction when a term has no postings
 * PRF #N       -> two-pass search, +10 most frequent tokens of the generated
@@ -53,7 +53,6 @@ class QueryExecutor:
         spark: SparkSession,
         index: Index,
         *,
-        citations: DataFrame | None = None,
         packed_citations: DataFrame | None = None,
         source_df: DataFrame | None = None,
         scorer: str = "bm25",
@@ -78,7 +77,6 @@ class QueryExecutor:
         # DocumentRanker.java:138-167); spelling/vocab/snippets/PRF keep
         # using ``index``
         self.fielded_index = fielded_index
-        self.citations = citations
         self.packed_citations = packed_citations
         self.source_df = source_df
         self.scorer = scorer
@@ -232,20 +230,15 @@ class QueryExecutor:
         return ("terms", terms, ranges) if ranges else ("terms", terms)
 
     def _linkto_docs(self, ast: Q.LinkTo) -> DataFrame:
-        """LinkTo serves off the PACKED citation index when present
-        (delta+VByte citing lists, ref: CitationIndexReader.java:61-112 — the
-        reference's serving path IS the compressed index): the dst filter
-        prunes to the target's few rows before any decode. Plain edge rows
-        are the fallback."""
-        if self.packed_citations is not None:
-            from .pagerank import citations_of_packed
+        """LinkTo serves off the PACKED citation index (delta+VByte citing
+        lists, ref: CitationIndexReader.java:61-112 — the reference's
+        serving path IS the compressed index): the dst filter prunes to the
+        target's few rows before any decode."""
+        if self.packed_citations is None:
+            raise ValueError("LinkTo query requires packed_citations")
+        from .pagerank import citations_of_packed
 
-            return citations_of_packed(self.packed_citations, ast.doc_id)
-        if self.citations is None:
-            raise ValueError("LinkTo query requires a citations DataFrame")
-        return self.citations.filter(F.col("dst") == ast.doc_id).select(
-            F.col("src").alias("doc_id")
-        )
+        return citations_of_packed(self.packed_citations, ast.doc_id)
 
     RESULT_SCHEMA = "doc_id long, score double"
 

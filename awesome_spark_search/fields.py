@@ -14,15 +14,15 @@ idf is field-independent (df = docs containing t in ANY field — the
 reference's seek is also per-term, not per-(term,field)).
 
 All the same scale properties as build.py: one narrow tokenize pass per
-field, no (term, doc) shuffle, salted term stats.
+field, no (term, doc) shuffle, salted term stats. The packed fielded table
+goes through build.py's one repack path keyed (field, term, doc_shard),
+each group packed against its field's avgdl.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -32,7 +32,9 @@ from .build import (
     B,
     DEFAULT_TERM_BUCKETS,
     K1,
+    PACK_KEYS,
     PACKED_SCHEMA,
+    pack_postings,
     term_bucket_col,
 )
 from .scoring import idf_col
@@ -261,6 +263,7 @@ def fielded_mixed_bm25_topk(
 PACKED_FIELDED_SCHEMA = T.StructType(
     list(PACKED_SCHEMA.fields) + [T.StructField("field", T.StringType(), False)]
 )
+FIELDED_KEYS = ["field", *PACK_KEYS]  # group key of a fielded packed table
 
 
 @dataclass
@@ -276,55 +279,8 @@ class FieldedPackedIndex:
     # UNFLOORED per-field mean doc_len (avgdl_by_field floors an all-empty
     # field to 1.0 for scoring). Merges combine the RAW means and floor only
     # after, so merged == rebuilt holds even when a source's field was empty
-    # (ADVICE r4). None (legacy value) falls back to avgdl_by_field.
-    avgdl_raw_by_field: dict[str, float] | None = None
-
-
-def _pack_fielded_factory(avgdl_by_field: dict[str, float], n_buckets: int):
-    """mapInPandas packer over a partition sorted by (field, term,
-    doc_shard, doc_id): slices each Arrow batch into contiguous per-field
-    runs and reuses ``build._pack_many`` on each run with that field's
-    avgdl (the packed block_max bounds must divide dl by the SAME avgdl the
-    scorer later uses). Groups spanning batch boundaries are buffered
-    exactly like ``build._pack_stream_factory`` — all fields pack in ONE
-    wide shuffle, not one per field."""
-    from .build import _pack_many
-
-    def _pack_head(head: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        farr = head["field"].to_numpy()
-        change = np.flatnonzero(np.r_[True, farr[1:] != farr[:-1]])
-        bounds = np.append(change, len(head))
-        for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
-            f = farr[s]
-            packed = _pack_many(
-                head.iloc[s:e], float(avgdl_by_field[f]), n_buckets
-            )
-            packed["field"] = f
-            outs.append(packed)
-        return pd.concat(outs, ignore_index=True)
-
-    def pack_iter(batches):
-        buf: pd.DataFrame | None = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf.iloc[-1]
-            tail = (
-                (pdf["field"] == last["field"])
-                & (pdf["term"] == last["term"])
-                & (pdf["doc_shard"] == last["doc_shard"])
-            )
-            buf = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                yield _pack_head(head)
-        if buf is not None and len(buf):
-            yield _pack_head(buf)
-
-    return pack_iter
+    # (ADVICE r4).
+    avgdl_raw_by_field: dict[str, float]
 
 
 def build_fielded_packed(
@@ -357,16 +313,9 @@ def build_fielded_packed(
     # must combine (merge.merge_fielded_packed)
     avgdl_by_field = {f: (v or 1.0) for f, v in avgdl_raw_by_field.items()}
     n_docs = source_df.count()
-    with_shard = postings.withColumn(
-        "doc_shard", (F.col("doc_id") / F.lit(doc_shard_size)).cast("long")
-    )
-    packed = (
-        with_shard.repartition("field", "term", "doc_shard")
-        .sortWithinPartitions("field", "term", "doc_shard", "doc_id")
-        .mapInPandas(
-            _pack_fielded_factory(avgdl_by_field, n_term_buckets),
-            PACKED_FIELDED_SCHEMA,
-        )
+    packed = pack_postings(
+        postings, FIELDED_KEYS, PACKED_FIELDED_SCHEMA,
+        lambda key: avgdl_by_field[key["field"]], n_term_buckets, doc_shard_size,
     )
     if cache:
         packed = packed.persist()

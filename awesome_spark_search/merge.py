@@ -6,9 +6,10 @@ serving format): the delta-compaction operation an incrementally-growing
 indexes into the base by moving packed bytes, never re-reading content.
 
 Spark shape:
-* union the packed tables, ONE (term, doc_shard) sort-shuffle, then the
-  same streaming mapInPandas discipline as the builder (whole Arrow
-  batches, tail-group buffering — no per-group dispatch).
+* union the packed tables and send them through the builder's own repack
+  path (``build.repack``: ONE (term, doc_shard) — or (field, term,
+  doc_shard) — sort-shuffle, whole Arrow batches, tail-group buffering, no
+  per-group dispatch) with ``_merge_many`` as the batch head.
 * a group present in only ONE source passes its blobs through
   byte-identical; only block_max is recomputed against the merged corpus
   avgdl (bounds packed against a smaller avgdl would UNDER-estimate the
@@ -22,27 +23,41 @@ Spark shape:
   base occupy different doc_shards, so this path touches at most one
   boundary shard per term.
 
-Doc sets must be disjoint (asserted both driver-side against doc_map and
-defensively inside the merge kernel); replace/delete semantics belong to
+stats and term_stats come from the builder's ``index_stats`` and
+``packed_term_stats``. Inputs are checked with ValueError (source count,
+packed present, equal doc_shard_size / do_stem / field_weights). Doc sets
+must be disjoint (checked both driver-side against doc_map and defensively
+inside the merge kernel); replace/delete semantics belong to
 streaming.IncrementalIndexer, which resolves them BEFORE packing.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import codec
 from .build import (
+    B,
     DEFAULT_TERM_BUCKETS,
-    Index,
-    IndexStats,
+    K1,
+    PACK_KEYS,
     PACKED_SCHEMA,
+    Index,
     _encode_group,
+    _groups,
+    _py_term_bucket,
+    index_stats,
+    packed_term_stats,
+    repack,
     term_bucket_col,
 )
+from .lineage import StageRunner
 
 
 def _decode_row(r) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -104,8 +119,6 @@ def _refresh_bounds(r, avgdl: float, n_buckets: int) -> dict:
     """Single-source group: pass every blob through byte-identical, only
     recompute block_max against the merged avgdl (tf/dl streams decode;
     doc_id/position bytes are untouched)."""
-    from .build import _py_term_bucket, K1, B
-
     tfs = codec.vbyte_decode(bytes(r["tfs_vb"])).astype(np.int64)
     dls = codec.vbyte_decode(bytes(r["dls_vb"])).astype(np.int64)
     out = {name: r[name] for name in (f.name for f in PACKED_SCHEMA.fields)}
@@ -114,64 +127,46 @@ def _refresh_bounds(r, avgdl: float, n_buckets: int) -> dict:
     return out
 
 
-def _merge_stream_factory(
-    avgdl: float,
-    n_buckets: int,
-    field_avgdl: dict[str, float] | None = None,
-):
-    """mapInPandas merger over a partition sorted by (term, doc_shard) —
-    the builder's streaming discipline: whole batches, tail-group buffer.
-    With ``field_avgdl`` the group key extends to (field, term, doc_shard)
-    and each group's dl normalizer is its FIELD's merged avgdl (fielded
-    packed tables — fields.PACKED_FIELDED_SCHEMA)."""
+def _merge_many(
+    pdf: pd.DataFrame, keys: list[str], avgdl_of, n_buckets: int
+) -> pd.DataFrame:
+    """``repack`` head over packed rows sorted by ``keys``: a single-source
+    group refreshes its bounds, a multi-source one merges; ``avgdl_of(key)``
+    is the group's merged length normalizer (per field for fielded tables)
+    and every key column rides into the output row."""
+    out_rows = []
+    for s, e, key in _groups(pdf, keys):
+        avgdl = avgdl_of(key)
+        if e - s == 1:
+            row = _refresh_bounds(pdf.iloc[s], avgdl, n_buckets)
+        else:
+            row = _merge_rows([pdf.iloc[i] for i in range(s, e)], avgdl, n_buckets)
+        row.update(key)
+        out_rows.append(row)
+    return pd.DataFrame(out_rows)
 
-    def _merge_head(head: pd.DataFrame) -> pd.DataFrame:
-        terms = head["term"].to_numpy()
-        shards = head["doc_shard"].to_numpy(dtype=np.int64)
-        n = len(head)
-        new = np.empty(n, dtype=bool)
-        new[0] = True
-        new[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-        if field_avgdl is not None:
-            farr = head["field"].to_numpy()
-            new[1:] |= farr[1:] != farr[:-1]
-        gstart = np.flatnonzero(new)
-        gend = np.append(gstart[1:], n)
-        out_rows = []
-        for s, e in zip(gstart.tolist(), gend.tolist()):
-            adl = avgdl if field_avgdl is None else field_avgdl[head["field"].iloc[s]]
-            if e - s == 1:
-                row = _refresh_bounds(head.iloc[s], adl, n_buckets)
-            else:
-                row = _merge_rows(
-                    [head.iloc[i] for i in range(s, e)], adl, n_buckets
-                )
-            if field_avgdl is not None:
-                row["field"] = head["field"].iloc[s]
-            out_rows.append(row)
-        return pd.DataFrame(out_rows)
 
-    def merge_iter(batches):
-        buf: pd.DataFrame | None = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf.iloc[-1]
-            tail = (pdf["term"] == last["term"]) & (
-                pdf["doc_shard"] == last["doc_shard"]
-            )
-            if field_avgdl is not None:
-                tail &= pdf["field"] == last["field"]
-            buf = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                yield _merge_head(head)
-        if buf is not None and len(buf):
-            yield _merge_head(buf)
+def _merge_packed(
+    packeds: list[DataFrame], keys: list[str], schema: T.StructType,
+    avgdl_of, n_buckets: int,
+) -> DataFrame:
+    """Union the sources' packed tables and fold them through the one
+    repack path with ``_merge_many`` as the head."""
+    return repack(
+        reduce(DataFrame.unionByName, packeds), keys, [],
+        lambda pdf: _merge_many(pdf, keys, avgdl_of, n_buckets), schema,
+    )
 
-    return merge_iter
+
+def _check_sources(sources: list, *attrs: str) -> None:
+    """ValueError unless there are 2+ sources and they agree on ``attrs``
+    (raised, not asserted: the checks must hold under ``python -O``)."""
+    if len(sources) < 2:
+        raise ValueError("need at least two indexes to merge")
+    for a in attrs:
+        vals = [getattr(ix, a) for ix in sources]
+        if any(v != vals[0] for v in vals):
+            raise ValueError(f"{a} must match across sources, got {vals}")
 
 
 def merge_packed_indexes(
@@ -189,16 +184,11 @@ def merge_packed_indexes(
     skipping exact); term_stats is the usual cheap rollup of the merged
     packed groups. ``check_disjoint=False`` skips the doc_map duplicate
     probe when the caller guarantees disjointness (monotonic watermark)."""
-    assert len(indexes) >= 2, "need at least two indexes to merge"
-    assert all(ix.packed is not None for ix in indexes), (
-        "merge_packed_indexes requires indexes with packed postings"
-    )
-    shard_sizes = {ix.doc_shard_size for ix in indexes}
-    assert len(shard_sizes) == 1, (
-        f"doc_shard_size must match across sources, got {shard_sizes}"
-    )
-    do_stems = {ix.do_stem for ix in indexes}
-    assert len(do_stems) == 1, "do_stem must match across sources"
+    _check_sources(indexes, "doc_shard_size", "do_stem")
+    if any(ix.packed is None for ix in indexes):
+        raise ValueError(
+            "merge_packed_indexes requires indexes with packed postings"
+        )
 
     # streamed (to_index) and batch indexes carry different doc_map/postings
     # metadata columns — merge on the intersection (doc_id + doc_len always
@@ -225,35 +215,16 @@ def merge_packed_indexes(
             )
     if cache:
         doc_map = doc_map.persist()
-    srow = doc_map.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.coalesce(F.sum("doc_len"), F.lit(0)).alias("total_tokens"),
-        F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("avgdl"),
-    ).collect()[0]
-    stats = IndexStats(
-        n_docs=srow["n_docs"],
-        total_tokens=srow["total_tokens"],
-        avgdl=float(srow["avgdl"]) or 1.0,
-    )
+    stats = index_stats(doc_map, StageRunner(spark, None))
 
-    packed_u = indexes[0].packed
-    for ix in indexes[1:]:
-        packed_u = packed_u.unionByName(ix.packed)
-    merged = (
-        packed_u.repartition("term", "doc_shard")
-        .sortWithinPartitions("term", "doc_shard")
-        .mapInPandas(
-            _merge_stream_factory(stats.avgdl, n_term_buckets), PACKED_SCHEMA
-        )
+    merged = _merge_packed(
+        [ix.packed for ix in indexes], PACK_KEYS, PACKED_SCHEMA,
+        lambda key: stats.avgdl, n_term_buckets,
     )
     if cache:
         merged = merged.persist()
 
-    term_stats = (
-        merged.groupBy("term")
-        .agg(F.sum("n").cast("long").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_term_buckets))
-    )
+    term_stats = packed_term_stats(merged, n_term_buckets)
     if cache:
         term_stats = term_stats.persist()
 
@@ -286,43 +257,24 @@ def merge_fielded_packed(
     sets). Callers must guarantee disjointness (FieldedPackedIndex keeps
     no doc_map to probe) — the kernel still rejects duplicate doc_ids
     inside any colliding (field, term, doc_shard) group."""
-    from .fields import FieldedPackedIndex, PACKED_FIELDED_SCHEMA
+    from .fields import FIELDED_KEYS, FieldedPackedIndex, PACKED_FIELDED_SCHEMA
 
-    assert len(fidxs) >= 2, "need at least two fielded indexes to merge"
+    _check_sources(fidxs, "doc_shard_size", "field_weights")
     weights = fidxs[0].field_weights
-    assert all(ix.field_weights == weights for ix in fidxs), (
-        "field_weights must match across sources"
-    )
-    shard_sizes = {ix.doc_shard_size for ix in fidxs}
-    assert len(shard_sizes) == 1, (
-        f"doc_shard_size must match across sources, got {shard_sizes}"
-    )
     n_docs = sum(ix.n_docs for ix in fidxs)
     # combine the RAW (unfloored) per-field means — build_fielded_packed
     # floors an all-empty field's avgdl to 1.0 for scoring, and averaging
     # the floored values would diverge from a full rebuild whenever a
     # source's field was empty (ADVICE r4); floor only AFTER combining
     avgdl_raw_by_field = {
-        f: sum(
-            (ix.avgdl_raw_by_field or ix.avgdl_by_field)[f] * ix.n_docs
-            for ix in fidxs
-        ) / n_docs
+        f: sum(ix.avgdl_raw_by_field[f] * ix.n_docs for ix in fidxs) / n_docs
         for f in weights
     }
     avgdl_by_field = {f: (v or 1.0) for f, v in avgdl_raw_by_field.items()}
 
-    packed_u = fidxs[0].packed
-    for ix in fidxs[1:]:
-        packed_u = packed_u.unionByName(ix.packed)
-    merged = (
-        packed_u.repartition("field", "term", "doc_shard")
-        .sortWithinPartitions("field", "term", "doc_shard")
-        .mapInPandas(
-            _merge_stream_factory(
-                0.0, n_term_buckets, field_avgdl=avgdl_by_field
-            ),
-            PACKED_FIELDED_SCHEMA,
-        )
+    merged = _merge_packed(
+        [ix.packed for ix in fidxs], FIELDED_KEYS, PACKED_FIELDED_SCHEMA,
+        lambda key: avgdl_by_field[key["field"]], n_term_buckets,
     )
     ts_u = fidxs[0].term_stats.select("term", "df", "cf")
     for ix in fidxs[1:]:

@@ -4,11 +4,14 @@ The reference is batch-only (SURVEY.md §2.5: no streaming of any kind); these
 operators extend the engine to continuous corpora, which a 100 TB
 training-data pipeline needs:
 
-* ``incremental_index``: readStream over a documents directory ->
+* ``IncrementalIndexer``: readStream over a documents directory ->
   ``foreachBatch`` appends per-batch posting partials to a delta area
-  partitioned by term_bucket. The merged view (base + deltas) is a groupBy
-  combine — the same associative posting merge as the batch build, so
-  streaming ingestion reuses the batch semantics exactly.
+  partitioned by term_bucket. The merged view (base + deltas) keeps each
+  doc's latest batch and drops tombstoned docs; ``to_index`` packs it
+  through the batch build's own repack path (``build.pack_postings``) with
+  stats and term_stats from the same ``index_stats`` /
+  ``packed_term_stats``, so a streamed index is byte-identical to a batch
+  build of the same final docs.
 * ``tumbling_counts``: watermarked tumbling-window aggregation over an events
   stream (late data dropped deterministically by the watermark).
 * ``running_user_totals``: custom stateful operator via
@@ -16,10 +19,11 @@ training-data pipeline needs:
   micro-batches (GroupState), the Spark-native analog of a hand-rolled
   stateful operator.
 
-Scale notes: each micro-batch's posting partial is a bounded groupBy keyed
-(term, doc_id) — identical shuffle shape to the batch build; the delta area
-stays query-efficient because compaction (``compact_deltas``) periodically
-folds deltas into the base with the same combine.
+Scale notes: each micro-batch's posting partial is one narrow map over its
+documents (``batch_postings``: the batch build's map-side accumulation, no
+shuffle); the base + deltas merge is a doc-keyed join plus a duplicate
+collapse, and compaction (``compact_deltas``) periodically folds the deltas
+into one base so that merge stays O(#deltas since the last compaction).
 """
 
 from __future__ import annotations
@@ -33,7 +37,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .build import term_bucket_col, DEFAULT_TERM_BUCKETS
+from .build import (
+    DEFAULT_DOC_SHARD_SIZE,
+    DEFAULT_TERM_BUCKETS,
+    PACK_KEYS,
+    PACKED_SCHEMA,
+    Index,
+    index_stats,
+    pack_postings,
+    packed_term_stats,
+    term_bucket_col,
+)
+from .lineage import StageRunner
 from .textproc import doc_postings_flat, doc_len_col
 
 # ---------------------------------------------------------------------------
@@ -237,27 +252,18 @@ class IncrementalIndexer:
 
     def to_index(
         self,
-        base: "Index | None" = None,
+        base: Index | None = None,
         *,
         doc_shard_size: int | None = None,
     ):
         """Materialize a queryable Index over base + streamed deltas — the
         same QueryExecutor runs unchanged over a continuously-ingested
-        corpus. term_stats/stats re-derive from the merged postings (cheap
-        aggregations; at scale run per compaction, not per query).
+        corpus. stats re-derive from the merged doc lens and term_stats from
+        the packed groups, exactly as in build_index.
 
         The merged postings pack into the delta+VByte block-directory form
-        (same streaming packer as the batch build) — the form every query
-        serves from — so run it per compaction, like term_stats."""
-        from .build import (
-            DEFAULT_DOC_SHARD_SIZE,
-            Index,
-            IndexStats,
-            PACKED_SCHEMA,
-            _pack_stream_factory,
-            term_bucket_col,
-        )
-
+        through the batch build's repack path — the form every query serves
+        from — so run it per compaction, not per query."""
         postings = self.merged_postings(
             base.postings if base is not None else None
         )
@@ -267,35 +273,20 @@ class IncrementalIndexer:
         doc_map = self.doc_lens(
             base.doc_map.select("doc_id", "doc_len") if base is not None else None
         )
-        term_stats = (
-            postings.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-            .withColumn("term_bucket", term_bucket_col(F.col("term"), self.n_buckets))
-        )
-        row = doc_map.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("doc_len"), F.lit(0)).alias("t"),
-            F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("a"),
-        ).collect()[0]
-        stats = IndexStats(row["n"], row["t"], float(row["a"]) or 1.0)
+        stats = index_stats(doc_map, StageRunner(self.spark, None))
         doc_map = doc_map.persist()
         postings = postings.persist()
         shard = doc_shard_size or DEFAULT_DOC_SHARD_SIZE
-        packed = (
-            postings.join(doc_map.select("doc_id", "doc_len"), "doc_id")
-            .withColumn("doc_shard", (F.col("doc_id") / F.lit(shard)).cast("long"))
-            .select("term", "doc_shard", "doc_id", "tf", "positions", "doc_len")
-            .repartition("term", "doc_shard")
-            .sortWithinPartitions("term", "doc_shard", "doc_id")
-            .mapInPandas(
-                _pack_stream_factory(stats.avgdl, self.n_buckets), PACKED_SCHEMA
-            )
-            .persist()
-        )
+        packed = pack_postings(
+            postings.join(doc_map, "doc_id")
+            .select("term", "doc_id", "tf", "positions", "doc_len"),
+            PACK_KEYS, PACKED_SCHEMA, lambda key: stats.avgdl,
+            self.n_buckets, shard,
+        ).persist()
         return Index(
             doc_map=doc_map,
             postings=postings,
-            term_stats=term_stats.persist(),
+            term_stats=packed_term_stats(packed, self.n_buckets).persist(),
             packed=packed,
             stats=stats,
             do_stem=self.do_stem,

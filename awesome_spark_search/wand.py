@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec
-from .build import Index, _py_term_bucket, K1, B
+from .build import Index, _py_term_bucket, doc_shard_col, K1, B
 from .scoring import JM_LAMBDA, idf_col
 
 # decoded-postings instrumentation (per-process; in distributed runs each
@@ -843,9 +843,7 @@ def boolean_docs(
 
         local = packed.groupBy("doc_shard").applyInPandas(shard_eval, DOCSET_SCHEMA)
     else:
-        keyed = links.withColumn(
-            "doc_shard", (F.col("doc_id") / F.lit(index.doc_shard_size)).cast("long")
-        )
+        keyed = links.withColumn("doc_shard", doc_shard_col(index.doc_shard_size))
         local = packed.groupBy("doc_shard").cogroup(keyed.groupBy("doc_shard")).applyInPandas(
             shard_docs, DOCSET_SCHEMA
         )

@@ -12,7 +12,9 @@ bytes move through one (term, doc_shard) shuffle
 pass through byte-identical, block_max refreshed against the merged
 avgdl). The output root uses the same stage layout, so jobs/query.py
 serves it unchanged. Doc sets must be disjoint (re-ingest/tombstone
-resolution belongs to the streaming path, upstream of packing).
+resolution belongs to the streaming path, upstream of packing); sources
+that cannot merge (shared doc_ids, mismatched doc_shard_size or stemming)
+end with a one-line error on stderr and exit code 2.
 """
 
 from __future__ import annotations
@@ -84,15 +86,19 @@ def main(argv=None) -> int:
     n_term_buckets = src_buckets
 
     t0 = time.time()
-    merged = merge_packed_indexes(
-        spark, indexes,
-        check_disjoint=not args.assume_disjoint,
-        n_term_buckets=n_term_buckets,
-        # persist the merged packed table: the term_stats rollup below reads
-        # the cache the packed write just filled instead of re-running the
-        # merge shuffle per output stage
-        cache=True,
-    )
+    try:
+        merged = merge_packed_indexes(
+            spark, indexes,
+            check_disjoint=not args.assume_disjoint,
+            n_term_buckets=n_term_buckets,
+            # persist the merged packed table: the term_stats rollup below
+            # reads the cache the packed write just filled instead of
+            # re-running the merge shuffle per output stage
+            cache=True,
+        )
+    except ValueError as e:  # sources that cannot merge (overlap, mismatch)
+        print(f"error: {e}", file=sys.stderr)
+        return 2
     stages = os.path.join(args.out, "stages")
     (
         merged.packed.repartition("term_bucket")

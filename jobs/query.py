@@ -29,8 +29,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
-from awesome_spark_search.build import Index, IndexStats
+from awesome_spark_search.build import Index, index_stats
 from awesome_spark_search.executor import QueryExecutor
+from awesome_spark_search.lineage import StageRunner
 
 
 def load_index(spark: SparkSession, root: str) -> Index | None:
@@ -44,10 +45,7 @@ def load_index(spark: SparkSession, root: str) -> Index | None:
         return None
     doc_map = spark.read.parquet(os.path.join(stages, "doc_map"))
     term_stats = spark.read.parquet(os.path.join(stages, "term_stats"))
-    row = doc_map.selectExpr(
-        "count(1) as n", "coalesce(sum(doc_len),0) as t", "coalesce(avg(doc_len),0.0) as a"
-    ).collect()[0]
-    stats = IndexStats(n_docs=row["n"], total_tokens=row["t"], avgdl=float(row["a"]) or 1.0)
+    stats = index_stats(doc_map, StageRunner(spark, None))
     kw = {}
     summary_path = os.path.join(root, "build_summary.json")
     if os.path.exists(summary_path):

@@ -23,7 +23,7 @@ import pandas as pd
 import pytest
 
 from awesome_spark_search import codec, wand
-from awesome_spark_search.build import _pack_many, K1, B
+from awesome_spark_search.build import PACK_KEYS, _pack_many, K1, B
 
 
 def _shard_fn(spec, avgdl: float, k: int):
@@ -54,7 +54,7 @@ def _pack_for_query(postings: dict[str, list[tuple[int, int]]], doc_lens: dict[i
             "doc_len": [r[5] for r in rows],
         }
     )
-    packed = _pack_many(pdf, avgdl=avgdl, n_buckets=64)
+    packed = _pack_many(pdf, PACK_KEYS, lambda key: avgdl, 64)
     packed["idf"] = [
         _idf(len(postings[t]), n_docs) for t in packed["term"]
     ]
@@ -173,7 +173,7 @@ def test_phrase_positions_decode_candidate_blocks_only():
             "doc_len": [r[5] for r in rows],
         }
     )
-    packed = _pack_many(pdf, avgdl=50.0, n_buckets=64)
+    packed = _pack_many(pdf, PACK_KEYS, lambda key: 50.0, 64)
     packed["idf"] = [
         _idf(n_docs if t == "aa" else 8, n_docs) for t in packed["term"]
     ]

@@ -60,6 +60,13 @@ def test_single_doc_corpus(spark):
     assert rows[0]["score"] > 0
 
 
+def test_linkto_without_packed_citations_raises(spark):
+    ex = QueryExecutor(spark, _build(spark, [(0, "lonely document text")]))
+    for q in ("LinkTo:0", "lonely AND LinkTo:0"):
+        with pytest.raises(ValueError, match="packed_citations"):
+            ex.search(q, k=5).collect()
+
+
 def test_spell_correction_exact_at_any_vocab_size(spark):
     """With the driver vocabulary cache disabled (VOCAB_CACHE_MAX=0, the
     10^8-term-corpus regime), a PARTIALLY matching query must still get its

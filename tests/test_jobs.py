@@ -126,6 +126,13 @@ def test_build_then_query_jobs(corpus_dir, tmp_path_factory):
     _run(["jobs/build_index.py", "--source", a_path, "--out", out_a])
     _run(["jobs/build_index.py", "--source", b_path, "--out", out_b])
     mout = _run(["jobs/merge_index.py", "--out", out_m, out_a, out_b])
+    # overlapping sources: a one-line error and exit 2, never a traceback
+    err = _run(
+        ["jobs/merge_index.py", "--out", str(d / "ix_bad"), out_a, out_a],
+        returncode=2,
+    )
+    assert "error:" in err and "share doc_ids" in err
+    assert "Traceback" not in err
     msummary = json.loads(mout.strip().splitlines()[-1])
     assert msummary["n_docs"] == 150
     assert os.path.exists(os.path.join(out_m, "build_summary.json"))

@@ -3,6 +3,8 @@ a base without re-tokenizing. Gate: a merged index must be observationally
 IDENTICAL to the index built over the union corpus — postings round-trip,
 term_stats, stats, WAND top-k rank+score, phrase results."""
 
+import dataclasses
+
 import numpy as np
 import pytest
 
@@ -151,6 +153,31 @@ def test_overlapping_doc_ids_rejected(spark):
     full, ia, _ = _split_indexes(spark)
     with pytest.raises(ValueError, match="share doc_ids"):
         merge_packed_indexes(spark, [ia, ia])
+
+
+def test_mismatched_doc_shard_size_rejected(spark):
+    """Input checks raise ValueError, so they hold under ``python -O`` too:
+    sources sharded differently would merge into a wrong index."""
+    src = spark.createDataFrame(
+        [(0, "merge buffer"), (1, "buffer scan")], "doc_id long, content string"
+    )
+    ia = build_index(spark, src, do_stem=False, doc_shard_size=16)
+    with pytest.raises(ValueError, match="doc_shard_size"):
+        merge_packed_indexes(spark, [ia, dataclasses.replace(ia, doc_shard_size=32)])
+
+
+def test_fielded_mismatched_doc_shard_size_rejected(spark):
+    from awesome_spark_search.fields import build_fielded_packed
+    from awesome_spark_search.merge import merge_fielded_packed
+
+    df = spark.createDataFrame(
+        [(0, "merge buffer", "sort")], "doc_id long, body string, title string"
+    )
+    fa = build_fielded_packed(
+        spark, df, {"body": 1.0, "title": 0.5}, do_stem=False, doc_shard_size=8
+    )
+    with pytest.raises(ValueError, match="doc_shard_size"):
+        merge_fielded_packed(spark, [fa, dataclasses.replace(fa, doc_shard_size=16)])
 
 
 def test_streamed_delta_merges_onto_batch_base(spark, tmp_path):
@@ -331,7 +358,7 @@ def _split_groups(draw):
 
 
 def _pack_group(rows):
-    from awesome_spark_search.build import _pack_many
+    from awesome_spark_search.build import PACK_KEYS, _pack_many
 
     pdf = pd.DataFrame(
         {
@@ -343,13 +370,13 @@ def _pack_group(rows):
             "positions": [r[3] for r in rows],
         }
     ).sort_values("doc_id")
-    return _pack_many(pdf, 10.0, 8)  # pack-time avgdl irrelevant to blobs
+    return _pack_many(pdf, PACK_KEYS, lambda key: 10.0, 8)  # pack-time avgdl irrelevant to blobs
 
 
 @given(_split_groups())
 @settings(max_examples=40, deadline=None)
 def test_merge_rows_equals_direct_pack_property(case):
-    from awesome_spark_search.build import _pack_many
+    from awesome_spark_search.build import PACK_KEYS, _pack_many
     from awesome_spark_search.merge import _merge_rows
 
     n_srcs, src_of, docs, avgdl = case
@@ -368,7 +395,7 @@ def test_merge_rows_equals_direct_pack_property(case):
                 "positions": [d[3] for d in docs],
             }
         ).sort_values("doc_id"),
-        avgdl, 8,
+        PACK_KEYS, lambda key: avgdl, 8,
     ).iloc[0]
     for col in ("n", "cf", "doc_ids_vb", "tfs_vb", "dls_vb", "pos_vb"):
         assert merged[col] == want[col], col

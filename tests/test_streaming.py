@@ -92,6 +92,48 @@ def test_streamed_index_answers_queries_like_batch(spark, tmp_path, doc_pdf):
             assert abs(g["score"] - w["score"]) < 1e-9, q
 
 
+def test_streamed_index_packs_like_batch_build(spark, tmp_path, doc_pdf):
+    """to_index() and build_index over the same final docs (after a
+    re-ingest and a tombstone) produce the SAME packed table byte for byte,
+    the same term_stats rows and the same stats."""
+    from awesome_spark_search.build import build_index
+
+    ingest = IncrementalIndexer(spark, str(tmp_path / "pdelta"), do_stem=True)
+    ingest.foreach_batch(spark.createDataFrame(doc_pdf.iloc[: N_DOCS // 2]), 0)
+    ingest.foreach_batch(spark.createDataFrame(doc_pdf.iloc[N_DOCS // 2:]), 1)
+    redo = doc_pdf[doc_pdf.doc_id == 5].assign(content="merge sort buffer merge")
+    ingest.foreach_batch(spark.createDataFrame(redo), 2)
+    ingest.delete_docs([7], batch_id=3)
+    final = doc_pdf[doc_pdf.doc_id != 7].copy()
+    final.loc[final.doc_id == 5, "content"] = "merge sort buffer merge"
+
+    sidx = ingest.to_index(doc_shard_size=16)
+    bidx = build_index(
+        spark, spark.createDataFrame(final), do_stem=True, doc_shard_size=16
+    )
+
+    def packed(ix):
+        out = {}
+        for r in ix.packed.collect():
+            d = r.asDict()
+            out[(d["term"], d["doc_shard"])] = {
+                c: bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                for c, v in d.items()
+            }
+        return out
+
+    def term_stats(ix):
+        return sorted(
+            tuple(r) for r in ix.term_stats.select("term", "df", "cf", "term_bucket").collect()
+        )
+
+    got, want = packed(sidx), packed(bidx)
+    assert len(got) == len(want) > 0
+    assert got == want
+    assert term_stats(sidx) == term_stats(bidx)
+    assert sidx.stats == bidx.stats
+
+
 def test_merged_postings_idempotent_under_replay(spark, tmp_path, doc_pdf):
     """Replaying the same batch (at-least-once delivery) must not change the
     merged view."""
