@@ -19,11 +19,16 @@ index (wand.py) — the long ``postings`` table is a build intermediate only:
 * scorer="ql"  -> the same shapes through ``wand.ql_topk``
 
 Every query is ONE Spark action: term lookups prune partitions via
-term_bucket, per-query term stats arrive by broadcast join. ``search`` and
-``search_many`` share one front end — parse, ONE spelling-correction pass,
-``wand.QuerySpec``s, one scorer/fielded dispatch (``_plans``) — and every
-ranked plan comes out of one builder (``wand._ranked_rows``); a single
-query ends in a TakeOrderedAndProject, a batch in a per-query window.
+term_bucket. The driver's cached dictionary (``_get_vocab``, {term: (df,
+cf)}) answers every per-term question — existence, df/cf as literals in
+the plan, spelling candidates — so a ranked query runs no term_stats job
+and a typo no Spark job; past ``VOCAB_CACHE_MAX`` a Bloom filter answers
+existence, term stats arrive by broadcast join and corrections cost one
+``correct_terms`` job. ``search`` and ``search_many`` share one front end —
+parse, ONE spelling-correction pass, ``wand.QuerySpec``s, one
+scorer/fielded dispatch (``_plans``) — and every ranked plan comes out of
+one builder (``wand._ranked_rows``); a single query ends in a
+TakeOrderedAndProject, a batch in a per-query window.
 Corrections travel as values, never as executor state, so concurrent
 ``search`` calls on one executor are safe.
 """
@@ -41,7 +46,7 @@ from . import queries as Q
 from . import wand
 from .build import Index, DEFAULT_TERM_BUCKETS
 from .scoring import PRF_WEIGHT
-from .spell import correct_terms
+from .spell import correct_dictionary, correct_terms
 from .textproc import preprocess_query_terms, tokenize_text
 
 PRF_MOST_FREQUENT_TOKENS = 10  # ref: QueryProcessor.java:44-46
@@ -84,8 +89,8 @@ class QueryExecutor:
         # the latest call's corrections, surfaced to formatters (last call
         # wins when calls overlap; each call's own map is a local value)
         self.last_corrections: dict[str, str] = {}
-        # driver-side vocabulary for O(1) existence checks (None = too big)
-        self._vocab: frozenset[str] | None = None
+        # driver-side {term: (df, cf)} dictionary (None = too big)
+        self._vocab: dict[str, tuple[int, int]] | None = None
         self._vocab_checked = False
         self._n_terms: int | None = None
         # past VOCAB_CACHE_MAX: a Bloom filter (built once) answers
@@ -112,23 +117,27 @@ class QueryExecutor:
         prefixes = [t[:-1] for t in terms if t.endswith("*")]
         return (list(dict.fromkeys(exact)) if dedupe else exact), prefixes
 
-    VOCAB_CACHE_MAX = 1_000_000  # driver-side dictionary cutoff (~60MB)
+    # driver-side dictionary cutoff: at 1M terms the {term: (df, cf)} dict
+    # and its tuples take ~87MB beyond the term strings (a frozenset: ~34MB)
+    VOCAB_CACHE_MAX = 1_000_000
 
-    def _get_vocab(self) -> frozenset[str] | None:
-        """Driver-cached term dictionary when it is small enough; the
-        existence check then costs zero Spark actions per query. For huge
-        vocabularies (10^8-term code corpora) this returns None and the
-        existence check uses a Bloom filter built ONCE per index
-        (``_get_bloom``) — still zero per-query actions."""
+    def _get_vocab(self) -> dict[str, tuple[int, int]] | None:
+        """Driver-cached {term: (df, cf)} dictionary when it is small
+        enough, collected once per executor. It answers existence, the
+        ranked plans' df/cf (``wand.term_rows`` literals) and spelling
+        candidates with zero Spark actions per query. For huge vocabularies
+        (10^8-term code corpora) this returns None: existence uses a Bloom
+        filter built ONCE per index (``_get_bloom``) — still zero per-query
+        actions — stats the broadcast join, corrections ``correct_terms``."""
         with self._dictionary_lock:
             if not self._vocab_checked:
                 if self.index.stats.n_docs:
                     self._n_terms = self.index.term_stats.count()
                     if self._n_terms <= self.VOCAB_CACHE_MAX:
-                        self._vocab = frozenset(
-                            r["term"]
-                            for r in self.index.term_stats.select("term").collect()
-                        )
+                        self._vocab = {
+                            r["term"]: (r["df"], r["cf"])
+                            for r in self.index.term_stats.select("term", "df", "cf").collect()
+                        }
                 self._vocab_checked = True
         return self._vocab
 
@@ -150,18 +159,21 @@ class QueryExecutor:
     def _find_corrections(self, terms: list[str]) -> dict[str, str]:
         """For exact terms absent from the dictionary, find the best
         Damerau-Levenshtein correction (ref: SpellingCorrector.java:38-48).
-        Existence is checked against the cached vocab or the once-built Bloom
-        filter — zero per-query actions either way; an empty index has
-        neither, and every term counts as absent."""
+        With the cached dictionary both existence and the candidate ranking
+        run on the driver (``spell.correct_dictionary``) — zero Spark jobs.
+        Past the cache, existence is checked against the once-built Bloom
+        filter and the typos cost ONE ``correct_terms`` job; an empty index
+        has neither, and every term counts as absent."""
         exact = sorted({t for t in terms if not t.endswith("*")})
         if not exact:
             return {}
-        known = self._get_vocab()
-        if known is None:
-            known = self._get_bloom() or frozenset()
+        vocab = self._get_vocab()
+        known = vocab if vocab is not None else self._get_bloom() or frozenset()
         missing = [t for t in exact if t not in known]
         if not missing:
             return {}
+        if vocab is not None:
+            return correct_dictionary(missing, vocab)
         # ONE correction job regardless of typo count (batched dictionary
         # scan + pair-distance pass; ref corrects all tokens in one query
         # pass, QueryProcessor.java:397-417)
@@ -280,13 +292,16 @@ class QueryExecutor:
         Reference semantics at ANY vocabulary size: every token without
         postings is corrected, even when other tokens match
         (ref: QueryProcessor.java:397-417). With the cached dictionary the
-        existence check is O(1) on the driver and the happy path stays ONE
-        Spark action; past ``VOCAB_CACHE_MAX`` a Bloom filter built once
-        per index keeps it at ONE action per query too (no false negatives
-        on membership, so a wrong correction is never invented; a false
-        positive (~2^-11/absent term) may rarely suppress one correction —
-        see bloom.py; the cached-vocab path is exact). The returned
-        DataFrame is localized (k rows).
+        existence check, the term stats and the spelling correction are
+        all answered on the driver: ONE Spark action per query, typo or
+        not, with no term_stats job in it. Past ``VOCAB_CACHE_MAX`` a Bloom
+        filter built once per index keeps the happy path at ONE action per
+        query too (no false negatives on membership, so a wrong correction
+        is never invented; a false positive (~2^-11/absent term) may rarely
+        suppress one correction — see bloom.py; the cached-vocab path is
+        exact); the action then carries the broadcast stats join, and a
+        typo adds one ``correct_terms`` job. The returned DataFrame is
+        localized (k rows).
 
         Thread-safe: concurrent calls on one executor each apply their own
         corrections (passed as values, never stored on the executor). The
@@ -307,12 +322,13 @@ class QueryExecutor:
         two-pass) go through ``search``. Spelling corrections for the
         ENTIRE batch resolve exactly like the single-query path and still
         cost zero extra actions on the happy path (existence via the cached
-        vocab / once-built Bloom; one batched ``correct_terms`` job only
-        when typos exist). Returns (query_id, rank, doc_id, score) —
-        collecting it runs one job: a single bucket-pruned packed scan of
-        the union of all terms, per-shard per-query kernels, one window for
-        the global per-query top-k. Rank+score identical to calling
-        ``search`` per query (tests/test_batch.py)."""
+        dictionary / once-built Bloom; corrections on the driver with the
+        dictionary, else one batched ``correct_terms`` job). Returns
+        (query_id, rank, doc_id, score) — collecting it runs one job: a
+        single bucket-pruned packed scan of the union of all terms,
+        per-shard per-query kernels, one window for the global per-query
+        top-k. Rank+score identical to calling ``search`` per query
+        (tests/test_batch.py)."""
         parsed = {qid: self._parse(text) for qid, text in queries.items()}
         for qid, pq in parsed.items():
             if pq.prf > 0 or Q.is_unranked(pq.ast):
@@ -357,23 +373,27 @@ class QueryExecutor:
         never a silent unfielded fallback), else plain block-max WAND,
         seeded by phrase survivors when the spec has a phrase."""
         spark, nb = self.spark, self.n_buckets
+        stats = self._get_vocab()
         if self.scorer == "ql":
             return (
                 lambda s, k: wand.ql_topk(
                     spark, self.index, s.keywords, k, nb,
                     phrase_terms=s.phrase, prefixes=s.prefixes, weights=s.weights,
+                    stats=stats,
                 ),
-                lambda pairs, k: wand.ql_topk_many(spark, self.index, pairs, k, nb),
+                lambda pairs, k: wand.ql_topk_many(spark, self.index, pairs, k, nb, stats=stats),
             )
         if self.fielded_index is not None:
+            # fielded plans join the fielded term_stats, which the
+            # dictionary does not describe
             from .fields import fielded_batch_topk, fielded_mixed_topk
 
-            target, one, many = self.fielded_index, fielded_mixed_topk, fielded_batch_topk
+            target, one, many, kw = self.fielded_index, fielded_mixed_topk, fielded_batch_topk, {}
         else:
-            target, one, many = self.index, wand.mixed_topk, wand.batch_topk
+            target, one, many, kw = self.index, wand.mixed_topk, wand.batch_topk, {"stats": stats}
         return (
-            lambda s, k: one(spark, target, s.phrase, s.keywords, k, nb, s.weights, s.prefixes),
-            lambda pairs, k: many(spark, target, pairs, k, nb),
+            lambda s, k: one(spark, target, s.phrase, s.keywords, k, nb, s.weights, s.prefixes, **kw),
+            lambda pairs, k: many(spark, target, pairs, k, nb, **kw),
         )
 
     def _run_once(self, pq: Q.ParsedQuery, corrections: dict[str, str], k: int) -> list:

@@ -8,12 +8,14 @@ Secondary scorer (reference fidelity): query-likelihood with Jelinek-Mercer
 smoothing, lambda=0.2 (ref: src/querying/ranking/DocumentRanker.java:33,
 138-167): score(d) = sum_t log((1-l)*tf/dl + l*cf/C).
 
-Both are evaluated per doc_shard over the packed index (wand.py): idf (BM25)
-or the global cf (QL) arrives as a broadcast-joined column computed from
-term_stats with ``idf_col``; top-k order is (score DESC, doc_id ASC) — the
-reference's HashMap iteration order is nondeterministic (ref:
-DocumentRanker.java:90-94), so the rebuild pins this tie-break and the test
-oracle encodes it.
+Both are evaluated per doc_shard over the packed index (wand.py): idf (BM25,
+``idf_col`` over df) or the global cf (QL) is a column of the packed rows
+(``wand.term_rows``), computed from literal df/cf when the executor has its
+dictionary cached, else from broadcast-joined term_stats rows — the same
+JVM expression either way, so scores are bit-identical. Top-k order is
+(score DESC, doc_id ASC) — the reference's HashMap iteration order is
+nondeterministic (ref: DocumentRanker.java:90-94), so the rebuild pins this
+tie-break and the test oracle encodes it.
 """
 
 from __future__ import annotations

@@ -8,12 +8,18 @@ length difference <= 2; keep those with Damerau-Levenshtein distance <= 3
 broken by higher collection frequency (the rebuild adds term ASC as a final
 deterministic tie-break).
 
-Spark shape: the candidate filter is a codegen'd dictionary scan
-(first-char + length band); the distance runs as an Arrow-batched pandas UDF
-because Spark's builtin ``levenshtein()`` lacks the transposition edit.
+Two shapes, one rule. ``correct_dictionary`` ranks candidates on the
+driver over the executor's cached {term: (df, cf)} dictionary — no Spark
+job, like the reference's in-process scan (ref: InvertedIndexReader.java:
+73-99). ``correct_terms`` serves dictionaries too big for the driver: the
+candidate filter is a codegen'd dictionary scan (first-char + length band);
+the distance runs as an Arrow-batched pandas UDF because Spark's builtin
+``levenshtein()`` lacks the transposition edit.
 """
 
 from __future__ import annotations
+
+from collections.abc import Mapping
 
 import numpy as np
 import pandas as pd
@@ -65,30 +71,30 @@ def damerau_levenshtein_unrestricted(a: str, b: str) -> int:
 
 
 def damerau_levenshtein(a: str, b: str) -> int:
-    """Optimal-string-alignment Damerau-Levenshtein, unit costs."""
+    """Optimal-string-alignment Damerau-Levenshtein, unit costs. Rows are
+    plain Python lists: per-cell numpy scalars cost twice as much."""
     la, lb = len(a), len(b)
     if la == 0:
         return lb
     if lb == 0:
         return la
-    prev2 = None
-    prev = np.arange(lb + 1)
+    prev2: list[int] = []
+    prev = list(range(lb + 1))
     for i in range(1, la + 1):
-        cur = np.empty(lb + 1, dtype=np.int64)
-        cur[0] = i
+        ai = a[i - 1]
+        cur = [i] * (lb + 1)
         for j in range(1, lb + 1):
-            cost = 0 if a[i - 1] == b[j - 1] else 1
-            d = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-            if (
-                i > 1
-                and j > 1
-                and a[i - 1] == b[j - 2]
-                and a[i - 2] == b[j - 1]
-            ):
-                d = min(d, prev2[j - 2] + 1)
+            bj = b[j - 1]
+            d = prev[j - 1] + (ai != bj)
+            if prev[j] + 1 < d:
+                d = prev[j] + 1
+            if cur[j - 1] + 1 < d:
+                d = cur[j - 1] + 1
+            if i > 1 and j > 1 and ai == b[j - 2] and a[i - 2] == bj and prev2[j - 2] + 1 < d:
+                d = prev2[j - 2] + 1
             cur[j] = d
         prev2, prev = prev, cur
-    return int(prev[lb])
+    return prev[lb]
 
 
 def make_distance_udf(target: str):
@@ -174,6 +180,26 @@ def correct_terms(
         .collect()
     )
     return {r["target"]: r["corrected"] for r in best}
+
+
+def correct_dictionary(
+    terms: list[str], dictionary: Mapping[str, tuple[int, int]]
+) -> dict[str, str]:
+    """``correct_terms`` (OSA variant) over an in-memory {term: (df, cf)}
+    dictionary: one pass over it for every target, the same candidate band
+    (first character, length within MAX_LENGTH_DIFF), MAX_DISTANCE and the
+    (distance, -cf, term) minimum. No Spark job."""
+    by_first: dict[str, list[str]] = {}
+    for t in sorted({t for t in terms if t}):
+        by_first.setdefault(t[0], []).append(t)
+    best: dict[str, tuple] = {}
+    for term, (_, cf) in dictionary.items():
+        for t in by_first.get(term[:1], ()):
+            if abs(len(term) - len(t)) <= MAX_LENGTH_DIFF:
+                d = damerau_levenshtein(term, t)
+                if d <= MAX_DISTANCE and (t not in best or (d, -cf, term) < best[t]):
+                    best[t] = (d, -cf, term)
+    return {t: b[2] for t, b in best.items()}
 
 
 def correct_term(

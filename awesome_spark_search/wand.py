@@ -15,6 +15,10 @@ Spark shape — scalable by construction:
   inside the blob (dls_vb), so a query is ONE applyInPandas over the few
   matching packed rows — no doc_map join; every Python invocation sees one
   shard's worth of data (bounded by shard_size regardless of corpus size).
+* per-term stats (idf, the global cf) ride on those rows (``term_rows``):
+  literal map lookups from the executor's cached dictionary (``stats``),
+  so the action scans no term_stats and broadcasts nothing; without it a
+  broadcast join of the terms' term_stats rows.
 * one plan builder (``_ranked_rows``) serves every scorer, one query or a
   batch: each shard emits every query's local top-k; the global top-k of
   one query is a tiny TakeOrderedAndProject over n_shards*k rows, that of
@@ -264,26 +268,47 @@ def term_rows(
     n_term_buckets: int,
     stat_cols: list,
     prefixes=(),
+    *,
+    stats=None,
 ) -> DataFrame:
     """THE term-row selector of every ranked packed plan: the packed rows of
     ``terms`` and ``prefixes`` (``_term_filter``) with ``stat_cols`` —
-    expressions over the same terms' term_stats rows (idf for BM25, the
-    global cf for QL) — broadcast-joined on, so a query stays ONE Spark
-    action with no driver-side stats collect."""
-    ts = _term_filter(term_stats, terms, n_term_buckets, prefixes).select(
-        "term", *stat_cols
-    )
-    return _term_filter(packed, terms, n_term_buckets, prefixes).join(
-        F.broadcast(ts), "term"
-    )
+    expressions over the terms' ``df`` and ``cf`` (idf for BM25, the global
+    cf for QL). Where df/cf come from:
+
+    * ``stats`` given (the executor's cached {term: (df, cf)} dictionary,
+      holding every one of ``terms``) and no prefix ranges: literal map
+      lookups on the packed rows — no term_stats scan, no join, no
+      broadcast job;
+    * otherwise: the same terms' term_stats rows, broadcast-joined on, so
+      the query stays ONE Spark action with no driver-side stats collect.
+
+    Both evaluate the same JVM expressions, so scores are bit-identical."""
+    if stats is None or prefixes:
+        ts = _term_filter(term_stats, terms, n_term_buckets, prefixes).select(
+            "term", *stat_cols
+        )
+        return _term_filter(packed, terms, n_term_buckets, prefixes).join(
+            F.broadcast(ts), "term"
+        )
+    rows = _term_filter(packed, terms, n_term_buckets)
+    lookups = [
+        F.create_map(*[F.lit(x) for t in terms for x in (t, stats[t][i])])[F.col("term")]
+        .cast("long").alias(name)
+        for i, name in enumerate(("df", "cf"))
+    ]
+    # the packed row's own per-group cf stays nested while stat_cols read
+    # the dictionary's df/cf
+    return rows.select(F.struct("*").alias("_row"), *lookups).select("_row.*", *stat_cols)
 
 
-def _idf_rows(index: Index, n_term_buckets: int):
+def _idf_rows(index: Index, n_term_buckets: int, stats=None):
     """Row selector for BM25 plans over ``index``: (terms, prefixes) ->
     packed rows with an idf column."""
     idf = idf_col(F.col("df"), index.stats.n_docs).alias("idf")
     return lambda terms, prefixes: term_rows(
-        index.packed, index.term_stats, terms, n_term_buckets, [idf], prefixes
+        index.packed, index.term_stats, terms, n_term_buckets, [idf], prefixes,
+        stats=stats,
     )
 
 
@@ -365,18 +390,26 @@ def _shard_step(specs: dict[str, QuerySpec], parse, score, k: int):
     return shard_topk
 
 
-def _ranked_rows(spark, select, specs: dict[str, QuerySpec], parse, score, k: int) -> DataFrame:
+def _ranked_rows(
+    spark, select, specs: dict[str, QuerySpec], parse, score, k: int, stats=None
+) -> DataFrame:
     """THE ranked-plan builder of every scorer, for one query or a batch:
     ONE scan of the union of all specs' terms and prefix ranges
     (``select(terms, prefixes)``, a ``term_rows`` selector), then per
     doc_shard ``_shard_step`` -> shard-local (query_id, doc_id, score) rows.
     The caller adds the global top-k tail: ``_topk`` for one query,
     ``_batch_global_topk`` for a batch. Block skipping stays per-query
-    exact: every spec runs its own kernel over the shared rows."""
+    exact: every spec runs its own kernel over the shared rows. With the
+    cached dictionary ``stats``, terms outside it have no packed rows and
+    drop out here; a plan left without terms is the empty frame, no job."""
     terms = list(dict.fromkeys(t for s in specs.values() for t in [*s.phrase, *s.keywords]))
     prefixes = tuple(dict.fromkeys(p for s in specs.values() for p in s.prefixes))
+    if stats is not None and not prefixes:
+        terms = [t for t in terms if t in stats]
     if not terms and not prefixes:
-        return spark.createDataFrame([], SHARD_ROWS_SCHEMA)
+        # limit(0) makes it an empty local relation: collecting it (and any
+        # top-k tail over it) runs no job
+        return spark.createDataFrame([], SHARD_ROWS_SCHEMA).limit(0)
     return select(terms, prefixes).groupBy("doc_shard").applyInPandas(
         _shard_step(specs, parse, score, k), SHARD_ROWS_SCHEMA
     )
@@ -456,6 +489,8 @@ def mixed_topk(
     n_term_buckets: int = 64,
     weights: dict[str, float] | None = None,
     prefixes=(),
+    *,
+    stats=None,
 ) -> DataFrame:
     """One ranked BM25 query of any type off the packed index, ONE Spark
     action: ([], kw) is a keyword query, (ph, []) an exact phrase, (ph, kw)
@@ -463,11 +498,11 @@ def mixed_topk(
     arrive in one bucket-pruned scan and each doc_shard runs phrase-eval +
     seeded WAND in a single applyInPandas pass (``_bm25_scores``).
     ``weights``/``prefixes`` apply to the keyword part, as in
-    ``wand_topk``."""
+    ``wand_topk``; ``stats`` is the cached dictionary (``term_rows``)."""
     spec = QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
     return _topk(_ranked_rows(
-        spark, _idf_rows(index, n_term_buckets), {"q": spec},
-        *_bm25(index.stats.avgdl, k), k,
+        spark, _idf_rows(index, n_term_buckets, stats), {"q": spec},
+        *_bm25(index.stats.avgdl, k), k, stats,
     ), k)
 
 
@@ -495,6 +530,8 @@ def batch_topk(
     specs: dict[str, tuple[list[str], list[str]]],
     k: int = 10,
     n_term_buckets: int = 64,
+    *,
+    stats=None,
 ) -> DataFrame:
     """Batched top-k over MIXED query types in ONE Spark action: each
     ``specs`` value is (phrase_terms, keyword_terms) — ([], kw) is a plain
@@ -502,7 +539,8 @@ def batch_topk(
     batch shares one bucket-pruned scan of the union of its terms, each
     shard parsed once; per-query results are rank+score identical to
     wand_topk / phrase_topk / mixed_topk, which run the same builder and
-    kernel (tests/test_batch.py).
+    kernel (tests/test_batch.py). ``stats`` is the cached dictionary
+    (``term_rows``).
 
     The serving cost of a single query at scale is dominated by fixed
     per-action work (job scheduling, the packed scan's task launch, one
@@ -512,8 +550,8 @@ def batch_topk(
     AwesomeSearchEngine.java; batching is the Spark-first upgrade of that
     loop)."""
     return _batch_global_topk(_ranked_rows(
-        spark, _idf_rows(index, n_term_buckets), _pairs(specs),
-        *_bm25(index.stats.avgdl, k), k,
+        spark, _idf_rows(index, n_term_buckets, stats), _pairs(specs),
+        *_bm25(index.stats.avgdl, k), k, stats,
     ), k)
 
 
@@ -563,14 +601,15 @@ def _ql_scores(shard, spec: QuerySpec):
     return ids, scores
 
 
-def _cf_rows(index: Index, n_term_buckets: int):
+def _cf_rows(index: Index, n_term_buckets: int, stats=None):
     """Row selector for QL plans over ``index``: (terms, prefixes) -> packed
-    rows with the broadcast GLOBAL collection frequency (aliased cf_global:
-    packed group rows carry a per-(term, doc_shard) cf; the JM background
-    model needs the term's corpus-wide cf)."""
+    rows with the GLOBAL collection frequency (aliased cf_global: packed
+    group rows carry a per-(term, doc_shard) cf; the JM background model
+    needs the term's corpus-wide cf)."""
     cf = F.col("cf").alias("cf_global")
     return lambda terms, prefixes: term_rows(
-        index.packed, index.term_stats, terms, n_term_buckets, [cf], prefixes
+        index.packed, index.term_stats, terms, n_term_buckets, [cf], prefixes,
+        stats=stats,
     )
 
 
@@ -593,6 +632,7 @@ def ql_topk(
     phrase_terms=(),
     prefixes=(),
     weights: dict[str, float] | None = None,
+    stats=None,
 ) -> DataFrame:
     """Query-likelihood / Jelinek-Mercer top-k off the packed index (ref
     scorer: src/querying/ranking/DocumentRanker.java:33, 138-167 —
@@ -600,11 +640,13 @@ def ql_topk(
     floored at 1). ``terms`` are the keyword terms; ``phrase_terms``,
     ``prefixes`` and ``weights`` give the phrase, prefix and PRF forms
     (``_ql_scores``). ONE Spark action, ``wand_topk``'s shape: term_rows
-    with a broadcast cf column, per-shard decode (dl rides in dls_vb, so no
+    with the global cf column (literal with the cached dictionary
+    ``stats``, else broadcast), per-shard decode (dl rides in dls_vb, so no
     doc_map join), tiny global top-k."""
     spec = QuerySpec(list(phrase_terms), list(terms), tuple(prefixes), weights)
     return _topk(_ranked_rows(
-        spark, _cf_rows(index, n_term_buckets), {"q": spec}, *_ql(index, lam), k
+        spark, _cf_rows(index, n_term_buckets, stats), {"q": spec}, *_ql(index, lam), k,
+        stats,
     ), k)
 
 
@@ -615,15 +657,19 @@ def ql_topk_many(
     k: int = 10,
     n_term_buckets: int = 64,
     lam: float | None = None,
+    *,
+    stats=None,
 ) -> DataFrame:
     """Batched QL/JM top-k in ONE Spark action, with ``batch_topk``'s
     (phrase_terms, keyword_terms) specs — keyword, phrase and Mixed queries
     alike. Each term's lists decode once per shard regardless of how many
     queries use them. Per-query scores are EQUAL to ``ql_topk``'s: both run
     the same builder and sum through ``_ql_scores`` in the same term order
-    (tests/test_batch.py)."""
+    (tests/test_batch.py). ``stats`` is the cached dictionary
+    (``term_rows``)."""
     return _batch_global_topk(_ranked_rows(
-        spark, _cf_rows(index, n_term_buckets), _pairs(specs), *_ql(index, lam), k
+        spark, _cf_rows(index, n_term_buckets, stats), _pairs(specs), *_ql(index, lam), k,
+        stats,
     ), k)
 
 

@@ -1,10 +1,11 @@
 """Concurrent search() on ONE executor: each call applies its own spelling
 corrections. Two threads search different typo'd queries; a barrier inside
-``executor.correct_terms`` (which both call) forces every pair of calls to
-overlap, so both threads have found their corrections before either builds
-its plans. Each thread's rows must match the oracle under its OWN
-correction map — keyword, PRF (which re-reads the corrections after its
-first Spark action to generate snippets) and Boolean queries."""
+``executor.correct_dictionary`` (the driver-side corrector both call with
+the cached dictionary) forces every pair of calls to overlap, so both
+threads have found their corrections before either builds its plans.
+Each thread's rows must match the oracle under its OWN correction map —
+keyword, PRF (which re-reads the corrections after its first Spark action
+to generate snippets) and Boolean queries."""
 
 import sys
 import threading
@@ -49,14 +50,14 @@ def index(spark, src):
 
 def test_concurrent_searches_keep_their_own_corrections(spark, src, index, monkeypatch):
     barrier = threading.Barrier(len(THREADS), timeout=300)
-    real = executor_mod.correct_terms
+    real = executor_mod.correct_dictionary
 
     def overlapping(*args, **kwargs):
         out = real(*args, **kwargs)
         barrier.wait()  # both threads now hold their corrections
         return out
 
-    monkeypatch.setattr(executor_mod, "correct_terms", overlapping)
+    monkeypatch.setattr(executor_mod, "correct_dictionary", overlapping)
     ex = QueryExecutor(spark, index, source_df=src)
     got: dict[str, list] = {}
     errors: list[BaseException] = []

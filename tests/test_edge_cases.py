@@ -72,13 +72,18 @@ def test_spell_correction_exact_at_any_vocab_size(spark):
     10^8-term-corpus regime), a PARTIALLY matching query must still get its
     misspelled token corrected via the once-built Bloom filter's existence
     check — reference corrects every posting-less token, not only fully
-    empty results (ref: QueryProcessor.java:397-417)."""
+    empty results (ref: QueryProcessor.java:397-417). The driver-side
+    ranking of the cached path and the ``correct_terms`` job of the
+    uncached one pick the same corrections, tie-breaks included, and so
+    return the same rows."""
     idx = _build(
         spark,
         [
             (0, "buffer merge stream"),
             (1, "buffer compact stream"),
             (2, "merge window stream"),
+            (3, "cart card lamp"),
+            (4, "cart lame"),
         ],
     )
     ex = QueryExecutor(spark, idx)
@@ -92,6 +97,52 @@ def test_spell_correction_exact_at_any_vocab_size(spark):
     assert [(r["doc_id"], r["score"]) for r in rows] == [
         (r["doc_id"], r["score"]) for r in want
     ]
+    assert ex2._get_vocab() is not None
+    cases = {
+        "buffer carx": {"carx": "cart"},    # distance tie: cart (cf 2) beats card (cf 1)
+        "buffer lamx": {"lamx": "lame"},    # distance and cf tie: term ascending
+        "buffer wxyzzq": {},                # no candidate within distance 3
+        "buffer xindow": {},                # window is 1 edit away, first letter differs
+        "carx lamx wxyzzq xindow mrege": {"carx": "cart", "lamx": "lame", "mrege": "merge"},
+    }
+    for query, corrections in cases.items():
+        got = {}
+        for name, e in (("cached", ex2), ("uncached", ex)):
+            rows = e.search(query, k=10).collect()
+            got[name] = (e.last_corrections, [(r["doc_id"], r["score"]) for r in rows])
+        assert got["cached"] == got["uncached"], query
+        assert got["cached"][0] == corrections, query
+
+
+def test_typo_adds_no_spark_job_on_cached_path(spark):
+    """With the cached dictionary the spelling correction runs on the
+    driver: a typo'd search costs exactly as many Spark jobs as the same
+    search spelled right."""
+    idx = _build(
+        spark,
+        [
+            (0, "buffer merge stream window"),
+            (1, "buffer compact stream scan"),
+            (2, "merge window stream batch"),
+        ],
+    )
+    ex = QueryExecutor(spark, idx)
+    ex.search("buffer merge", k=5).collect()  # warm: caches the dictionary
+    sc = spark.sparkContext
+
+    def jobs_for(group, query):
+        sc.setJobGroup(group, group)
+        try:
+            rows = ex.search(query, k=5).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+    j_typo, typo_rows = jobs_for("cached_typo", "bufer mrege")
+    assert ex.last_corrections == {"bufer": "buffer", "mrege": "merge"}
+    j_right, right_rows = jobs_for("cached_right", "buffer merge")
+    assert j_typo == j_right, (j_typo, j_right)
+    assert typo_rows == right_rows
 
 
 def test_batched_spelling_one_job_for_three_typos(spark):

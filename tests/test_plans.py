@@ -1,7 +1,8 @@
 """Physical-plan quality gates: the optimizations we rely on at 100 TB must
 be visible in the packed serving plans at any scale — partition pruning on
-term_bucket, Parquet filter pushdown, broadcast of per-query term stats,
-and a fixed exchange count for batches."""
+term_bucket, Parquet filter pushdown, per-query term stats as literals from
+the executor's cached dictionary (else a broadcast), and a fixed exchange
+count for batches."""
 
 import re
 
@@ -72,3 +73,33 @@ def test_wand_plan_single_action_shape(spark, packed_ckpt_index):
     # and it returns the right thing
     rows = df.collect()
     assert rows and rows[0]["score"] > 0
+
+
+def test_executor_plans_carry_cached_stats_as_literals(spark, packed_ckpt_index):
+    """The executor's plans, with its cached dictionary: df/cf are literals
+    on the packed rows, so neither a single query nor a batch scans
+    term_stats, joins or broadcasts; bucket pruning and the pushed term
+    filter stay, with one hash exchange for one query (the per-shard
+    repartition) and two for a batch (plus the window's)."""
+    from awesome_spark_search.executor import QueryExecutor
+    from awesome_spark_search.wand import QuerySpec
+
+    one, many = QueryExecutor(spark, packed_ckpt_index)._plans()
+    single = one(QuerySpec([], ["buffer", "merge"]), 10)
+    batch = many(
+        {"q0": ([], ["buffer", "merge"]), "q1": ([], ["scan"]),
+         "q2": ([], ["buffer", "scan"])},
+        5,
+    )
+    for df, n_hash in ((single, 1), (batch, 2)):
+        plan = _plan(df)
+        assert "BroadcastExchange" not in plan, plan[:3000]
+        assert "Join" not in plan, plan[:3000]
+        assert "term_stats" not in plan, plan[:3000]
+        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert m and "term_bucket" in m.group(1), plan[:2000]
+        pf = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+        assert pf and any("term" in x for x in pf), plan[:2000]
+        assert len(re.findall(r"Exchange hashpartitioning", plan)) == n_hash, plan[:3000]
+        rows = df.collect()
+        assert rows and all(r["score"] > 0 for r in rows)

@@ -1,7 +1,8 @@
 """Dump formatted physical plans of the headline operators to PLANS.md —
 the .explain('formatted') evidence behind the plan-gate tests
 (tests/test_plans.py): every query type serves from the packed index, with
-partition pruning, filter pushdown, query-term-filtered broadcasts and
+partition pruning, filter pushdown, query-term-filtered broadcasts (or,
+on the executor path with a cached dictionary, literal term stats) and
 single-shuffle shapes.
 
 Usage: python tools/dump_plans.py [out.md]
@@ -45,6 +46,13 @@ def main() -> int:
         )
         # strip exploded per-run temp paths for readability
         return re.sub(r"file:[^\s,\]]*", "file:<ckpt>", s)
+
+    def _executor_plan(spark, idx):
+        from awesome_spark_search.executor import QueryExecutor
+        from awesome_spark_search.wand import QuerySpec
+
+        one, _ = QueryExecutor(spark, idx)._plans()
+        return one(QuerySpec([], ["buffer", "merg", "scan"]), 10)
 
     def _fielded_plan(spark, src):
         from awesome_spark_search.fields import (
@@ -131,6 +139,15 @@ def main() -> int:
          "arrays, JVM pair expansion bounded by the bucket cap.",
          dedup.lsh_candidate_pairs(
              src.select("doc_id", F.col("content").alias("text")))),
+        ("Keyword top-10 with the cached dictionary (executor path)",
+         "The plan QueryExecutor builds when its driver-cached {term: (df, "
+         "cf)} dictionary is loaded: idf is computed from literal df map "
+         "lookups on the bucket-pruned packed rows - no term_stats scan, no "
+         "join, no broadcast job - then the same per-shard applyInPandas "
+         "and TakeOrderedAndProject as the broadcast plan above.",
+         # built last: loading the dictionary plans a job of its own,
+         # which would renumber every plan formatted after it
+         lambda: _executor_plan(spark, idx)),
     ]
     lines = [
         "# PLANS — formatted physical plans of the headline operators",
@@ -142,6 +159,7 @@ def main() -> int:
         "",
     ]
     for title, note, df in sections:
+        df = df() if callable(df) else df
         lines += [f"## {title}", "", note, "", "```", fmt(df).rstrip(), "```", ""]
     with open(out_path, "w") as f:
         f.write("\n".join(lines))
