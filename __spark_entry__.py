@@ -27,6 +27,7 @@ from awesome_spark_search import dedup as _dedup
 from awesome_spark_search import pagerank as _pagerank
 from awesome_spark_search import similarity as _similarity
 from awesome_spark_search import textstats as _textstats
+from awesome_spark_search import wand as _wand
 from awesome_spark_search.build import build_index
 from awesome_spark_search.executor import QueryExecutor
 from awesome_spark_search.stopwords import stopword_sql_list
@@ -290,16 +291,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _executor(spark, sf)
         )
     )
-    q["fielded_bm25"] = lambda spark, sf: _fielded_bm25(spark, sf)
-    # same zone-weighted query served off the PACKED fielded index (per-field
-    # avgdl override + w_f folded into idf inside block-max WAND) — must
-    # reproduce the identical long-table oracle
-    q["fielded_bm25_packed"] = lambda spark, sf: _fielded_bm25_packed(spark, sf)
+    # zone-weighted BM25 (text w=1.0, source w=0.5): the FULL search()
+    # pipeline on an executor over a two-field index
+    q["fielded_bm25"] = lambda spark, sf: (
+        _fielded_executor(spark, sf).search(" ".join(_FIELD_TERMS), k=10)
+        .select("doc_id", F.round(F.col("score"), 4).alias("score"))
+    )
+    # the same query through the wand entry point directly (per-field
+    # avgdl and zone weight inside block-max WAND) — same oracle
+    q["fielded_bm25_packed"] = lambda spark, sf: (
+        _wand.wand_topk(spark, _fielded_executor(spark, sf).index, _FIELD_TERMS, k=10)
+        .select("doc_id", F.round(F.col("score"), 4).alias("score"))
+    )
     # zone weights reach EVERY ranked query type (ref DocumentRanker.java:
     # 138-167 weights phrase/Mixed results by ContentType exactly like
-    # keyword): these run the FULL search() pipeline on a fielded executor —
-    # parse -> per-field phrase adjacency -> zone-weighted scoring off the
-    # packed fielded index (fields.fielded_phrase_topk / fielded_mixed_topk)
+    # keyword): parse -> per-field phrase adjacency -> zone-weighted scoring
     q["fielded_phrase"] = lambda spark, sf: (
         _fielded_executor(spark, sf).search('"table value"', k=10)
         .select("doc_id", F.round(F.col("score"), 4).alias("score"))
@@ -566,52 +572,20 @@ _FIELDED_EX: dict[str, QueryExecutor] = {}
 
 
 def _fielded_executor(spark, sf) -> QueryExecutor:
-    """One fielded packed index per sf per process (text w=1.0, source
-    w=0.5), wrapped in a QueryExecutor with ``fielded_index`` set: EVERY
-    ranked query type — keyword, phrase, Mixed, PRF — then ranks
-    zone-weighted end-to-end, mirroring the reference's always-zoned
-    DocumentRanker (ref: DocumentRanker.java:138-167)."""
-    from awesome_spark_search.fields import build_fielded_packed
-
+    """One two-field index per sf per process (text w=1.0, source w=0.5),
+    wrapped in a QueryExecutor: EVERY ranked query type — keyword, phrase,
+    Mixed, PRF — then ranks zone-weighted end-to-end, mirroring the
+    reference's always-zoned DocumentRanker (ref: DocumentRanker.java:
+    138-167)."""
     key = sf.rstrip("/")
     if key not in _FIELDED_EX:
-        ex = _executor(spark, key)
         docs = _docs(spark, key).select("doc_id", "text", "source")
-        fidx = build_fielded_packed(spark, docs, _FIELD_WEIGHTS, do_stem=False)
         _FIELDED_EX[key] = QueryExecutor(
-            spark, ex.index, source_df=ex.source_df,
-            fielded_index=fidx,
+            spark,
+            build_index(spark, docs, do_stem=False, field_weights=_FIELD_WEIGHTS),
+            source_df=_executor(spark, key).source_df,
         )
     return _FIELDED_EX[key]
-
-
-def _fielded_bm25(spark, sf) -> DataFrame:
-    """Field/zone-weighted BM25 (reference ContentType weights analog) over
-    (text w=1.0, source w=0.5)."""
-    from awesome_spark_search.fields import build_fielded_postings, fielded_bm25_topk
-
-    docs = _docs(spark, sf).select("doc_id", "text", "source")
-    postings, lens, ts = build_fielded_postings(
-        docs, _FIELD_WEIGHTS, do_stem=False
-    )
-    return fielded_bm25_topk(
-        spark, postings, lens, ts, _FIELD_WEIGHTS, _FIELD_TERMS, k=10
-    ).select("doc_id", F.round(F.col("score"), 4).alias("score"))
-
-
-def _fielded_bm25_packed(spark, sf) -> DataFrame:
-    """The SAME zone-weighted query as _fielded_bm25, served off the packed
-    fielded index (fields.build_fielded_packed / fielded_wand_topk): each
-    (field, term) posting list packs against its field's avgdl, w_f folds
-    into the broadcast idf, and the per-shard WAND loop merge-adds the zone
-    contributions — rank+score identical to the long-table plan, so it
-    shares fielded_bm25's oracle verbatim."""
-    from awesome_spark_search.fields import fielded_wand_topk
-
-    fidx = _fielded_executor(spark, sf).fielded_index
-    return fielded_wand_topk(spark, fidx, _FIELD_TERMS, k=10).select(
-        "doc_id", F.round(F.col("score"), 4).alias("score")
-    )
 
 
 def _packed_merge_roundtrip(spark, sf) -> DataFrame:
@@ -940,8 +914,8 @@ matched AS (
 ),
 {_fielded_score}
 """
-    # the packed fielded entry must reproduce the long-table plan exactly —
-    # one oracle, two engines' worth of evidence
+    # the executor and the direct wand entry serve the same query — one
+    # oracle
     o["fielded_bm25_packed"] = o["fielded_bm25"]
     # fielded PHRASE: the phrase must occur within a single zone (positions
     # never chain across field boundaries) and only phrase-holding

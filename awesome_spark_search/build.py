@@ -10,30 +10,42 @@ merging; what stays explicit is what the optimizer cannot infer:
 * **skew**: hot terms (``import``/``def``-class tokens hit >30% of docs)
   never hit an unbounded reducer: term_stats rolls up from the packed
   (term, doc_shard) group rows (bounded by construction).
-* **bounded posting rows**: packed postings are keyed ``(term, doc_shard)``
-  where ``doc_shard = doc_id // shard_size``. A term over 10^12 docs never
-  produces one giant array row; every row is <= shard_size entries and the
-  query side intersects per-shard (embarrassingly parallel WAND).
+* **one index shape**: a plain index is the one-field case of a fielded one
+  (``PLAIN_FIELDS``, the source column ``content`` at weight 1.0). Every
+  posting and packed row carries its ``field``, ``doc_map`` carries the
+  per-field lengths, and ``IndexStats`` the per-field avgdl, so build,
+  merge and serving each have one code path for both (the reference's one
+  index whose postings carry a ContentType, ref:
+  src/postings/ContentType.java:6-9).
+* **bounded posting rows**: packed postings are keyed ``(field, term,
+  doc_shard)`` where ``doc_shard = doc_id // shard_size``. A term over
+  10^12 docs never produces one giant array row; every row is <= shard_size
+  entries and the query side intersects per-shard (embarrassingly parallel
+  WAND).
 * **term-bucket layout**: the final index is hash-bucketed on term
   (``term_bucket`` partition column), so a query's term lookup prunes to
   q buckets (the role of the reference's seek list, via partition pruning +
   Parquet min/max stats).
 * **one repack path**: every packed table — this build, the streaming
-  ``IncrementalIndexer.to_index``, the fielded build and both merges — goes
-  through ``repack`` (a (term, doc_shard) or (field, term, doc_shard)
-  sort-shuffle streamed through one tail-buffered mapInPandas body); the
-  plain producers share ``index_stats`` (one stats aggregate, one avgdl
-  floor) and ``packed_term_stats`` (df/cf from the packed groups).
+  ``IncrementalIndexer.to_index`` and the merge — goes through ``repack``
+  (a (field, term, doc_shard) sort-shuffle streamed through one
+  tail-buffered mapInPandas body), and every producer takes its stats from
+  ``index_stats`` (one aggregate, one avgdl floor per field). term_stats of
+  a one-field build rolls up from the packed groups (``packed_term_stats``);
+  with several fields df counts the docs holding the term in ANY field
+  (``any_field_term_stats``), which no one field's rows give.
 
 At 100 TB: tokenize is a narrow map (Arrow batches) with no shuffle, the
-single wide shuffle is the pack's (term, doc_shard) sort-shuffle, and every
-later stage groups on keys that include doc_shard/term_bucket, keeping state
-bounded.
+single wide shuffle is the pack's (field, term, doc_shard) sort-shuffle, and
+every later stage groups on keys that include doc_shard/term_bucket,
+keeping state bounded.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -50,33 +62,56 @@ B = 0.75
 DEFAULT_TERM_BUCKETS = 64
 DEFAULT_DOC_SHARD_SIZE = 1 << 20  # 1M docs per shard row at scale
 
+# A plain index is the one-field case: the source column it tokenizes, at
+# weight 1.0.
+PLAIN_FIELDS: dict[str, float] = {"content": 1.0}
+
+# The reference's exact patent-zone weighting, pinned as a preset
+# (ref: src/postings/ContentType.java:6-9 — Title 0.5, Abstract 0.25,
+# Claims 0.15, Description 0.1). Pass it as ``build_index``'s
+# ``field_weights`` to reproduce the reference's four-zone ranking over a
+# corpus with those columns; tests/test_fields.py pins the resulting scores.
+REFERENCE_ZONES: dict[str, float] = {
+    "title": 0.5,
+    "abstract": 0.25,
+    "claims": 0.15,
+    "description": 0.1,
+}
+
 
 @dataclass
 class IndexStats:
     n_docs: int
     total_tokens: int
     avgdl: float
+    avgdl_by_field: dict[str, float]  # BM25's per-field dl normalizer
 
 
 @dataclass
 class Index:
     """The queryable index: a set of DataFrames + tiny driver-side stats.
 
-    Queries serve from ``packed`` alone; the long ``postings`` table is a
-    build intermediate (packing, merges, streaming compaction). Positions
-    stay their own stream (``positions`` / ``pos_vb``), mirroring the
-    reference's frequency/positional file split (ref:
-    src/SearchEngine/AwesomeSearchEngine.java:91-100).
+    ``field_weights`` names the source columns the index tokenized and
+    their zone weights; a plain index has the one field ``PLAIN_FIELDS``.
+    BM25 scores sum ``w_f * idf * tfnorm_f`` over every field, each field
+    normalized by its own avgdl. Queries serve from ``packed`` alone; the
+    long ``postings`` table is a build intermediate (packing, merges,
+    streaming compaction). Positions stay their own stream (``positions`` /
+    ``pos_vb``), mirroring the reference's frequency/positional file split
+    (ref: src/SearchEngine/AwesomeSearchEngine.java:91-100).
     """
 
-    doc_map: DataFrame      # doc_id, repo, path, commit, lang, doc_len, content_sha256
-    postings: DataFrame     # term_bucket, term, doc_id, tf, positions
+    doc_map: DataFrame      # doc_id, repo, path, commit, lang, content_sha256, doc_len, field_lens
+    postings: DataFrame     # term_bucket, field, term, doc_id, tf, positions, doc_len
     term_stats: DataFrame   # term_bucket, term, df, cf
-    packed: DataFrame       # term_bucket, term, doc_shard, n, *_vb blobs, block_max, blk_* directory
+    packed: DataFrame       # term_bucket, term, doc_shard, n, *_vb blobs, block_max, blk_* directory, field
     stats: IndexStats
     do_stem: bool = True
     build_metrics: list = field(default_factory=list)
-    doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE  # packed sharding (query side must match)
+    # the packed layout; the query side reads both from here
+    doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE
+    n_term_buckets: int = DEFAULT_TERM_BUCKETS
+    field_weights: dict[str, float] = field(default_factory=lambda: dict(PLAIN_FIELDS))
 
 
 PACKED_SCHEMA = T.StructType(
@@ -112,11 +147,12 @@ PACKED_SCHEMA = T.StructType(
         # holding doc-level candidates (wand._phrase_survivors)
         T.StructField("blk_pos_off", T.ArrayType(T.IntegerType()), False),
         T.StructField("blk_first_doc", T.ArrayType(T.LongType()), False),
+        T.StructField("field", T.StringType(), False),
     ]
 )
 
 
-PACK_KEYS = ["term", "doc_shard"]  # group key of a plain packed table
+PACK_KEYS = ["field", "term", "doc_shard"]  # group key of every packed table
 
 
 def doc_shard_col(doc_shard_size: int):
@@ -126,10 +162,10 @@ def doc_shard_col(doc_shard_size: int):
     return (F.col("doc_id") / F.lit(doc_shard_size)).cast("long")
 
 
-def _groups(pdf: pd.DataFrame, keys: list[str]):
-    """(start, end, key) of every run of equal ``keys`` values in a frame
-    sorted by ``keys``; ``key`` maps each key column to the run's value."""
-    cols = {c: pdf[c].to_numpy() for c in keys}
+def _groups(pdf: pd.DataFrame):
+    """(start, end, key) of every run of equal PACK_KEYS values in a frame
+    sorted by them; ``key`` maps each key column to the run's value."""
+    cols = {c: pdf[c].to_numpy() for c in PACK_KEYS}
     n = len(pdf)
     new = np.zeros(n, dtype=bool)
     new[:1] = True
@@ -140,14 +176,10 @@ def _groups(pdf: pd.DataFrame, keys: list[str]):
         yield s, e, {c: a[s] for c, a in cols.items()}
 
 
-def _pack_many(
-    pdf: pd.DataFrame, keys: list[str], avgdl_of, n_buckets: int
-) -> pd.DataFrame:
-    """Pack MANY groups from one frame sorted by (*keys, doc_id).
+def _pack_many(pdf: pd.DataFrame, avgdl_by_field: dict, n_buckets: int) -> pd.DataFrame:
+    """Pack MANY groups from one frame sorted by (*PACK_KEYS, doc_id); each
+    group's block_max is bounded against its field's avgdl.
 
-    ``keys`` is PACK_KEYS or (field, *PACK_KEYS); every key column rides
-    into the output row. ``avgdl_of(key)`` is the group's block_max length
-    normalizer (fielded tables pack each zone against its own avgdl).
     Group detection and the position gap stream are computed vectorized
     over the whole frame; the only per-group Python is a handful of numpy
     slice + varint calls (~50-100us/group vs ~1.3ms/group for pandas
@@ -172,10 +204,8 @@ def _pack_many(
         gaps[1:] = np.diff(flat)
         gaps[offsets[:-1]] = flat[offsets[:-1]]
 
-    cols: dict[str, list] = {
-        c: [] for c in dict.fromkeys([f.name for f in PACKED_SCHEMA.fields] + keys)
-    }
-    for s, e, key in _groups(pdf, keys):
+    cols: dict[str, list] = {f.name: [] for f in PACKED_SCHEMA.fields}
+    for s, e, key in _groups(pdf):
         ids = doc_ids[s:e]
         t = tfs[s:e]
         seg = gaps[offsets[s]: offsets[e]]
@@ -187,7 +217,7 @@ def _pack_many(
         mask[marker_idx] = False
         stream[mask] = seg.astype(np.uint64)
         row = _encode_group(key["term"], int(key["doc_shard"]), ids, t, dls[s:e],
-                            stream, avgdl_of(key), n_buckets)
+                            stream, avgdl_by_field[key["field"]], n_buckets)
         row.update(key)
         for name, v in row.items():
             cols[name].append(v)
@@ -204,12 +234,12 @@ def _encode_group(
     avgdl: float,
     n_buckets: int,
 ) -> dict:
-    """Encode ONE (term, doc_shard) group — sorted doc_ids ``ids``, per-doc
+    """Encode ONE (field, term, doc_shard) group — sorted doc_ids ``ids``, per-doc
     tfs ``t`` and doc lengths ``dls_seg``, and the concatenated
     [tf, gap0(=pos0), gaps...] position ``stream`` — into a PACKED_SCHEMA
-    row dict. Shared by the builder (_pack_many) and the packed-index
-    merger (merge.merge_packed_indexes), so both produce byte-compatible
-    blobs and directories."""
+    row dict (the caller adds ``field``). Shared by the builder (_pack_many)
+    and the packed-index merger (merge.merge_packed_indexes), so both
+    produce byte-compatible blobs and directories."""
     k = ids.size
     marker_idx = np.zeros(k, dtype=np.int64)
     if k:
@@ -253,17 +283,14 @@ def _encode_group(
     }
 
 
-def repack(
-    df: DataFrame, keys: list[str], order: list[str], head, schema: T.StructType
-) -> DataFrame:
+def repack(df: DataFrame, order: list[str], head) -> DataFrame:
     """The one repack path every packed table goes through (build,
-    streaming, fielded, merge): hash-repartition on ``keys``, sort each
-    partition by ``keys + order``, then stream it through ``head`` — one
-    Python call per Arrow batch, never per group. ``head(pdf)`` sees WHOLE
-    groups only: each batch's last group is held back and completed with
-    the next batch (partition order is stable). This IS the reference's
-    sorted k-way merge (InvertedIndexMerger.java:34-112) expressed as
-    Spark's sort-shuffle."""
+    streaming, merge): hash-repartition on PACK_KEYS, sort each partition by
+    ``PACK_KEYS + order``, then stream it through ``head`` — one Python call
+    per Arrow batch, never per group. ``head(pdf)`` sees WHOLE groups only:
+    each batch's last group is held back and completed with the next batch
+    (partition order is stable). This IS the reference's sorted k-way merge
+    (InvertedIndexMerger.java:34-112) expressed as Spark's sort-shuffle."""
 
     def repack_stream(batches):
         buf: pd.DataFrame | None = None
@@ -273,7 +300,7 @@ def repack(
             if not len(pdf):
                 continue
             tail = np.logical_and.reduce(
-                [pdf[c].to_numpy() == pdf[c].iat[-1] for c in keys]
+                [pdf[c].to_numpy() == pdf[c].iat[-1] for c in PACK_KEYS]
             )
             buf = pdf[tail]
             if not tail.all():
@@ -282,27 +309,21 @@ def repack(
             yield head(buf)
 
     return (
-        df.repartition(*keys)
-        .sortWithinPartitions(*keys, *order)
-        .mapInPandas(repack_stream, schema)
+        df.repartition(*PACK_KEYS)
+        .sortWithinPartitions(*PACK_KEYS, *order)
+        .mapInPandas(repack_stream, PACKED_SCHEMA)
     )
 
 
 def pack_postings(
-    postings: DataFrame,
-    keys: list[str],
-    schema: T.StructType,
-    avgdl_of,
-    n_buckets: int,
-    doc_shard_size: int,
+    postings: DataFrame, avgdl_by_field: dict, n_buckets: int, doc_shard_size: int
 ) -> DataFrame:
-    """Long posting rows (doc_id, tf, positions, doc_len and the non-shard
-    ``keys``) -> packed rows, one per ``keys`` group (doc_shard bounds
+    """Long posting rows (field, term, doc_id, tf, positions, doc_len) ->
+    packed rows, one per (field, term, doc_shard) group (doc_shard bounds
     every group to doc_shard_size postings)."""
     return repack(
-        postings.withColumn("doc_shard", doc_shard_col(doc_shard_size)),
-        keys, ["doc_id"],
-        lambda pdf: _pack_many(pdf, keys, avgdl_of, n_buckets), schema,
+        postings.withColumn("doc_shard", doc_shard_col(doc_shard_size)), ["doc_id"],
+        lambda pdf: _pack_many(pdf, avgdl_by_field, n_buckets),
     )
 
 
@@ -320,34 +341,56 @@ def term_bucket_col(term_col, n_buckets: int):
     return F.pmod(F.crc32(F.encode(term_col, "UTF-8")), F.lit(n_buckets)).cast("int")
 
 
-def index_stats(doc_map: DataFrame, runner: StageRunner) -> IndexStats:
-    """n_docs / total_tokens / avgdl over a doc_map (doc_id, doc_len, ...),
-    aggregated as the runner's ``stats`` stage (a runner without a
-    checkpoint dir just runs it). avgdl floors to 1.0 for an empty corpus
-    (it only ever divides doc lengths)."""
+def index_stats(doc_map: DataFrame, runner: StageRunner, fields) -> IndexStats:
+    """n_docs / total_tokens / avgdl and each of ``fields``' avgdl over a
+    doc_map (doc_id, doc_len, field_lens, ...), in ONE aggregate run as the
+    runner's ``stats`` stage (a runner without a checkpoint dir just runs
+    it). Every avgdl floors to 1.0 when its mean is 0 (an empty corpus or an
+    all-empty field: it only ever divides doc lengths)."""
+    fields = list(fields)
     row = runner.run(
         "stats",
         lambda: doc_map.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.coalesce(F.sum("doc_len"), F.lit(0)).alias("total_tokens"),
             F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("avgdl"),
+            *[
+                F.coalesce(F.avg(F.col("field_lens")[f]), F.lit(0.0)).alias(f"avgdl_{i}")
+                for i, f in enumerate(fields)
+            ],
         ),
     ).collect()[0]
     return IndexStats(
         n_docs=row["n_docs"],
         total_tokens=row["total_tokens"],
         avgdl=float(row["avgdl"]) or 1.0,
+        avgdl_by_field={f: float(row[f"avgdl_{i}"]) or 1.0 for i, f in enumerate(fields)},
     )
 
 
 def packed_term_stats(packed: DataFrame, n_buckets: int) -> DataFrame:
-    """term_stats (term, df, cf, term_bucket) of a plain packed table. The
-    pack shuffle already grouped every posting by term, so df/cf are a
+    """term_stats (term, df, cf, term_bucket) of a ONE-field packed table.
+    The pack shuffle already grouped every posting by term, so df/cf are a
     cheap rollup of the (term, doc_shard) group rows — one aggregation
     over #groups rows instead of a pass over #postings."""
     return (
         packed.groupBy("term")
         .agg(F.sum("n").cast("long").alias("df"), F.sum("cf").alias("cf"))
+        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
+    )
+
+
+def any_field_term_stats(postings: DataFrame, n_buckets: int) -> DataFrame:
+    """term_stats (term, df, cf, term_bucket) of a multi-field build: df
+    counts the docs holding the term in ANY field (the reference's seek is
+    per term, not per (term, field)), so it rolls up from the long postings
+    — per (term, doc_id mod 16) distinct counts first, so a hot term never
+    meets one unbounded reducer."""
+    return (
+        postings.groupBy("term", F.pmod(F.col("doc_id"), F.lit(16)).alias("_s"))
+        .agg(F.countDistinct("doc_id").alias("pdf"), F.sum("tf").alias("pcf"))
+        .groupBy("term")
+        .agg(F.sum("pdf").alias("df"), F.sum("pcf").alias("cf"))
         .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
     )
 
@@ -362,25 +405,32 @@ def build_index(
     doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE,
     cache: bool = True,
     cache_postings: bool = True,
+    field_weights: dict[str, float] | None = None,
 ) -> Index:
     """Build the full index from a source table.
 
-    ``source_df`` must carry (doc_id, content) and may carry
-    (repo, path, commit, lang). ``checkpoint_dir`` enables stage-resumable
+    ``source_df`` must carry doc_id and every column of ``field_weights``
+    (a {source column: zone weight} map; None is the plain index, the one
+    field ``content`` at 1.0), and may carry (repo, path, commit, lang).
+    Each field tokenizes independently, so positions (and phrases) never
+    run across fields. ``checkpoint_dir`` enables stage-resumable
     materialization (see lineage.py); None keeps everything lazy/cached
     (test mode — same plan shapes).
     """
+    fields = dict(field_weights or PLAIN_FIELDS)
     runner = StageRunner(spark, checkpoint_dir)
     meta_cols = [c for c in ("repo", "path", "commit", "lang") if c in source_df.columns]
 
     # Per-document posting accumulation happens map-side inside the Arrow
     # batch (the reference's PostingTable.put loop, ref: DocumentIndexer.java:
-    # 220-242) — the posting table exists after ONE narrow mapInPandas pass,
-    # with NO (term, doc_id) shuffle at all.
+    # 220-242) — the posting table exists after ONE narrow mapInPandas pass
+    # per field, with NO (term, doc_id) shuffle at all.
     def _postings():
-        return doc_postings_flat(
-            source_df.select("doc_id", "content"), do_stem=do_stem
-        ).withColumn("term_bucket", term_bucket_col(F.col("term"), n_term_buckets))
+        return reduce(DataFrame.unionByName, [
+            doc_postings_flat(source_df, do_stem=do_stem, content_col=f)
+            .withColumn("field", F.lit(f))
+            for f in fields
+        ]).withColumn("term_bucket", term_bucket_col(F.col("term"), n_term_buckets))
 
     postings = runner.run(
         "postings", _postings,
@@ -394,15 +444,26 @@ def build_index(
         postings = postings.persist()
 
     # doc_map never needs Python: sha256 and the stopword-inclusive token
-    # count are whole-stage-codegen expressions over the source (doc_len
-    # parity with the Python tokenizer is pinned by tests).
+    # counts are whole-stage-codegen expressions over the source (doc_len
+    # parity with the Python tokenizer is pinned by tests). Each field's
+    # length is computed once, then summed into doc_len and mapped into
+    # field_lens.
+    lens = [f"_len{i}" for i in range(len(fields))]
     doc_map = runner.run(
         "doc_map",
         lambda: source_df.select(
             "doc_id",
             *meta_cols,
-            F.sha2(F.col("content"), 256).alias("content_sha256"),
-            doc_len_col("content").alias("doc_len"),
+            F.sha2(F.concat_ws(" ", *fields), 256).alias("content_sha256"),
+            *[doc_len_col(f).alias(c) for f, c in zip(fields, lens)],
+        ).select(
+            "doc_id",
+            *meta_cols,
+            "content_sha256",
+            reduce(operator.add, map(F.col, lens)).alias("doc_len"),
+            F.create_map(
+                *[x for f, c in zip(fields, lens) for x in (F.lit(f), F.col(c))]
+            ).alias("field_lens"),
         ),
     )
     if cache and checkpoint_dir is None:
@@ -411,17 +472,13 @@ def build_index(
         # scan over the content column ever runs
         doc_map = doc_map.persist()
 
-    stats = index_stats(doc_map, runner)
+    stats = index_stats(doc_map, runner, fields)
 
-    # doc_len rides along from the postings pass — no doc_map join
-    def _packed():
-        return pack_postings(
-            postings, PACK_KEYS, PACKED_SCHEMA, lambda key: stats.avgdl,
-            n_term_buckets, doc_shard_size,
-        )
-
+    # doc_len (the field's length) rides along from the postings pass — no
+    # doc_map join
     packed = runner.run(
-        "packed", _packed,
+        "packed",
+        lambda: pack_postings(postings, stats.avgdl_by_field, n_term_buckets, doc_shard_size),
         partition_by=["term_bucket"], sort_within=["term", "doc_shard"],
     )
     if cache and checkpoint_dir is None:
@@ -430,7 +487,11 @@ def build_index(
         packed = packed.persist()
 
     term_stats = runner.run(
-        "term_stats", lambda: packed_term_stats(packed, n_term_buckets),
+        "term_stats",
+        lambda: (
+            packed_term_stats(packed, n_term_buckets) if len(fields) == 1
+            else any_field_term_stats(postings, n_term_buckets)
+        ),
         partition_by=["term_bucket"], sort_within=["term"],
     )
 
@@ -446,4 +507,6 @@ def build_index(
         do_stem=do_stem,
         build_metrics=runner.metrics,
         doc_shard_size=doc_shard_size,
+        n_term_buckets=n_term_buckets,
+        field_weights=fields,
     )

@@ -4,7 +4,11 @@ Spark-native rendition of the reference's QueryProcessor dispatch
 (ref: src/querying/QueryProcessor.java:139-169, 194-331). Like the
 reference, which answers every query type from its one compressed inverted
 index (InvertedIndexReader.java:111-162), every plan here reads the packed
-index (wand.py) — the long ``postings`` table is a build intermediate only:
+index (wand.py) — the long ``postings`` table is a build intermediate only.
+A fielded index is the same ``Index`` with several fields: its ranked
+queries rank zone-weighted under bm25 (the reference always applies
+ContentType weights, ref: DocumentRanker.java:138-167), and Boolean/LinkTo,
+spelling and PRF read the same index:
 
 * keyword      -> block-max WAND
 * phrase       -> per-shard positional decode of the survivors' blocks
@@ -25,8 +29,8 @@ the plan, spelling candidates — so a ranked query runs no term_stats job
 and a typo no Spark job; past ``VOCAB_CACHE_MAX`` a Bloom filter answers
 existence, term stats arrive by broadcast join and corrections cost one
 ``correct_terms`` job. ``search`` and ``search_many`` share one front end —
-parse, ONE spelling-correction pass, ``wand.QuerySpec``s, one
-scorer/fielded dispatch (``_plans``) — and every ranked plan comes out of
+parse, ONE spelling-correction pass, ``wand.QuerySpec``s, one scorer
+dispatch (``_plans``) — and every ranked plan comes out of
 one builder (``wand._ranked_rows``); a single query ends in a
 TakeOrderedAndProject, a batch in a per-query window.
 Corrections travel as values, never as executor state, so concurrent
@@ -44,7 +48,7 @@ from pyspark.sql import functions as F
 
 from . import queries as Q
 from . import wand
-from .build import Index, DEFAULT_TERM_BUCKETS
+from .build import Index
 from .scoring import PRF_WEIGHT
 from .spell import correct_dictionary, correct_terms
 from .textproc import preprocess_query_terms, tokenize_text
@@ -61,9 +65,7 @@ class QueryExecutor:
         packed_citations: DataFrame | None = None,
         source_df: DataFrame | None = None,
         scorer: str = "bm25",
-        n_term_buckets: int = DEFAULT_TERM_BUCKETS,
         use_packed: bool = True,
-        fielded_index=None,
     ):
         # ``use_packed`` has one legal value: the packed index is the only
         # thing queries are served from
@@ -76,16 +78,9 @@ class QueryExecutor:
             raise ValueError(f"scorer must be 'bm25' or 'ql', not {scorer!r}")
         self.spark = spark
         self.index = index
-        # a fields.FieldedPackedIndex built over the SAME corpus: ranked
-        # queries then rank zone-weighted under bm25 (the reference's
-        # QueryProcessor always applies ContentType weights, ref:
-        # DocumentRanker.java:138-167); spelling/vocab/snippets/PRF keep
-        # using ``index``
-        self.fielded_index = fielded_index
         self.packed_citations = packed_citations
         self.source_df = source_df
         self.scorer = scorer
-        self.n_buckets = n_term_buckets
         # the latest call's corrections, surfaced to formatters (last call
         # wins when calls overlap; each call's own map is a local value)
         self.last_corrections: dict[str, str] = {}
@@ -317,7 +312,7 @@ class QueryExecutor:
         ``queries`` maps query_id -> query text; every ranked one-pass query
         type batches — keyword bags, exact phrases, and Mixed
         ('"phrase" extra words') queries, under either scorer and on a
-        fielded executor — each running its single-query kernel per shard
+        fielded index — each running its single-query kernel per shard
         over ONE shared scan. Boolean/LinkTo (unranked) and PRF (inherently
         two-pass) go through ``search``. Spelling corrections for the
         ENTIRE batch resolve exactly like the single-query path and still
@@ -363,37 +358,30 @@ class QueryExecutor:
         return corrections
 
     def _plans(self):
-        """THE scorer/fielded dispatch of every ranked plan: this executor's
-        (one query, batch) plan pair. ``one(spec, k)`` ends in a
-        TakeOrderedAndProject over (doc_id, score); ``many({qid: (phrase,
-        keywords)}, k)`` in the per-query window (wand.py). QL/JM under
-        scorer="ql"; under bm25 zone-weighted on a fielded executor (EVERY
-        ranked query type, like the reference's
-        DocumentRanker.weightDocument, ref: DocumentRanker.java:138-167 —
-        never a silent unfielded fallback), else plain block-max WAND,
-        seeded by phrase survivors when the spec has a phrase."""
-        spark, nb = self.spark, self.n_buckets
-        stats = self._get_vocab()
+        """THE scorer dispatch of every ranked plan: this executor's (one
+        query, batch) plan pair, both carrying the cached dictionary.
+        ``one(spec, k)`` ends in a TakeOrderedAndProject over (doc_id,
+        score); ``many({qid: (phrase, keywords)}, k)`` in the per-query
+        window (wand.py). QL/JM under scorer="ql" (one-field indexes only —
+        ``wand._ql`` raises on several fields); else block-max WAND, seeded
+        by phrase survivors when the spec has a phrase, zone-weighted on
+        every ranked query type of a fielded index."""
+        spark, index, stats = self.spark, self.index, self._get_vocab()
         if self.scorer == "ql":
             return (
                 lambda s, k: wand.ql_topk(
-                    spark, self.index, s.keywords, k, nb,
+                    spark, index, s.keywords, k,
                     phrase_terms=s.phrase, prefixes=s.prefixes, weights=s.weights,
                     stats=stats,
                 ),
-                lambda pairs, k: wand.ql_topk_many(spark, self.index, pairs, k, nb, stats=stats),
+                lambda pairs, k: wand.ql_topk_many(spark, index, pairs, k, stats=stats),
             )
-        if self.fielded_index is not None:
-            # fielded plans join the fielded term_stats, which the
-            # dictionary does not describe
-            from .fields import fielded_batch_topk, fielded_mixed_topk
-
-            target, one, many, kw = self.fielded_index, fielded_mixed_topk, fielded_batch_topk, {}
-        else:
-            target, one, many, kw = self.index, wand.mixed_topk, wand.batch_topk, {"stats": stats}
         return (
-            lambda s, k: one(spark, target, s.phrase, s.keywords, k, nb, s.weights, s.prefixes, **kw),
-            lambda pairs, k: many(spark, target, pairs, k, nb, **kw),
+            lambda s, k: wand.mixed_topk(
+                spark, index, s.phrase, s.keywords, k,
+                weights=s.weights, prefixes=s.prefixes, stats=stats,
+            ),
+            lambda pairs, k: wand.batch_topk(spark, index, pairs, k, stats=stats),
         )
 
     def _run_once(self, pq: Q.ParsedQuery, corrections: dict[str, str], k: int) -> list:
@@ -410,7 +398,7 @@ class QueryExecutor:
             links: list[DataFrame] = []
             spec = self._bool_spec(ast, corrections, links)
             return wand.boolean_docs(
-                self.spark, self.index, spec, k=k, n_term_buckets=self.n_buckets,
+                self.spark, self.index, spec, k=k,
                 links=reduce(DataFrame.unionByName, links) if links else None,
             ).collect()
         spec = self._ranked_spec(ast, corrections)

@@ -7,28 +7,33 @@ indexes into the base by moving packed bytes, never re-reading content.
 
 Spark shape:
 * union the packed tables and send them through the builder's own repack
-  path (``build.repack``: ONE (term, doc_shard) — or (field, term,
-  doc_shard) — sort-shuffle, whole Arrow batches, tail-group buffering, no
-  per-group dispatch) with ``_merge_many`` as the batch head.
+  path (``build.repack``: ONE (field, term, doc_shard) sort-shuffle, whole
+  Arrow batches, tail-group buffering, no per-group dispatch) with
+  ``_merge_many`` as the batch head. Plain and fielded indexes merge alike:
+  a plain index is the one-field case.
 * a group present in only ONE source passes its blobs through
-  byte-identical; only block_max is recomputed against the merged corpus
+  byte-identical; only block_max is recomputed against its field's merged
   avgdl (bounds packed against a smaller avgdl would UNDER-estimate the
   contribution ceiling and break WAND's skip exactness). That needs only
   the tf/dl streams — the doc_id and position bytes (the bulk of the
   blob) are never decoded.
-* only groups whose doc ranges genuinely interleave (same term AND same
+* only groups whose doc ranges genuinely interleave (same field, term AND
   doc_shard in 2+ sources) decode fully and re-encode via the builder's
   own ``_encode_group`` — byte-compatible output by construction. With
   monotonically assigned doc_ids (the streaming watermark), delta and
   base occupy different doc_shards, so this path touches at most one
   boundary shard per term.
 
-stats and term_stats come from the builder's ``index_stats`` and
-``packed_term_stats``. Inputs are checked with ValueError (source count,
-packed present, equal doc_shard_size / do_stem / field_weights). Doc sets
-must be disjoint (checked both driver-side against doc_map and defensively
-inside the merge kernel); replace/delete semantics belong to
-streaming.IncrementalIndexer, which resolves them BEFORE packing.
+stats (with every field's avgdl) come from the builder's ``index_stats``
+over the merged doc_map, so merged == rebuilt even when a source's field
+was empty everywhere. term_stats is the sum of the sources' term_stats —
+exact for one field and for several (df over ANY field) because the doc
+sets are disjoint. Inputs are checked with ValueError (source count,
+packed present, equal doc_shard_size / do_stem / field_weights /
+n_term_buckets). Doc sets must be disjoint (checked both driver-side
+against doc_map and defensively inside the merge kernel);
+replace/delete semantics belong to streaming.IncrementalIndexer, which
+resolves them BEFORE packing.
 """
 
 from __future__ import annotations
@@ -39,21 +44,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import codec
 from .build import (
     B,
-    DEFAULT_TERM_BUCKETS,
     K1,
-    PACK_KEYS,
     PACKED_SCHEMA,
     Index,
     _encode_group,
     _groups,
     _py_term_bucket,
     index_stats,
-    packed_term_stats,
     repack,
     term_bucket_col,
 )
@@ -75,7 +76,7 @@ def _decode_row(r) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.n
 
 
 def _merge_rows(rows: list, avgdl: float, n_buckets: int) -> dict:
-    """Merge 2+ packed rows of the SAME (term, doc_shard) into one row.
+    """Merge 2+ packed rows of the SAME (field, term, doc_shard) into one row.
     Per-doc [tf, gaps...] segments are self-contained, so the merged
     position stream is a pure segment gather in merged doc order — no
     position arithmetic re-runs."""
@@ -127,16 +128,13 @@ def _refresh_bounds(r, avgdl: float, n_buckets: int) -> dict:
     return out
 
 
-def _merge_many(
-    pdf: pd.DataFrame, keys: list[str], avgdl_of, n_buckets: int
-) -> pd.DataFrame:
-    """``repack`` head over packed rows sorted by ``keys``: a single-source
-    group refreshes its bounds, a multi-source one merges; ``avgdl_of(key)``
-    is the group's merged length normalizer (per field for fielded tables)
-    and every key column rides into the output row."""
+def _merge_many(pdf: pd.DataFrame, avgdl_by_field: dict, n_buckets: int) -> pd.DataFrame:
+    """``repack`` head over packed rows sorted by PACK_KEYS: a single-source
+    group refreshes its bounds, a multi-source one merges, each against its
+    field's merged avgdl; every key column rides into the output row."""
     out_rows = []
-    for s, e, key in _groups(pdf, keys):
-        avgdl = avgdl_of(key)
+    for s, e, key in _groups(pdf):
+        avgdl = avgdl_by_field[key["field"]]
         if e - s == 1:
             row = _refresh_bounds(pdf.iloc[s], avgdl, n_buckets)
         else:
@@ -144,18 +142,6 @@ def _merge_many(
         row.update(key)
         out_rows.append(row)
     return pd.DataFrame(out_rows)
-
-
-def _merge_packed(
-    packeds: list[DataFrame], keys: list[str], schema: T.StructType,
-    avgdl_of, n_buckets: int,
-) -> DataFrame:
-    """Union the sources' packed tables and fold them through the one
-    repack path with ``_merge_many`` as the head."""
-    return repack(
-        reduce(DataFrame.unionByName, packeds), keys, [],
-        lambda pdf: _merge_many(pdf, keys, avgdl_of, n_buckets), schema,
-    )
 
 
 def _check_sources(sources: list, *attrs: str) -> None:
@@ -174,25 +160,26 @@ def merge_packed_indexes(
     indexes: list[Index],
     *,
     check_disjoint: bool = True,
-    n_term_buckets: int = DEFAULT_TERM_BUCKETS,
     cache: bool = True,
 ) -> Index:
     """Fold k packed indexes over DISJOINT doc sets into one queryable
     Index — content is never re-read, tokenization never re-runs. stats
-    and avgdl are recomputed over the merged doc_map (block_max bounds are
-    refreshed against the new avgdl in every emitted group, keeping WAND
-    skipping exact); term_stats is the usual cheap rollup of the merged
-    packed groups. ``check_disjoint=False`` skips the doc_map duplicate
-    probe when the caller guarantees disjointness (monotonic watermark)."""
-    _check_sources(indexes, "doc_shard_size", "do_stem")
+    and every field's avgdl are recomputed over the merged doc_map
+    (block_max bounds are refreshed against them in every emitted group,
+    keeping WAND skipping exact); term_stats sums the sources'.
+    ``check_disjoint=False`` skips the doc_map duplicate probe when the
+    caller guarantees disjointness (monotonic watermark)."""
+    _check_sources(indexes, "doc_shard_size", "do_stem", "field_weights", "n_term_buckets")
     if any(ix.packed is None for ix in indexes):
         raise ValueError(
             "merge_packed_indexes requires indexes with packed postings"
         )
+    first = indexes[0]
+    n_buckets = first.n_term_buckets
 
     # streamed (to_index) and batch indexes carry different doc_map/postings
-    # metadata columns — merge on the intersection (doc_id + doc_len always
-    # present; stats and serving never need more)
+    # metadata columns — merge on the intersection (doc_id, doc_len and
+    # field_lens always present; stats and serving never need more)
     def _union_common(dfs):
         common = [
             c for c in dfs[0].columns if all(c in d.columns for d in dfs[1:])
@@ -215,79 +202,33 @@ def merge_packed_indexes(
             )
     if cache:
         doc_map = doc_map.persist()
-    stats = index_stats(doc_map, StageRunner(spark, None))
+    stats = index_stats(doc_map, StageRunner(spark, None), first.field_weights)
 
-    merged = _merge_packed(
-        [ix.packed for ix in indexes], PACK_KEYS, PACKED_SCHEMA,
-        lambda key: stats.avgdl, n_term_buckets,
+    merged = repack(
+        reduce(DataFrame.unionByName, [ix.packed for ix in indexes]), [],
+        lambda pdf: _merge_many(pdf, stats.avgdl_by_field, n_buckets),
     )
     if cache:
         merged = merged.persist()
 
-    term_stats = packed_term_stats(merged, n_term_buckets)
+    # df/cf add up over disjoint doc sets, in one field or several
+    term_stats = (
+        reduce(DataFrame.unionByName, [ix.term_stats.select("term", "df", "cf") for ix in indexes])
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
+    )
     if cache:
         term_stats = term_stats.persist()
-
-    postings = _union_common([ix.postings for ix in indexes])
 
     return Index(
         doc_map=doc_map,
-        postings=postings,
+        postings=_union_common([ix.postings for ix in indexes]),
         term_stats=term_stats,
         packed=merged,
         stats=stats,
-        do_stem=indexes[0].do_stem,
-        doc_shard_size=indexes[0].doc_shard_size,
-    )
-
-
-def merge_fielded_packed(
-    spark: SparkSession,
-    fidxs: list,
-    *,
-    n_term_buckets: int = DEFAULT_TERM_BUCKETS,
-    cache: bool = True,
-):
-    """Fold k fielded packed indexes (fields.FieldedPackedIndex) over
-    DISJOINT doc sets — the zone-weighted analog of
-    ``merge_packed_indexes``. Per-field merged avgdl is the doc-count
-    weighted mean (every doc carries every field, so weights are the
-    source n_docs); each group's block_max refreshes against ITS field's
-    merged avgdl. Global term_stats sum (df/cf add under disjoint doc
-    sets). Callers must guarantee disjointness (FieldedPackedIndex keeps
-    no doc_map to probe) — the kernel still rejects duplicate doc_ids
-    inside any colliding (field, term, doc_shard) group."""
-    from .fields import FIELDED_KEYS, FieldedPackedIndex, PACKED_FIELDED_SCHEMA
-
-    _check_sources(fidxs, "doc_shard_size", "field_weights")
-    weights = fidxs[0].field_weights
-    n_docs = sum(ix.n_docs for ix in fidxs)
-    # combine the RAW (unfloored) per-field means — build_fielded_packed
-    # floors an all-empty field's avgdl to 1.0 for scoring, and averaging
-    # the floored values would diverge from a full rebuild whenever a
-    # source's field was empty (ADVICE r4); floor only AFTER combining
-    avgdl_raw_by_field = {
-        f: sum(ix.avgdl_raw_by_field[f] * ix.n_docs for ix in fidxs) / n_docs
-        for f in weights
-    }
-    avgdl_by_field = {f: (v or 1.0) for f, v in avgdl_raw_by_field.items()}
-
-    merged = _merge_packed(
-        [ix.packed for ix in fidxs], FIELDED_KEYS, PACKED_FIELDED_SCHEMA,
-        lambda key: avgdl_by_field[key["field"]], n_term_buckets,
-    )
-    ts_u = fidxs[0].term_stats.select("term", "df", "cf")
-    for ix in fidxs[1:]:
-        ts_u = ts_u.unionByName(ix.term_stats.select("term", "df", "cf"))
-    term_stats = (
-        ts_u.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_term_buckets))
-    )
-    if cache:
-        merged = merged.persist()
-        term_stats = term_stats.persist()
-    return FieldedPackedIndex(
-        merged, term_stats, dict(weights), avgdl_by_field,
-        n_docs, fidxs[0].doc_shard_size, avgdl_raw_by_field,
+        do_stem=first.do_stem,
+        doc_shard_size=first.doc_shard_size,
+        n_term_buckets=n_buckets,
+        field_weights=dict(first.field_weights),
     )

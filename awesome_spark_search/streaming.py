@@ -40,8 +40,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from .build import (
     DEFAULT_DOC_SHARD_SIZE,
     DEFAULT_TERM_BUCKETS,
-    PACK_KEYS,
-    PACKED_SCHEMA,
+    PLAIN_FIELDS,
     Index,
     index_stats,
     pack_postings,
@@ -264,24 +263,27 @@ class IncrementalIndexer:
         The merged postings pack into the delta+VByte block-directory form
         through the batch build's repack path — the form every query serves
         from — so run it per compaction, not per query."""
+        # a streamed index is plain: its one field is the whole content
+        if base is not None and base.field_weights != PLAIN_FIELDS:
+            raise ValueError("to_index streams onto a plain (one-field) base only")
+        (field,) = PLAIN_FIELDS
         postings = self.merged_postings(
             base.postings if base is not None else None
-        )
+        ).withColumn("field", F.lit(field))
         # base doc lens merge under the SAME latest-wins + tombstone rules as
         # the postings (a tombstoned or re-ingested base doc must not leak
         # its old doc_len into n_docs/avgdl/BM25 normalization)
         doc_map = self.doc_lens(
             base.doc_map.select("doc_id", "doc_len") if base is not None else None
-        )
-        stats = index_stats(doc_map, StageRunner(self.spark, None))
+        ).withColumn("field_lens", F.create_map(F.lit(field), F.col("doc_len")))
+        stats = index_stats(doc_map, StageRunner(self.spark, None), PLAIN_FIELDS)
         doc_map = doc_map.persist()
         postings = postings.persist()
         shard = doc_shard_size or DEFAULT_DOC_SHARD_SIZE
         packed = pack_postings(
             postings.join(doc_map, "doc_id")
-            .select("term", "doc_id", "tf", "positions", "doc_len"),
-            PACK_KEYS, PACKED_SCHEMA, lambda key: stats.avgdl,
-            self.n_buckets, shard,
+            .select("field", "term", "doc_id", "tf", "positions", "doc_len"),
+            stats.avgdl_by_field, self.n_buckets, shard,
         ).persist()
         return Index(
             doc_map=doc_map,
@@ -291,6 +293,7 @@ class IncrementalIndexer:
             stats=stats,
             do_stem=self.do_stem,
             doc_shard_size=shard,
+            n_term_buckets=self.n_buckets,
         )
 
 

@@ -11,10 +11,20 @@ blocks that cannot reach the running top-k threshold are skipped before
 decoding.
 
 Spark shape — scalable by construction:
-* packed postings are keyed (term, doc_shard) and carry their doc lengths
-  inside the blob (dls_vb), so a query is ONE applyInPandas over the few
-  matching packed rows — no doc_map join; every Python invocation sees one
-  shard's worth of data (bounded by shard_size regardless of corpus size).
+* packed postings are keyed (field, term, doc_shard) and carry their doc
+  lengths inside the blob (dls_vb), so a query is ONE applyInPandas over
+  the few matching packed rows — no doc_map join; every Python invocation
+  sees one shard's worth of data (bounded by shard_size regardless of
+  corpus size).
+* one index shape: a plain index is the one-field case, so every plan
+  serves plain and fielded (zone-weighted) indexes alike. The BM25 kernel
+  takes the index's {field: (weight, avgdl)} as a driver value; each
+  (field, term) row enters the kernel as its own list, its idf scaled by
+  the zone weight and its tfnorm normalized by its field's avgdl (the
+  reference's ContentType weighting, ref: DocumentRanker.java:138-167).
+  QL scores one-field indexes only.
+* every entry point prunes with the index's own term-bucket count
+  (``Index.n_term_buckets``; an explicit ``n_term_buckets`` overrides it).
 * per-term stats (idf, the global cf) ride on those rows (``term_rows``):
   literal map lookups from the executor's cached dictionary (``stats``),
   so the action scans no term_stats and broadcasts nothing; without it a
@@ -121,13 +131,13 @@ def _decode_term_blocks(
 
 def _wand_pass(
     term_rows: list,
-    avgdl: float,
     k: int,
     cand_ids: np.ndarray,
     cand_scores: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray]:
     """The block-max WAND loop over ``term_rows`` (list of
-    ``(idf, block_max ndarray, packed row)``), merge-adding contributions
+    ``(idf, block_max ndarray, packed row)``; each row carries its field's
+    ``avgdl``), merge-adding contributions
     into the seed score vectors ``(cand_ids sorted unique, cand_scores)``.
     Seeds let a caller pre-score docs from another plan (phrase survivors in
     a Mixed query) — the admission invariant still holds because after
@@ -188,11 +198,9 @@ def _wand_pass(
             need = None
         doc_ids, tfs, dls, blk = _decode_term_blocks(r, need, counts)
         DECODE_STATS["postings"] += doc_ids.size
-        # a row may carry its own dl normalizer (fielded lists pack each
-        # zone against that ZONE's avgdl — fields.fielded_wand_topk); the
-        # block_max bounds above were computed with the same value at pack
-        # time, so skipping stays exact
-        adl = float(r["avgdl"]) if "avgdl" in r.index else avgdl
+        # the row's FIELD avgdl: its block_max bounds were packed against
+        # the same value, so skipping stays exact
+        adl = float(r["avgdl"])
         contrib = idf * tfs / (tfs + K1 * (1 - B + B * dls / adl))
         if admit is not None and not admit.all():
             # mask candidate-range-only blocks' postings to existing
@@ -302,41 +310,49 @@ def term_rows(
     return rows.select(F.struct("*").alias("_row"), *lookups).select("_row.*", *stat_cols)
 
 
-def _idf_rows(index: Index, n_term_buckets: int, stats=None):
+def _idf_rows(index: Index, n_term_buckets: int | None, stats=None):
     """Row selector for BM25 plans over ``index``: (terms, prefixes) ->
     packed rows with an idf column."""
     idf = idf_col(F.col("df"), index.stats.n_docs).alias("idf")
     return lambda terms, prefixes: term_rows(
-        index.packed, index.term_stats, terms, n_term_buckets, [idf], prefixes,
-        stats=stats,
+        index.packed, index.term_stats, terms, n_term_buckets or index.n_term_buckets,
+        [idf], prefixes, stats=stats,
     )
 
 
-def _shard_rows(left: pd.DataFrame, avgdl: float):
+def _field_norms(index: Index) -> dict[str, tuple[float, float]]:
+    """The BM25 kernel's driver value: {field: (zone weight, field avgdl)}."""
+    return {f: (w, index.stats.avgdl_by_field[f]) for f, w in index.field_weights.items()}
+
+
+def _shard_rows(left: pd.DataFrame, fields: dict):
     """One doc_shard's packed rows, parsed once and in (term, field) order so
-    every plan sums a document's contributions in the same order:
-    ``(term, (idf, block_max, row))`` triples for WAND, and per-field
-    ``(avgdl, {term: row})`` maps for phrase evaluation (fielded rows carry
-    their zone's avgdl; unfielded rows form one map with the index avgdl)."""
-    fielded = "field" in left.columns
-    left = left.sort_values(["term", "field"] if fielded else "term", kind="stable")
+    every plan sums a document's contributions in the same order: each row's
+    idf scaled by its zone weight and its field's avgdl attached (``fields``
+    is ``_field_norms``), then ``(term, (idf, block_max, row))`` triples for
+    WAND and per-field ``(avgdl, {term: row})`` maps for phrase evaluation
+    (phrases never span fields)."""
+    left = left.sort_values(["term", "field"], kind="stable")
+    left = left.assign(
+        idf=left["idf"] * left["field"].map({f: w for f, (w, _) in fields.items()}),
+        avgdl=left["field"].map({f: a for f, (_, a) in fields.items()}),
+    )
     triples, groups = [], {}
     for _, r in left.iterrows():
         t = r["term"]
         triples.append((t, (float(r["idf"]), np.asarray(r["block_max"], dtype=np.float64), r)))
-        field, adl = (r["field"], float(r["avgdl"])) if fielded else ("", avgdl)
-        groups.setdefault(field, (adl, {}))[1][t] = r
+        groups.setdefault(r["field"], (float(r["avgdl"]), {}))[1][t] = r
     return triples, [groups[f] for f in sorted(groups)]
 
 
-def _bm25_scores(shard, spec: QuerySpec, avgdl: float, k: int):
+def _bm25_scores(shard, spec: QuerySpec, k: int):
     """One query over one parsed shard (ref: QueryProcessor.java:328-331
     dispatches phrase + keywords against the same index): phrase survivors
-    — per zone on fielded rows, phrases never span zones — seed the
-    candidates with their phrase-term BM25 mass, then the block-max WAND
-    loop adds every keyword term at its weight, to survivors too (a term in
-    both lists counts twice for them). Seeding first keeps skipping exact:
-    afterwards keyword bounds are the only remaining mass."""
+    — per field, phrases never span fields — seed the candidates with their
+    phrase-term BM25 mass, then the block-max WAND loop adds every keyword
+    term at its weight, to survivors too (a term in both lists counts twice
+    for them). Seeding first keeps skipping exact: afterwards keyword bounds
+    are the only remaining mass."""
     triples, groups = shard
     ids, scores = _no_scores()
     if spec.phrase:
@@ -347,7 +363,7 @@ def _bm25_scores(shard, spec: QuerySpec, avgdl: float, k: int):
         (idf * w.get(t, 1.0), bm, r) for t, (idf, bm, r) in triples if spec.is_keyword(t)
     ]
     if kw_rows:
-        ids, scores = _wand_pass(kw_rows, avgdl, k, ids, scores)
+        ids, scores = _wand_pass(kw_rows, k, ids, scores)
     return ids, scores
 
 
@@ -415,13 +431,14 @@ def _ranked_rows(
     )
 
 
-def _bm25(avgdl: float, k: int):
+def _bm25(fields: dict, k: int):
     """BM25's (parse, score) pair for ``_ranked_rows``: ``_shard_rows`` and
-    ``_bm25_scores``. Doc lengths decode from the blob (dls_vb), so no
-    doc_map join happens at query time."""
+    ``_bm25_scores``; ``fields`` is the index's ``_field_norms``. Doc
+    lengths decode from the blob (dls_vb), so no doc_map join happens at
+    query time."""
     return (
-        lambda left: _shard_rows(left, avgdl),
-        lambda shard, spec: _bm25_scores(shard, spec, avgdl, k),
+        lambda left: _shard_rows(left, fields),
+        lambda shard, spec: _bm25_scores(shard, spec, k),
     )
 
 
@@ -464,7 +481,7 @@ def wand_topk(
     index: Index,
     terms: list[str],
     k: int = 10,
-    n_term_buckets: int = 64,
+    n_term_buckets: int | None = None,
     weights: dict[str, float] | None = None,
     prefixes=(),
 ) -> DataFrame:
@@ -476,7 +493,7 @@ def wand_topk(
     spec = QuerySpec([], list(terms), tuple(prefixes), weights)
     return _topk(_ranked_rows(
         spark, _idf_rows(index, n_term_buckets), {"q": spec},
-        *_bm25(index.stats.avgdl, k), k,
+        *_bm25(_field_norms(index), k), k,
     ), k)
 
 
@@ -486,7 +503,7 @@ def mixed_topk(
     phrase_terms: list[str],
     keyword_terms: list[str],
     k: int = 10,
-    n_term_buckets: int = 64,
+    n_term_buckets: int | None = None,
     weights: dict[str, float] | None = None,
     prefixes=(),
     *,
@@ -502,7 +519,7 @@ def mixed_topk(
     spec = QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
     return _topk(_ranked_rows(
         spark, _idf_rows(index, n_term_buckets, stats), {"q": spec},
-        *_bm25(index.stats.avgdl, k), k, stats,
+        *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
 
@@ -511,7 +528,7 @@ def phrase_topk(
     index: Index,
     terms: list[str],
     k: int = 10,
-    n_term_buckets: int = 64,
+    n_term_buckets: int | None = None,
 ) -> DataFrame:
     """Exact-phrase top-k BM25 off the packed (compressed) index: positions
     decode only for the phrase's terms, per doc-shard, and each shard emits
@@ -520,7 +537,7 @@ def phrase_topk(
     driver-side existence collect."""
     return _topk(_ranked_rows(
         spark, _idf_rows(index, n_term_buckets), {"q": QuerySpec(list(terms), [])},
-        *_bm25(index.stats.avgdl, k), k,
+        *_bm25(_field_norms(index), k), k,
     ), k)
 
 
@@ -529,7 +546,7 @@ def batch_topk(
     index: Index,
     specs: dict[str, tuple[list[str], list[str]]],
     k: int = 10,
-    n_term_buckets: int = 64,
+    n_term_buckets: int | None = None,
     *,
     stats=None,
 ) -> DataFrame:
@@ -551,7 +568,7 @@ def batch_topk(
     loop)."""
     return _batch_global_topk(_ranked_rows(
         spark, _idf_rows(index, n_term_buckets, stats), _pairs(specs),
-        *_bm25(index.stats.avgdl, k), k, stats,
+        *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
 
@@ -601,21 +618,28 @@ def _ql_scores(shard, spec: QuerySpec):
     return ids, scores
 
 
-def _cf_rows(index: Index, n_term_buckets: int, stats=None):
+def _cf_rows(index: Index, n_term_buckets: int | None, stats=None):
     """Row selector for QL plans over ``index``: (terms, prefixes) -> packed
     rows with the GLOBAL collection frequency (aliased cf_global: packed
     group rows carry a per-(term, doc_shard) cf; the JM background model
     needs the term's corpus-wide cf)."""
     cf = F.col("cf").alias("cf_global")
     return lambda terms, prefixes: term_rows(
-        index.packed, index.term_stats, terms, n_term_buckets, [cf], prefixes,
-        stats=stats,
+        index.packed, index.term_stats, terms, n_term_buckets or index.n_term_buckets,
+        [cf], prefixes, stats=stats,
     )
 
 
 def _ql(index: Index, lam: float | None):
     """QL/JM's (parse, score) pair for ``_ranked_rows``: ``_ql_shard`` and
-    ``_ql_scores``."""
+    ``_ql_scores``. A multi-field index raises: zone-weighted QL is not
+    defined, and ranking such an index without its zones would be a silent
+    fallback."""
+    if len(index.field_weights) > 1:
+        raise ValueError(
+            f"scorer 'ql' serves one-field indexes only; this index has "
+            f"fields {sorted(index.field_weights)}"
+        )
     lam = JM_LAMBDA if lam is None else lam
     C = float(max(index.stats.total_tokens, 1))
     return lambda left: _ql_shard(left, lam, C), _ql_scores
@@ -626,7 +650,7 @@ def ql_topk(
     index: Index,
     terms: list[str],
     k: int = 10,
-    n_term_buckets: int = 64,
+    n_term_buckets: int | None = None,
     lam: float | None = None,
     *,
     phrase_terms=(),
@@ -655,7 +679,7 @@ def ql_topk_many(
     index: Index,
     specs: dict[str, tuple[list[str], list[str]]],
     k: int = 10,
-    n_term_buckets: int = 64,
+    n_term_buckets: int | None = None,
     lam: float | None = None,
     *,
     stats=None,
@@ -853,7 +877,7 @@ def boolean_docs(
     index: Index,
     spec,
     k: int = 10,
-    n_term_buckets: int = 64,
+    n_term_buckets: int | None = None,
     links: DataFrame | None = None,
 ) -> DataFrame:
     """Boolean doc-set query over the packed index: per-shard decode of the
@@ -866,15 +890,19 @@ def boolean_docs(
     terms = sorted(set(terms))
     if not terms and not prefixes and links is None:
         return spark.createDataFrame([], "doc_id long, score double")
-    packed = _term_filter(index.packed, terms, n_term_buckets, prefixes).select(
+    packed = _term_filter(
+        index.packed, terms, n_term_buckets or index.n_term_buckets, prefixes
+    ).select(
         "doc_shard", "term", "doc_ids_vb"
     )
 
     def shard_docs(left: pd.DataFrame, linked: pd.DataFrame | None) -> pd.DataFrame:
-        by_term = {
-            r["term"]: codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
-            for _, r in left.iterrows()
-        }
+        # a term's doc set is the union over its field rows
+        by_term: dict[str, np.ndarray] = {}
+        for _, r in left.iterrows():
+            ids = codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
+            t = r["term"]
+            by_term[t] = np.union1d(by_term[t], ids) if t in by_term else ids
         by_link = (
             {t: np.unique(g["doc_id"].to_numpy(np.int64)) for t, g in linked.groupby("target")}
             if linked is not None else {}
@@ -900,13 +928,13 @@ def boolean_docs(
     )
 
 
-def decode_postings(index: Index, term: str, n_term_buckets: int = 64,
+def decode_postings(index: Index, term: str, n_term_buckets: int | None = None,
                     with_positions: bool = False) -> DataFrame:
     """Decode one term's packed blobs back to (doc_id, tf[, pos]) rows —
     the external round-trip gate for the delta+VByte+position-stream codec
     (ref semantics: src/postings/TokenPostings.java:201-243,
     EagerPositionMap.java:128-171)."""
-    bucket = _py_term_bucket(term, n_term_buckets)
+    bucket = _py_term_bucket(term, n_term_buckets or index.n_term_buckets)
     rows = index.packed.filter(
         (F.col("term_bucket") == bucket) & (F.col("term") == term)
     ).select("doc_ids_vb", "tfs_vb", "pos_vb")

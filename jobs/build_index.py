@@ -58,6 +58,7 @@ def main(argv=None) -> int:
         "avgdl": idx.stats.avgdl,
         "doc_shard_size": args.doc_shard_size,
         "term_buckets": args.term_buckets,
+        "do_stem": not args.no_stem,
         "wall_sec": round(time.time() - t0, 3),
         "docs_per_sec": round(idx.stats.n_docs / max(time.time() - t0, 1e-9), 2),
         "stages": idx.build_metrics,

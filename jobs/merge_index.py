@@ -7,14 +7,15 @@ Usage:
 
 Every input is an index root written by jobs/build_index.py (or a previous
 merge). Content is never re-read and tokenization never re-runs: packed
-bytes move through one (term, doc_shard) shuffle
+bytes move through one (field, term, doc_shard) shuffle
 (awesome_spark_search.merge.merge_packed_indexes — single-source groups
 pass through byte-identical, block_max refreshed against the merged
 avgdl). The output root uses the same stage layout, so jobs/query.py
 serves it unchanged. Doc sets must be disjoint (re-ingest/tombstone
 resolution belongs to the streaming path, upstream of packing); sources
-that cannot merge (shared doc_ids, mismatched doc_shard_size or stemming)
-end with a one-line error on stderr and exit code 2.
+that cannot merge (shared doc_ids, mismatched doc_shard_size, bucket count
+or stemming, a root load_index cannot serve) end with a one-line error on
+stderr and exit code 2.
 """
 
 from __future__ import annotations
@@ -53,48 +54,24 @@ def main(argv=None) -> int:
     from query import load_index  # same jobs/ dir
 
     spark = SparkSession.builder.appName("ass-merge-index").getOrCreate()
-    indexes = [load_index(spark, r) for r in args.roots]
-    for r, ix in zip(args.roots, indexes):
-        if ix is None:
-            raise SystemExit(f"{r}: no packed stage — rebuild it with jobs/build_index.py")
-        # serving never reads the long table; the merged root still carries
-        # it as the build intermediate later merges and compactions fold
-        ix.postings = spark.read.parquet(os.path.join(r, "stages", "postings"))
-
-    # bucket-count validation (ADVICE r4): every stage must agree on the
-    # term_bucket layout. Sources record theirs in build_summary.json
-    # (jobs/build_index.py); absent a record, fall back to the on-disk
-    # max(term_bucket)+1 being <= the requested count is NOT enough — the
-    # only safe default is the recorded value itself.
-    recorded = set()
-    for r in args.roots:
-        sp = os.path.join(r, "build_summary.json")
-        if os.path.exists(sp):
-            with open(sp) as f:
-                tb = json.load(f).get("term_buckets")
-            if tb:
-                recorded.add(int(tb))
-    if len(recorded) > 1:
-        raise SystemExit(f"sources were built with different --term-buckets: {sorted(recorded)}")
-    src_buckets = recorded.pop() if recorded else 64
-    if args.term_buckets is not None and args.term_buckets != src_buckets:
-        raise SystemExit(
-            f"--term-buckets {args.term_buckets} != sources' bucket count "
-            f"{src_buckets}; re-bucketing a merge is not supported (the "
-            "postings stage is copied with its original term_bucket values)"
-        )
-    n_term_buckets = src_buckets
-
-    t0 = time.time()
     try:
+        indexes = [load_index(spark, r) for r in args.roots]
+        buckets = indexes[0].n_term_buckets
+        if args.term_buckets is not None and args.term_buckets != buckets:
+            raise ValueError(
+                f"--term-buckets {args.term_buckets} != the sources' bucket "
+                f"count {buckets}; re-bucketing a merge is not supported (the "
+                "postings stage is copied with its original term_bucket values)"
+            )
+        for r, ix in zip(args.roots, indexes):
+            # serving never reads the long table; the merged root still
+            # carries it as the build intermediate later merges and
+            # compactions fold
+            ix.postings = spark.read.parquet(os.path.join(r, "stages", "postings"))
+        t0 = time.time()
         merged = merge_packed_indexes(
             spark, indexes,
             check_disjoint=not args.assume_disjoint,
-            n_term_buckets=n_term_buckets,
-            # persist the merged packed table: the term_stats rollup below
-            # reads the cache the packed write just filled instead of
-            # re-running the merge shuffle per output stage
-            cache=True,
         )
     except ValueError as e:  # sources that cannot merge (overlap, mismatch)
         print(f"error: {e}", file=sys.stderr)
@@ -123,7 +100,8 @@ def main(argv=None) -> int:
         "total_tokens": merged.stats.total_tokens,
         "avgdl": merged.stats.avgdl,
         "doc_shard_size": merged.doc_shard_size,
-        "term_buckets": n_term_buckets,
+        "term_buckets": merged.n_term_buckets,
+        "do_stem": merged.do_stem,
         "merged_from": args.roots,
         "wall_sec": round(time.time() - t0, 2),
     }

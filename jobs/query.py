@@ -5,9 +5,11 @@ Usage:
         --index /path/to/index_root --source /path/to/source_table \
         [--k 10] [--scorer bm25|ql] [--batch] "query one" '"a phrase"' ...
 
-Every query serves from the index's packed postings (stages/packed); an
-index without them, or a query the chosen mode cannot serve, ends with a
-one-line error on stderr and exit code 2.
+Every query serves from the index's packed postings (stages/packed) with
+the term-bucket count and stemming recorded in its build_summary.json. An
+index without them (or one built before packed rows carried their field),
+or a query the chosen mode cannot serve, ends with a one-line error on
+stderr and exit code 2.
 
 Prints one JSON line per query: {"query", "k", "wall_ms", "corrections",
 "results": [{"doc_id", "score"}, ...]}. With --batch, every query serves in
@@ -29,33 +31,47 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
-from awesome_spark_search.build import Index, index_stats
+from awesome_spark_search.build import PLAIN_FIELDS, Index, index_stats
 from awesome_spark_search.executor import QueryExecutor
 from awesome_spark_search.lineage import StageRunner
 
 
-def load_index(spark: SparkSession, root: str) -> Index | None:
-    """The serving view of an index root: packed postings, term_stats and
-    doc_map (the long postings stage is a build intermediate and is not
-    read). None when the root has no readable stages/packed."""
+def load_index(spark: SparkSession, root: str) -> Index:
+    """The serving view of an index root written by jobs/build_index.py or
+    jobs/merge_index.py: packed postings, term_stats and doc_map (the long
+    postings stage is a build intermediate and is not read), laid out as
+    its build_summary.json records. ValueError when the root has no
+    readable stages/packed, or predates packed rows carrying their field
+    and the recorded term-bucket count and stemming."""
     stages = os.path.join(root, "stages")
     try:
         packed = spark.read.parquet(os.path.join(stages, "packed"))
     except AnalysisException:
-        return None
-    doc_map = spark.read.parquet(os.path.join(stages, "doc_map"))
-    term_stats = spark.read.parquet(os.path.join(stages, "term_stats"))
-    stats = index_stats(doc_map, StageRunner(spark, None))
-    kw = {}
+        raise ValueError(
+            f"the index at {root!r} has no packed postings (stages/packed); "
+            "rebuild it with jobs/build_index.py"
+        ) from None
     summary_path = os.path.join(root, "build_summary.json")
+    s = {}
     if os.path.exists(summary_path):
         with open(summary_path) as f:
             s = json.load(f)
-        if s.get("doc_shard_size"):
-            kw["doc_shard_size"] = s["doc_shard_size"]
+    if "field" not in packed.columns or not all(
+        k in s for k in ("doc_shard_size", "term_buckets", "do_stem")
+    ):
+        raise ValueError(
+            f"the index at {root!r} was built by an older version (no field "
+            "column or no recorded term_buckets/do_stem); rebuild it with "
+            "jobs/build_index.py"
+        )
+    doc_map = spark.read.parquet(os.path.join(stages, "doc_map"))
+    term_stats = spark.read.parquet(os.path.join(stages, "term_stats"))
+    # jobs/build_index.py builds plain (one-field) indexes only
     return Index(
-        doc_map=doc_map, postings=None, term_stats=term_stats,
-        packed=packed, stats=stats, **kw,
+        doc_map=doc_map, postings=None, term_stats=term_stats, packed=packed,
+        stats=index_stats(doc_map, StageRunner(spark, None), PLAIN_FIELDS),
+        do_stem=s["do_stem"], doc_shard_size=s["doc_shard_size"],
+        n_term_buckets=s["term_buckets"],
     )
 
 
@@ -111,26 +127,17 @@ def main(argv=None) -> int:
         help="serve ALL queries in ONE Spark action (search_many; ranked "
         "one-pass types only - keyword/phrase/mixed)",
     )
-    ap.add_argument("--no-stem", action="store_true")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args(argv)
 
     spark = SparkSession.builder.appName("ass-query").getOrCreate()
-    idx = load_index(spark, args.index)
-    if idx is None:
-        print(
-            f"error: the index at {args.index!r} has no packed postings "
-            "(stages/packed); rebuild it with jobs/build_index.py",
-            file=sys.stderr,
-        )
-        return 2
-    idx.do_stem = not args.no_stem
-    src = spark.read.parquet(args.source) if args.source else None
-    ex = QueryExecutor(spark, idx, source_df=src, scorer=args.scorer)
     try:
+        idx = load_index(spark, args.index)
+        src = spark.read.parquet(args.source) if args.source else None
+        ex = QueryExecutor(spark, idx, source_df=src, scorer=args.scorer)
         for line in _lines(ex, args.queries, args.k, args.batch):
             print(json.dumps(line))
-    except ValueError as e:  # a query this mode cannot serve
+    except ValueError as e:  # an index or a query this mode cannot serve
         print(f"error: {e}", file=sys.stderr)
         return 2
     return 0

@@ -177,3 +177,57 @@ class OracleIndex:
         if isinstance(ast, Q.LinkTo):
             return set(citations.get(ast.doc_id, set()))
         return set().union(*(self.postings[t] for t in self.match_terms(fix(ast.terms))))
+
+
+class FieldedOracleIndex(OracleIndex):
+    """Zone-weighted BM25 over multi-field documents ({doc_id: {field:
+    text}}) — the reference's ContentType weighting (ref:
+    DocumentRanker.java:138-167):
+
+        score(d) = sum_f w_f * sum_t idf(t) * tfnorm_{t,d,f}
+
+    idf counts the docs holding t in ANY field, each field's tfnorm
+    normalizes by that field's avgdl, and a phrase matches within one field
+    only (its terms score in the fields where it occurs). The inherited
+    index over the fields joined by spaces (no token spans the separator)
+    supplies the dictionary, df, prefix expansion, Boolean doc sets and PRF
+    snippets; ``search`` is ``OracleIndex.search`` with this ranking."""
+
+    def __init__(self, docs: dict[int, dict[str, str]], weights: dict[str, float],
+                 *, do_stem: bool = True):
+        super().__init__(
+            {d: " ".join(fs[f] for f in weights) for d, fs in docs.items()}, do_stem=do_stem
+        )
+        self.weights = dict(weights)
+        self.zones = {
+            f: OracleIndex({d: fs[f] for d, fs in docs.items()}, do_stem=do_stem)
+            for f in weights
+        }
+
+    def bm25_topk(self, terms: list[str], k: int = 10,
+                  restrict: set[int] | None = None,
+                  weights: dict[str, float] | None = None):
+        return self._ranked("bm25", [], terms, weights)[:k]
+
+    def _ranked(self, scorer, phrase, keywords, weights=None):
+        if scorer != "bm25":
+            raise ValueError("zone-weighted ranking is BM25 only")
+        scores: dict[int, float] = defaultdict(float)
+
+        def add(zone, w_f, terms, restrict=None, tw=None):
+            for t in sorted(self.match_terms(terms)):
+                w = w_f * (tw or {}).get(t, 1.0) * self.idf(t)
+                for d, poss in zone.postings.get(t, {}).items():
+                    if restrict is None or d in restrict:
+                        tf, dl = len(poss), zone.doc_len[d]
+                        scores[d] += w * tf / (tf + K1 * (1 - B + B * dl / (zone.avgdl or 1.0)))
+
+        for f, w_f in self.weights.items():
+            zone = self.zones[f]
+            if phrase:
+                missing = any(t not in zone.postings for t in phrase)
+                surv = set() if missing else zone.phrase_docs(phrase)
+                add(zone, w_f, list(dict.fromkeys(phrase)), restrict=surv)
+            if keywords:
+                add(zone, w_f, keywords, tw=weights)
+        return sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))

@@ -127,13 +127,11 @@ def test_empty_batch_and_empty_terms(spark, packed_index):
 
 
 def test_search_many_fielded_stays_zone_weighted(spark):
-    """The fielded invariant extends to batches: search_many on a fielded
-    executor ranks EVERY query zone-weighted (fields.fielded_batch_topk),
-    identical to per-query search() on the same executor — never a silent
-    unfielded fallback."""
+    """The fielded invariant extends to batches: search_many over a fielded
+    index ranks EVERY query zone-weighted (wand.batch_topk on the fielded
+    index), identical to per-query search() on the same executor — never a
+    silent unfielded fallback."""
     from pyspark.sql import functions as F
-
-    from awesome_spark_search.fields import build_fielded_packed
 
     def word(i):
         return ["merge", "buffer", "sort", "alpha", "beta", "gamma", "delta"][i % 7]
@@ -148,13 +146,15 @@ def test_search_many_fielded_stays_zone_weighted(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, body string, title string")
     weights = {"body": 1.0, "title": 0.5}
-    fidx = build_fielded_packed(spark, df, weights, do_stem=False, doc_shard_size=8)
+    fidx = build_index(
+        spark, df, do_stem=False, doc_shard_size=8, field_weights=weights
+    )
     idx = build_index(
         spark,
         df.select("doc_id", F.concat_ws(" ", "body", "title").alias("content")),
         do_stem=False,
     )
-    ex = QueryExecutor(spark, idx, fielded_index=fidx)
+    ex = QueryExecutor(spark, fidx)
     batch = {
         "kw": "merge buffer gamma",
         "ph": '"merge buffer"',

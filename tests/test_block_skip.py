@@ -23,12 +23,12 @@ import pandas as pd
 import pytest
 
 from awesome_spark_search import codec, wand
-from awesome_spark_search.build import PACK_KEYS, _pack_many, K1, B
+from awesome_spark_search.build import _pack_many, K1, B
 
 
 def _shard_fn(spec, avgdl: float, k: int):
     """The builder's per-shard step for one BM25 query."""
-    return wand._shard_step({"q": spec}, *wand._bm25(avgdl, k), k)
+    return wand._shard_step({"q": spec}, *wand._bm25({"content": (1.0, avgdl)}, k), k)
 
 
 def _idf(df: int, n_docs: int) -> float:
@@ -46,6 +46,7 @@ def _pack_for_query(postings: dict[str, list[tuple[int, int]]], doc_lens: dict[i
     rows.sort(key=lambda t: (t[0], t[1], t[2]))
     pdf = pd.DataFrame(
         {
+            "field": ["content"] * len(rows),
             "term": [r[0] for r in rows],
             "doc_shard": [r[1] for r in rows],
             "doc_id": [r[2] for r in rows],
@@ -54,7 +55,7 @@ def _pack_for_query(postings: dict[str, list[tuple[int, int]]], doc_lens: dict[i
             "doc_len": [r[5] for r in rows],
         }
     )
-    packed = _pack_many(pdf, PACK_KEYS, lambda key: avgdl, 64)
+    packed = _pack_many(pdf, {"content": avgdl}, 64)
     packed["idf"] = [
         _idf(len(postings[t]), n_docs) for t in packed["term"]
     ]
@@ -165,6 +166,7 @@ def test_phrase_positions_decode_candidate_blocks_only():
     rows.sort(key=lambda t: (t[0], t[1], t[2]))
     pdf = pd.DataFrame(
         {
+            "field": ["content"] * len(rows),
             "term": [r[0] for r in rows],
             "doc_shard": [r[1] for r in rows],
             "doc_id": [r[2] for r in rows],
@@ -173,7 +175,7 @@ def test_phrase_positions_decode_candidate_blocks_only():
             "doc_len": [r[5] for r in rows],
         }
     )
-    packed = _pack_many(pdf, PACK_KEYS, lambda key: 50.0, 64)
+    packed = _pack_many(pdf, {"content": 50.0}, 64)
     packed["idf"] = [
         _idf(n_docs if t == "aa" else 8, n_docs) for t in packed["term"]
     ]

@@ -150,3 +150,30 @@ def test_build_then_query_jobs(corpus_dir, tmp_path_factory):
         ]
         for mr, fr in zip(merged_line["results"], full_line["results"]):
             assert abs(mr["score"] - fr["score"]) < 1e-9
+
+
+def test_query_job_reads_the_index_bucket_count(corpus_dir, tmp_path_factory):
+    """jobs/query.py prunes with the bucket count and stemming the build
+    recorded: an index built with --term-buckets 8 answers exactly like a
+    default (64-bucket) build — before, terms whose bucket differs mod 8
+    and mod 64 silently returned nothing. A root without the recorded
+    layout is refused with a one-line error."""
+    roots = {}
+    for name, extra in (("b8", ["--term-buckets", "8"]), ("b64", [])):
+        roots[name] = str(tmp_path_factory.mktemp(f"jobs_{name}"))
+        _run(["jobs/build_index.py", "--source", corpus_dir, "--out", roots[name], *extra])
+    queries = ["buffer", "table", "sort"]
+    got, want = (
+        [l["results"] for l in _json_lines(_run(["jobs/query.py", "--index", roots[n], *queries]))]
+        for n in ("b8", "b64")
+    )
+    assert all(want) and got == want
+
+    summary = os.path.join(roots["b8"], "build_summary.json")
+    with open(summary) as f:
+        s = json.load(f)
+    del s["term_buckets"]
+    with open(summary, "w") as f:
+        json.dump(s, f)
+    err = _run(["jobs/query.py", "--index", roots["b8"], "buffer"], returncode=2)
+    assert "error:" in err and "rebuild" in err and "Traceback" not in err

@@ -167,17 +167,47 @@ def test_mismatched_doc_shard_size_rejected(spark):
 
 
 def test_fielded_mismatched_doc_shard_size_rejected(spark):
-    from awesome_spark_search.fields import build_fielded_packed
-    from awesome_spark_search.merge import merge_fielded_packed
-
     df = spark.createDataFrame(
         [(0, "merge buffer", "sort")], "doc_id long, body string, title string"
     )
-    fa = build_fielded_packed(
-        spark, df, {"body": 1.0, "title": 0.5}, do_stem=False, doc_shard_size=8
+    fa = build_index(
+        spark, df, do_stem=False, doc_shard_size=8,
+        field_weights={"body": 1.0, "title": 0.5},
     )
     with pytest.raises(ValueError, match="doc_shard_size"):
-        merge_fielded_packed(spark, [fa, dataclasses.replace(fa, doc_shard_size=16)])
+        merge_packed_indexes(spark, [fa, dataclasses.replace(fa, doc_shard_size=16)])
+
+
+def test_mismatched_field_weights_and_buckets_rejected(spark):
+    """Sources with different fields, zone weights or term-bucket counts
+    would merge into an index no plan can serve consistently."""
+    df = spark.createDataFrame(
+        [(0, "merge buffer", "sort")], "doc_id long, body string, title string"
+    )
+    fa = build_index(
+        spark, df, do_stem=False, field_weights={"body": 1.0, "title": 0.5},
+    )
+    for change, name in (
+        ({"field_weights": {"body": 1.0, "title": 0.25}}, "field_weights"),
+        ({"n_term_buckets": 8}, "n_term_buckets"),
+    ):
+        with pytest.raises(ValueError, match=name):
+            merge_packed_indexes(spark, [fa, dataclasses.replace(fa, **change)])
+
+
+def test_fielded_merge_rejects_shared_doc_ids(spark):
+    """The doc_map disjointness probe covers fielded sources: two sources
+    sharing doc 0 — with no (field, term) group in common, so the merge
+    kernel would never see a collision — raise before any packing."""
+    fa, fb = (
+        build_index(
+            spark, spark.createDataFrame([row], "doc_id long, body string, title string"),
+            do_stem=False, field_weights={"body": 1.0, "title": 0.5},
+        )
+        for row in [(0, "merge", "sort"), (0, "buffer", "alpha")]
+    )
+    with pytest.raises(ValueError, match="share doc_ids"):
+        merge_packed_indexes(spark, [fa, fb])
 
 
 def test_streamed_delta_merges_onto_batch_base(spark, tmp_path):
@@ -226,11 +256,9 @@ def test_streamed_delta_merges_onto_batch_base(spark, tmp_path):
 
 
 def test_fielded_merge_matches_rebuild(spark):
-    """merge_fielded_packed: zone-weighted serving off the merged fielded
-    index must match the index rebuilt over the union corpus (per-field
-    weighted-mean avgdl, summed global term_stats)."""
-    from awesome_spark_search.fields import build_fielded_packed, fielded_wand_topk
-    from awesome_spark_search.merge import merge_fielded_packed
+    """merge_packed_indexes over fielded sources: zone-weighted serving off
+    the merged index must match the index rebuilt over the union corpus
+    (per-field avgdl over the merged doc_map, summed global term_stats)."""
 
     def _word(i):
         return ["merge", "buffer", "sort", "alpha", "beta", "gamma", "delta"][i % 7]
@@ -242,20 +270,20 @@ def test_fielded_merge_matches_rebuild(spark):
         rows.append((d, body, title))
     df = spark.createDataFrame(rows, "doc_id long, body string, title string")
     weights = {"body": 1.0, "title": 0.5}
-    kw = dict(do_stem=False, doc_shard_size=8)
-    full = build_fielded_packed(spark, df, weights, **kw)
-    fa = build_fielded_packed(spark, df.filter("doc_id % 2 = 0"), weights, **kw)
-    fb = build_fielded_packed(spark, df.filter("doc_id % 2 = 1"), weights, **kw)
-    merged = merge_fielded_packed(spark, [fa, fb])
-    assert merged.n_docs == 40
+    kw = dict(do_stem=False, doc_shard_size=8, field_weights=weights)
+    full = build_index(spark, df, **kw)
+    fa = build_index(spark, df.filter("doc_id % 2 = 0"), **kw)
+    fb = build_index(spark, df.filter("doc_id % 2 = 1"), **kw)
+    merged = merge_packed_indexes(spark, [fa, fb])
+    assert merged.stats.n_docs == 40
     for f in weights:
-        assert abs(merged.avgdl_by_field[f] - full.avgdl_by_field[f]) < 1e-9
+        assert abs(merged.stats.avgdl_by_field[f] - full.stats.avgdl_by_field[f]) < 1e-9
     ts_m = {r["term"]: (r["df"], r["cf"]) for r in merged.term_stats.collect()}
     ts_f = {r["term"]: (r["df"], r["cf"]) for r in full.term_stats.collect()}
     assert ts_m == ts_f
     for terms in (["merge"], ["merge", "buffer", "gamma"]):
-        got = fielded_wand_topk(spark, merged, terms, k=10).collect()
-        want = fielded_wand_topk(spark, full, terms, k=10).collect()
+        got = wand_topk(spark, merged, terms, k=10).collect()
+        want = wand_topk(spark, full, terms, k=10).collect()
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], terms
         for g, w in zip(got, want):
             assert abs(g["score"] - w["score"]) < 1e-9
@@ -263,12 +291,11 @@ def test_fielded_merge_matches_rebuild(spark):
 
 def test_fielded_merge_with_empty_field_source_matches_rebuild(spark):
     """Degenerate case (ADVICE r4): one source's field is EMPTY everywhere.
-    build_fielded_packed floors that source's avgdl to 1.0 for scoring, but
-    the merge must combine the RAW (unfloored) means — averaging the floored
-    values would diverge from a full rebuild's avgdl, silently shifting
-    every merged score and block_max."""
-    from awesome_spark_search.fields import build_fielded_packed, fielded_wand_topk
-    from awesome_spark_search.merge import merge_fielded_packed
+    The build floors that source's avgdl to 1.0 for scoring, but the merge
+    must recompute the mean from the merged doc_map's field lengths —
+    averaging the floored values would diverge from a full rebuild's avgdl,
+    silently shifting every merged score and block_max."""
+    from pyspark.sql import functions as F
 
     def _word(i):
         return ["merge", "buffer", "sort", "alpha", "beta", "gamma"][i % 6]
@@ -281,21 +308,21 @@ def test_fielded_merge_with_empty_field_source_matches_rebuild(spark):
         rows.append((d, body, title))
     df = spark.createDataFrame(rows, "doc_id long, body string, title string")
     weights = {"body": 1.0, "title": 0.5}
-    kw = dict(do_stem=False, doc_shard_size=8)
-    full = build_fielded_packed(spark, df, weights, **kw)
-    fa = build_fielded_packed(spark, df.filter("doc_id % 2 = 0"), weights, **kw)
-    fb = build_fielded_packed(spark, df.filter("doc_id % 2 = 1"), weights, **kw)
-    assert fa.avgdl_raw_by_field["title"] == 0.0  # the degenerate source
-    assert fa.avgdl_by_field["title"] == 1.0      # scoring floor intact
-    merged = merge_fielded_packed(spark, [fa, fb])
+    kw = dict(do_stem=False, doc_shard_size=8, field_weights=weights)
+    full = build_index(spark, df, **kw)
+    fa = build_index(spark, df.filter("doc_id % 2 = 0"), **kw)
+    fb = build_index(spark, df.filter("doc_id % 2 = 1"), **kw)
+    # the degenerate source: every title length is 0
+    assert fa.doc_map.agg(F.max(F.col("field_lens")["title"])).first()[0] == 0
+    assert fa.stats.avgdl_by_field["title"] == 1.0      # scoring floor intact
+    merged = merge_packed_indexes(spark, [fa, fb])
     for f in weights:
-        assert abs(merged.avgdl_by_field[f] - full.avgdl_by_field[f]) < 1e-9, f
         assert abs(
-            merged.avgdl_raw_by_field[f] - full.avgdl_raw_by_field[f]
+            merged.stats.avgdl_by_field[f] - full.stats.avgdl_by_field[f]
         ) < 1e-9, f
     for terms in (["merge"], ["merge", "gamma"]):
-        got = fielded_wand_topk(spark, merged, terms, k=10).collect()
-        want = fielded_wand_topk(spark, full, terms, k=10).collect()
+        got = wand_topk(spark, merged, terms, k=10).collect()
+        want = wand_topk(spark, full, terms, k=10).collect()
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], terms
         for g, w in zip(got, want):
             assert abs(g["score"] - w["score"]) < 1e-9
@@ -358,10 +385,11 @@ def _split_groups(draw):
 
 
 def _pack_group(rows):
-    from awesome_spark_search.build import PACK_KEYS, _pack_many
+    from awesome_spark_search.build import _pack_many
 
     pdf = pd.DataFrame(
         {
+            "field": ["content"] * len(rows),
             "term": ["t"] * len(rows),
             "doc_shard": [0] * len(rows),
             "doc_id": [r[0] for r in rows],
@@ -370,13 +398,13 @@ def _pack_group(rows):
             "positions": [r[3] for r in rows],
         }
     ).sort_values("doc_id")
-    return _pack_many(pdf, PACK_KEYS, lambda key: 10.0, 8)  # pack-time avgdl irrelevant to blobs
+    return _pack_many(pdf, {"content": 10.0}, 8)  # pack-time avgdl irrelevant to blobs
 
 
 @given(_split_groups())
 @settings(max_examples=40, deadline=None)
 def test_merge_rows_equals_direct_pack_property(case):
-    from awesome_spark_search.build import PACK_KEYS, _pack_many
+    from awesome_spark_search.build import _pack_many
     from awesome_spark_search.merge import _merge_rows
 
     n_srcs, src_of, docs, avgdl = case
@@ -387,6 +415,7 @@ def test_merge_rows_equals_direct_pack_property(case):
     want = _pack_many(
         pd.DataFrame(
             {
+                "field": ["content"] * len(docs),
                 "term": ["t"] * len(docs),
                 "doc_shard": [0] * len(docs),
                 "doc_id": [d[0] for d in docs],
@@ -395,7 +424,7 @@ def test_merge_rows_equals_direct_pack_property(case):
                 "positions": [d[3] for d in docs],
             }
         ).sort_values("doc_id"),
-        PACK_KEYS, lambda key: avgdl, 8,
+        {"content": avgdl}, 8,
     ).iloc[0]
     for col in ("n", "cf", "doc_ids_vb", "tfs_vb", "dls_vb", "pos_vb"):
         assert merged[col] == want[col], col

@@ -100,27 +100,22 @@ def test_every_query_type_serves_packed_only(
     assert ex.last_corrections == {"mrege": "merg"}
 
 
-def test_fielded_executor_serves_packed_only(spark, index, citations):
+def test_fielded_executor_serves_packed_only(spark, citations):
     """A fielded executor ranks every query type zone-weighted off the
     packed fielded index; with prefixes as term ranges it must return
     EXACTLY what the same executor returns with the vocabulary cached."""
-    from awesome_spark_search.fields import build_fielded_packed
-
     pdf = corpus.generate_pandas(N_DOCS, seed=42)
     pdf["title"] = [" ".join(c.split()[:5]) for c in pdf["content"]]
     fsrc = spark.createDataFrame(pdf[["doc_id", "content", "title"]])
-    fidx = build_fielded_packed(
-        spark, fsrc, {"content": 1.0, "title": 0.5}, do_stem=True, doc_shard_size=64
+    fidx = build_index(
+        spark, fsrc, do_stem=True, doc_shard_size=64,
+        field_weights={"content": 1.0, "title": 0.5},
     )
+    fidx.postings = None
     plain = fsrc.select("doc_id", F.concat_ws(" ", "content", "title").alias("content"))
-    idx = build_index(spark, plain, do_stem=True, doc_shard_size=64)
-    idx.postings = None
 
     def executor():
-        return QueryExecutor(
-            spark, idx, source_df=plain, packed_citations=citations,
-            fielded_index=fidx,
-        )
+        return QueryExecutor(spark, fidx, source_df=plain, packed_citations=citations)
 
     cached, ranges = executor(), executor()
     ranges.VOCAB_CACHE_MAX = 0
@@ -128,3 +123,27 @@ def test_fielded_executor_serves_packed_only(spark, index, citations):
         want = _rows(cached, query)
         assert want, query
         assert _rows(ranges, query) == want, query
+
+
+def test_boolean_unions_a_terms_fields(spark, citations):
+    """Boolean and LinkTo on a multi-field index: a term's doc set is the
+    union over its field rows, so every unranked query returns exactly the
+    rows of the plain index over the joined fields. Each title is lifted
+    from the NEXT doc, so a term's content-only and title-only docs both
+    exist and losing either field's rows shows."""
+    pdf = corpus.generate_pandas(N_DOCS, seed=42)
+    nxt = pdf["content"].tolist()[1:] + pdf["content"].tolist()[:1]
+    pdf["title"] = [" ".join(c.split()[:5]) for c in nxt]
+    fsrc = spark.createDataFrame(pdf[["doc_id", "content", "title"]])
+    fidx = build_index(
+        spark, fsrc, do_stem=True, doc_shard_size=64,
+        field_weights={"content": 1.0, "title": 0.5},
+    )
+    plain = fsrc.select("doc_id", F.concat_ws(" ", "content", "title").alias("content"))
+    pidx = build_index(spark, plain, do_stem=True, doc_shard_size=64)
+    ex_f = QueryExecutor(spark, fidx, packed_citations=citations)
+    ex_p = QueryExecutor(spark, pidx, packed_citations=citations)
+    for query in UNRANKED:
+        want = _rows(ex_p, query)
+        assert want, query
+        assert _rows(ex_f, query) == want, query

@@ -103,3 +103,40 @@ def test_executor_plans_carry_cached_stats_as_literals(spark, packed_ckpt_index)
         assert len(re.findall(r"Exchange hashpartitioning", plan)) == n_hash, plan[:3000]
         rows = df.collect()
         assert rows and all(r["score"] > 0 for r in rows)
+
+
+@pytest.fixture(scope="module")
+def fielded_ckpt_index(spark, tmp_path_factory):
+    ckpt = str(tmp_path_factory.mktemp("plan_idx_fielded"))
+    src = spark.createDataFrame(corpus.generate_pandas(120, seed=21))
+    return build_index(
+        spark, src, do_stem=True, checkpoint_dir=ckpt, doc_shard_size=32,
+        field_weights={"content": 1.0, "path": 0.5},
+    )
+
+
+def test_fielded_executor_plans_carry_cached_stats_as_literals(spark, fielded_ckpt_index):
+    """A fielded index takes the same dictionary path: the executor's plans
+    for one query and a batch carry df as literals (no term_stats scan, no
+    join, no broadcast), prune term_bucket partitions, and keep one and two
+    hash exchanges — zone weights and field avgdl are driver values."""
+    from awesome_spark_search.executor import QueryExecutor
+    from awesome_spark_search.wand import QuerySpec
+
+    one, many = QueryExecutor(spark, fielded_ckpt_index)._plans()
+    single = one(QuerySpec([], ["buffer", "merg"]), 10)
+    batch = many(
+        {"q0": ([], ["buffer", "merg"]), "q1": ([], ["scan"]),
+         "q2": ([], ["buffer", "scan"])},
+        5,
+    )
+    for df, n_hash in ((single, 1), (batch, 2)):
+        plan = _plan(df)
+        assert "BroadcastExchange" not in plan, plan[:3000]
+        assert "Join" not in plan, plan[:3000]
+        assert "term_stats" not in plan, plan[:3000]
+        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert m and "term_bucket" in m.group(1), plan[:2000]
+        assert len(re.findall(r"Exchange hashpartitioning", plan)) == n_hash, plan[:3000]
+        rows = df.collect()
+        assert rows and all(r["score"] > 0 for r in rows)

@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from awesome_spark_search import codec
-from awesome_spark_search.build import PACK_KEYS, _pack_many
+from awesome_spark_search.build import _pack_many
 from awesome_spark_search.spell import damerau_levenshtein
 
 
@@ -99,6 +99,7 @@ def test_pack_many_roundtrip(rows):
     rows = sorted(rows, key=lambda t: (t[0], t[1], t[2]))
     pdf = pd.DataFrame(
         {
+            "field": ["content"] * len(rows),
             "term": [t[0] for t in rows],
             "doc_shard": [t[1] for t in rows],
             "doc_id": [t[2] for t in rows],
@@ -107,7 +108,7 @@ def test_pack_many_roundtrip(rows):
             "doc_len": [600] * len(rows),
         }
     )
-    packed = _pack_many(pdf, PACK_KEYS, lambda key: 100.0, 64)
+    packed = _pack_many(pdf, {"content": 100.0}, 64)
     # groups count == distinct (term, shard)
     assert len(packed) == len({(t[0], t[1]) for t in rows})
     # decode every group and compare to the input

@@ -47,23 +47,19 @@ def main() -> int:
         # strip exploded per-run temp paths for readability
         return re.sub(r"file:[^\s,\]]*", "file:<ckpt>", s)
 
-    def _executor_plan(spark, idx):
+    def _executor_plan(idx, terms):
         from awesome_spark_search.executor import QueryExecutor
         from awesome_spark_search.wand import QuerySpec
 
         one, _ = QueryExecutor(spark, idx)._plans()
-        return one(QuerySpec([], ["buffer", "merg", "scan"]), 10)
+        return one(QuerySpec([], terms), 10)
 
-    def _fielded_plan(spark, src):
-        from awesome_spark_search.fields import (
-            build_fielded_packed, fielded_wand_topk,
+    def _fielded_plan():
+        fidx = build_index(
+            spark, src.select("doc_id", "content", "path"), do_stem=False,
+            field_weights={"content": 1.0, "path": 0.5},
         )
-
-        fielded_src = src.select("doc_id", "content", "path")
-        fidx = build_fielded_packed(
-            spark, fielded_src, {"content": 1.0, "path": 0.5}, do_stem=False
-        )
-        return fielded_wand_topk(spark, fidx, ["buffer", "merge"], k=10)
+        return _executor_plan(fidx, ["buffer", "merge"])
 
     sections = [
         ("Block-max WAND top-10 over the packed index",
@@ -125,11 +121,6 @@ def main() -> int:
          boolean_docs(spark, idx, ("and", ("terms", ["merg"]),
                                    ("not", ("terms", ["buffer"]),
                                     ("terms", ["scan"]))), k=10)),
-        ("Fielded (zone-weighted) BM25 over the packed fielded index",
-         "Same one-action WAND shape with two extra codegen columns: w_f "
-         "multiplies the broadcast idf, a field->avgdl literal map supplies "
-         "the per-row dl normalizer. No joins beyond the tiny idf broadcast.",
-         _fielded_plan(spark, src)),
         ("SimHash (single groupBy, 32 codegen sums)",
          "No per-bit row expansion: one exchange keyed doc_id carrying 32 "
          "partial sums.",
@@ -147,7 +138,15 @@ def main() -> int:
          "and TakeOrderedAndProject as the broadcast plan above.",
          # built last: loading the dictionary plans a job of its own,
          # which would renumber every plan formatted after it
-         lambda: _executor_plan(spark, idx)),
+         lambda: _executor_plan(idx, ["buffer", "merg", "scan"])),
+        ("Fielded (zone-weighted) keyword top-10 (executor path)",
+         "The same executor plan over a two-field index (content w=1.0, "
+         "path w=0.5): packed rows carry their field, and the per-shard "
+         "kernel scales each row's idf by its zone weight and normalizes by "
+         "its field's avgdl, both driver values. Like every executor plan "
+         "it carries the cached dictionary's df as literals - no term_stats "
+         "scan, no join, no broadcast.",
+         _fielded_plan),
     ]
     lines = [
         "# PLANS — formatted physical plans of the headline operators",
