@@ -85,6 +85,7 @@ class IndexStats:
     total_tokens: int
     avgdl: float
     avgdl_by_field: dict[str, float]  # BM25's per-field dl normalizer
+    max_doc_id: int  # -1 for an empty index; sets the doc_shard count
 
 
 @dataclass
@@ -342,11 +343,12 @@ def term_bucket_col(term_col, n_buckets: int):
 
 
 def index_stats(doc_map: DataFrame, runner: StageRunner, fields) -> IndexStats:
-    """n_docs / total_tokens / avgdl and each of ``fields``' avgdl over a
-    doc_map (doc_id, doc_len, field_lens, ...), in ONE aggregate run as the
-    runner's ``stats`` stage (a runner without a checkpoint dir just runs
-    it). Every avgdl floors to 1.0 when its mean is 0 (an empty corpus or an
-    all-empty field: it only ever divides doc lengths)."""
+    """n_docs / total_tokens / avgdl, each of ``fields``' avgdl and the
+    largest doc_id over a doc_map (doc_id, doc_len, field_lens, ...), in ONE
+    aggregate run as the runner's ``stats`` stage (a runner without a
+    checkpoint dir just runs it). Every avgdl floors to 1.0 when its mean is
+    0 (an empty corpus or an all-empty field: it only ever divides doc
+    lengths); max_doc_id is -1 on an empty corpus."""
     fields = list(fields)
     row = runner.run(
         "stats",
@@ -354,6 +356,7 @@ def index_stats(doc_map: DataFrame, runner: StageRunner, fields) -> IndexStats:
             F.count(F.lit(1)).alias("n_docs"),
             F.coalesce(F.sum("doc_len"), F.lit(0)).alias("total_tokens"),
             F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("avgdl"),
+            F.coalesce(F.max("doc_id"), F.lit(-1)).alias("max_doc_id"),
             *[
                 F.coalesce(F.avg(F.col("field_lens")[f]), F.lit(0.0)).alias(f"avgdl_{i}")
                 for i, f in enumerate(fields)
@@ -365,6 +368,7 @@ def index_stats(doc_map: DataFrame, runner: StageRunner, fields) -> IndexStats:
         total_tokens=row["total_tokens"],
         avgdl=float(row["avgdl"]) or 1.0,
         avgdl_by_field={f: float(row[f"avgdl_{i}"]) or 1.0 for i, f in enumerate(fields)},
+        max_doc_id=row["max_doc_id"],
     )
 
 

@@ -32,9 +32,14 @@ existence, term stats arrive by broadcast join and corrections cost one
 parse, ONE spelling-correction pass, ``wand.QuerySpec``s, one scorer
 dispatch (``_plans``) — and every ranked plan comes out of
 one builder (``wand._ranked_rows``); a single query ends in a
-TakeOrderedAndProject, a batch in a per-query window.
+TakeOrderedAndProject, a batch in a per-query window. On an index with one
+doc_shard (``wand._one_shard``) those plans, and Boolean ones, run on the
+driver: the ``wand`` entry points collect the term rows once (a JVM-only
+scan, the query's ONE Spark job), run the shard kernel in the calling
+thread and return a localized frame, whose collect here runs no job.
 Corrections travel as values, never as executor state, so concurrent
-``search`` calls on one executor are safe.
+``search`` calls on one executor are safe — the kernel then runs in the
+calling threads.
 """
 
 from __future__ import annotations
@@ -54,6 +59,11 @@ from .spell import correct_dictionary, correct_terms
 from .textproc import preprocess_query_terms, tokenize_text
 
 PRF_MOST_FREQUENT_TOKENS = 10  # ref: QueryProcessor.java:44-46
+
+
+def _check_k(k: int) -> None:
+    if k < 0:
+        raise ValueError(f"k must be >= 0, not {k}")
 
 
 class QueryExecutor:
@@ -301,7 +311,9 @@ class QueryExecutor:
         Thread-safe: concurrent calls on one executor each apply their own
         corrections (passed as values, never stored on the executor). The
         applied map is also exposed as ``last_corrections``, which is
-        last-call-wins when calls overlap."""
+        last-call-wins when calls overlap. ValueError for k < 0; k = 0
+        returns no rows."""
+        _check_k(k)
         pq = self._parse(query)
         corrections = self._corrections_for([pq])
         return self._localize(self._run_once(pq, corrections, k))
@@ -319,11 +331,14 @@ class QueryExecutor:
         cost zero extra actions on the happy path (existence via the cached
         dictionary / once-built Bloom; corrections on the driver with the
         dictionary, else one batched ``correct_terms`` job). Returns
-        (query_id, rank, doc_id, score) — collecting it runs one job: a
-        single bucket-pruned packed scan of the union of all terms,
-        per-shard per-query kernels, one window for the global per-query
-        top-k. Rank+score identical to calling ``search`` per query
-        (tests/test_batch.py)."""
+        (query_id, rank, doc_id, score) — one job: a single bucket-pruned
+        packed scan of the union of all terms, per-shard per-query
+        kernels, one window for the global per-query top-k. It runs when
+        the frame is collected, or, over one doc_shard, inside this call
+        (the frame comes back localized). Rank+score identical to calling
+        ``search`` per query (tests/test_batch.py). ValueError for k < 0,
+        like ``search``."""
+        _check_k(k)
         parsed = {qid: self._parse(text) for qid, text in queries.items()}
         for qid, pq in parsed.items():
             if pq.prf > 0 or Q.is_unranked(pq.ast):
@@ -362,10 +377,12 @@ class QueryExecutor:
         query, batch) plan pair, both carrying the cached dictionary.
         ``one(spec, k)`` ends in a TakeOrderedAndProject over (doc_id,
         score); ``many({qid: (phrase, keywords)}, k)`` in the per-query
-        window (wand.py). QL/JM under scorer="ql" (one-field indexes only —
-        ``wand._ql`` raises on several fields); else block-max WAND, seeded
-        by phrase survivors when the spec has a phrase, zone-weighted on
-        every ranked query type of a fielded index."""
+        window — over one doc_shard both tails run in pandas and the
+        returned frame is already localized (wand.py). QL/JM under
+        scorer="ql" (one-field indexes only — ``wand._ql`` raises on
+        several fields); else block-max WAND, seeded by phrase survivors
+        when the spec has a phrase, zone-weighted on every ranked query type
+        of a fielded index."""
         spark, index, stats = self.spark, self.index, self._get_vocab()
         if self.scorer == "ql":
             return (

@@ -12,10 +12,10 @@ decoding.
 
 Spark shape — scalable by construction:
 * packed postings are keyed (field, term, doc_shard) and carry their doc
-  lengths inside the blob (dls_vb), so a query is ONE applyInPandas over
-  the few matching packed rows — no doc_map join; every Python invocation
-  sees one shard's worth of data (bounded by shard_size regardless of
-  corpus size).
+  lengths inside the blob (dls_vb), so a query is ONE per-shard pass over
+  the few matching packed rows — no doc_map join; every kernel call sees
+  one shard's worth of data (bounded by shard_size regardless of corpus
+  size).
 * one index shape: a plain index is the one-field case, so every plan
   serves plain and fielded (zone-weighted) indexes alike. The BM25 kernel
   takes the index's {field: (weight, avgdl)} as a driver value; each
@@ -33,6 +33,14 @@ Spark shape — scalable by construction:
   batch: each shard emits every query's local top-k; the global top-k of
   one query is a tiny TakeOrderedAndProject over n_shards*k rows, that of
   a batch a per-query window.
+* two executions of that one plan, chosen by ``_one_shard``: an index
+  whose doc_ids all fall in doc_shard 0 (below ``DEFAULT_DOC_SHARD_SIZE``
+  docs) has its plan's term rows collected with ONE Arrow collect of a
+  JVM-only scan, and the same shard kernel runs on the driver, in the
+  calling thread, with the top-k tail in pandas and the result returned
+  localized — no shuffle and no Python worker round trip per query. Over
+  several shards the plan stays the applyInPandas one above. Boolean
+  queries (``boolean_docs``) follow the same rule.
 * inside a shard the evaluation is numpy-vectorized document-at-a-time over
   terms ordered by descending bound: once the k-th best exact score exceeds
   the cumulative bound of the remaining terms, docs not already seen cannot
@@ -311,11 +319,11 @@ def term_rows(
 
 
 def _idf_rows(index: Index, n_term_buckets: int | None, stats=None):
-    """Row selector for BM25 plans over ``index``: (terms, prefixes) ->
-    packed rows with an idf column."""
+    """Row selector for BM25 plans over ``index``: (terms, prefixes[,
+    unread packed columns]) -> packed rows with an idf column."""
     idf = idf_col(F.col("df"), index.stats.n_docs).alias("idf")
-    return lambda terms, prefixes: term_rows(
-        index.packed, index.term_stats, terms, n_term_buckets or index.n_term_buckets,
+    return lambda terms, prefixes, unread=(): term_rows(
+        index.packed.drop(*unread), index.term_stats, terms, n_term_buckets or index.n_term_buckets,
         [idf], prefixes, stats=stats,
     )
 
@@ -395,7 +403,8 @@ def _batch_pdf(scored, k: int) -> pd.DataFrame:
 
 
 def _shard_step(specs: dict[str, QuerySpec], parse, score, k: int):
-    """applyInPandas body of ``_ranked_rows``: one doc_shard's rows, parsed
+    """The per-shard body of ``_ranked_rows`` (the applyInPandas function,
+    or one call per doc_shard on the driver): one doc_shard's rows, parsed
     once (``parse``), scored for every spec (``score``) -> each query's
     shard-local top-k rows."""
 
@@ -406,29 +415,72 @@ def _shard_step(specs: dict[str, QuerySpec], parse, score, k: int):
     return shard_topk
 
 
+def _one_shard(index: Index) -> bool:
+    """THE path rule of every packed plan: when every doc_id of ``index``
+    falls in doc_shard 0 (an empty index too), the plan runs on the driver
+    (``_collect_shards``); over several shards it stays the distributed
+    applyInPandas plan. Structural: no option, no size threshold."""
+    return index.stats.max_doc_id < index.doc_shard_size
+
+
+def _collect_shards(rows: DataFrame, step, empty: pd.DataFrame) -> pd.DataFrame:
+    """The driver execution of a one-shard plan: ONE Arrow collect of the
+    plan's ``rows`` (a JVM-only scan, filter and project — no shuffle, no
+    Python worker), then ``step`` per doc_shard group in the calling thread
+    — the same function, on the same rows, that the distributed plan's
+    pandas-group task runs. ``empty`` when no row matched.
+
+    Driver memory: the collect holds exactly the rows the distributed
+    plan's one kernel task would receive — one per (field, term) of the
+    plan, each bounded by doc_shard_size postings (``build._encode_group``
+    guards the blob size), so no byte cap is needed on top."""
+    pdf = rows.toArrow().to_pandas()
+    if not len(pdf):
+        return empty
+    return pd.concat([step(g) for _, g in pdf.groupby("doc_shard", sort=True)], ignore_index=True)
+
+
+def _localized(spark, pdf: pd.DataFrame, schema) -> DataFrame:
+    """A driver-side result as a local DataFrame: collecting it runs no
+    Spark job (an empty frame takes the ``limit(0)`` relation, which a
+    pandas-created one would not be)."""
+    if not len(pdf):
+        return spark.createDataFrame([], schema).limit(0)
+    return spark.createDataFrame(pdf, schema)
+
+
 def _ranked_rows(
-    spark, select, specs: dict[str, QuerySpec], parse, score, k: int, stats=None
-) -> DataFrame:
+    spark, index: Index, select, specs: dict[str, QuerySpec], parse, score, k: int,
+    stats=None,
+):
     """THE ranked-plan builder of every scorer, for one query or a batch:
     ONE scan of the union of all specs' terms and prefix ranges
     (``select(terms, prefixes)``, a ``term_rows`` selector), then per
     doc_shard ``_shard_step`` -> shard-local (query_id, doc_id, score) rows.
-    The caller adds the global top-k tail: ``_topk`` for one query,
-    ``_batch_global_topk`` for a batch. Block skipping stays per-query
-    exact: every spec runs its own kernel over the shared rows. With the
-    cached dictionary ``stats``, terms outside it have no packed rows and
-    drop out here; a plan left without terms is the empty frame, no job."""
+    Two executions of that one plan (``_one_shard``): over one doc_shard
+    the rows are collected and the step runs on the driver, giving a pandas
+    frame (the position stream stays ``unread`` unless a spec has a phrase);
+    over several, a Spark DataFrame of ``groupBy("doc_shard")
+    .applyInPandas``. The same kernel sees the same rows either way, so
+    scores are equal. The caller adds the global top-k tail, which takes
+    either: ``_topk`` for one query, ``_batch_global_topk`` for a batch.
+    Block skipping stays per-query exact: every spec runs its own kernel
+    over the shared rows. With the cached dictionary ``stats``, terms
+    outside it have no packed rows and drop out here; a plan left without
+    terms, or with k = 0, is the empty frame and runs no job."""
     terms = list(dict.fromkeys(t for s in specs.values() for t in [*s.phrase, *s.keywords]))
     prefixes = tuple(dict.fromkeys(p for s in specs.values() for p in s.prefixes))
     if stats is not None and not prefixes:
         terms = [t for t in terms if t in stats]
-    if not terms and not prefixes:
+    if k == 0 or (not terms and not prefixes):
         # limit(0) makes it an empty local relation: collecting it (and any
         # top-k tail over it) runs no job
         return spark.createDataFrame([], SHARD_ROWS_SCHEMA).limit(0)
-    return select(terms, prefixes).groupBy("doc_shard").applyInPandas(
-        _shard_step(specs, parse, score, k), SHARD_ROWS_SCHEMA
-    )
+    step = _shard_step(specs, parse, score, k)
+    if not _one_shard(index):
+        return select(terms, prefixes).groupBy("doc_shard").applyInPandas(step, SHARD_ROWS_SCHEMA)
+    unread = () if any(s.phrase for s in specs.values()) else ("pos_vb", "blk_pos_off")
+    return _collect_shards(select(terms, prefixes, unread), step, _empty_batch_pdf())
 
 
 def _bm25(fields: dict, k: int):
@@ -442,9 +494,15 @@ def _bm25(fields: dict, k: int):
     )
 
 
-def _topk(local: DataFrame, k: int) -> DataFrame:
-    """One query's global top-k: a tiny TakeOrderedAndProject over the
-    n_shards * k shard-local rows."""
+def _topk(spark, local, k: int) -> DataFrame:
+    """One query's global top-k over ``_ranked_rows``' shard-local rows:
+    on a driver plan a pandas sort (score DESC, doc_id ASC) and head k,
+    returned localized; else a tiny TakeOrderedAndProject over the
+    n_shards * k rows. (A Spark sort over the localized frame would run a
+    job of its own, so the driver tail stays in pandas.)"""
+    if isinstance(local, pd.DataFrame):
+        top = local.sort_values(["score", "doc_id"], ascending=[False, True]).head(k)
+        return _localized(spark, top[["doc_id", "score"]], "doc_id long, score double")
     return (
         local.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
@@ -452,12 +510,23 @@ def _topk(local: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _batch_global_topk(local: DataFrame, k: int) -> DataFrame:
-    """Per-query global top-k over the shard-local batch rows: one window
-    (n_shards * k * n_queries tiny rows; Spark pushes a WindowGroupLimit
-    below the exchange so each partition pre-prunes to k), then the final
-    presentation sort by (query_id, rank) — two hash exchanges plus that
-    sort's range exchange."""
+def _batch_global_topk(spark, local, k: int) -> DataFrame:
+    """Per-query global top-k over the shard-local batch rows, sorted by
+    (query_id, rank). On a driver plan: pandas ranks each query's rows by
+    (score DESC, doc_id ASC) and keeps rank <= k, returned localized. Else
+    one window (n_shards * k * n_queries tiny rows; Spark pushes a
+    WindowGroupLimit below the exchange so each partition pre-prunes to k),
+    then the final presentation sort — two hash exchanges plus that sort's
+    range exchange."""
+    if isinstance(local, pd.DataFrame):
+        ranked = local.sort_values(
+            ["query_id", "score", "doc_id"], ascending=[True, False, True]
+        )
+        ranked.insert(1, "rank", ranked.groupby("query_id").cumcount() + 1)
+        return _localized(
+            spark, ranked[ranked["rank"] <= k],
+            "query_id string, rank int, doc_id long, score double",
+        )
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(
@@ -491,8 +560,8 @@ def wand_topk(
     the kernel multiplies idf); every term in a ``prefixes`` range is a
     query term too. ONE Spark action (``term_rows``)."""
     spec = QuerySpec([], list(terms), tuple(prefixes), weights)
-    return _topk(_ranked_rows(
-        spark, _idf_rows(index, n_term_buckets), {"q": spec},
+    return _topk(spark, _ranked_rows(
+        spark, index, _idf_rows(index, n_term_buckets), {"q": spec},
         *_bm25(_field_norms(index), k), k,
     ), k)
 
@@ -513,12 +582,12 @@ def mixed_topk(
     action: ([], kw) is a keyword query, (ph, []) an exact phrase, (ph, kw)
     a Mixed query ('"exact phrase" extra words'). Every term's packed rows
     arrive in one bucket-pruned scan and each doc_shard runs phrase-eval +
-    seeded WAND in a single applyInPandas pass (``_bm25_scores``).
+    seeded WAND in a single pass (``_bm25_scores``).
     ``weights``/``prefixes`` apply to the keyword part, as in
     ``wand_topk``; ``stats`` is the cached dictionary (``term_rows``)."""
     spec = QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
-    return _topk(_ranked_rows(
-        spark, _idf_rows(index, n_term_buckets, stats), {"q": spec},
+    return _topk(spark, _ranked_rows(
+        spark, index, _idf_rows(index, n_term_buckets, stats), {"q": spec},
         *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
@@ -535,8 +604,8 @@ def phrase_topk(
     a bounded local top-k. A phrase term missing from the whole index means
     no shard holds every term, so each returns empty on its own — no
     driver-side existence collect."""
-    return _topk(_ranked_rows(
-        spark, _idf_rows(index, n_term_buckets), {"q": QuerySpec(list(terms), [])},
+    return _topk(spark, _ranked_rows(
+        spark, index, _idf_rows(index, n_term_buckets), {"q": QuerySpec(list(terms), [])},
         *_bm25(_field_norms(index), k), k,
     ), k)
 
@@ -566,8 +635,8 @@ def batch_topk(
     src/SearchEngine/SearchEngineTest.java:19-56 driving
     AwesomeSearchEngine.java; batching is the Spark-first upgrade of that
     loop)."""
-    return _batch_global_topk(_ranked_rows(
-        spark, _idf_rows(index, n_term_buckets, stats), _pairs(specs),
+    return _batch_global_topk(spark, _ranked_rows(
+        spark, index, _idf_rows(index, n_term_buckets, stats), _pairs(specs),
         *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
@@ -619,13 +688,13 @@ def _ql_scores(shard, spec: QuerySpec):
 
 
 def _cf_rows(index: Index, n_term_buckets: int | None, stats=None):
-    """Row selector for QL plans over ``index``: (terms, prefixes) -> packed
-    rows with the GLOBAL collection frequency (aliased cf_global: packed
-    group rows carry a per-(term, doc_shard) cf; the JM background model
-    needs the term's corpus-wide cf)."""
+    """Row selector for QL plans over ``index``: (terms, prefixes[, unread
+    packed columns]) -> packed rows with the GLOBAL collection frequency
+    (aliased cf_global: packed group rows carry a per-(term, doc_shard) cf;
+    the JM background model needs the term's corpus-wide cf)."""
     cf = F.col("cf").alias("cf_global")
-    return lambda terms, prefixes: term_rows(
-        index.packed, index.term_stats, terms, n_term_buckets or index.n_term_buckets,
+    return lambda terms, prefixes, unread=(): term_rows(
+        index.packed.drop(*unread), index.term_stats, terms, n_term_buckets or index.n_term_buckets,
         [cf], prefixes, stats=stats,
     )
 
@@ -668,9 +737,9 @@ def ql_topk(
     ``stats``, else broadcast), per-shard decode (dl rides in dls_vb, so no
     doc_map join), tiny global top-k."""
     spec = QuerySpec(list(phrase_terms), list(terms), tuple(prefixes), weights)
-    return _topk(_ranked_rows(
-        spark, _cf_rows(index, n_term_buckets, stats), {"q": spec}, *_ql(index, lam), k,
-        stats,
+    return _topk(spark, _ranked_rows(
+        spark, index, _cf_rows(index, n_term_buckets, stats), {"q": spec}, *_ql(index, lam),
+        k, stats,
     ), k)
 
 
@@ -691,9 +760,9 @@ def ql_topk_many(
     the same builder and sum through ``_ql_scores`` in the same term order
     (tests/test_batch.py). ``stats`` is the cached dictionary
     (``term_rows``)."""
-    return _batch_global_topk(_ranked_rows(
-        spark, _cf_rows(index, n_term_buckets, stats), _pairs(specs), *_ql(index, lam), k,
-        stats,
+    return _batch_global_topk(spark, _ranked_rows(
+        spark, index, _cf_rows(index, n_term_buckets, stats), _pairs(specs),
+        *_ql(index, lam), k, stats,
     ), k)
 
 
@@ -883,17 +952,23 @@ def boolean_docs(
     """Boolean doc-set query over the packed index: per-shard decode of the
     involved terms' doc_id blobs, numpy set algebra (``_eval_docset``),
     recency top-k (doc_id DESC — ref: QueryProcessor.java:112-114).
-    ``links`` carries the spec's LinkTo leaves as (target, doc_id) rows;
-    keyed by doc_shard they join the term rows through a cogroup, so the
-    query stays ONE Spark action. Returns (doc_id, score NULL)."""
+    ``links`` carries the spec's LinkTo leaves as (target, doc_id) rows,
+    keyed by doc_shard. Over one doc_shard (``_one_shard``) the term rows
+    and the link rows arrive in ONE collect (a union) and every shard is
+    evaluated on the driver, with the top-k tail in numpy; over several,
+    the links join the term rows through a cogroup, so the query stays ONE
+    Spark action. Returns (doc_id, score NULL)."""
     terms, prefixes = _spec_leaves(spec)
     terms = sorted(set(terms))
-    if not terms and not prefixes and links is None:
-        return spark.createDataFrame([], "doc_id long, score double")
+    if k == 0 or (not terms and not prefixes and links is None):
+        return spark.createDataFrame([], "doc_id long, score double").limit(0)
     packed = _term_filter(
         index.packed, terms, n_term_buckets or index.n_term_buckets, prefixes
     ).select(
         "doc_shard", "term", "doc_ids_vb"
+    )
+    keyed = None if links is None else links.withColumn(
+        "doc_shard", doc_shard_col(index.doc_shard_size)
     )
 
     def shard_docs(left: pd.DataFrame, linked: pd.DataFrame | None) -> pd.DataFrame:
@@ -911,21 +986,29 @@ def boolean_docs(
         out = np.sort(out)[::-1][:k]  # shard-local recency top-k
         return pd.DataFrame({"doc_id": out})
 
-    if links is None:
-        def shard_eval(left: pd.DataFrame) -> pd.DataFrame:
-            return shard_docs(left, None)
+    if _one_shard(index):
+        def shard_union(g: pd.DataFrame) -> pd.DataFrame:
+            if keyed is None:
+                return shard_docs(g, None)
+            is_link = g["term"].isna()  # the union's link rows carry no term
+            return shard_docs(g[~is_link], g.loc[is_link, ["target", "doc_id"]].astype("int64"))
 
-        local = packed.groupBy("doc_shard").applyInPandas(shard_eval, DOCSET_SCHEMA)
+        rows = packed if keyed is None else packed.unionByName(keyed, allowMissingColumns=True)
+        docs = _collect_shards(rows, shard_union, pd.DataFrame({"doc_id": []}))
+        top = np.sort(docs["doc_id"].to_numpy(np.int64))[::-1][:k]
+        top = _localized(spark, pd.DataFrame({"doc_id": top}), DOCSET_SCHEMA)
     else:
-        keyed = links.withColumn("doc_shard", doc_shard_col(index.doc_shard_size))
-        local = packed.groupBy("doc_shard").cogroup(keyed.groupBy("doc_shard")).applyInPandas(
-            shard_docs, DOCSET_SCHEMA
-        )
-    return (
-        local.orderBy(F.col("doc_id").desc())
-        .limit(k)
-        .withColumn("score", F.lit(None).cast("double"))
-    )
+        if keyed is None:
+            def shard_eval(left: pd.DataFrame) -> pd.DataFrame:
+                return shard_docs(left, None)
+
+            local = packed.groupBy("doc_shard").applyInPandas(shard_eval, DOCSET_SCHEMA)
+        else:
+            local = packed.groupBy("doc_shard").cogroup(keyed.groupBy("doc_shard")).applyInPandas(
+                shard_docs, DOCSET_SCHEMA
+            )
+        top = local.orderBy(F.col("doc_id").desc()).limit(k)
+    return top.withColumn("score", F.lit(None).cast("double"))
 
 
 def decode_postings(index: Index, term: str, n_term_buckets: int | None = None,

@@ -14,8 +14,9 @@ avgdl). The output root uses the same stage layout, so jobs/query.py
 serves it unchanged. Doc sets must be disjoint (re-ingest/tombstone
 resolution belongs to the streaming path, upstream of packing); sources
 that cannot merge (shared doc_ids, mismatched doc_shard_size, bucket count
-or stemming, a root load_index cannot serve) end with a one-line error on
-stderr and exit code 2.
+or stemming, a root load_index cannot serve) and an ``--out`` that is one
+of the input roots end with a one-line error on stderr and exit code 2,
+before anything is written.
 """
 
 from __future__ import annotations
@@ -49,6 +50,12 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
     if len(args.roots) < 2:
         ap.error("need at least two index roots to merge")
+    if any(os.path.realpath(r) == os.path.realpath(args.out) for r in args.roots):
+        # the merge reads its inputs lazily while writing: overwriting one
+        # of them would destroy it halfway through
+        print(f"error: --out {args.out!r} is one of the input roots; merge into a "
+              "new root", file=sys.stderr)
+        return 2
 
     from awesome_spark_search.merge import merge_packed_indexes
     from query import load_index  # same jobs/ dir

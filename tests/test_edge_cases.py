@@ -295,3 +295,32 @@ def test_prf_terms_come_from_snippets_not_full_content(spark):
     terms = ex._prf_terms(pq, {}, top, 3)
     assert "zzfiller" not in terms
     assert {"beacon", "signal"} <= set(terms)
+
+
+@pytest.mark.parametrize("doc_shard_size", [4, 1 << 20])
+def test_k_zero_returns_no_rows_and_negative_k_raises(spark, doc_shard_size):
+    """k = 0 returns no rows for every query type, on a multi-shard index
+    (the distributed plan) and a one-shard one (the driver plan); k < 0 is
+    a ValueError from search and search_many alike, never a Spark error or
+    a silently shortened list."""
+    from awesome_spark_search import wand
+
+    src = spark.createDataFrame(
+        [(0, "buffer merge stream"), (1, "buffer compact stream"),
+         (2, "merge window stream"), (5, "buffer merge window")],
+        "doc_id long, content string",
+    )
+    idx = build_index(spark, src, do_stem=False, doc_shard_size=doc_shard_size)
+    assert wand._one_shard(idx) == (doc_shard_size > 5)
+    ex = QueryExecutor(spark, idx, source_df=src)
+    queries = ["buffer merge", '"buffer merge"', '"buffer merge" stream',
+               "buffer AND merge", "buffer #2", "bufer"]
+    for q in queries:
+        assert ex.search(q, k=2).collect(), q
+        assert ex.search(q, k=0).collect() == [], q
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            ex.search(q, k=-1)
+    batch = {"a": "buffer merge", "b": '"buffer merge"', "c": "stream"}
+    assert ex.search_many(batch, k=0).collect() == []
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        ex.search_many(batch, k=-1)

@@ -177,3 +177,44 @@ def test_query_job_reads_the_index_bucket_count(corpus_dir, tmp_path_factory):
         json.dump(s, f)
     err = _run(["jobs/query.py", "--index", roots["b8"], "buffer"], returncode=2)
     assert "error:" in err and "rebuild" in err and "Traceback" not in err
+
+
+def _tree(root):
+    """{relative path: file bytes} of every file under ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def test_merge_into_an_input_root_and_negative_k_are_refused(corpus_dir, tmp_path_factory):
+    """jobs/merge_index.py refuses an --out that is one of its input roots
+    (spelled differently, so the check compares real paths) with a one-line
+    error, before writing anything: the input's files are unchanged.
+    jobs/query.py refuses --k -1 the same way."""
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("jobs_out_is_input")
+    full_pdf = pd.read_parquet(corpus_dir)
+    roots = {}
+    for name, parity in (("a", 0), ("b", 1)):
+        path = str(d / f"{name}.parquet")
+        full_pdf[full_pdf.doc_id % 2 == parity].to_parquet(path, index=False)
+        roots[name] = str(d / f"ix_{name}")
+        _run(["jobs/build_index.py", "--source", path, "--out", roots[name]])
+    before = _tree(roots["a"])
+    err = _run(
+        ["jobs/merge_index.py", "--out", roots["a"] + "/./", roots["a"], roots["b"]],
+        returncode=2,
+    )
+    # refused before Spark starts: the error line is all there is
+    assert err.strip().startswith("error:") and "input roots" in err, err
+    assert len(err.strip().splitlines()) == 1, err
+    assert _tree(roots["a"]) == before
+
+    err = _run(["jobs/query.py", "--index", roots["a"], "--k", "-1", "buffer"], returncode=2)
+    assert err.strip().splitlines()[-1] == "error: k must be >= 0, not -1", err
+    assert "Traceback" not in err

@@ -140,3 +140,62 @@ def test_fielded_executor_plans_carry_cached_stats_as_literals(spark, fielded_ck
         assert len(re.findall(r"Exchange hashpartitioning", plan)) == n_hash, plan[:3000]
         rows = df.collect()
         assert rows and all(r["score"] > 0 for r in rows)
+
+
+@pytest.fixture(scope="module")
+def one_shard_ckpt_index(spark, tmp_path_factory):
+    ckpt = str(tmp_path_factory.mktemp("plan_idx_one_shard"))
+    src = spark.createDataFrame(corpus.generate_pandas(120, seed=21))
+    return build_index(spark, src, do_stem=True, checkpoint_dir=ckpt)
+
+
+def test_one_shard_plans_run_one_job_with_no_exchange(spark, one_shard_ckpt_index, monkeypatch):
+    """Over one doc_shard every executor query type runs on the driver: ONE
+    Spark job (the Arrow collect of the term rows), whose plan is the
+    bucket-pruned packed scan with no exchange and no pandas UDF — keyword,
+    phrase, Mixed, Boolean, a QL keyword query and a 3-query batch."""
+    from awesome_spark_search import wand
+    from awesome_spark_search.executor import QueryExecutor
+
+    collected = []
+    real = wand._collect_shards
+
+    def recording(rows, *args):
+        collected.append(rows)
+        return real(rows, *args)
+
+    monkeypatch.setattr(wand, "_collect_shards", recording)
+    bm25 = QueryExecutor(spark, one_shard_ckpt_index)
+    ql = QueryExecutor(spark, one_shard_ckpt_index, scorer="ql")
+    for ex in (bm25, ql):
+        ex.search("buffer", k=5).collect()  # warm: caches the dictionary
+    sc = spark.sparkContext
+    batch = {"q0": "buffer merge", "q1": '"merge sort"', "q2": "scan"}
+    cases = {
+        "keyword": lambda: bm25.search("buffer merge", k=10),
+        "phrase": lambda: bm25.search('"merge sort"', k=10),
+        "mixed": lambda: bm25.search('"merge sort" buffer', k=10),
+        "boolean": lambda: bm25.search("buffer AND NOT merge", k=10),
+        "ql": lambda: ql.search("buffer merge", k=10),
+        "batch": lambda: bm25.search_many(batch, k=5),
+    }
+    for name, run in cases.items():
+        collected.clear()
+        group = f"one_shard_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = run().collect()
+        finally:
+            sc.setJobGroup(None, None)
+        assert rows, name
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
+        assert len(collected) == 1, name
+        plan = _plan(collected[0])
+        assert "Exchange" not in plan, (name, plan[:3000])
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan[:3000])
+        assert "FlatMapCoGroupsInPandas" not in plan, (name, plan[:3000])
+        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert m and "term_bucket" in m.group(1), (name, plan[:2000])
+        if name in ("keyword", "ql"):
+            # no phrase: the position stream is never read
+            assert "pos_vb" not in plan, (name, plan[:3000])

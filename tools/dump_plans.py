@@ -3,7 +3,9 @@ the .explain('formatted') evidence behind the plan-gate tests
 (tests/test_plans.py): every query type serves from the packed index, with
 partition pruning, filter pushdown, query-term-filtered broadcasts (or,
 on the executor path with a cached dictionary, literal term stats) and
-single-shuffle shapes.
+single-shuffle shapes. Each serving section names its path: the
+distributed plan of an index with several doc_shards, or the driver path
+of a one-shard index, whose plan is the one collect of its term rows.
 
 Usage: python tools/dump_plans.py [out.md]
 """
@@ -20,7 +22,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from awesome_spark_search import corpus, dedup
+    from awesome_spark_search import corpus, dedup, wand
     from awesome_spark_search.build import build_index
     from awesome_spark_search.session import get_spark
     from awesome_spark_search.wand import (
@@ -54,21 +56,41 @@ def main() -> int:
         one, _ = QueryExecutor(spark, idx)._plans()
         return one(QuerySpec([], terms), 10)
 
+    def _one_shard_plan():
+        # default doc_shard_size: the 300 docs are one doc_shard, so the
+        # query runs on the driver; its plan is the frame it collects
+        one = build_index(spark, src, do_stem=True,
+                          checkpoint_dir=tempfile.mkdtemp(prefix="ass_plans_one_"))
+        seen, real = [], wand._collect_shards
+
+        def recording(rows, *args):
+            seen.append(rows)
+            return real(rows, *args)
+
+        wand._collect_shards = recording
+        try:
+            _executor_plan(one, ["buffer", "merg", "scan"])
+        finally:
+            wand._collect_shards = real
+        return seen[0]
+
     def _fielded_plan():
         fidx = build_index(
             spark, src.select("doc_id", "content", "path"), do_stem=False,
-            field_weights={"content": 1.0, "path": 0.5},
+            field_weights={"content": 1.0, "path": 0.5}, doc_shard_size=64,
         )
         return _executor_plan(fidx, ["buffer", "merge"])
 
+    DIST = "Distributed path: 5 doc_shards of 64 docs."
+    BUILD = "Build-side operator: no serving path."
     sections = [
-        ("Block-max WAND top-10 over the packed index",
+        ("Block-max WAND top-10 over the packed index", DIST,
          "ONE action: broadcast of the term-filtered idf rows joined onto "
          "bucket-pruned packed blobs, per-shard applyInPandas (the one "
          "ranked-plan builder's shard step, emitting query_id rows), global "
          "TakeOrderedAndProject.",
          wand_topk(spark, idx, ["buffer", "merge", "scan"], k=10)),
-        ("Batched multi-query top-k (3 queries, ONE action)",
+        ("Batched multi-query top-k (3 queries, ONE action)", DIST,
          "The same builder as the single-query plans: the whole workload "
          "shares one bucket-pruned packed scan (union of all terms) and one "
          "per-shard applyInPandas running each query's block-max WAND loop; "
@@ -82,12 +104,12 @@ def main() -> int:
               "q2": ([], ["buffer", "scan"])},
              k=10,
          )),
-        ("QL/JM top-10 (phrase, Mixed and PRF forms share this plan)",
+        ("QL/JM top-10 (phrase, Mixed and PRF forms share this plan)", DIST,
          "WAND's one-action shape under the QL scorer: broadcast of the "
          "term-filtered GLOBAL cf rows, per-shard full decode (no admission "
          "bound for QL), global TakeOrderedAndProject.",
          ql_topk(spark, idx, ["buffer", "merg", "scan"], k=10)),
-        ("Batched QL/JM (keyword, phrase and Mixed; shared per-term decode)",
+        ("Batched QL/JM (keyword, phrase and Mixed; shared per-term decode)", DIST,
          "The batch shape under the QL scorer: broadcast of "
          "the term-filtered GLOBAL cf rows, per-shard decode shared by every "
          "query that uses a term (exact for QL - nothing skips), window "
@@ -97,40 +119,40 @@ def main() -> int:
              {"q0": ([], ["buffer", "merge"]), "q1": (["merg", "sort"], ["scan"])},
              k=10,
          )),
-        ("Mixed phrase+keyword over the packed index (one per-shard pass)",
+        ("Mixed phrase+keyword over the packed index (one per-shard pass)", DIST,
          "Same ONE-action shape as WAND: every term's packed rows arrive in "
          "one bucket-pruned scan and each doc_shard runs phrase-eval + "
          "candidate-seeded WAND inside a single applyInPandas.",
          mixed_topk(spark, idx, ["buffer", "merge"], ["scan"], k=10)),
-        ("Exact phrase over the packed index",
+        ("Exact phrase over the packed index", DIST,
          "The same one-action shape: the phrase terms' rows, per-shard "
          "doc-id intersection, then positions decoded only for candidate "
          "blocks.",
          phrase_topk(spark, idx, ["merg", "sort"], k=10)),
-        ("Prefix past the cached vocabulary (term range)",
+        ("Prefix past the cached vocabulary (term range)", DIST,
          "A prefix that cannot be expanded on the driver selects the term "
          "range [p, p + U+FFFF): no term_bucket pruning, the range pushes "
          "down to both scans; the rest is the WAND plan. PRF's weighted "
          "second pass has this plan too (weights scale idf in the kernel).",
          wand_topk(spark, idx, ["scan"], k=10, weights={"scan": 0.25},
                    prefixes=("tok",))),
-        ("Boolean doc-set algebra (AND/OR/NOT)",
+        ("Boolean doc-set algebra (AND/OR/NOT)", DIST,
          "Bucket-pruned scan of the doc-id blobs only, per-shard numpy set "
          "algebra, recency top-k. LinkTo leaves cogroup their citing docs "
          "onto the same shards.",
          boolean_docs(spark, idx, ("and", ("terms", ["merg"]),
                                    ("not", ("terms", ["buffer"]),
                                     ("terms", ["scan"]))), k=10)),
-        ("SimHash (single groupBy, 32 codegen sums)",
+        ("SimHash (single groupBy, 32 codegen sums)", BUILD,
          "No per-bit row expansion: one exchange keyed doc_id carrying 32 "
          "partial sums.",
          dedup.simhash(src.select("doc_id", F.col("content").alias("text")))),
-        ("LSH candidate pairs (guarded path)",
+        ("LSH candidate pairs (guarded path)", BUILD,
          "Exact-dup collapse, one banding explode, ONE shuffle to bucket "
          "arrays, JVM pair expansion bounded by the bucket cap.",
          dedup.lsh_candidate_pairs(
              src.select("doc_id", F.col("content").alias("text")))),
-        ("Keyword top-10 with the cached dictionary (executor path)",
+        ("Keyword top-10 with the cached dictionary (executor path)", DIST,
          "The plan QueryExecutor builds when its driver-cached {term: (df, "
          "cf)} dictionary is loaded: idf is computed from literal df map "
          "lookups on the bucket-pruned packed rows - no term_stats scan, no "
@@ -139,7 +161,7 @@ def main() -> int:
          # built last: loading the dictionary plans a job of its own,
          # which would renumber every plan formatted after it
          lambda: _executor_plan(idx, ["buffer", "merg", "scan"])),
-        ("Fielded (zone-weighted) keyword top-10 (executor path)",
+        ("Fielded (zone-weighted) keyword top-10 (executor path)", DIST,
          "The same executor plan over a two-field index (content w=1.0, "
          "path w=0.5): packed rows carry their field, and the per-shard "
          "kernel scales each row's idf by its zone weight and normalizes by "
@@ -147,6 +169,16 @@ def main() -> int:
          "it carries the cached dictionary's df as literals - no term_stats "
          "scan, no join, no broadcast.",
          _fielded_plan),
+        ("Keyword top-10, executor, one doc_shard (driver path)",
+         "Driver path: 1 doc_shard (the same 300 docs at the default "
+         "doc_shard_size).",
+         "The plan the executor's keyword query collects when the index has "
+         "one doc_shard: the bucket-pruned packed scan with df as literals "
+         "and no position stream, collected with one Arrow collect - no "
+         "exchange, no pandas UDF. The shard kernel and the top-k then run "
+         "on the driver, over exactly the rows the distributed plan's one "
+         "kernel task would get.",
+         _one_shard_plan),
     ]
     lines = [
         "# PLANS — formatted physical plans of the headline operators",
@@ -157,9 +189,9 @@ def main() -> int:
         "after any operator change.",
         "",
     ]
-    for title, note, df in sections:
+    for title, path, note, df in sections:
         df = df() if callable(df) else df
-        lines += [f"## {title}", "", note, "", "```", fmt(df).rstrip(), "```", ""]
+        lines += [f"## {title}", "", path, "", note, "", "```", fmt(df).rstrip(), "```", ""]
     with open(out_path, "w") as f:
         f.write("\n".join(lines))
     print(f"wrote {out_path}")
