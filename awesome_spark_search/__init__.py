@@ -14,3 +14,8 @@ checking only.
 """
 
 __version__ = "0.1.0"
+
+from awesome_spark_search import pyworker as _pyworker  # noqa: E402
+
+if _pyworker.in_spark_worker():
+    _pyworker.install()

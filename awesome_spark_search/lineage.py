@@ -21,6 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def write_json_atomic(path: str, record: dict) -> None:
+    """Write ``record`` as JSON to ``path`` via a temp file and os.replace:
+    a reader sees the old file, no file, or the whole new one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(record, f, indent=1)
+    os.replace(tmp, path)
+
+
 class StageRunner:
     """Runs named stages; each stage = DataFrame -> Parquet + manifest."""
 
@@ -95,9 +104,6 @@ class StageRunner:
             "wall_sec": round(time.time() - t0, 3),
             "finished_at_unix": int(time.time()),
         }
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(record, f, indent=1)
-        os.replace(tmp, manifest)  # atomic: manifest exists => stage complete
+        write_json_atomic(manifest, record)  # manifest exists => stage complete
         self.metrics.append(record)
         return result

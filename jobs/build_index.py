@@ -10,7 +10,9 @@ The source table must carry (repo, path, commit, lang, content) per the
 input_hint shape; ``doc_id`` is assigned deterministically by
 (repo, path, commit) order if absent. Every stage checkpoints to
 ``<out>/stages/<name>`` with a ``_manifest.json`` (per-partition lineage +
-metrics); a rerun after a kill skips completed stages.
+metrics); a rerun after a kill skips completed stages. ``<out>/build_summary.json``
+is removed before the first stage runs and written last, atomically, so a
+killed build leaves a root jobs/query.py refuses until the rerun completes.
 """
 
 from __future__ import annotations
@@ -43,6 +45,9 @@ def main(argv=None) -> int:
     if "doc_id" not in src.columns:
         src = corpus.assign_doc_ids(src, ["repo", "path", "commit"])
 
+    from query import drop_summary, write_summary  # same jobs/ dir
+
+    drop_summary(args.out)
     t0 = time.time()
     idx = build_index(
         spark,
@@ -63,9 +68,7 @@ def main(argv=None) -> int:
         "docs_per_sec": round(idx.stats.n_docs / max(time.time() - t0, 1e-9), 2),
         "stages": idx.build_metrics,
     }
-    os.makedirs(args.out, exist_ok=True)
-    with open(os.path.join(args.out, "build_summary.json"), "w") as f:
-        json.dump(summary, f, indent=1)
+    write_summary(args.out, summary)
     print(json.dumps(summary))
     return 0
 

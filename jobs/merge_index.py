@@ -16,7 +16,10 @@ resolution belongs to the streaming path, upstream of packing); sources
 that cannot merge (shared doc_ids, mismatched doc_shard_size, bucket count
 or stemming, a root load_index cannot serve) and an ``--out`` that is one
 of the input roots end with a one-line error on stderr and exit code 2,
-before anything is written.
+before anything is written. An existing build_summary.json under ``--out``
+is removed before the first stage write and the new one is written last,
+atomically, so a merge that dies mid-write leaves a root jobs/query.py
+refuses instead of serving torn stages.
 """
 
 from __future__ import annotations
@@ -58,7 +61,7 @@ def main(argv=None) -> int:
         return 2
 
     from awesome_spark_search.merge import merge_packed_indexes
-    from query import load_index  # same jobs/ dir
+    from query import drop_summary, load_index, write_summary  # same jobs/ dir
 
     spark = SparkSession.builder.appName("ass-merge-index").getOrCreate()
     try:
@@ -83,6 +86,7 @@ def main(argv=None) -> int:
     except ValueError as e:  # sources that cannot merge (overlap, mismatch)
         print(f"error: {e}", file=sys.stderr)
         return 2
+    drop_summary(args.out)
     stages = os.path.join(args.out, "stages")
     (
         merged.packed.repartition("term_bucket")
@@ -112,8 +116,7 @@ def main(argv=None) -> int:
         "merged_from": args.roots,
         "wall_sec": round(time.time() - t0, 2),
     }
-    with open(os.path.join(args.out, "build_summary.json"), "w") as f:
-        json.dump(summary, f)
+    write_summary(args.out, summary)
     print(json.dumps(summary))
     return 0
 

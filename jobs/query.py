@@ -33,7 +33,27 @@ from pyspark.sql import SparkSession
 
 from awesome_spark_search.build import PLAIN_FIELDS, Index, index_stats
 from awesome_spark_search.executor import QueryExecutor
-from awesome_spark_search.lineage import StageRunner
+from awesome_spark_search.lineage import StageRunner, write_json_atomic
+
+
+def summary_path(root: str) -> str:
+    """The root's build_summary.json: written last by jobs/build_index.py and
+    jobs/merge_index.py, after every stage, so its presence marks a whole
+    index."""
+    return os.path.join(root, "build_summary.json")
+
+
+def drop_summary(root: str) -> None:
+    """Remove the root's summary before a job's first stage write: a crash
+    mid-write then leaves a root load_index refuses, never old layout
+    metadata beside half-written stages."""
+    if os.path.exists(summary_path(root)):
+        os.remove(summary_path(root))
+
+
+def write_summary(root: str, summary: dict) -> None:
+    os.makedirs(root, exist_ok=True)
+    write_json_atomic(summary_path(root), summary)
 
 
 def load_index(spark: SparkSession, root: str) -> Index:
@@ -41,8 +61,9 @@ def load_index(spark: SparkSession, root: str) -> Index:
     jobs/merge_index.py: packed postings, term_stats and doc_map (the long
     postings stage is a build intermediate and is not read), laid out as
     its build_summary.json records. ValueError when the root has no
-    readable stages/packed, or predates packed rows carrying their field
-    and the recorded term-bucket count and stemming."""
+    readable stages/packed or no summary (an unfinished or interrupted
+    build or merge), or predates packed rows carrying their field and the
+    recorded term-bucket count and stemming."""
     stages = os.path.join(root, "stages")
     try:
         packed = spark.read.parquet(os.path.join(stages, "packed"))
@@ -51,11 +72,13 @@ def load_index(spark: SparkSession, root: str) -> Index:
             f"the index at {root!r} has no packed postings (stages/packed); "
             "rebuild it with jobs/build_index.py"
         ) from None
-    summary_path = os.path.join(root, "build_summary.json")
-    s = {}
-    if os.path.exists(summary_path):
-        with open(summary_path) as f:
-            s = json.load(f)
+    if not os.path.exists(summary_path(root)):
+        raise ValueError(
+            f"the index at {root!r} has no build_summary.json (an unfinished or "
+            "interrupted build or merge); rebuild it with jobs/build_index.py"
+        )
+    with open(summary_path(root)) as f:
+        s = json.load(f)
     if "field" not in packed.columns or not all(
         k in s for k in ("doc_shard_size", "term_buckets", "do_stem")
     ):

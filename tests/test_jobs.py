@@ -218,3 +218,71 @@ def test_merge_into_an_input_root_and_negative_k_are_refused(corpus_dir, tmp_pat
     err = _run(["jobs/query.py", "--index", roots["a"], "--k", "-1", "buffer"], returncode=2)
     assert err.strip().splitlines()[-1] == "error: k must be >= 0, not -1", err
     assert "Traceback" not in err
+
+
+_CRASH_MID_WRITE = """
+import sys
+
+sys.path.insert(0, "jobs")
+from pyspark.sql.readwriter import DataFrameWriter
+
+stock_parquet = DataFrameWriter.parquet
+
+
+def parquet(self, path, *args, **kwargs):
+    if path.rstrip("/").endswith(sys.argv[1]):
+        raise RuntimeError("simulated crash mid-write")
+    return stock_parquet(self, path, *args, **kwargs)
+
+
+DataFrameWriter.parquet = parquet
+import build_index, merge_index, query
+
+for job, argv in ((merge_index, sys.argv[2:6]), (build_index, sys.argv[6:10])):
+    try:
+        job.main(argv)
+    except RuntimeError as e:
+        print("crashed:", e)
+for root in (sys.argv[3], sys.argv[9]):
+    print("query exit:", query.main(["--index", root, "buffer"]))
+"""
+
+
+def test_a_crash_mid_write_leaves_a_root_query_refuses(corpus_dir, tmp_path_factory):
+    """A merge into a root that holds an index, or a build resuming one,
+    that dies at a stage write leaves no build_summary.json beside the
+    half-written stages, so jobs/query.py refuses the root with its
+    one-line "rebuild" error instead of serving old layout metadata over
+    torn stages."""
+    import shutil
+
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("jobs_torn")
+    full_pdf = pd.read_parquet(corpus_dir)
+    srcs, roots = {}, {}
+    for name, parity in (("a", 0), ("b", 1)):
+        srcs[name] = str(d / f"{name}.parquet")
+        full_pdf[full_pdf.doc_id % 2 == parity].to_parquet(srcs[name], index=False)
+        roots[name] = str(d / f"ix_{name}")
+        _run(["jobs/build_index.py", "--source", srcs[name], "--out", roots[name]])
+    out_m = str(d / "ix_m")
+    shutil.copytree(roots["a"], out_m)  # --out already holds a whole index
+    # the build's packed stage re-runs once its manifest is gone
+    os.remove(os.path.join(roots["a"], "stages", "packed._manifest.json"))
+    merge_argv = ["--out", out_m, roots["a"], roots["b"]]
+    build_argv = ["--source", srcs["a"], "--out", roots["a"]]
+
+    proc = subprocess.run(
+        [sys.executable, "-c", _CRASH_MID_WRITE, "packed", *merge_argv, *build_argv],
+        capture_output=True, text=True, cwd=REPO, timeout=420,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = proc.stdout.splitlines()
+    assert out.count("crashed: simulated crash mid-write") == 2, out
+    assert out.count("query exit: 2") == 2, out
+    errors = [l for l in proc.stderr.splitlines() if l.startswith("error:")]
+    assert len(errors) == 2 and all("rebuild" in e for e in errors), proc.stderr[-4000:]
+    for root in (out_m, roots["a"]):
+        assert not os.path.exists(os.path.join(root, "build_summary.json"))
