@@ -600,10 +600,7 @@ def _packed_merge_roundtrip(spark, sf) -> DataFrame:
         8, "doc_id"
     )
     halves = [
-        build_index(
-            spark, src.filter(f"doc_id % 2 = {i}"),
-            do_stem=False, cache_postings=False,
-        )
+        build_index(spark, src.filter(f"doc_id % 2 = {i}"), do_stem=False)
         for i in (0, 1)
     ]
     merged = merge_packed_indexes(spark, halves)

@@ -407,8 +407,6 @@ def build_index(
     checkpoint_dir: str | None = None,
     n_term_buckets: int = DEFAULT_TERM_BUCKETS,
     doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE,
-    cache: bool = True,
-    cache_postings: bool = True,
     field_weights: dict[str, float] | None = None,
 ) -> Index:
     """Build the full index from a source table.
@@ -418,11 +416,15 @@ def build_index(
     field ``content`` at 1.0), and may carry (repo, path, commit, lang).
     Each field tokenizes independently, so positions (and phrases) never
     run across fields. ``checkpoint_dir`` enables stage-resumable
-    materialization (see lineage.py); None keeps everything lazy/cached
-    (test mode — same plan shapes).
+    materialization (see lineage.py); None builds in memory (same plan
+    shapes), persisting only what is read again: doc_map, packed and
+    term_stats, which queries read, and the long postings only when a
+    multi-field build reads them a second time (``any_field_term_stats``)
+    — a one-field build reads them once, in the pack job.
     """
     fields = dict(field_weights or PLAIN_FIELDS)
     runner = StageRunner(spark, checkpoint_dir)
+    in_memory = checkpoint_dir is None
     meta_cols = [c for c in ("repo", "path", "commit", "lang") if c in source_df.columns]
 
     # Per-document posting accumulation happens map-side inside the Arrow
@@ -440,11 +442,9 @@ def build_index(
         "postings", _postings,
         partition_by=["term_bucket"], sort_within=["term", "doc_id"],
     )
-    if cache and cache_postings and checkpoint_dir is None:
-        # cache_postings=False skips the columnar cache-write of the long
-        # posting table (the single biggest memory-bandwidth item in the
-        # build) — queries serve off the packed index, which is cached
-        # regardless; the long table only feeds packing and merges
+    if in_memory and len(fields) > 1:
+        # the long table is the build's biggest columnar cache write; only
+        # a multi-field build reads it twice (pack, then term_stats)
         postings = postings.persist()
 
     # doc_map never needs Python: sha256 and the stopword-inclusive token
@@ -470,7 +470,7 @@ def build_index(
             ).alias("field_lens"),
         ),
     )
-    if cache and checkpoint_dir is None:
+    if in_memory:
         # persisted BEFORE the stats action below: that one collect both
         # fills the doc_map cache and aggregates it — no separate doc_len
         # scan over the content column ever runs
@@ -485,7 +485,7 @@ def build_index(
         lambda: pack_postings(postings, stats.avgdl_by_field, n_term_buckets, doc_shard_size),
         partition_by=["term_bucket"], sort_within=["term", "doc_shard"],
     )
-    if cache and checkpoint_dir is None:
+    if in_memory:
         # without this, every query replays the whole
         # repartition+sort+pack pipeline (minutes at 10^6 docs)
         packed = packed.persist()
@@ -498,8 +498,7 @@ def build_index(
         ),
         partition_by=["term_bucket"], sort_within=["term"],
     )
-
-    if cache and checkpoint_dir is None:
+    if in_memory:
         term_stats = term_stats.persist()
 
     return Index(

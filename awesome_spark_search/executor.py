@@ -15,8 +15,8 @@ spelling and PRF read the same index:
 * Mixed        -> phrase survivors seed the keyword WAND pass
 * prefix tok*  -> expanded from the cached vocabulary, else a term range
 * AND/OR/NOT   -> per-shard numpy set algebra (``wand.boolean_docs``)
-* LinkTo:ID    -> packed citation index, cogrouped by shard
-                  into a Boolean
+* LinkTo:ID    -> packed citation rows joined by shard into a Boolean;
+                  a bare LinkTo is the one-leaf Boolean
 * spelling     -> Damerau-Levenshtein correction when a term has no postings
 * PRF #N       -> two-pass search, +10 most frequent tokens of the generated
                   snippets of the top-N docs at weight 0.25
@@ -33,10 +33,10 @@ parse, ONE spelling-correction pass, ``wand.QuerySpec``s, one scorer
 dispatch (``_plans``) — and every ranked plan comes out of
 one builder (``wand._ranked_rows``); a single query ends in a
 TakeOrderedAndProject, a batch in a per-query window. On an index with one
-doc_shard (``wand._one_shard``) those plans, and Boolean ones, run on the
-driver: the ``wand`` entry points collect the term rows once (a JVM-only
-scan, the query's ONE Spark job), run the shard kernel in the calling
-thread and return a localized frame, whose collect here runs no job.
+doc_shard (``wand._one_shard``) those plans, and Boolean/LinkTo ones, run
+on the driver (``wand._run_shards``): the ``wand`` entry points collect the
+rows once (the query's ONE Spark job), run the shard step in the calling
+thread and return a local frame, which ``search`` returns as it is.
 Corrections travel as values, never as executor state, so concurrent
 ``search`` calls on one executor are safe — the kernel then runs in the
 calling threads.
@@ -237,57 +237,52 @@ class QueryExecutor:
                 self._bool_spec(ast.right, corrections, links),
             )
         if isinstance(ast, Q.LinkTo):
-            links.append(
-                self._linkto_docs(ast).select(
-                    F.lit(ast.doc_id).cast("long").alias("target"), "doc_id"
-                )
-            )
+            links.append(self._linkto_docs(ast))
             return ("link", ast.doc_id)
         terms, ranges = self._keyword_terms(ast.terms, corrections)
         return ("terms", terms, ranges) if ranges else ("terms", terms)
 
     def _linkto_docs(self, ast: Q.LinkTo) -> DataFrame:
-        """LinkTo serves off the PACKED citation index (delta+VByte citing
-        lists, ref: CitationIndexReader.java:61-112 — the reference's
-        serving path IS the compressed index): the dst filter prunes to the
-        target's few rows before any decode."""
+        """A LinkTo leaf's (target, doc_id) rows off the PACKED citation
+        index (delta+VByte citing lists, ref: CitationIndexReader.java:
+        61-112 — the reference's serving path IS the compressed index): the
+        dst filter prunes to the target's few rows before any decode. No
+        order: the rows enter ``wand.boolean_docs``' union."""
         if self.packed_citations is None:
             raise ValueError("LinkTo query requires packed_citations")
-        from .pagerank import citations_of_packed
+        from .pagerank import unpack_citations
 
-        return citations_of_packed(self.packed_citations, ast.doc_id)
+        return unpack_citations(
+            self.packed_citations.filter(F.col("dst") == ast.doc_id)
+        ).select(F.col("dst").alias("target"), F.col("src").alias("doc_id"))
 
     RESULT_SCHEMA = "doc_id long, score double"
 
-    def _localize(self, rows) -> DataFrame:
-        """k collected rows -> a local DataFrame via the Arrow/pandas path.
+    def _localize(self, df: DataFrame) -> DataFrame:
+        """A query's k-row result as a local DataFrame, whose collect runs
+        no Spark job. A frame that is already local (``isLocal()``: the
+        pandas-built result of a driver-path plan) is returned as it is;
+        any other is collected once and re-wrapped from pandas
+        (``wand._localized``).
 
         createDataFrame(list) parallelizes into defaultParallelism (32)
         slices — a 32-task job costing ~0.5 s per query just to re-wrap 10
         rows; the Arrow conversion is one batch, ~15x faster (measured).
-        score uses the NULLABLE Float64 pandas dtype so Boolean/LinkTo
-        queries' NULL scores stay NULL (a float64 NaN would NOT equal the
-        oracle's NULL). The trailing nan->NULL projection makes that hold
-        under ANY caller session config: with
+        score is an object column holding None for Boolean/LinkTo queries'
+        NULL scores: it lands as NULL (never NaN, which would NOT equal the
+        oracle's NULL) under ANY caller session config, also with
         spark.sql.execution.arrow.pyspark.enabled=false (the Spark default
-        — the external driver's session is not ours to configure) the
-        Float64 NA lands as NaN, which the when() folds back to NULL; real
-        scores are finite BM25/QL sums, never NaN."""
+        — the external driver's session is not ours to configure)."""
+        if df.isLocal():
+            return df
         import pandas as pd
 
-        pdf = pd.DataFrame(
-            {
-                "doc_id": pd.array([r["doc_id"] for r in rows], dtype="int64"),
-                "score": pd.array([r["score"] for r in rows], dtype="Float64"),
-            }
-        )
-        df = self.spark.createDataFrame(pdf, self.RESULT_SCHEMA)
-        return df.select(
-            "doc_id",
-            F.when(F.isnan("score"), F.lit(None).cast("double"))
-            .otherwise(F.col("score"))
-            .alias("score"),
-        )
+        rows = df.collect()
+        pdf = pd.DataFrame({
+            "doc_id": pd.Series([r["doc_id"] for r in rows], dtype="int64"),
+            "score": pd.Series([r["score"] for r in rows], dtype="object"),
+        })
+        return wand._localized(self.spark, pdf, self.RESULT_SCHEMA)
 
     def search(self, query: str, k: int = 10) -> DataFrame:
         """Full pipeline. Returns (doc_id, score) for ranked query types,
@@ -401,28 +396,24 @@ class QueryExecutor:
             lambda pairs, k: wand.batch_topk(spark, index, pairs, k, stats=stats),
         )
 
-    def _run_once(self, pq: Q.ParsedQuery, corrections: dict[str, str], k: int) -> list:
+    def _run_once(self, pq: Q.ParsedQuery, corrections: dict[str, str], k: int) -> DataFrame:
+        """One query's (doc_id, score) frame: Boolean and LinkTo (the
+        one-leaf Boolean) through ``wand.boolean_docs``, ranked types
+        through ``_plans``, PRF as two ranked passes."""
         ast = pq.ast
-        if isinstance(ast, Q.LinkTo):
-            return (
-                self._linkto_docs(ast)
-                .withColumn("score", F.lit(None).cast("double"))
-                .orderBy(F.col("doc_id").desc())
-                .limit(k)
-                .collect()
-            )
-        if isinstance(ast, Q.Boolean):
+        if Q.is_unranked(ast):
             links: list[DataFrame] = []
             spec = self._bool_spec(ast, corrections, links)
             return wand.boolean_docs(
                 self.spark, self.index, spec, k=k,
                 links=reduce(DataFrame.unionByName, links) if links else None,
-            ).collect()
+            )
         spec = self._ranked_spec(ast, corrections)
         one, _ = self._plans()
-        top = one(spec, k).collect()
         if pq.prf == 0:
-            return top
+            return one(spec, k)
+        first = self._localize(one(spec, k))  # its rows feed pass 2 and may be the answer
+        top = first.collect()
         # two-pass pseudo-relevance feedback: pass 2 adds the expansion
         # terms as keywords at 0.25 (ref: DocumentRanker.java:175-185).
         # _prf_terms filters against the RAW query tokens, so an expansion
@@ -430,13 +421,13 @@ class QueryExecutor:
         # it then scores at 1.0 + 0.25
         prf_terms = self._prf_terms(pq, corrections, top, pq.prf)
         if not prf_terms:
-            return top
+            return first
         weights = {
             t: (1.0 + PRF_WEIGHT) if spec.is_keyword(t) else PRF_WEIGHT
             for t in prf_terms
         }
         keywords = spec.keywords + [t for t in prf_terms if not spec.is_keyword(t)]
-        return one(spec._replace(keywords=keywords, weights=weights), k).collect()
+        return one(spec._replace(keywords=keywords, weights=weights), k)
 
     def _prf_terms(
         self, pq: Q.ParsedQuery, corrections: dict[str, str], top_rows: list, depth: int

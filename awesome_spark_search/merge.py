@@ -160,7 +160,6 @@ def merge_packed_indexes(
     indexes: list[Index],
     *,
     check_disjoint: bool = True,
-    cache: bool = True,
 ) -> Index:
     """Fold k packed indexes over DISJOINT doc sets into one queryable
     Index — content is never re-read, tokenization never re-runs. stats
@@ -168,7 +167,8 @@ def merge_packed_indexes(
     (block_max bounds are refreshed against them in every emitted group,
     keeping WAND skipping exact); term_stats sums the sources'.
     ``check_disjoint=False`` skips the doc_map duplicate probe when the
-    caller guarantees disjointness (monotonic watermark)."""
+    caller guarantees disjointness (monotonic watermark). doc_map, packed
+    and term_stats are persisted: stats and queries read them again."""
     _check_sources(indexes, "doc_shard_size", "do_stem", "field_weights", "n_term_buckets")
     if any(ix.packed is None for ix in indexes):
         raise ValueError(
@@ -200,16 +200,13 @@ def merge_packed_indexes(
                 "merge_packed_indexes: sources share doc_ids — resolve "
                 "replacements upstream (streaming.IncrementalIndexer) first"
             )
-    if cache:
-        doc_map = doc_map.persist()
+    doc_map = doc_map.persist()
     stats = index_stats(doc_map, StageRunner(spark, None), first.field_weights)
 
     merged = repack(
         reduce(DataFrame.unionByName, [ix.packed for ix in indexes]), [],
         lambda pdf: _merge_many(pdf, stats.avgdl_by_field, n_buckets),
-    )
-    if cache:
-        merged = merged.persist()
+    ).persist()
 
     # df/cf add up over disjoint doc sets, in one field or several
     term_stats = (
@@ -217,9 +214,7 @@ def merge_packed_indexes(
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
-    )
-    if cache:
-        term_stats = term_stats.persist()
+    ).persist()
 
     return Index(
         doc_map=doc_map,

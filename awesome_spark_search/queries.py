@@ -54,6 +54,7 @@ class ParsedQuery:
     raw: str = ""
 
 
+MAX_DOC_ID = 2**63 - 1  # doc_ids are Spark longs
 _PRF_RE = re.compile(r"\s#(\d+)\s*$")
 _BOOL_RE = re.compile(r"^(.*?)\s+(AND|OR|NOT)\s+(.*)$")
 _LINKTO_RE = re.compile(r"^\s*LinkTo:(\d+)\s*$", re.IGNORECASE)
@@ -76,7 +77,10 @@ def parse(query: str, *, tokenize) -> ParsedQuery:
 def _parse_expr(q: str, tokenize):
     m = _LINKTO_RE.match(q)
     if m:
-        return LinkTo(int(m.group(1)))
+        doc_id = int(m.group(1))
+        if doc_id > MAX_DOC_ID:
+            raise ValueError(f"LinkTo id {doc_id} is outside the signed 64-bit doc_id range")
+        return LinkTo(doc_id)
     m = _BOOL_RE.match(q)
     if m and not _PHRASE_RE.search(q):  # boolean ops bind between plain groups
         return Boolean(

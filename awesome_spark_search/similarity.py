@@ -25,10 +25,6 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine_col(a, b):
-    return (_dot(a, b) / (_norm(a) * _norm(b))).alias("cosine")
-
-
 def brute_force_topk(
     emb: DataFrame, query_vec: list[float], k: int = 10,
     id_col: str = "vec_id", vec_col: str = "embedding",

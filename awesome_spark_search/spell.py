@@ -97,16 +97,6 @@ def damerau_levenshtein(a: str, b: str) -> int:
     return prev[lb]
 
 
-def make_distance_udf(target: str):
-    @F.pandas_udf(T.IntegerType())
-    def dist(terms: pd.Series) -> pd.Series:
-        from awesome_spark_search.spell import damerau_levenshtein
-
-        return terms.map(lambda t: damerau_levenshtein(t, target))
-
-    return dist
-
-
 def _make_pair_distance_udf(variant: str):
     @F.pandas_udf(T.IntegerType())
     def dist(terms: pd.Series, targets: pd.Series) -> pd.Series:

@@ -33,48 +33,6 @@ from .stopwords import STOPWORDS
 TOKEN_RE = re.compile(r"[a-zA-Z\-_]+")
 TOKEN_RE_WILDCARD = re.compile(r"[a-zA-Z\-_]+\*?")
 
-# Arrow-side schema of one tokenized document
-TOKENIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("n_tokens", T.IntegerType(), False),  # stopword-inclusive length
-        T.StructField(
-            "terms",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("term", T.StringType(), False),
-                        T.StructField("pos", T.IntegerType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
-
-# per-document posting fragments: positions already grouped per term map-side,
-# so the index build needs NO (term, doc_id) shuffle at all — the same
-# accumulate-per-document step the reference does in PostingTable.put
-# (ref: src/indexing/DocumentIndexer.java:220-242), vectorized per Arrow batch
-DOC_POSTINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("n_tokens", T.IntegerType(), False),
-        T.StructField(
-            "postings",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("term", T.StringType(), False),
-                        T.StructField("tf", T.IntegerType(), False),
-                        T.StructField("positions", T.ArrayType(T.IntegerType()), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
-
 
 def tokenize_text(text: str, *, do_stem: bool, preserve_wildcards: bool = False):
     """Pure-Python single-doc tokenizer (shared by UDF + oracle tests).
@@ -101,76 +59,6 @@ def tokenize_text(text: str, *, do_stem: bool, preserve_wildcards: bool = False)
     return len(toks), out
 
 
-def make_tokenize_udf(do_stem: bool):
-    """pandas UDF: content -> struct(n_tokens, terms:array<struct<term,pos>>)."""
-
-    @F.pandas_udf(TOKENIZED_SCHEMA)
-    def tokenize_udf(content: pd.Series) -> pd.DataFrame:
-        n_tokens = []
-        terms = []
-        for text in content:
-            n, pairs = tokenize_text(text, do_stem=do_stem)
-            n_tokens.append(n)
-            terms.append(pairs)
-        return pd.DataFrame({"n_tokens": n_tokens, "terms": terms})
-
-    return tokenize_udf
-
-
-def tokenized(source_df, *, do_stem: bool, content_col: str = "content"):
-    """source -> (doc cols..., n_tokens, term, pos) long format.
-
-    The explode happens JVM-side after one Arrow round-trip per batch;
-    downstream groupBys get map-side partial aggregation from Catalyst.
-    """
-    tok = make_tokenize_udf(do_stem)
-    df = source_df.withColumn("_tok", tok(F.col(content_col)))
-    return (
-        df.withColumn("n_tokens", F.col("_tok.n_tokens"))
-        .withColumn("_t", F.explode_outer("_tok.terms"))
-        .drop("_tok")
-        .withColumn("term", F.col("_t.term"))
-        .withColumn("pos", F.col("_t.pos"))
-        .drop("_t")
-    )
-
-
-def make_doc_postings_udf(do_stem: bool):
-    """pandas UDF: content -> struct(n_tokens, postings:array<struct<term,tf,
-    positions>>). Positions are ascending by construction (token order)."""
-
-    @F.pandas_udf(DOC_POSTINGS_SCHEMA)
-    def doc_postings_udf(content: pd.Series) -> pd.DataFrame:
-        n_tokens = []
-        postings = []
-        for text in content:
-            n, pairs = tokenize_text(text, do_stem=do_stem)
-            acc: dict[str, list[int]] = {}
-            for term, pos in pairs:
-                acc.setdefault(term, []).append(pos)
-            n_tokens.append(n)
-            postings.append([(t, len(ps), ps) for t, ps in acc.items()])
-        return pd.DataFrame({"n_tokens": n_tokens, "postings": postings})
-
-    return doc_postings_udf
-
-
-def doc_postings(source_df, *, do_stem: bool, content_col: str = "content"):
-    """source -> (doc cols..., n_tokens, postings) — ONE narrow map stage.
-
-    ``.select(explode(postings))`` downstream yields the long posting format
-    (term, doc_id, tf, positions) with zero shuffle; the per-(term,doc)
-    aggregation already happened inside the Arrow batch.
-    """
-    udf = make_doc_postings_udf(do_stem)
-    df = source_df.withColumn("_tok", udf(F.col(content_col)))
-    return (
-        df.withColumn("n_tokens", F.col("_tok.n_tokens"))
-        .withColumn("postings", F.col("_tok.postings"))
-        .drop("_tok")
-    )
-
-
 POSTINGS_FLAT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -188,9 +76,10 @@ def doc_postings_flat(source_df, *, do_stem: bool, content_col: str = "content")
     the Arrow batch (the reference's PostingTable.put loop,
     ref: src/indexing/DocumentIndexer.java:220-242).
 
-    Flat output avoids the array<struct<..,array>> Arrow conversion entirely
-    (~10x cheaper serialization than the nested doc_postings shape), and the
-    downstream explode disappears: this IS the posting table, zero shuffles.
+    Flat output avoids an array<struct<..,array>> Arrow conversion entirely
+    (~10x cheaper serialization than a nested per-document postings column),
+    and no downstream explode is needed: this IS the posting table, zero
+    shuffles.
     """
 
     def gen(batches):

@@ -24,7 +24,7 @@ Spark shape — scalable by construction:
   reference's ContentType weighting, ref: DocumentRanker.java:138-167).
   QL scores one-field indexes only.
 * every entry point prunes with the index's own term-bucket count
-  (``Index.n_term_buckets``; an explicit ``n_term_buckets`` overrides it).
+  (``Index.n_term_buckets``).
 * per-term stats (idf, the global cf) ride on those rows (``term_rows``):
   literal map lookups from the executor's cached dictionary (``stats``),
   so the action scans no term_stats and broadcasts nothing; without it a
@@ -33,14 +33,14 @@ Spark shape — scalable by construction:
   batch: each shard emits every query's local top-k; the global top-k of
   one query is a tiny TakeOrderedAndProject over n_shards*k rows, that of
   a batch a per-query window.
-* two executions of that one plan, chosen by ``_one_shard``: an index
-  whose doc_ids all fall in doc_shard 0 (below ``DEFAULT_DOC_SHARD_SIZE``
-  docs) has its plan's term rows collected with ONE Arrow collect of a
-  JVM-only scan, and the same shard kernel runs on the driver, in the
-  calling thread, with the top-k tail in pandas and the result returned
-  localized — no shuffle and no Python worker round trip per query. Over
-  several shards the plan stays the applyInPandas one above. Boolean
-  queries (``boolean_docs``) follow the same rule.
+* two executions of every packed plan, ranked or Boolean, chosen in ONE
+  place (``_run_shards``, by ``_one_shard``): an index whose doc_ids all
+  fall in doc_shard 0 (below ``DEFAULT_DOC_SHARD_SIZE`` docs) has its
+  plan's rows collected with ONE Arrow collect, and the same shard step
+  runs on the driver, in the calling thread, with the top-k tail in pandas
+  and the result returned localized — no shuffle and no kernel task per
+  query. Over several shards the step runs as one applyInPandas per
+  doc_shard.
 * inside a shard the evaluation is numpy-vectorized document-at-a-time over
   terms ordered by descending bound: once the k-th best exact score exceeds
   the cumulative bound of the remaining terms, docs not already seen cannot
@@ -318,12 +318,12 @@ def term_rows(
     return rows.select(F.struct("*").alias("_row"), *lookups).select("_row.*", *stat_cols)
 
 
-def _idf_rows(index: Index, n_term_buckets: int | None, stats=None):
-    """Row selector for BM25 plans over ``index``: (terms, prefixes[,
-    unread packed columns]) -> packed rows with an idf column."""
+def _idf_rows(index: Index, stats=None):
+    """Row selector for BM25 plans over ``index``: (terms, prefixes,
+    unread packed columns) -> packed rows with an idf column."""
     idf = idf_col(F.col("df"), index.stats.n_docs).alias("idf")
-    return lambda terms, prefixes, unread=(): term_rows(
-        index.packed.drop(*unread), index.term_stats, terms, n_term_buckets or index.n_term_buckets,
+    return lambda terms, prefixes, unread: term_rows(
+        index.packed.drop(*unread), index.term_stats, terms, index.n_term_buckets,
         [idf], prefixes, stats=stats,
     )
 
@@ -416,17 +416,18 @@ def _shard_step(specs: dict[str, QuerySpec], parse, score, k: int):
 
 
 def _one_shard(index: Index) -> bool:
-    """THE path rule of every packed plan: when every doc_id of ``index``
-    falls in doc_shard 0 (an empty index too), the plan runs on the driver
-    (``_collect_shards``); over several shards it stays the distributed
-    applyInPandas plan. Structural: no option, no size threshold."""
+    """THE path rule of every packed plan (read by ``_run_shards`` only):
+    when every doc_id of ``index`` falls in doc_shard 0 (an empty index
+    too), the plan runs on the driver (``_collect_shards``); over several
+    shards it stays the distributed applyInPandas plan. Structural: no
+    option, no size threshold."""
     return index.stats.max_doc_id < index.doc_shard_size
 
 
 def _collect_shards(rows: DataFrame, step, empty: pd.DataFrame) -> pd.DataFrame:
     """The driver execution of a one-shard plan: ONE Arrow collect of the
-    plan's ``rows`` (a JVM-only scan, filter and project — no shuffle, no
-    Python worker), then ``step`` per doc_shard group in the calling thread
+    plan's ``rows`` (no shuffle; term rows are a JVM-only scan, filter and
+    project, and a LinkTo leaf adds its citation decode), then ``step`` per doc_shard group in the calling thread
     — the same function, on the same rows, that the distributed plan's
     pandas-group task runs. ``empty`` when no row matched.
 
@@ -438,6 +439,20 @@ def _collect_shards(rows: DataFrame, step, empty: pd.DataFrame) -> pd.DataFrame:
     if not len(pdf):
         return empty
     return pd.concat([step(g) for _, g in pdf.groupby("doc_shard", sort=True)], ignore_index=True)
+
+
+def _run_shards(index: Index, rows: DataFrame, step, schema, empty: pd.DataFrame):
+    """THE shard runner of every packed plan, ranked or Boolean: ``step``
+    (one doc_shard's rows -> its pandas output) over ``rows``, grouped by
+    doc_shard. Over one doc_shard (``_one_shard``) the driver execution
+    (``_collect_shards``) gives a pandas frame, ``empty`` when no row
+    matched; over several, a Spark DataFrame of ``groupBy("doc_shard")
+    .applyInPandas(step, schema)``. The same step sees the same rows either
+    way, so answers are equal; the caller's tail takes either. ``step``
+    must not close over a DataFrame: it is shipped to the Python workers."""
+    if _one_shard(index):
+        return _collect_shards(rows, step, empty)
+    return rows.groupBy("doc_shard").applyInPandas(step, schema)
 
 
 def _localized(spark, pdf: pd.DataFrame, schema) -> DataFrame:
@@ -455,15 +470,12 @@ def _ranked_rows(
 ):
     """THE ranked-plan builder of every scorer, for one query or a batch:
     ONE scan of the union of all specs' terms and prefix ranges
-    (``select(terms, prefixes)``, a ``term_rows`` selector), then per
-    doc_shard ``_shard_step`` -> shard-local (query_id, doc_id, score) rows.
-    Two executions of that one plan (``_one_shard``): over one doc_shard
-    the rows are collected and the step runs on the driver, giving a pandas
-    frame (the position stream stays ``unread`` unless a spec has a phrase);
-    over several, a Spark DataFrame of ``groupBy("doc_shard")
-    .applyInPandas``. The same kernel sees the same rows either way, so
-    scores are equal. The caller adds the global top-k tail, which takes
-    either: ``_topk`` for one query, ``_batch_global_topk`` for a batch.
+    (``select(terms, prefixes, unread)``, a ``term_rows`` selector; the
+    position stream stays ``unread`` unless a spec has a phrase), then per
+    doc_shard ``_shard_step`` -> shard-local (query_id, doc_id, score) rows,
+    through ``_run_shards``: a pandas frame over one doc_shard, a Spark
+    DataFrame over several. The caller adds the global top-k tail, which
+    takes either: ``_topk`` for one query, ``_batch_global_topk`` for a batch.
     Block skipping stays per-query exact: every spec runs its own kernel
     over the shared rows. With the cached dictionary ``stats``, terms
     outside it have no packed rows and drop out here; a plan left without
@@ -476,11 +488,11 @@ def _ranked_rows(
         # limit(0) makes it an empty local relation: collecting it (and any
         # top-k tail over it) runs no job
         return spark.createDataFrame([], SHARD_ROWS_SCHEMA).limit(0)
-    step = _shard_step(specs, parse, score, k)
-    if not _one_shard(index):
-        return select(terms, prefixes).groupBy("doc_shard").applyInPandas(step, SHARD_ROWS_SCHEMA)
     unread = () if any(s.phrase for s in specs.values()) else ("pos_vb", "blk_pos_off")
-    return _collect_shards(select(terms, prefixes, unread), step, _empty_batch_pdf())
+    return _run_shards(
+        index, select(terms, prefixes, unread), _shard_step(specs, parse, score, k),
+        SHARD_ROWS_SCHEMA, _empty_batch_pdf(),
+    )
 
 
 def _bm25(fields: dict, k: int):
@@ -550,7 +562,6 @@ def wand_topk(
     index: Index,
     terms: list[str],
     k: int = 10,
-    n_term_buckets: int | None = None,
     weights: dict[str, float] | None = None,
     prefixes=(),
 ) -> DataFrame:
@@ -561,7 +572,7 @@ def wand_topk(
     query term too. ONE Spark action (``term_rows``)."""
     spec = QuerySpec([], list(terms), tuple(prefixes), weights)
     return _topk(spark, _ranked_rows(
-        spark, index, _idf_rows(index, n_term_buckets), {"q": spec},
+        spark, index, _idf_rows(index), {"q": spec},
         *_bm25(_field_norms(index), k), k,
     ), k)
 
@@ -572,7 +583,6 @@ def mixed_topk(
     phrase_terms: list[str],
     keyword_terms: list[str],
     k: int = 10,
-    n_term_buckets: int | None = None,
     weights: dict[str, float] | None = None,
     prefixes=(),
     *,
@@ -587,7 +597,7 @@ def mixed_topk(
     ``wand_topk``; ``stats`` is the cached dictionary (``term_rows``)."""
     spec = QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
     return _topk(spark, _ranked_rows(
-        spark, index, _idf_rows(index, n_term_buckets, stats), {"q": spec},
+        spark, index, _idf_rows(index, stats), {"q": spec},
         *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
@@ -597,7 +607,6 @@ def phrase_topk(
     index: Index,
     terms: list[str],
     k: int = 10,
-    n_term_buckets: int | None = None,
 ) -> DataFrame:
     """Exact-phrase top-k BM25 off the packed (compressed) index: positions
     decode only for the phrase's terms, per doc-shard, and each shard emits
@@ -605,7 +614,7 @@ def phrase_topk(
     no shard holds every term, so each returns empty on its own — no
     driver-side existence collect."""
     return _topk(spark, _ranked_rows(
-        spark, index, _idf_rows(index, n_term_buckets), {"q": QuerySpec(list(terms), [])},
+        spark, index, _idf_rows(index), {"q": QuerySpec(list(terms), [])},
         *_bm25(_field_norms(index), k), k,
     ), k)
 
@@ -615,7 +624,6 @@ def batch_topk(
     index: Index,
     specs: dict[str, tuple[list[str], list[str]]],
     k: int = 10,
-    n_term_buckets: int | None = None,
     *,
     stats=None,
 ) -> DataFrame:
@@ -636,7 +644,7 @@ def batch_topk(
     AwesomeSearchEngine.java; batching is the Spark-first upgrade of that
     loop)."""
     return _batch_global_topk(spark, _ranked_rows(
-        spark, index, _idf_rows(index, n_term_buckets, stats), _pairs(specs),
+        spark, index, _idf_rows(index, stats), _pairs(specs),
         *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
@@ -687,19 +695,19 @@ def _ql_scores(shard, spec: QuerySpec):
     return ids, scores
 
 
-def _cf_rows(index: Index, n_term_buckets: int | None, stats=None):
-    """Row selector for QL plans over ``index``: (terms, prefixes[, unread
-    packed columns]) -> packed rows with the GLOBAL collection frequency
+def _cf_rows(index: Index, stats=None):
+    """Row selector for QL plans over ``index``: (terms, prefixes, unread
+    packed columns) -> packed rows with the GLOBAL collection frequency
     (aliased cf_global: packed group rows carry a per-(term, doc_shard) cf;
     the JM background model needs the term's corpus-wide cf)."""
     cf = F.col("cf").alias("cf_global")
-    return lambda terms, prefixes, unread=(): term_rows(
-        index.packed.drop(*unread), index.term_stats, terms, n_term_buckets or index.n_term_buckets,
+    return lambda terms, prefixes, unread: term_rows(
+        index.packed.drop(*unread), index.term_stats, terms, index.n_term_buckets,
         [cf], prefixes, stats=stats,
     )
 
 
-def _ql(index: Index, lam: float | None):
+def _ql(index: Index):
     """QL/JM's (parse, score) pair for ``_ranked_rows``: ``_ql_shard`` and
     ``_ql_scores``. A multi-field index raises: zone-weighted QL is not
     defined, and ranking such an index without its zones would be a silent
@@ -709,9 +717,8 @@ def _ql(index: Index, lam: float | None):
             f"scorer 'ql' serves one-field indexes only; this index has "
             f"fields {sorted(index.field_weights)}"
         )
-    lam = JM_LAMBDA if lam is None else lam
     C = float(max(index.stats.total_tokens, 1))
-    return lambda left: _ql_shard(left, lam, C), _ql_scores
+    return lambda left: _ql_shard(left, JM_LAMBDA, C), _ql_scores
 
 
 def ql_topk(
@@ -719,8 +726,6 @@ def ql_topk(
     index: Index,
     terms: list[str],
     k: int = 10,
-    n_term_buckets: int | None = None,
-    lam: float | None = None,
     *,
     phrase_terms=(),
     prefixes=(),
@@ -738,7 +743,7 @@ def ql_topk(
     doc_map join), tiny global top-k."""
     spec = QuerySpec(list(phrase_terms), list(terms), tuple(prefixes), weights)
     return _topk(spark, _ranked_rows(
-        spark, index, _cf_rows(index, n_term_buckets, stats), {"q": spec}, *_ql(index, lam),
+        spark, index, _cf_rows(index, stats), {"q": spec}, *_ql(index),
         k, stats,
     ), k)
 
@@ -748,8 +753,6 @@ def ql_topk_many(
     index: Index,
     specs: dict[str, tuple[list[str], list[str]]],
     k: int = 10,
-    n_term_buckets: int | None = None,
-    lam: float | None = None,
     *,
     stats=None,
 ) -> DataFrame:
@@ -761,8 +764,8 @@ def ql_topk_many(
     (tests/test_batch.py). ``stats`` is the cached dictionary
     (``term_rows``)."""
     return _batch_global_topk(spark, _ranked_rows(
-        spark, index, _cf_rows(index, n_term_buckets, stats), _pairs(specs),
-        *_ql(index, lam), k, stats,
+        spark, index, _cf_rows(index, stats), _pairs(specs),
+        *_ql(index), k, stats,
     ), k)
 
 
@@ -946,78 +949,70 @@ def boolean_docs(
     index: Index,
     spec,
     k: int = 10,
-    n_term_buckets: int | None = None,
     links: DataFrame | None = None,
 ) -> DataFrame:
     """Boolean doc-set query over the packed index: per-shard decode of the
     involved terms' doc_id blobs, numpy set algebra (``_eval_docset``),
     recency top-k (doc_id DESC — ref: QueryProcessor.java:112-114).
-    ``links`` carries the spec's LinkTo leaves as (target, doc_id) rows,
-    keyed by doc_shard. Over one doc_shard (``_one_shard``) the term rows
-    and the link rows arrive in ONE collect (a union) and every shard is
-    evaluated on the driver, with the top-k tail in numpy; over several,
-    the links join the term rows through a cogroup, so the query stays ONE
-    Spark action. Returns (doc_id, score NULL)."""
+    ``links`` carries the spec's LinkTo leaves as (target, doc_id) rows; a
+    bare LinkTo is the one-leaf spec ("link", target). Keyed by doc_shard,
+    the link rows join the term rows in ONE union, and each doc_shard's
+    step sees both. The union runs through ``_run_shards``, like every
+    ranked plan: over one doc_shard it is collected and evaluated on the
+    driver, with the top-k tail in numpy and the result returned localized;
+    over several, one applyInPandas and a tiny top-k. Either way the query
+    is ONE Spark action. Returns (doc_id, score NULL)."""
     terms, prefixes = _spec_leaves(spec)
     terms = sorted(set(terms))
     if k == 0 or (not terms and not prefixes and links is None):
         return spark.createDataFrame([], "doc_id long, score double").limit(0)
-    packed = _term_filter(
-        index.packed, terms, n_term_buckets or index.n_term_buckets, prefixes
-    ).select(
-        "doc_shard", "term", "doc_ids_vb"
-    )
-    keyed = None if links is None else links.withColumn(
-        "doc_shard", doc_shard_col(index.doc_shard_size)
-    )
+    parts = []
+    if terms or prefixes:
+        parts.append(
+            _term_filter(index.packed, terms, index.n_term_buckets, prefixes)
+            .select("doc_shard", "term", "doc_ids_vb")
+        )
+    if links is not None:
+        parts.append(links.withColumn("doc_shard", doc_shard_col(index.doc_shard_size)))
+    rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    has_links = links is not None
 
-    def shard_docs(left: pd.DataFrame, linked: pd.DataFrame | None) -> pd.DataFrame:
+    def shard_docs(g: pd.DataFrame) -> pd.DataFrame:
+        by_link: dict[int, np.ndarray] = {}
+        if has_links:
+            # the union's link rows carry a target, its term rows none
+            is_link = g["target"].notna()
+            linked = g.loc[is_link, ["target", "doc_id"]].astype("int64")
+            by_link = {t: np.unique(lg["doc_id"].to_numpy()) for t, lg in linked.groupby("target")}
+            g = g[~is_link]
         # a term's doc set is the union over its field rows
         by_term: dict[str, np.ndarray] = {}
-        for _, r in left.iterrows():
+        for _, r in g.iterrows():
             ids = codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
             t = r["term"]
             by_term[t] = np.union1d(by_term[t], ids) if t in by_term else ids
-        by_link = (
-            {t: np.unique(g["doc_id"].to_numpy(np.int64)) for t, g in linked.groupby("target")}
-            if linked is not None else {}
-        )
         out = _eval_docset(spec, by_term, by_link)
-        out = np.sort(out)[::-1][:k]  # shard-local recency top-k
-        return pd.DataFrame({"doc_id": out})
+        return pd.DataFrame({"doc_id": np.sort(out)[::-1][:k]})  # shard-local recency top-k
 
-    if _one_shard(index):
-        def shard_union(g: pd.DataFrame) -> pd.DataFrame:
-            if keyed is None:
-                return shard_docs(g, None)
-            is_link = g["term"].isna()  # the union's link rows carry no term
-            return shard_docs(g[~is_link], g.loc[is_link, ["target", "doc_id"]].astype("int64"))
-
-        rows = packed if keyed is None else packed.unionByName(keyed, allowMissingColumns=True)
-        docs = _collect_shards(rows, shard_union, pd.DataFrame({"doc_id": []}))
-        top = np.sort(docs["doc_id"].to_numpy(np.int64))[::-1][:k]
-        top = _localized(spark, pd.DataFrame({"doc_id": top}), DOCSET_SCHEMA)
-    else:
-        if keyed is None:
-            def shard_eval(left: pd.DataFrame) -> pd.DataFrame:
-                return shard_docs(left, None)
-
-            local = packed.groupBy("doc_shard").applyInPandas(shard_eval, DOCSET_SCHEMA)
-        else:
-            local = packed.groupBy("doc_shard").cogroup(keyed.groupBy("doc_shard")).applyInPandas(
-                shard_docs, DOCSET_SCHEMA
-            )
-        top = local.orderBy(F.col("doc_id").desc()).limit(k)
-    return top.withColumn("score", F.lit(None).cast("double"))
+    local = _run_shards(index, rows, shard_docs, DOCSET_SCHEMA, pd.DataFrame({"doc_id": []}))
+    if isinstance(local, pd.DataFrame):
+        # the NULL score is built in pandas, so the frame stays local
+        top = np.sort(local["doc_id"].to_numpy(np.int64))[::-1][:k]
+        return _localized(
+            spark, pd.DataFrame({"doc_id": top, "score": None}), "doc_id long, score double"
+        )
+    return (
+        local.orderBy(F.col("doc_id").desc()).limit(k)
+        .withColumn("score", F.lit(None).cast("double"))
+    )
 
 
-def decode_postings(index: Index, term: str, n_term_buckets: int | None = None,
-                    with_positions: bool = False) -> DataFrame:
+def decode_postings(index: Index, term: str, with_positions: bool = False) -> DataFrame:
     """Decode one term's packed blobs back to (doc_id, tf[, pos]) rows —
     the external round-trip gate for the delta+VByte+position-stream codec
     (ref semantics: src/postings/TokenPostings.java:201-243,
     EagerPositionMap.java:128-171)."""
-    bucket = _py_term_bucket(term, n_term_buckets or index.n_term_buckets)
+    bucket = _py_term_bucket(term, index.n_term_buckets)
     rows = index.packed.filter(
         (F.col("term_bucket") == bucket) & (F.col("term") == term)
     ).select("doc_ids_vb", "tfs_vb", "pos_vb")

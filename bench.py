@@ -95,10 +95,9 @@ def run(sf_dir: str, cpus: int, do_stem: bool = True) -> dict:
     n_docs = src.count()
 
     def _build():
-        # cache_postings=False: every query serves off the packed index,
-        # so skipping the long-table cache-write keeps the build number
-        # about indexing, not double-buffering.
-        idx = build_index(spark, src, do_stem=do_stem, cache_postings=False)
+        # a one-field build never caches the long postings table: every
+        # query serves off the packed index
+        idx = build_index(spark, src, do_stem=do_stem)
         # force full materialization: packed.count() runs the whole
         # tokenize->postings->pack chain in ONE action; doc_map is narrow,
         # term_stats a tiny rollup off the cached packed table
@@ -220,10 +219,7 @@ def run(sf_dir: str, cpus: int, do_stem: bool = True) -> dict:
         big_src.count()
 
         def _build_big():
-            bidx = build_index(
-                spark, big_src, do_stem=True,
-                doc_shard_size=4096, cache_postings=False,
-            )
+            bidx = build_index(spark, big_src, do_stem=True, doc_shard_size=4096)
             bidx.packed.count(); bidx.doc_map.count(); bidx.term_stats.count()
 
         timed("index_build_50k", _build_big, reps=1)

@@ -67,6 +67,24 @@ def test_linkto_without_packed_citations_raises(spark):
             ex.search(q, k=5).collect()
 
 
+def test_linkto_id_outside_the_long_range_raises_value_error(spark):
+    """A LinkTo id past the signed 64-bit doc_id range is a ValueError from
+    the parser, bare or as a Boolean leaf, never a py4j error from the
+    plan; the largest long is still an id."""
+    from awesome_spark_search.pagerank import pack_citations
+
+    cit = pack_citations(spark.createDataFrame([(1, 0)], "src long, dst long"))
+    ex = QueryExecutor(
+        spark, _build(spark, [(0, "lonely document text"), (1, "other text")]),
+        packed_citations=cit,
+    )
+    for q in ("LinkTo:9223372036854775808", "lonely OR LinkTo:99999999999999999999"):
+        with pytest.raises(ValueError, match="64-bit"):
+            ex.search(q, k=5)
+    assert [r["doc_id"] for r in ex.search("LinkTo:0", k=5).collect()] == [1]
+    assert ex.search("LinkTo:9223372036854775807", k=5).collect() == []
+
+
 def test_spell_correction_exact_at_any_vocab_size(spark):
     """With the driver vocabulary cache disabled (VOCAB_CACHE_MAX=0, the
     10^8-term-corpus regime), a PARTIALLY matching query must still get its

@@ -147,3 +147,26 @@ def test_boolean_unions_a_terms_fields(spark, citations):
         want = _rows(ex_p, query)
         assert want, query
         assert _rows(ex_f, query) == want, query
+
+
+def test_in_memory_build_persists_postings_only_when_read_again(spark, src, pdf, oracle):
+    """A one-field in-memory build reads its long postings once (the pack
+    job), so it does not persist them; a two-field build reads them again
+    for term_stats (``any_field_term_stats``), so it does. doc_map, packed
+    and term_stats are persisted either way, and the one-field build's
+    answers still equal the oracle's."""
+    one = build_index(spark, src, do_stem=True, doc_shard_size=64)
+    two = build_index(
+        spark, src.select("doc_id", "content", "path"), do_stem=True, doc_shard_size=64,
+        field_weights={"content": 1.0, "path": 0.5},
+    )
+    assert not one.postings.is_cached
+    assert two.postings.is_cached
+    for ix in (one, two):
+        assert ix.doc_map.is_cached and ix.packed.is_cached and ix.term_stats.is_cached
+    ex = QueryExecutor(spark, one, source_df=src)
+    contents = dict(zip(pdf["doc_id"], pdf["content"]))
+    for query in ["buffer merge scan", '"merge sort" buffer', "token* AND merge"]:
+        want = oracle.search(query, scorer="bm25", corrections={}, contents=contents)
+        assert want, query
+        assert_rows_equal(_rows(ex, query), want, query)

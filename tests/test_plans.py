@@ -199,3 +199,53 @@ def test_one_shard_plans_run_one_job_with_no_exchange(spark, one_shard_ckpt_inde
         if name in ("keyword", "ql"):
             # no phrase: the position stream is never read
             assert "pos_vb" not in plan, (name, plan[:3000])
+
+
+@pytest.fixture(scope="module")
+def parquet_citations(spark, tmp_path_factory):
+    from awesome_spark_search.pagerank import pack_citations
+
+    edges = [(d, 3) for d in range(120) if d % 7 == 3 and d != 3]
+    path = str(tmp_path_factory.mktemp("plan_citations") / "packed")
+    pack_citations(spark.createDataFrame(edges, "src long, dst long")).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_one_shard_linkto_plans_run_one_job_with_no_exchange(
+    spark, one_shard_ckpt_index, parquet_citations, monkeypatch
+):
+    """A LinkTo leaf takes the same one-shard driver path as every other
+    plan: a Boolean with a LinkTo leaf and a bare LinkTo (the one-leaf
+    Boolean) each run ONE Spark job, the collect of the union of their term
+    rows and link rows, with no exchange and no cogroup in its plan."""
+    from awesome_spark_search import wand
+    from awesome_spark_search.executor import QueryExecutor
+
+    collected = []
+    real = wand._collect_shards
+
+    def recording(rows, *args):
+        collected.append(rows)
+        return real(rows, *args)
+
+    monkeypatch.setattr(wand, "_collect_shards", recording)
+    ex = QueryExecutor(spark, one_shard_ckpt_index, packed_citations=parquet_citations)
+    ex.search("buffer", k=5).collect()  # warm: caches the dictionary
+    citing = sorted((d for d in range(120) if d % 7 == 3 and d != 3), reverse=True)
+    sc = spark.sparkContext
+    for name, query in (("boolean_linkto", "scan OR LinkTo:3"), ("linkto", "LinkTo:3")):
+        collected.clear()
+        group = f"one_shard_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = ex.search(query, k=10).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        assert rows and all(r["score"] is None for r in rows), name
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
+        assert len(collected) == 1, name
+        plan = _plan(collected[0])
+        assert "Exchange" not in plan, (name, plan[:3000])
+        assert "FlatMapCoGroupsInPandas" not in plan, (name, plan[:3000])
+        if name == "linkto":
+            assert [r["doc_id"] for r in rows] == citing[:10]

@@ -24,6 +24,7 @@ QUERIES = [
     "buffer merge #3",         # PRF
     "buffer AND NOT merge",    # Boolean
     "scan OR LinkTo:3",        # Boolean with a LinkTo leaf
+    "LinkTo:3",                # bare LinkTo: the one-leaf Boolean
     "zzzznothing",             # no rows
 ]
 BATCH = {"q0": "buffer merge", "q1": '"merge sort"', "q2": '"merge sort" scan', "q3": "mrege"}

@@ -86,7 +86,8 @@ def main() -> int:
     sections = [
         ("Block-max WAND top-10 over the packed index", DIST,
          "ONE action: broadcast of the term-filtered idf rows joined onto "
-         "bucket-pruned packed blobs, per-shard applyInPandas (the one "
+         "bucket-pruned packed blobs (no position stream without a phrase), "
+         "per-shard applyInPandas (the one "
          "ranked-plan builder's shard step, emitting query_id rows), global "
          "TakeOrderedAndProject.",
          wand_topk(spark, idx, ["buffer", "merge", "scan"], k=10)),
@@ -138,8 +139,9 @@ def main() -> int:
                    prefixes=("tok",))),
         ("Boolean doc-set algebra (AND/OR/NOT)", DIST,
          "Bucket-pruned scan of the doc-id blobs only, per-shard numpy set "
-         "algebra, recency top-k. LinkTo leaves cogroup their citing docs "
-         "onto the same shards.",
+         "algebra in one applyInPandas (the shard runner every packed plan "
+         "shares), recency top-k. LinkTo leaves' citing docs join the term "
+         "rows in one union keyed by doc_shard, so the same step sees both.",
          boolean_docs(spark, idx, ("and", ("terms", ["merg"]),
                                    ("not", ("terms", ["buffer"]),
                                     ("terms", ["scan"]))), k=10)),

@@ -49,8 +49,7 @@ def main() -> int:
     halves = [src.filter(f"doc_id % 2 = {i}").persist() for i in (0, 1)]
     [h.count() for h in halves]
 
-    kw = dict(do_stem=True, doc_shard_size=4096,
-              cache_postings=False)
+    kw = dict(do_stem=True, doc_shard_size=4096)
 
     def build_half(h):
         ix = build_index(spark, h, **kw)

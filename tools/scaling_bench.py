@@ -146,15 +146,13 @@ def worker(cores: int, corpus_path: str, run_queries: bool = True) -> dict:
     # doc_shard_size bounds every (term, doc_shard) pack group — the skew
     # control that at 10^12 docs comes from the default 1M shard; scaled down
     # to the bench corpus so hot Zipf terms split across many groups here too
-    # cache_postings=False: serving below runs off the packed index (the
-    # designed query path), so the build skips the columnar cache-write of
-    # the long posting table — at scale that table is written to Parquet by
-    # the checkpointing runner, never double-buffered in executor memory
-    idx = build_index(spark, src, do_stem=True,
-                      doc_shard_size=2048, cache_postings=False)
+    # a one-field in-memory build never caches the long posting table:
+    # serving below runs off the packed index (the designed query path) —
+    # at scale that table is written to Parquet by the checkpointing runner
+    idx = build_index(spark, src, do_stem=True, doc_shard_size=2048)
     # packed.count() materializes the whole tokenize->postings->pack chain in
-    # ONE action (postings stream straight into the pack shuffle — NOT
-    # cached, per cache_postings=False above); doc_map is a narrow sha256
+    # ONE action (postings stream straight into the pack shuffle, NOT
+    # cached); doc_map is a narrow sha256
     # pass and term_stats a tiny rollup off the cached packed table — no
     # separate full-postings action remains
     idx.packed.count()
