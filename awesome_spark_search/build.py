@@ -29,10 +29,12 @@ merging; what stays explicit is what the optimizer cannot infer:
 * **one repack path**: every packed table — this build, the streaming
   ``IncrementalIndexer.to_index`` and the merge — goes through ``repack``
   (a (field, term, doc_shard) sort-shuffle streamed through one
-  tail-buffered mapInPandas body), and every producer takes its stats from
-  ``index_stats`` (one aggregate, one avgdl floor per field). term_stats of
-  a one-field build rolls up from the packed groups (``packed_term_stats``);
-  with several fields df counts the docs holding the term in ANY field
+  tail-buffered mapInPandas body). Build and streaming take their stats
+  from ``index_stats`` (one aggregate of additive totals), the merge sums
+  its sources' totals, and both turn totals into stats through the one
+  avgdl formula, ``stats_from_totals``. term_stats of a one-field build
+  rolls up from the packed groups (``packed_term_stats``); with several
+  fields df counts the docs holding the term in ANY field
   (``any_field_term_stats``), which no one field's rows give.
 
 At 100 TB: tokenize is a narrow map (Arrow batches) with no shuffle, the
@@ -86,6 +88,41 @@ class IndexStats:
     avgdl: float
     avgdl_by_field: dict[str, float]  # BM25's per-field dl normalizer
     max_doc_id: int  # -1 for an empty index; sets the doc_shard count
+    min_doc_id: int  # -1 for an empty index; with max_doc_id, the doc_id range
+    tokens_by_field: dict[str, int]  # per-field sum of field_lens
+
+
+# the additive figures every other IndexStats field derives from: the merge
+# sums them over its sources and build_summary.json records them
+TOTALS = ("n_docs", "total_tokens", "tokens_by_field", "min_doc_id", "max_doc_id")
+
+
+def stats_from_totals(
+    n_docs: int,
+    total_tokens: int,
+    tokens_by_field: dict[str, int],
+    min_doc_id: int,
+    max_doc_id: int,
+) -> IndexStats:
+    """THE avgdl formula: an IndexStats from its additive totals. Every
+    avgdl is a token total over n_docs, floored to 1.0 when it is 0 (an
+    empty corpus or an all-empty field: it only ever divides doc lengths).
+    Spark's avg over a long column is the same double sum over the count,
+    and integer sums below 2^53 are exact, so the value does not depend on
+    where the totals were added up."""
+
+    def avgdl(total: int) -> float:
+        return (float(total) / n_docs if n_docs else 0.0) or 1.0
+
+    return IndexStats(
+        n_docs=n_docs,
+        total_tokens=total_tokens,
+        avgdl=avgdl(total_tokens),
+        avgdl_by_field={f: avgdl(t) for f, t in tokens_by_field.items()},
+        max_doc_id=max_doc_id,
+        min_doc_id=min_doc_id,
+        tokens_by_field=dict(tokens_by_field),
+    )
 
 
 @dataclass
@@ -343,31 +380,34 @@ def term_bucket_col(term_col, n_buckets: int):
 
 
 def index_stats(doc_map: DataFrame, runner: StageRunner, fields) -> IndexStats:
-    """n_docs / total_tokens / avgdl, each of ``fields``' avgdl and the
-    largest doc_id over a doc_map (doc_id, doc_len, field_lens, ...), in ONE
-    aggregate run as the runner's ``stats`` stage (a runner without a
-    checkpoint dir just runs it). Every avgdl floors to 1.0 when its mean is
-    0 (an empty corpus or an all-empty field: it only ever divides doc
-    lengths); max_doc_id is -1 on an empty corpus."""
+    """The ``TOTALS`` of a doc_map (doc_id, doc_len, field_lens, ...) —
+    doc count, token sums overall and per field of ``fields``, doc_id range
+    — in ONE aggregate run as the runner's ``stats`` stage (a runner without
+    a checkpoint dir just runs it), turned into IndexStats by
+    ``stats_from_totals``. The doc_id bounds are -1 on an empty corpus. A
+    checkpointed ``stats`` stage written before the totals were recorded
+    lacks their columns and is re-run."""
     fields = list(fields)
-    row = runner.run(
-        "stats",
-        lambda: doc_map.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("doc_len"), F.lit(0)).alias("total_tokens"),
-            F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("avgdl"),
-            F.coalesce(F.max("doc_id"), F.lit(-1)).alias("max_doc_id"),
-            *[
-                F.coalesce(F.avg(F.col("field_lens")[f]), F.lit(0.0)).alias(f"avgdl_{i}")
-                for i, f in enumerate(fields)
-            ],
-        ),
-    ).collect()[0]
-    return IndexStats(
+    totals = doc_map.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum("doc_len"), F.lit(0)).alias("total_tokens"),
+        F.coalesce(F.min("doc_id"), F.lit(-1)).alias("min_doc_id"),
+        F.coalesce(F.max("doc_id"), F.lit(-1)).alias("max_doc_id"),
+        *[
+            F.coalesce(F.sum(F.col("field_lens")[f]), F.lit(0)).alias(f"tokens_{i}")
+            for i, f in enumerate(fields)
+        ],
+    )
+    stage = runner.run("stats", lambda: totals)
+    if not set(totals.columns) <= set(stage.columns):
+        runner.invalidate("stats")
+        stage = runner.run("stats", lambda: totals)
+    row = stage.collect()[0]
+    return stats_from_totals(
         n_docs=row["n_docs"],
         total_tokens=row["total_tokens"],
-        avgdl=float(row["avgdl"]) or 1.0,
-        avgdl_by_field={f: float(row[f"avgdl_{i}"]) or 1.0 for i, f in enumerate(fields)},
+        tokens_by_field={f: row[f"tokens_{i}"] for i, f in enumerate(fields)},
+        min_doc_id=row["min_doc_id"],
         max_doc_id=row["max_doc_id"],
     )
 

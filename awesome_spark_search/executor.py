@@ -256,8 +256,6 @@ class QueryExecutor:
             self.packed_citations.filter(F.col("dst") == ast.doc_id)
         ).select(F.col("dst").alias("target"), F.col("src").alias("doc_id"))
 
-    RESULT_SCHEMA = "doc_id long, score double"
-
     def _localize(self, df: DataFrame) -> DataFrame:
         """A query's k-row result as a local DataFrame, whose collect runs
         no Spark job. A frame that is already local (``isLocal()``: the
@@ -282,7 +280,7 @@ class QueryExecutor:
             "doc_id": pd.Series([r["doc_id"] for r in rows], dtype="int64"),
             "score": pd.Series([r["score"] for r in rows], dtype="object"),
         })
-        return wand._localized(self.spark, pdf, self.RESULT_SCHEMA)
+        return wand._localized(self.spark, pdf, wand.RESULT_SCHEMA)
 
     def search(self, query: str, k: int = 10) -> DataFrame:
         """Full pipeline. Returns (doc_id, score) for ranked query types,

@@ -55,6 +55,11 @@ class StageRunner:
         except (json.JSONDecodeError, OSError):
             return False
 
+    def invalidate(self, name: str) -> None:
+        """Mark a stage incomplete, so the next ``run`` rebuilds it."""
+        if self.dir is not None and os.path.exists(self._paths(name)[1]):
+            os.remove(self._paths(name)[1])
+
     def run(
         self,
         name: str,

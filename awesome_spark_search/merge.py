@@ -24,16 +24,22 @@ Spark shape:
   base occupy different doc_shards, so this path touches at most one
   boundary shard per term.
 
-stats (with every field's avgdl) come from the builder's ``index_stats``
-over the merged doc_map, so merged == rebuilt even when a source's field
-was empty everywhere. term_stats is the sum of the sources' term_stats —
-exact for one field and for several (df over ANY field) because the doc
-sets are disjoint. Inputs are checked with ValueError (source count,
-packed present, equal doc_shard_size / do_stem / field_weights /
-n_term_buckets). Doc sets must be disjoint (checked both driver-side
-against doc_map and defensively inside the merge kernel);
-replace/delete semantics belong to streaming.IncrementalIndexer, which
-resolves them BEFORE packing.
+Over range-disjoint sources no Spark job runs before the repack. stats
+(with every field's avgdl) are the sources' additive totals summed (doc
+count, token sums overall and per field, the hull of the doc_id ranges),
+turned into IndexStats by the builder's own ``stats_from_totals``, so
+merged == rebuilt bit for bit, also when a source's field was empty
+everywhere. These are the metadata-only statistics of Delta Lake's log
+(VLDB 2020): counts and ranges kept per file, so a writer never scans data
+to learn them. term_stats is the sum of the sources' term_stats — exact
+for one field and for several (df over ANY field) because the doc sets are
+disjoint. Inputs are checked with ValueError (source count, packed
+present, equal doc_shard_size / do_stem / field_weights / n_term_buckets).
+Doc sets must be disjoint. When the non-empty sources' [min_doc_id,
+max_doc_id] ranges do not overlap, they are, and no row is read; when
+ranges overlap (interleaved doc_ids), a doc_map duplicate probe decides,
+and the merge kernel checks again defensively. replace/delete semantics
+belong to streaming.IncrementalIndexer, which resolves them BEFORE packing.
 """
 
 from __future__ import annotations
@@ -51,14 +57,14 @@ from .build import (
     K1,
     PACKED_SCHEMA,
     Index,
+    IndexStats,
     _encode_group,
     _groups,
     _py_term_bucket,
-    index_stats,
     repack,
+    stats_from_totals,
     term_bucket_col,
 )
-from .lineage import StageRunner
 
 
 def _decode_row(r) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -155,20 +161,35 @@ def _check_sources(sources: list, *attrs: str) -> None:
             raise ValueError(f"{a} must match across sources, got {vals}")
 
 
-def merge_packed_indexes(
-    spark: SparkSession,
-    indexes: list[Index],
-    *,
-    check_disjoint: bool = True,
-) -> Index:
+def _merged_stats(stats: list[IndexStats], fields) -> IndexStats:
+    """IndexStats of the union of disjoint doc sets: counts and token sums
+    add, the doc_id range is the hull of the non-empty sources' ranges."""
+    return stats_from_totals(
+        n_docs=sum(s.n_docs for s in stats),
+        total_tokens=sum(s.total_tokens for s in stats),
+        tokens_by_field={f: sum(s.tokens_by_field[f] for s in stats) for f in fields},
+        min_doc_id=min((s.min_doc_id for s in stats if s.n_docs), default=-1),
+        max_doc_id=max(s.max_doc_id for s in stats),
+    )
+
+
+def _ranges_disjoint(stats: list[IndexStats]) -> bool:
+    """True when no two non-empty sources' [min_doc_id, max_doc_id] ranges
+    overlap — their doc sets are then disjoint by construction."""
+    ranges = sorted((s.min_doc_id, s.max_doc_id) for s in stats if s.n_docs)
+    return all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
+
+
+def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
     """Fold k packed indexes over DISJOINT doc sets into one queryable
-    Index — content is never re-read, tokenization never re-runs. stats
-    and every field's avgdl are recomputed over the merged doc_map
+    Index — content is never re-read and tokenization never re-runs.
+    stats and every field's avgdl come from the sources' summed totals
     (block_max bounds are refreshed against them in every emitted group,
-    keeping WAND skipping exact); term_stats sums the sources'.
-    ``check_disjoint=False`` skips the doc_map duplicate probe when the
-    caller guarantees disjointness (monotonic watermark). doc_map, packed
-    and term_stats are persisted: stats and queries read them again."""
+    keeping WAND skipping exact); term_stats sums the sources'. Over
+    sources whose doc_id ranges do not overlap no Spark job runs here (the
+    returned frames are lazy); overlapping ranges pay one doc_map duplicate
+    probe. doc_map, packed and term_stats are persisted: later merges and
+    queries read them."""
     _check_sources(indexes, "doc_shard_size", "do_stem", "field_weights", "n_term_buckets")
     if any(ix.packed is None for ix in indexes):
         raise ValueError(
@@ -179,7 +200,7 @@ def merge_packed_indexes(
 
     # streamed (to_index) and batch indexes carry different doc_map/postings
     # metadata columns — merge on the intersection (doc_id, doc_len and
-    # field_lens always present; stats and serving never need more)
+    # field_lens always present; serving never needs more)
     def _union_common(dfs):
         common = [
             c for c in dfs[0].columns if all(c in d.columns for d in dfs[1:])
@@ -190,7 +211,7 @@ def merge_packed_indexes(
         return out
 
     doc_map = _union_common([ix.doc_map for ix in indexes])
-    if check_disjoint:
+    if not _ranges_disjoint([ix.stats for ix in indexes]):
         dup = (
             doc_map.groupBy("doc_id").count()
             .filter(F.col("count") > 1).limit(1).count()
@@ -201,7 +222,7 @@ def merge_packed_indexes(
                 "replacements upstream (streaming.IncrementalIndexer) first"
             )
     doc_map = doc_map.persist()
-    stats = index_stats(doc_map, StageRunner(spark, None), first.field_weights)
+    stats = _merged_stats([ix.stats for ix in indexes], first.field_weights)
 
     merged = repack(
         reduce(DataFrame.unionByName, [ix.packed for ix in indexes]), [],

@@ -56,9 +56,11 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import codec
 from .build import Index, _py_term_bucket, doc_shard_col, K1, B
@@ -384,6 +386,19 @@ SHARD_ROWS_SCHEMA = T.StructType(
 )
 
 
+# what every query and batch entry point returns
+RESULT_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("score", T.DoubleType())]
+)
+BATCH_RESULT_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.StringType()),
+        T.StructField("rank", T.IntegerType()),
+        *RESULT_SCHEMA.fields,
+    ]
+)
+
+
 def _empty_batch_pdf() -> pd.DataFrame:
     return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
         {"query_id": "object", "doc_id": "int64", "score": "float64"}
@@ -455,13 +470,15 @@ def _run_shards(index: Index, rows: DataFrame, step, schema, empty: pd.DataFrame
     return rows.groupBy("doc_shard").applyInPandas(step, schema)
 
 
-def _localized(spark, pdf: pd.DataFrame, schema) -> DataFrame:
-    """A driver-side result as a local DataFrame: collecting it runs no
-    Spark job (an empty frame takes the ``limit(0)`` relation, which a
-    pandas-created one would not be)."""
-    if not len(pdf):
-        return spark.createDataFrame([], schema).limit(0)
-    return spark.createDataFrame(pdf, schema)
+def _localized(spark, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
+    """A driver-side result as a local DataFrame, empty or not: collecting
+    it runs no Spark job under ANY session conf. It is built from a
+    pyarrow Table with ``schema``'s Arrow types (a None score lands as
+    NULL), which Spark always makes a local relation; a pandas frame would
+    become an RDD-backed one when the session disables Arrow."""
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pdf, schema=to_arrow_schema(schema), preserve_index=False)
+    )
 
 
 def _ranked_rows(
@@ -479,15 +496,13 @@ def _ranked_rows(
     Block skipping stays per-query exact: every spec runs its own kernel
     over the shared rows. With the cached dictionary ``stats``, terms
     outside it have no packed rows and drop out here; a plan left without
-    terms, or with k = 0, is the empty frame and runs no job."""
+    terms, or with k = 0, is the empty pandas frame and runs no job."""
     terms = list(dict.fromkeys(t for s in specs.values() for t in [*s.phrase, *s.keywords]))
     prefixes = tuple(dict.fromkeys(p for s in specs.values() for p in s.prefixes))
     if stats is not None and not prefixes:
         terms = [t for t in terms if t in stats]
     if k == 0 or (not terms and not prefixes):
-        # limit(0) makes it an empty local relation: collecting it (and any
-        # top-k tail over it) runs no job
-        return spark.createDataFrame([], SHARD_ROWS_SCHEMA).limit(0)
+        return _empty_batch_pdf()
     unread = () if any(s.phrase for s in specs.values()) else ("pos_vb", "blk_pos_off")
     return _run_shards(
         index, select(terms, prefixes, unread), _shard_step(specs, parse, score, k),
@@ -514,7 +529,7 @@ def _topk(spark, local, k: int) -> DataFrame:
     job of its own, so the driver tail stays in pandas.)"""
     if isinstance(local, pd.DataFrame):
         top = local.sort_values(["score", "doc_id"], ascending=[False, True]).head(k)
-        return _localized(spark, top[["doc_id", "score"]], "doc_id long, score double")
+        return _localized(spark, top, RESULT_SCHEMA)
     return (
         local.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
@@ -535,10 +550,7 @@ def _batch_global_topk(spark, local, k: int) -> DataFrame:
             ["query_id", "score", "doc_id"], ascending=[True, False, True]
         )
         ranked.insert(1, "rank", ranked.groupby("query_id").cumcount() + 1)
-        return _localized(
-            spark, ranked[ranked["rank"] <= k],
-            "query_id string, rank int, doc_id long, score double",
-        )
+        return _localized(spark, ranked[ranked["rank"] <= k], BATCH_RESULT_SCHEMA)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(
@@ -965,7 +977,7 @@ def boolean_docs(
     terms, prefixes = _spec_leaves(spec)
     terms = sorted(set(terms))
     if k == 0 or (not terms and not prefixes and links is None):
-        return spark.createDataFrame([], "doc_id long, score double").limit(0)
+        return _localized(spark, pd.DataFrame({"doc_id": [], "score": []}), RESULT_SCHEMA)
     parts = []
     if terms or prefixes:
         parts.append(
@@ -998,9 +1010,7 @@ def boolean_docs(
     if isinstance(local, pd.DataFrame):
         # the NULL score is built in pandas, so the frame stays local
         top = np.sort(local["doc_id"].to_numpy(np.int64))[::-1][:k]
-        return _localized(
-            spark, pd.DataFrame({"doc_id": top, "score": None}), "doc_id long, score double"
-        )
+        return _localized(spark, pd.DataFrame({"doc_id": top, "score": None}), RESULT_SCHEMA)
     return (
         local.orderBy(F.col("doc_id").desc()).limit(k)
         .withColumn("score", F.lit(None).cast("double"))

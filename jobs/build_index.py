@@ -45,7 +45,7 @@ def main(argv=None) -> int:
     if "doc_id" not in src.columns:
         src = corpus.assign_doc_ids(src, ["repo", "path", "commit"])
 
-    from query import drop_summary, write_summary  # same jobs/ dir
+    from query import drop_summary, stats_record, write_summary  # same jobs/ dir
 
     drop_summary(args.out)
     t0 = time.time()
@@ -58,9 +58,7 @@ def main(argv=None) -> int:
         doc_shard_size=args.doc_shard_size,
     )
     summary = {
-        "n_docs": idx.stats.n_docs,
-        "total_tokens": idx.stats.total_tokens,
-        "avgdl": idx.stats.avgdl,
+        **stats_record(idx.stats),
         "doc_shard_size": args.doc_shard_size,
         "term_buckets": args.term_buckets,
         "do_stem": not args.no_stem,

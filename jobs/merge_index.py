@@ -10,9 +10,13 @@ merge). Content is never re-read and tokenization never re-runs: packed
 bytes move through one (field, term, doc_shard) shuffle
 (awesome_spark_search.merge.merge_packed_indexes — single-source groups
 pass through byte-identical, block_max refreshed against the merged
-avgdl). The output root uses the same stage layout, so jobs/query.py
-serves it unchanged. Doc sets must be disjoint (re-ingest/tombstone
-resolution belongs to the streaming path, upstream of packing); sources
+avgdl). No stats job runs: each input's IndexStats load from the totals
+its build_summary.json records, the merged stats are their sums, and the
+merged totals are recorded in turn. The output root uses the same stage
+layout, so jobs/query.py serves it unchanged. Doc sets must be disjoint
+(re-ingest/tombstone resolution belongs to the streaming path, upstream of
+packing): inputs whose doc_id ranges do not overlap are disjoint as they
+stand, and overlapping ones pay one doc_map duplicate probe. Sources
 that cannot merge (shared doc_ids, mismatched doc_shard_size, bucket count
 or stemming, a root load_index cannot serve) and an ``--out`` that is one
 of the input roots end with a one-line error on stderr and exit code 2,
@@ -45,10 +49,6 @@ def main(argv=None) -> int:
         "term_bucket values, so re-bucketing only packed/term_stats would "
         "leave long-table bucket pruning inconsistent with the layout)",
     )
-    ap.add_argument(
-        "--assume-disjoint", action="store_true",
-        help="skip the doc_map duplicate probe (monotonic doc_id guarantee)",
-    )
     ap.add_argument("roots", nargs="+", help="2+ input index roots")
     args = ap.parse_args(argv)
     if len(args.roots) < 2:
@@ -61,7 +61,7 @@ def main(argv=None) -> int:
         return 2
 
     from awesome_spark_search.merge import merge_packed_indexes
-    from query import drop_summary, load_index, write_summary  # same jobs/ dir
+    from query import drop_summary, load_index, stats_record, write_summary  # same jobs/ dir
 
     spark = SparkSession.builder.appName("ass-merge-index").getOrCreate()
     try:
@@ -79,10 +79,7 @@ def main(argv=None) -> int:
             # compactions fold
             ix.postings = spark.read.parquet(os.path.join(r, "stages", "postings"))
         t0 = time.time()
-        merged = merge_packed_indexes(
-            spark, indexes,
-            check_disjoint=not args.assume_disjoint,
-        )
+        merged = merge_packed_indexes(spark, indexes)
     except ValueError as e:  # sources that cannot merge (overlap, mismatch)
         print(f"error: {e}", file=sys.stderr)
         return 2
@@ -107,9 +104,7 @@ def main(argv=None) -> int:
         os.path.join(stages, "postings")
     )
     summary = {
-        "n_docs": merged.stats.n_docs,
-        "total_tokens": merged.stats.total_tokens,
-        "avgdl": merged.stats.avgdl,
+        **stats_record(merged.stats),
         "doc_shard_size": merged.doc_shard_size,
         "term_buckets": merged.n_term_buckets,
         "do_stem": merged.do_stem,

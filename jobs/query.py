@@ -31,9 +31,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
-from awesome_spark_search.build import PLAIN_FIELDS, Index, index_stats
+from awesome_spark_search.build import TOTALS, Index, IndexStats, stats_from_totals
 from awesome_spark_search.executor import QueryExecutor
-from awesome_spark_search.lineage import StageRunner, write_json_atomic
+from awesome_spark_search.lineage import write_json_atomic
 
 
 def summary_path(root: str) -> str:
@@ -51,6 +51,12 @@ def drop_summary(root: str) -> None:
         os.remove(summary_path(root))
 
 
+def stats_record(stats: IndexStats) -> dict:
+    """A summary's stats: the additive ``TOTALS`` load_index rebuilds the
+    IndexStats from, and the avgdl for a reader of the file."""
+    return {**{k: getattr(stats, k) for k in TOTALS}, "avgdl": stats.avgdl}
+
+
 def write_summary(root: str, summary: dict) -> None:
     os.makedirs(root, exist_ok=True)
     write_json_atomic(summary_path(root), summary)
@@ -60,10 +66,12 @@ def load_index(spark: SparkSession, root: str) -> Index:
     """The serving view of an index root written by jobs/build_index.py or
     jobs/merge_index.py: packed postings, term_stats and doc_map (the long
     postings stage is a build intermediate and is not read), laid out as
-    its build_summary.json records. ValueError when the root has no
-    readable stages/packed or no summary (an unfinished or interrupted
-    build or merge), or predates packed rows carrying their field and the
-    recorded term-bucket count and stemming."""
+    its build_summary.json records. The IndexStats come from the
+    summary's recorded totals (``stats_from_totals``): no stats job runs,
+    only Spark's own file listing and Parquet schema reads. ValueError when the root has no readable stages/packed or no
+    summary (an unfinished or interrupted build or merge), or predates
+    packed rows carrying their field and the recorded term-bucket count,
+    stemming and stats totals."""
     stages = os.path.join(root, "stages")
     try:
         packed = spark.read.parquet(os.path.join(stages, "packed"))
@@ -80,19 +88,19 @@ def load_index(spark: SparkSession, root: str) -> Index:
     with open(summary_path(root)) as f:
         s = json.load(f)
     if "field" not in packed.columns or not all(
-        k in s for k in ("doc_shard_size", "term_buckets", "do_stem")
+        k in s for k in ("doc_shard_size", "term_buckets", "do_stem", *TOTALS)
     ):
         raise ValueError(
             f"the index at {root!r} was built by an older version (no field "
-            "column or no recorded term_buckets/do_stem); rebuild it with "
-            "jobs/build_index.py"
+            "column or no recorded term_buckets/do_stem/stats totals); rebuild "
+            "it with jobs/build_index.py"
         )
     doc_map = spark.read.parquet(os.path.join(stages, "doc_map"))
     term_stats = spark.read.parquet(os.path.join(stages, "term_stats"))
     # jobs/build_index.py builds plain (one-field) indexes only
     return Index(
         doc_map=doc_map, postings=None, term_stats=term_stats, packed=packed,
-        stats=index_stats(doc_map, StageRunner(spark, None), PLAIN_FIELDS),
+        stats=stats_from_totals(**{k: s[k] for k in TOTALS}),
         do_stem=s["do_stem"], doc_shard_size=s["doc_shard_size"],
         n_term_buckets=s["term_buckets"],
     )

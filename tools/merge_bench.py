@@ -3,7 +3,9 @@
 Builds two half-corpus indexes once (the 'yesterday's index + today's
 delta' setup), then interleaves best-of-N timings of
   (a) re-building the packed index over the union corpus from content, and
-  (b) folding the two packed indexes with merge_packed_indexes,
+  (b) folding the two packed indexes with merge_packed_indexes (the
+      halves split by doc_id parity, so their doc_id ranges overlap and
+      the merge runs its doc_map duplicate probe),
 both materialized to completion (packed.count + term_stats.count). The
 interleaving keeps the comparison fair under this host's bursty CPU steal
 (CLAUDE.md: never time two heavy jobs concurrently; compare ratios from
@@ -66,7 +68,7 @@ def main() -> int:
             df.unpersist()
 
     def merge():
-        m = merge_packed_indexes(spark, [ia, ib], check_disjoint=False)
+        m = merge_packed_indexes(spark, [ia, ib])
         m.packed.count(); m.term_stats.count()
         for df in (m.packed, m.term_stats, m.doc_map):
             df.unpersist()
