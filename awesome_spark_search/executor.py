@@ -23,10 +23,11 @@ spelling and PRF read the same index:
 * scorer="ql"  -> the same shapes through ``wand.ql_topk``
 
 Every query is ONE Spark action: term lookups prune partitions via
-term_bucket. The driver's cached dictionary (``_get_vocab``, {term: (df,
-cf)}) answers every per-term question — existence, df/cf as literals in
-the plan, spelling candidates — so a ranked query runs no term_stats job
-and a typo no Spark job; past ``VOCAB_CACHE_MAX`` a Bloom filter answers
+term_bucket. The driver's cached dictionary (``_get_vocab``, {term: (idf,
+cf)}) answers every per-term question — existence, the kernels' idf/cf,
+spelling candidates — so a ranked query runs no term_stats job, its plan
+is a plain filter of the packed rows, and a typo runs no Spark job; past
+``VOCAB_CACHE_MAX`` a Bloom filter answers
 existence, term stats arrive by broadcast join and corrections cost one
 ``correct_terms`` job. ``search`` and ``search_many`` share one front end —
 parse, ONE spelling-correction pass, ``wand.QuerySpec``s, one scorer
@@ -54,7 +55,7 @@ from pyspark.sql import functions as F
 from . import queries as Q
 from . import wand
 from .build import Index
-from .scoring import PRF_WEIGHT
+from .scoring import PRF_WEIGHT, idf_col
 from .spell import correct_dictionary, correct_terms
 from .textproc import preprocess_query_terms, tokenize_text
 
@@ -94,8 +95,10 @@ class QueryExecutor:
         # the latest call's corrections, surfaced to formatters (last call
         # wins when calls overlap; each call's own map is a local value)
         self.last_corrections: dict[str, str] = {}
-        # driver-side {term: (df, cf)} dictionary (None = too big)
-        self._vocab: dict[str, tuple[int, int]] | None = None
+        # driver-side {term: (idf, cf)} dictionary (None = too big), and
+        # the plan parts built with it (wand.TermDictionary)
+        self._vocab: dict[str, tuple[float, int]] | None = None
+        self._dictionary: wand.TermDictionary | None = None
         self._vocab_checked = False
         self._n_terms: int | None = None
         # past VOCAB_CACHE_MAX: a Bloom filter (built once) answers
@@ -122,27 +125,38 @@ class QueryExecutor:
         prefixes = [t[:-1] for t in terms if t.endswith("*")]
         return (list(dict.fromkeys(exact)) if dedupe else exact), prefixes
 
-    # driver-side dictionary cutoff: at 1M terms the {term: (df, cf)} dict
-    # and its tuples take ~87MB beyond the term strings (a frozenset: ~34MB)
+    # driver-side dictionary cutoff: at 1M terms the {term: (idf, cf)} dict
+    # and its tuples take ~87MB beyond the term strings, as (df, cf) did,
+    # because equal dfs share one idf float (a float per term: ~111MB; a
+    # frozenset: ~34MB; tracemalloc, 1M synthetic Zipf terms)
     VOCAB_CACHE_MAX = 1_000_000
 
-    def _get_vocab(self) -> dict[str, tuple[int, int]] | None:
-        """Driver-cached {term: (df, cf)} dictionary when it is small
-        enough, collected once per executor. It answers existence, the
-        ranked plans' df/cf (``wand.term_rows`` literals) and spelling
-        candidates with zero Spark actions per query. For huge vocabularies
-        (10^8-term code corpora) this returns None: existence uses a Bloom
-        filter built ONCE per index (``_get_bloom``) — still zero per-query
-        actions — stats the broadcast join, corrections ``correct_terms``."""
+    def _get_vocab(self) -> dict[str, tuple[float, int]] | None:
+        """Driver-cached {term: (idf, cf)} dictionary when it is small
+        enough, collected once per executor. idf is ``scoring.idf_col``
+        evaluated in the JVM over the term's df, in the same collect, so it
+        equals the broadcast plan's idf bit for bit; equal dfs share one
+        idf float. It answers existence, the ranked plans' idf/cf (with the
+        pruned packed frame built here once, ``wand.TermDictionary``) and
+        spelling candidates (by cf) with zero Spark actions per query. For
+        huge vocabularies (10^8-term code corpora) this returns None:
+        existence uses a Bloom filter built ONCE per index (``_get_bloom``)
+        — still zero per-query actions — stats the broadcast join,
+        corrections ``correct_terms``."""
         with self._dictionary_lock:
             if not self._vocab_checked:
-                if self.index.stats.n_docs:
+                n_docs = self.index.stats.n_docs
+                if n_docs:
                     self._n_terms = self.index.term_stats.count()
                     if self._n_terms <= self.VOCAB_CACHE_MAX:
+                        idf = idf_col(F.col("df"), n_docs).alias("idf")
+                        rows = self.index.term_stats.select("term", "df", idf, "cf").collect()
+                        idfs: dict[int, float] = {}
                         self._vocab = {
-                            r["term"]: (r["df"], r["cf"])
-                            for r in self.index.term_stats.select("term", "df", "cf").collect()
+                            r["term"]: (idfs.setdefault(r["df"], r["idf"]), r["cf"])
+                            for r in rows
                         }
+                        self._dictionary = wand.dictionary(self.index, self._vocab)
                 self._vocab_checked = True
         return self._vocab
 
@@ -367,7 +381,8 @@ class QueryExecutor:
 
     def _plans(self):
         """THE scorer dispatch of every ranked plan: this executor's (one
-        query, batch) plan pair, both carrying the cached dictionary.
+        query, batch) plan pair, both carrying the cached dictionary's
+        ``wand.TermDictionary``.
         ``one(spec, k)`` ends in a TakeOrderedAndProject over (doc_id,
         score); ``many({qid: (phrase, keywords)}, k)`` in the per-query
         window — over one doc_shard both tails run in pandas and the
@@ -376,7 +391,8 @@ class QueryExecutor:
         several fields); else block-max WAND, seeded by phrase survivors
         when the spec has a phrase, zone-weighted on every ranked query type
         of a fielded index."""
-        spark, index, stats = self.spark, self.index, self._get_vocab()
+        self._get_vocab()
+        spark, index, stats = self.spark, self.index, self._dictionary
         if self.scorer == "ql":
             return (
                 lambda s, k: wand.ql_topk(

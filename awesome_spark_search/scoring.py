@@ -10,9 +10,11 @@ smoothing, lambda=0.2 (ref: src/querying/ranking/DocumentRanker.java:33,
 
 Both are evaluated per doc_shard over the packed index (wand.py): idf (BM25,
 ``idf_col`` over df) or the global cf (QL) is a column of the packed rows
-(``wand.term_rows``), computed from literal df/cf when the executor has its
-dictionary cached, else from broadcast-joined term_stats rows — the same
-JVM expression either way, so scores are bit-identical. Top-k order is
+the kernel reads (``wand.term_rows``). When the executor has its
+dictionary cached, ``idf_col`` runs in the JVM once per term as the
+dictionary is collected and the shard step attaches the value by term;
+otherwise it runs over broadcast-joined term_stats rows. It is the same
+JVM expression over the same df either way, so scores are bit-identical. Top-k order is
 (score DESC, doc_id ASC) — the reference's HashMap iteration order is
 nondeterministic (ref: DocumentRanker.java:90-94), so the rebuild pins this
 tie-break and the test oracle encodes it.

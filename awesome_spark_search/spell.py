@@ -9,7 +9,7 @@ broken by higher collection frequency (the rebuild adds term ASC as a final
 deterministic tie-break).
 
 Two shapes, one rule. ``correct_dictionary`` ranks candidates on the
-driver over the executor's cached {term: (df, cf)} dictionary — no Spark
+driver over the executor's cached {term: (idf, cf)} dictionary — no Spark
 job, like the reference's in-process scan (ref: InvertedIndexReader.java:
 73-99). ``correct_terms`` serves dictionaries too big for the driver: the
 candidate filter is a codegen'd dictionary scan (first-char + length band);
@@ -173,10 +173,10 @@ def correct_terms(
 
 
 def correct_dictionary(
-    terms: list[str], dictionary: Mapping[str, tuple[int, int]]
+    terms: list[str], dictionary: Mapping[str, tuple[float, int]]
 ) -> dict[str, str]:
-    """``correct_terms`` (OSA variant) over an in-memory {term: (df, cf)}
-    dictionary: one pass over it for every target, the same candidate band
+    """``correct_terms`` (OSA variant) over an in-memory {term: (idf, cf)}
+    dictionary (only cf is read): one pass over it for every target, the same candidate band
     (first character, length within MAX_LENGTH_DIFF), MAX_DISTANCE and the
     (distance, -cf, term) minimum. No Spark job."""
     by_first: dict[str, list[str]] = {}

@@ -25,10 +25,13 @@ Spark shape — scalable by construction:
   QL scores one-field indexes only.
 * every entry point prunes with the index's own term-bucket count
   (``Index.n_term_buckets``).
-* per-term stats (idf, the global cf) ride on those rows (``term_rows``):
-  literal map lookups from the executor's cached dictionary (``stats``),
-  so the action scans no term_stats and broadcasts nothing; without it a
-  broadcast join of the terms' term_stats rows.
+* per-term stats (idf, the global cf) come with those rows
+  (``term_rows``): with the executor's cached dictionary (``stats``, a
+  ``TermDictionary``) the plan is a plain filter of a packed frame pruned
+  once per executor, and the shard step attaches the stat from the
+  dictionary's JVM-computed values, so the action scans no term_stats,
+  broadcasts nothing and the plan holds no per-term expression; without
+  it a broadcast join of the terms' term_stats rows.
 * one plan builder (``_ranked_rows``) serves every scorer, one query or a
   batch: each shard emits every query's local top-k; the global top-k of
   one query is a tiny TakeOrderedAndProject over n_shards*k rows, that of
@@ -260,6 +263,19 @@ class QuerySpec(NamedTuple):
         return term in self.keywords or term.startswith(self.prefixes)
 
 
+def _isin(col, values: list):
+    """``col.isin(values)``, built with one JVM round trip per value plus a
+    fixed few: the values cross as one list of plain values, which the JVM
+    wraps in the same literals. pyspark's ``isin`` wraps each value in a
+    ``lit`` Column first and records a call-site origin per Column
+    operation, several round trips a value. Values travel as data, never as
+    SQL text."""
+    from pyspark import SparkContext
+    from pyspark.sql.classic.column import Column, _to_seq
+
+    return Column(col._jc.isin(_to_seq(SparkContext._active_spark_context, values)))
+
+
 def _term_filter(
     table: DataFrame, terms: list[str], n_term_buckets: int, prefixes=()
 ) -> DataFrame:
@@ -269,64 +285,77 @@ def _term_filter(
     a prefix range cannot prune buckets (the hash spreads it over all of
     them) but still pushes down as a min/max-prunable range."""
     buckets = sorted({_py_term_bucket(t, n_term_buckets) for t in terms})
+    # the table's own columns (one round trip each; F.col takes a dozen)
+    bucket_col, term_col = table["term_bucket"], table["term"]
     if not prefixes:
-        return table.filter(F.col("term_bucket").isin(buckets)).filter(
-            F.col("term").isin(terms)
-        )
-    conds = [(F.col("term") >= p) & (F.col("term") < p + "\uffff") for p in prefixes]
+        return table.filter(_isin(bucket_col, buckets)).filter(_isin(term_col, terms))
+    conds = [(term_col >= p) & (term_col < p + "\uffff") for p in prefixes]
     if terms:
-        conds.append(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
+        conds.append(_isin(bucket_col, buckets) & _isin(term_col, terms))
     return table.filter(reduce(lambda a, b: a | b, conds))
 
 
+# the per-term statistics a ranked kernel reads, in the order the cached
+# dictionary holds them: BM25's idf and QL's corpus-wide cf (aliased
+# cf_global: packed group rows carry their own per-(term, doc_shard) cf)
+STATS = ("idf", "cf_global")
+POSITION_COLS = ("pos_vb", "blk_pos_off")
+
+
+class TermDictionary(NamedTuple):
+    """An executor's cached dictionary as its ranked plans read it: ``terms``
+    maps every indexed term to its ``STATS`` values (idf evaluated in the
+    JVM by ``scoring.idf_col``, the global cf), and ``packed`` holds the
+    packed frame pruned to the columns the kernels read, with and without
+    the position stream (keyed by whether a plan has a phrase). Built once
+    per executor (``dictionary``), so a query's plan is a filter of a frame
+    that already exists."""
+
+    terms: dict
+    packed: dict
+
+
+def dictionary(index: Index, terms: dict) -> TermDictionary:
+    """The ``TermDictionary`` of an executor over ``index`` whose cached
+    {term: (idf, cf)} dictionary is ``terms``."""
+    return TermDictionary(terms, {True: index.packed, False: index.packed.drop(*POSITION_COLS)})
+
+
 def term_rows(
-    packed: DataFrame,
-    term_stats: DataFrame,
-    terms: list[str],
-    n_term_buckets: int,
-    stat_cols: list,
-    prefixes=(),
-    *,
-    stats=None,
-) -> DataFrame:
+    index: Index, terms: list[str], stat: str, prefixes=(), phrase: bool = True,
+    *, stats: TermDictionary | None = None,
+) -> tuple[DataFrame, dict]:
     """THE term-row selector of every ranked packed plan: the packed rows of
-    ``terms`` and ``prefixes`` (``_term_filter``) with ``stat_cols`` —
-    expressions over the terms' ``df`` and ``cf`` (idf for BM25, the global
-    cf for QL). Where df/cf come from:
+    ``terms`` and ``prefixes`` (``_term_filter``), without the position
+    stream unless the plan has a ``phrase``, and the kernels' per-term
+    ``stat`` (one of ``STATS``). Returns (rows, {stat: {term: value}} for
+    the shard step to attach, or {} when the rows carry it):
 
-    * ``stats`` given (the executor's cached {term: (df, cf)} dictionary,
-      holding every one of ``terms``) and no prefix ranges: literal map
-      lookups on the packed rows — no term_stats scan, no join, no
-      broadcast job;
-    * otherwise: the same terms' term_stats rows, broadcast-joined on, so
-      the query stays ONE Spark action with no driver-side stats collect.
+    * ``stats`` given (the executor's ``TermDictionary``, holding every one
+      of ``terms``) and no prefix ranges: the rows are a plain bucket and
+      term filter of the dictionary's pruned packed frame and nothing else
+      (no term_stats scan, no join, no per-term literal); the stat is the
+      dictionary's value for the plan's terms;
+    * otherwise: the same terms' term_stats rows, with the stat as a JVM
+      column, broadcast-joined on, so the query stays ONE Spark action with
+      no driver-side stats collect.
 
-    Both evaluate the same JVM expressions, so scores are bit-identical."""
+    The dictionary's idf is ``idf_col`` over the same df, evaluated in the
+    JVM when the dictionary is collected, so scores are bit-identical."""
     if stats is None or prefixes:
-        ts = _term_filter(term_stats, terms, n_term_buckets, prefixes).select(
-            "term", *stat_cols
+        col = (
+            idf_col(F.col("df"), index.stats.n_docs) if stat == "idf" else F.col("cf")
+        ).alias(stat)
+        ts = _term_filter(index.term_stats, terms, index.n_term_buckets, prefixes).select(
+            "term", col
         )
-        return _term_filter(packed, terms, n_term_buckets, prefixes).join(
-            F.broadcast(ts), "term"
-        )
-    rows = _term_filter(packed, terms, n_term_buckets)
-    lookups = [
-        F.create_map(*[F.lit(x) for t in terms for x in (t, stats[t][i])])[F.col("term")]
-        .cast("long").alias(name)
-        for i, name in enumerate(("df", "cf"))
-    ]
-    # the packed row's own per-group cf stays nested while stat_cols read
-    # the dictionary's df/cf
-    return rows.select(F.struct("*").alias("_row"), *lookups).select("_row.*", *stat_cols)
-
-
-def _idf_rows(index: Index, stats=None):
-    """Row selector for BM25 plans over ``index``: (terms, prefixes,
-    unread packed columns) -> packed rows with an idf column."""
-    idf = idf_col(F.col("df"), index.stats.n_docs).alias("idf")
-    return lambda terms, prefixes, unread: term_rows(
-        index.packed.drop(*unread), index.term_stats, terms, index.n_term_buckets,
-        [idf], prefixes, stats=stats,
+        packed = index.packed if phrase else index.packed.drop(*POSITION_COLS)
+        rows = _term_filter(packed, terms, index.n_term_buckets, prefixes)
+        return rows.join(F.broadcast(ts), "term"), {}
+    i = STATS.index(stat)
+    return (
+        _term_filter(stats.packed[phrase], terms, index.n_term_buckets),
+        {stat: {t: stats.terms[t][i] for t in terms}},
     )
 
 
@@ -417,13 +446,16 @@ def _batch_pdf(scored, k: int) -> pd.DataFrame:
     return pd.concat(parts, ignore_index=True) if parts else _empty_batch_pdf()
 
 
-def _shard_step(specs: dict[str, QuerySpec], parse, score, k: int):
+def _shard_step(specs: dict[str, QuerySpec], parse, score, k: int, attach=None):
     """The per-shard body of ``_ranked_rows`` (the applyInPandas function,
-    or one call per doc_shard on the driver): one doc_shard's rows, parsed
-    once (``parse``), scored for every spec (``score``) -> each query's
-    shard-local top-k rows."""
+    or one call per doc_shard on the driver): one doc_shard's rows, with
+    any ``attach`` columns ({column: {term: value}}, ``term_rows``) added
+    by term, parsed once (``parse``), scored for every spec (``score``) ->
+    each query's shard-local top-k rows."""
 
     def shard_topk(left: pd.DataFrame) -> pd.DataFrame:
+        if attach:
+            left = left.assign(**{c: left["term"].map(v) for c, v in attach.items()})
         shard = parse(left)
         return _batch_pdf(((qid, score(shard, s)) for qid, s in specs.items()), k)
 
@@ -441,10 +473,13 @@ def _one_shard(index: Index) -> bool:
 
 def _collect_shards(rows: DataFrame, step, empty: pd.DataFrame) -> pd.DataFrame:
     """The driver execution of a one-shard plan: ONE Arrow collect of the
-    plan's ``rows`` (no shuffle; term rows are a JVM-only scan, filter and
-    project, and a LinkTo leaf adds its citation decode), then ``step`` per doc_shard group in the calling thread
-    — the same function, on the same rows, that the distributed plan's
-    pandas-group task runs. ``empty`` when no row matched.
+    plan's ``rows`` (no shuffle; term rows are a JVM-only scan and filter,
+    with a join only without the cached dictionary, and a LinkTo leaf adds
+    its citation decode), then ``step`` per doc_shard group in the calling
+    thread — the same function, on the same rows, that the distributed
+    plan's pandas-group task runs. The step attaches what the JVM did not
+    compute (the dictionary's stat column of a ranked plan, ``term_rows``)
+    to the collected frame. ``empty`` when no row matched.
 
     Driver memory: the collect holds exactly the rows the distributed
     plan's one kernel task would receive — one per (field, term) of the
@@ -482,13 +517,13 @@ def _localized(spark, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
 
 
 def _ranked_rows(
-    spark, index: Index, select, specs: dict[str, QuerySpec], parse, score, k: int,
-    stats=None,
+    spark, index: Index, stat: str, specs: dict[str, QuerySpec], parse, score, k: int,
+    stats: TermDictionary | None = None,
 ):
     """THE ranked-plan builder of every scorer, for one query or a batch:
-    ONE scan of the union of all specs' terms and prefix ranges
-    (``select(terms, prefixes, unread)``, a ``term_rows`` selector; the
-    position stream stays ``unread`` unless a spec has a phrase), then per
+    ONE scan of the union of all specs' terms and prefix ranges with the
+    scorer's per-term ``stat`` (``term_rows``; the position stream is read
+    only when a spec has a phrase), then per
     doc_shard ``_shard_step`` -> shard-local (query_id, doc_id, score) rows,
     through ``_run_shards``: a pandas frame over one doc_shard, a Spark
     DataFrame over several. The caller adds the global top-k tail, which
@@ -500,21 +535,22 @@ def _ranked_rows(
     terms = list(dict.fromkeys(t for s in specs.values() for t in [*s.phrase, *s.keywords]))
     prefixes = tuple(dict.fromkeys(p for s in specs.values() for p in s.prefixes))
     if stats is not None and not prefixes:
-        terms = [t for t in terms if t in stats]
+        terms = [t for t in terms if t in stats.terms]
     if k == 0 or (not terms and not prefixes):
         return _empty_batch_pdf()
-    unread = () if any(s.phrase for s in specs.values()) else ("pos_vb", "blk_pos_off")
+    phrase = any(s.phrase for s in specs.values())
+    rows, attach = term_rows(index, terms, stat, prefixes, phrase, stats=stats)
     return _run_shards(
-        index, select(terms, prefixes, unread), _shard_step(specs, parse, score, k),
+        index, rows, _shard_step(specs, parse, score, k, attach),
         SHARD_ROWS_SCHEMA, _empty_batch_pdf(),
     )
 
 
 def _bm25(fields: dict, k: int):
-    """BM25's (parse, score) pair for ``_ranked_rows``: ``_shard_rows`` and
-    ``_bm25_scores``; ``fields`` is the index's ``_field_norms``. Doc
-    lengths decode from the blob (dls_vb), so no doc_map join happens at
-    query time."""
+    """BM25's (parse, score) pair for ``_ranked_rows`` (its stat is
+    ``idf``): ``_shard_rows`` and ``_bm25_scores``; ``fields`` is the
+    index's ``_field_norms``. Doc lengths decode from the blob (dls_vb), so
+    no doc_map join happens at query time."""
     return (
         lambda left: _shard_rows(left, fields),
         lambda shard, spec: _bm25_scores(shard, spec, k),
@@ -584,8 +620,7 @@ def wand_topk(
     query term too. ONE Spark action (``term_rows``)."""
     spec = QuerySpec([], list(terms), tuple(prefixes), weights)
     return _topk(spark, _ranked_rows(
-        spark, index, _idf_rows(index), {"q": spec},
-        *_bm25(_field_norms(index), k), k,
+        spark, index, "idf", {"q": spec}, *_bm25(_field_norms(index), k), k,
     ), k)
 
 
@@ -606,11 +641,11 @@ def mixed_topk(
     arrive in one bucket-pruned scan and each doc_shard runs phrase-eval +
     seeded WAND in a single pass (``_bm25_scores``).
     ``weights``/``prefixes`` apply to the keyword part, as in
-    ``wand_topk``; ``stats`` is the cached dictionary (``term_rows``)."""
+    ``wand_topk``; ``stats`` is the executor's ``TermDictionary``
+    (``term_rows``)."""
     spec = QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
     return _topk(spark, _ranked_rows(
-        spark, index, _idf_rows(index, stats), {"q": spec},
-        *_bm25(_field_norms(index), k), k, stats,
+        spark, index, "idf", {"q": spec}, *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
 
@@ -626,7 +661,7 @@ def phrase_topk(
     no shard holds every term, so each returns empty on its own — no
     driver-side existence collect."""
     return _topk(spark, _ranked_rows(
-        spark, index, _idf_rows(index), {"q": QuerySpec(list(terms), [])},
+        spark, index, "idf", {"q": QuerySpec(list(terms), [])},
         *_bm25(_field_norms(index), k), k,
     ), k)
 
@@ -645,7 +680,7 @@ def batch_topk(
     batch shares one bucket-pruned scan of the union of its terms, each
     shard parsed once; per-query results are rank+score identical to
     wand_topk / phrase_topk / mixed_topk, which run the same builder and
-    kernel (tests/test_batch.py). ``stats`` is the cached dictionary
+    kernel (tests/test_batch.py). ``stats`` is the executor's ``TermDictionary``
     (``term_rows``).
 
     The serving cost of a single query at scale is dominated by fixed
@@ -656,8 +691,7 @@ def batch_topk(
     AwesomeSearchEngine.java; batching is the Spark-first upgrade of that
     loop)."""
     return _batch_global_topk(spark, _ranked_rows(
-        spark, index, _idf_rows(index, stats), _pairs(specs),
-        *_bm25(_field_norms(index), k), k, stats,
+        spark, index, "idf", _pairs(specs), *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
 
@@ -707,23 +741,12 @@ def _ql_scores(shard, spec: QuerySpec):
     return ids, scores
 
 
-def _cf_rows(index: Index, stats=None):
-    """Row selector for QL plans over ``index``: (terms, prefixes, unread
-    packed columns) -> packed rows with the GLOBAL collection frequency
-    (aliased cf_global: packed group rows carry a per-(term, doc_shard) cf;
-    the JM background model needs the term's corpus-wide cf)."""
-    cf = F.col("cf").alias("cf_global")
-    return lambda terms, prefixes, unread: term_rows(
-        index.packed.drop(*unread), index.term_stats, terms, index.n_term_buckets,
-        [cf], prefixes, stats=stats,
-    )
-
-
 def _ql(index: Index):
-    """QL/JM's (parse, score) pair for ``_ranked_rows``: ``_ql_shard`` and
-    ``_ql_scores``. A multi-field index raises: zone-weighted QL is not
-    defined, and ranking such an index without its zones would be a silent
-    fallback."""
+    """QL/JM's (parse, score) pair for ``_ranked_rows`` (its stat is
+    ``cf_global``, the GLOBAL collection frequency the JM background model
+    needs): ``_ql_shard`` and ``_ql_scores``. A multi-field index raises:
+    zone-weighted QL is not defined, and ranking such an index without its
+    zones would be a silent fallback."""
     if len(index.field_weights) > 1:
         raise ValueError(
             f"scorer 'ql' serves one-field indexes only; this index has "
@@ -750,13 +773,12 @@ def ql_topk(
     floored at 1). ``terms`` are the keyword terms; ``phrase_terms``,
     ``prefixes`` and ``weights`` give the phrase, prefix and PRF forms
     (``_ql_scores``). ONE Spark action, ``wand_topk``'s shape: term_rows
-    with the global cf column (literal with the cached dictionary
-    ``stats``, else broadcast), per-shard decode (dl rides in dls_vb, so no
+    with the global cf (from the cached dictionary ``stats``, else
+    broadcast), per-shard decode (dl rides in dls_vb, so no
     doc_map join), tiny global top-k."""
     spec = QuerySpec(list(phrase_terms), list(terms), tuple(prefixes), weights)
     return _topk(spark, _ranked_rows(
-        spark, index, _cf_rows(index, stats), {"q": spec}, *_ql(index),
-        k, stats,
+        spark, index, "cf_global", {"q": spec}, *_ql(index), k, stats,
     ), k)
 
 
@@ -773,11 +795,10 @@ def ql_topk_many(
     alike. Each term's lists decode once per shard regardless of how many
     queries use them. Per-query scores are EQUAL to ``ql_topk``'s: both run
     the same builder and sum through ``_ql_scores`` in the same term order
-    (tests/test_batch.py). ``stats`` is the cached dictionary
+    (tests/test_batch.py). ``stats`` is the executor's ``TermDictionary``
     (``term_rows``)."""
     return _batch_global_topk(spark, _ranked_rows(
-        spark, index, _cf_rows(index, stats), _pairs(specs),
-        *_ql(index), k, stats,
+        spark, index, "cf_global", _pairs(specs), *_ql(index), k, stats,
     ), k)
 
 

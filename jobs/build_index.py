@@ -45,7 +45,7 @@ def main(argv=None) -> int:
     if "doc_id" not in src.columns:
         src = corpus.assign_doc_ids(src, ["repo", "path", "commit"])
 
-    from query import drop_summary, stats_record, write_summary  # same jobs/ dir
+    from query import drop_summary, stage_schemas, stats_record, write_summary  # same jobs/ dir
 
     drop_summary(args.out)
     t0 = time.time()
@@ -65,6 +65,7 @@ def main(argv=None) -> int:
         "wall_sec": round(time.time() - t0, 3),
         "docs_per_sec": round(idx.stats.n_docs / max(time.time() - t0, 1e-9), 2),
         "stages": idx.build_metrics,
+        "schemas": stage_schemas(spark, args.out),
     }
     write_summary(args.out, summary)
     print(json.dumps(summary))

@@ -61,7 +61,9 @@ def main(argv=None) -> int:
         return 2
 
     from awesome_spark_search.merge import merge_packed_indexes
-    from query import drop_summary, load_index, stats_record, write_summary  # same jobs/ dir
+    from query import (  # same jobs/ dir
+        drop_summary, load_index, stage_schemas, stats_record, write_summary,
+    )
 
     spark = SparkSession.builder.appName("ass-merge-index").getOrCreate()
     try:
@@ -110,6 +112,7 @@ def main(argv=None) -> int:
         "do_stem": merged.do_stem,
         "merged_from": args.roots,
         "wall_sec": round(time.time() - t0, 2),
+        "schemas": stage_schemas(spark, args.out),
     }
     write_summary(args.out, summary)
     print(json.dumps(summary))

@@ -6,10 +6,10 @@ Usage:
         [--k 10] [--scorer bm25|ql] [--batch] "query one" '"a phrase"' ...
 
 Every query serves from the index's packed postings (stages/packed) with
-the term-bucket count and stemming recorded in its build_summary.json. An
-index without them (or one built before packed rows carried their field),
-or a query the chosen mode cannot serve, ends with a one-line error on
-stderr and exit code 2.
+the term-bucket count, stemming and stage schemas recorded in its
+build_summary.json. An index without them (or one built before packed rows
+carried their field), or a query the chosen mode cannot serve, ends with a
+one-line error on stderr and exit code 2.
 
 Prints one JSON line per query: {"query", "k", "wall_ms", "corrections",
 "results": [{"doc_id", "score"}, ...]}. With --batch, every query serves in
@@ -28,8 +28,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from awesome_spark_search.build import TOTALS, Index, IndexStats, stats_from_totals
 from awesome_spark_search.executor import QueryExecutor
@@ -57,6 +57,20 @@ def stats_record(stats: IndexStats) -> dict:
     return {**{k: getattr(stats, k) for k in TOTALS}, "avgdl": stats.avgdl}
 
 
+# the stages serving reads; the summary records the schema of each
+SERVING_STAGES = ("packed", "doc_map", "term_stats")
+
+
+def stage_schemas(spark: SparkSession, root: str) -> dict:
+    """The serving stages' schemas as Spark infers them from the files a job
+    has just written, for its summary: load_index reads every stage with
+    its recorded schema and infers none."""
+    return {
+        s: spark.read.parquet(os.path.join(root, "stages", s)).schema.jsonValue()
+        for s in SERVING_STAGES
+    }
+
+
 def write_summary(root: str, summary: dict) -> None:
     os.makedirs(root, exist_ok=True)
     write_json_atomic(summary_path(root), summary)
@@ -66,20 +80,21 @@ def load_index(spark: SparkSession, root: str) -> Index:
     """The serving view of an index root written by jobs/build_index.py or
     jobs/merge_index.py: packed postings, term_stats and doc_map (the long
     postings stage is a build intermediate and is not read), laid out as
-    its build_summary.json records. The IndexStats come from the
-    summary's recorded totals (``stats_from_totals``): no stats job runs,
-    only Spark's own file listing and Parquet schema reads. ValueError when the root has no readable stages/packed or no
-    summary (an unfinished or interrupted build or merge), or predates
-    packed rows carrying their field and the recorded term-bucket count,
-    stemming and stats totals."""
+    its build_summary.json records. Each stage is read with the schema the
+    summary records (``stage_schemas``), so no Parquet footer is read for
+    schema inference, and the IndexStats come from the summary's recorded
+    totals (``stats_from_totals``), so no stats job runs: opening a root
+    runs only Spark's listing of the term_bucket= partition directories.
+    ValueError when the root has no stages/packed or no summary (an
+    unfinished or interrupted build or merge), or predates packed rows
+    carrying their field and the recorded term-bucket count, stemming,
+    stats totals and stage schemas."""
     stages = os.path.join(root, "stages")
-    try:
-        packed = spark.read.parquet(os.path.join(stages, "packed"))
-    except AnalysisException:
+    if not os.path.isdir(os.path.join(stages, "packed")):
         raise ValueError(
             f"the index at {root!r} has no packed postings (stages/packed); "
             "rebuild it with jobs/build_index.py"
-        ) from None
+        )
     if not os.path.exists(summary_path(root)):
         raise ValueError(
             f"the index at {root!r} has no build_summary.json (an unfinished or "
@@ -87,20 +102,26 @@ def load_index(spark: SparkSession, root: str) -> Index:
         )
     with open(summary_path(root)) as f:
         s = json.load(f)
-    if "field" not in packed.columns or not all(
-        k in s for k in ("doc_shard_size", "term_buckets", "do_stem", *TOTALS)
-    ):
+    schemas = s.get("schemas", {})
+    recorded = all(k in s for k in ("doc_shard_size", "term_buckets", "do_stem", *TOTALS))
+    if not recorded or set(schemas) != set(SERVING_STAGES) or "field" not in {
+        f["name"] for f in schemas["packed"]["fields"]
+    }:
         raise ValueError(
             f"the index at {root!r} was built by an older version (no field "
-            "column or no recorded term_buckets/do_stem/stats totals); rebuild "
-            "it with jobs/build_index.py"
+            "column or no recorded term_buckets/do_stem/stats totals/stage "
+            "schemas); rebuild it with jobs/build_index.py"
         )
-    doc_map = spark.read.parquet(os.path.join(stages, "doc_map"))
-    term_stats = spark.read.parquet(os.path.join(stages, "term_stats"))
+    read = {
+        stage: spark.read.schema(T.StructType.fromJson(schemas[stage])).parquet(
+            os.path.join(stages, stage)
+        )
+        for stage in SERVING_STAGES
+    }
     # jobs/build_index.py builds plain (one-field) indexes only
     return Index(
-        doc_map=doc_map, postings=None, term_stats=term_stats, packed=packed,
-        stats=stats_from_totals(**{k: s[k] for k in TOTALS}),
+        doc_map=read["doc_map"], postings=None, term_stats=read["term_stats"],
+        packed=read["packed"], stats=stats_from_totals(**{k: s[k] for k in TOTALS}),
         do_stem=s["do_stem"], doc_shard_size=s["doc_shard_size"],
         n_term_buckets=s["term_buckets"],
     )

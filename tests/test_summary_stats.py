@@ -32,9 +32,12 @@ def built_root(spark, tmp_path_factory):
 
 
 def test_load_index_runs_no_job_of_its_own(spark, built_root):
-    """load_index runs exactly the jobs Spark's own reads of its three
-    stages run (file listing, Parquet schema), no stats aggregate; its
-    stats equal the in-memory build's, field by field."""
+    """load_index reads its three stages with the schemas the summary
+    records, so of the jobs Spark's own reads of them run (file listing,
+    Parquet schema inference) only the parallel listings of the
+    term_bucket= directories of packed and term_stats remain: 2 jobs, no
+    inference, no stats aggregate. The recorded schemas equal the inferred
+    ones, and its stats equal the in-memory build's, field by field."""
     src, root = built_root
     sc = spark.sparkContext
     stages = [os.path.join(root, "stages", s) for s in ("packed", "doc_map", "term_stats")]
@@ -48,9 +51,12 @@ def test_load_index_runs_no_job_of_its_own(spark, built_root):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     load_index(spark, root)  # warm: both counts below see the same caches
-    _, read_jobs = jobs("read_stages", lambda: [spark.read.parquet(p) for p in stages])
+    inferred, read_jobs = jobs("read_stages", lambda: [spark.read.parquet(p) for p in stages])
     idx, load_jobs = jobs("load_index", lambda: load_index(spark, root))
-    assert load_jobs == read_jobs
+    assert load_jobs == 2 and read_jobs > load_jobs, (load_jobs, read_jobs)
+    assert [idx.packed.schema, idx.doc_map.schema, idx.term_stats.schema] == [
+        df.schema for df in inferred
+    ]
     assert idx.stats == build_index(spark, spark.read.parquet(src)).stats
 
 

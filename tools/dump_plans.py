@@ -2,7 +2,8 @@
 the .explain('formatted') evidence behind the plan-gate tests
 (tests/test_plans.py): every query type serves from the packed index, with
 partition pruning, filter pushdown, query-term-filtered broadcasts (or,
-on the executor path with a cached dictionary, literal term stats) and
+on the executor path with a cached dictionary, a plain term filter with
+no stats in the plan) and
 single-shuffle shapes. Each serving section names its path: the
 distributed plan of an index with several doc_shards, or the driver path
 of a one-shard index, whose plan is the one collect of its term rows.
@@ -155,10 +156,12 @@ def main() -> int:
          dedup.lsh_candidate_pairs(
              src.select("doc_id", F.col("content").alias("text")))),
         ("Keyword top-10 with the cached dictionary (executor path)", DIST,
-         "The plan QueryExecutor builds when its driver-cached {term: (df, "
-         "cf)} dictionary is loaded: idf is computed from literal df map "
-         "lookups on the bucket-pruned packed rows - no term_stats scan, no "
-         "join, no broadcast job - then the same per-shard applyInPandas "
+         "The plan QueryExecutor builds when its driver-cached {term: (idf, "
+         "cf)} dictionary is loaded: a plain filter of the bucket-pruned "
+         "packed rows (the frame pruned once per executor) - no term_stats "
+         "scan, no join, no broadcast job, no stat projection; the shard "
+         "step attaches each term's idf (computed in the JVM when the "
+         "dictionary was collected) - then the same per-shard applyInPandas "
          "and TakeOrderedAndProject as the broadcast plan above.",
          # built last: loading the dictionary plans a job of its own,
          # which would renumber every plan formatted after it
@@ -168,15 +171,16 @@ def main() -> int:
          "path w=0.5): packed rows carry their field, and the per-shard "
          "kernel scales each row's idf by its zone weight and normalizes by "
          "its field's avgdl, both driver values. Like every executor plan "
-         "it carries the cached dictionary's df as literals - no term_stats "
-         "scan, no join, no broadcast.",
+         "it takes idf from the cached dictionary - no term_stats scan, no "
+         "join, no broadcast, no stat projection.",
          _fielded_plan),
         ("Keyword top-10, executor, one doc_shard (driver path)",
          "Driver path: 1 doc_shard (the same 300 docs at the default "
          "doc_shard_size).",
          "The plan the executor's keyword query collects when the index has "
-         "one doc_shard: the bucket-pruned packed scan with df as literals "
-         "and no position stream, collected with one Arrow collect - no "
+         "one doc_shard: the bucket-pruned packed scan and term filter, with "
+         "no stat projection and no position stream, collected with one "
+         "Arrow collect - no "
          "exchange, no pandas UDF. The shard kernel and the top-k then run "
          "on the driver, over exactly the rows the distributed plan's one "
          "kernel task would get.",
