@@ -17,6 +17,10 @@ merging; what stays explicit is what the optimizer cannot infer:
   merge and serving each have one code path for both (the reference's one
   index whose postings carry a ContentType, ref:
   src/postings/ContentType.java:6-9).
+* **the packed table is the index**: the tokenized long posting rows
+  stream into the pack shuffle and are never stored (the reference deletes
+  its temp runs, ref: DocumentIndexer.java:172, 353-372); ``Index.postings``
+  decodes them back from packed (``unpack_postings``).
 * **bounded posting rows**: packed postings are keyed ``(field, term,
   doc_shard)`` where ``doc_shard = doc_id // shard_size``. A term over
   10^12 docs never produces one giant array row; every row is <= shard_size
@@ -132,15 +136,15 @@ class Index:
     ``field_weights`` names the source columns the index tokenized and
     their zone weights; a plain index has the one field ``PLAIN_FIELDS``.
     BM25 scores sum ``w_f * idf * tfnorm_f`` over every field, each field
-    normalized by its own avgdl. Queries serve from ``packed`` alone; the
-    long ``postings`` table is a build intermediate (packing, merges,
-    streaming compaction). Positions stay their own stream (``positions`` /
-    ``pos_vb``), mirroring the reference's frequency/positional file split
+    normalized by its own avgdl. ``packed`` is the only stored form of the
+    postings and queries serve from it alone; ``postings`` is a lazy decode
+    of it into long rows for the few readers that want them (SQL views,
+    streaming onto a base). Positions stay their own stream (``pos_vb``),
+    mirroring the reference's frequency/positional file split
     (ref: src/SearchEngine/AwesomeSearchEngine.java:91-100).
     """
 
     doc_map: DataFrame      # doc_id, repo, path, commit, lang, content_sha256, doc_len, field_lens
-    postings: DataFrame     # term_bucket, field, term, doc_id, tf, positions, doc_len
     term_stats: DataFrame   # term_bucket, term, df, cf
     packed: DataFrame       # term_bucket, term, doc_shard, n, *_vb blobs, block_max, blk_* directory, field
     stats: IndexStats
@@ -150,6 +154,12 @@ class Index:
     doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE
     n_term_buckets: int = DEFAULT_TERM_BUCKETS
     field_weights: dict[str, float] = field(default_factory=lambda: dict(PLAIN_FIELDS))
+
+    @property
+    def postings(self) -> DataFrame:
+        """The long posting rows (term_bucket, field, term, doc_id, tf,
+        positions, doc_len), decoded from ``packed`` on every read."""
+        return unpack_postings(self.packed)
 
 
 PACKED_SCHEMA = T.StructType(
@@ -321,6 +331,56 @@ def _encode_group(
     }
 
 
+def _decode_row(r) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The inverse of ``_encode_group``: full decode of one packed row ->
+    (ids, tfs, dls, stream, markers). ``stream`` is the raw [tf, gap0,
+    gaps...] position stream; ``markers`` the per-doc start offsets into it."""
+    ids = codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
+    tfs = codec.vbyte_decode(bytes(r["tfs_vb"])).astype(np.int64)
+    dls = codec.vbyte_decode(bytes(r["dls_vb"])).astype(np.int64)
+    stream = codec.vbyte_decode(bytes(r["pos_vb"])).astype(np.uint64)
+    markers = np.zeros(ids.size, dtype=np.int64)
+    if ids.size:
+        np.cumsum(tfs[:-1] + 1, out=markers[1:])
+    return ids, tfs, dls, stream, markers
+
+
+POSTINGS_SCHEMA = (
+    "term_bucket int, field string, term string, doc_id long, tf int, "
+    "positions array<int>, doc_len long"
+)
+
+
+def unpack_postings(packed: DataFrame) -> DataFrame:
+    """Packed rows -> the long posting rows they encode (``POSTINGS_SCHEMA``,
+    one per (field, term, doc_id)): the inverse of ``pack_postings``, one
+    narrow mapInPandas with no shuffle. ``doc_len`` is the field's length."""
+
+    def unpack(batches):
+        for pdf in batches:
+            parts = []
+            for _, r in pdf.iterrows():
+                ids, tfs, dls, stream, markers = _decode_row(r)
+                keep = np.ones(stream.size, dtype=bool)
+                keep[markers] = False
+                # positions are the running sum of each doc's gaps
+                run = np.cumsum(stream[keep].astype(np.int64))
+                heads = markers - np.arange(ids.size)  # first gap of each doc
+                base = np.repeat(run[heads] - stream[markers + 1].astype(np.int64), tfs)
+                parts.append(pd.DataFrame({
+                    "term_bucket": r["term_bucket"], "field": r["field"], "term": r["term"],
+                    "doc_id": ids.astype(np.int64), "tf": tfs.astype(np.int32),
+                    "positions": np.split((run - base).astype(np.int32), np.cumsum(tfs)[:-1]),
+                    "doc_len": dls,
+                }))
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
+
+    return packed.select(
+        "term_bucket", "field", "term", "doc_ids_vb", "tfs_vb", "dls_vb", "pos_vb"
+    ).mapInPandas(unpack, POSTINGS_SCHEMA)
+
+
 def repack(df: DataFrame, order: list[str], head) -> DataFrame:
     """The one repack path every packed table goes through (build,
     streaming, merge): hash-repartition on PACK_KEYS, sort each partition by
@@ -358,7 +418,7 @@ def pack_postings(
 ) -> DataFrame:
     """Long posting rows (field, term, doc_id, tf, positions, doc_len) ->
     packed rows, one per (field, term, doc_shard) group (doc_shard bounds
-    every group to doc_shard_size postings)."""
+    every group to doc_shard_size postings); ``unpack_postings`` inverts it."""
     return repack(
         postings.withColumn("doc_shard", doc_shard_col(doc_shard_size)), ["doc_id"],
         lambda pdf: _pack_many(pdf, avgdl_by_field, n_buckets),
@@ -427,8 +487,8 @@ def packed_term_stats(packed: DataFrame, n_buckets: int) -> DataFrame:
 def any_field_term_stats(postings: DataFrame, n_buckets: int) -> DataFrame:
     """term_stats (term, df, cf, term_bucket) of a multi-field build: df
     counts the docs holding the term in ANY field (the reference's seek is
-    per term, not per (term, field)), so it rolls up from the long postings
-    — per (term, doc_id mod 16) distinct counts first, so a hot term never
+    per term, not per (term, field)), so it rolls up from the tokenized
+    posting rows — per (term, doc_id mod 16) distinct counts first, so a hot term never
     meets one unbounded reducer."""
     return (
         postings.groupBy("term", F.pmod(F.col("doc_id"), F.lit(16)).alias("_s"))
@@ -456,11 +516,11 @@ def build_index(
     field ``content`` at 1.0), and may carry (repo, path, commit, lang).
     Each field tokenizes independently, so positions (and phrases) never
     run across fields. ``checkpoint_dir`` enables stage-resumable
-    materialization (see lineage.py); None builds in memory (same plan
-    shapes), persisting only what is read again: doc_map, packed and
-    term_stats, which queries read, and the long postings only when a
-    multi-field build reads them a second time (``any_field_term_stats``)
-    — a one-field build reads them once, in the pack job.
+    materialization of doc_map, stats, packed and term_stats (see
+    lineage.py); None builds in memory (same plan shapes), persisting
+    doc_map, packed and term_stats, which queries read. Only a multi-field
+    build persists its tokenized rows, which it reads a second time
+    (``any_field_term_stats``); a checkpointed one drops them after.
     """
     fields = dict(field_weights or PLAIN_FIELDS)
     runner = StageRunner(spark, checkpoint_dir)
@@ -469,22 +529,16 @@ def build_index(
 
     # Per-document posting accumulation happens map-side inside the Arrow
     # batch (the reference's PostingTable.put loop, ref: DocumentIndexer.java:
-    # 220-242) — the posting table exists after ONE narrow mapInPandas pass
-    # per field, with NO (term, doc_id) shuffle at all.
-    def _postings():
-        return reduce(DataFrame.unionByName, [
-            doc_postings_flat(source_df, do_stem=do_stem, content_col=f)
-            .withColumn("field", F.lit(f))
-            for f in fields
-        ]).withColumn("term_bucket", term_bucket_col(F.col("term"), n_term_buckets))
-
-    postings = runner.run(
-        "postings", _postings,
-        partition_by=["term_bucket"], sort_within=["term", "doc_id"],
-    )
-    if in_memory and len(fields) > 1:
-        # the long table is the build's biggest columnar cache write; only
-        # a multi-field build reads it twice (pack, then term_stats)
+    # 220-242): ONE narrow mapInPandas pass per field, with NO (term, doc_id)
+    # shuffle, straight into the pack shuffle; the long rows are never stored.
+    postings = reduce(DataFrame.unionByName, [
+        doc_postings_flat(source_df, do_stem=do_stem, content_col=f)
+        .withColumn("field", F.lit(f))
+        for f in fields
+    ])
+    if len(fields) > 1:
+        # only a multi-field build reads the tokenized rows twice (pack, then
+        # any_field_term_stats)
         postings = postings.persist()
 
     # doc_map never needs Python: sha256 and the stopword-inclusive token
@@ -518,7 +572,7 @@ def build_index(
 
     stats = index_stats(doc_map, runner, fields)
 
-    # doc_len (the field's length) rides along from the postings pass — no
+    # doc_len (the field's length) rides along from the tokenize pass — no
     # doc_map join
     packed = runner.run(
         "packed",
@@ -540,10 +594,11 @@ def build_index(
     )
     if in_memory:
         term_stats = term_stats.persist()
+    else:
+        postings.unpersist()  # both readers are written stages now
 
     return Index(
         doc_map=doc_map,
-        postings=postings,
         term_stats=term_stats,
         packed=packed,
         stats=stats,

@@ -4,7 +4,8 @@ Spark-native rendition of the reference's QueryProcessor dispatch
 (ref: src/querying/QueryProcessor.java:139-169, 194-331). Like the
 reference, which answers every query type from its one compressed inverted
 index (InvertedIndexReader.java:111-162), every plan here reads the packed
-index (wand.py) — the long ``postings`` table is a build intermediate only.
+index (wand.py), the only stored form of the postings; no plan reads
+``Index.postings``, the long rows decoded from it.
 A fielded index is the same ``Index`` with several fields: its ranked
 queries rank zone-weighted under bm25 (the reference always applies
 ContentType weights, ref: DocumentRanker.java:138-167), and Boolean/LinkTo,

@@ -7,7 +7,10 @@ first-class contract (north rule): every stage writes its output as Parquet
 plus a ``_manifest.json`` recording inputs, row counts, per-partition metrics
 and wall-clock. A resumed build skips stages whose manifest is complete and
 re-reads their Parquet, so a kill between any two stages loses at most one
-stage of work.
+stage of work. The tokenized posting rows are not a stage (they are never
+stored), so a build killed before ``packed`` completes re-tokenizes on
+resume, as does a multi-field build's ``term_stats``. Each manifest's
+``partitions[].file`` is relative to its stage directory.
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ import json
 import os
 import time
 from typing import Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,7 +98,9 @@ class StageRunner:
         result = self.spark.read.parquet(out)
         # per-partition (spark task partition) lineage: file-level row counts
         part_rows = [
-            {"file": os.path.relpath(r["file"], out), "rows": r["rows"]}
+            # input_file_name is a file: URI
+            {"file": os.path.relpath(unquote(urlparse(r["file"]).path), os.path.abspath(out)),
+             "rows": r["rows"]}
             for r in result.withColumn("file", F.input_file_name())
             .groupBy("file")
             .agg(F.count(F.lit(1)).alias("rows"))

@@ -58,6 +58,7 @@ from .build import (
     PACKED_SCHEMA,
     Index,
     IndexStats,
+    _decode_row,
     _encode_group,
     _groups,
     _py_term_bucket,
@@ -65,20 +66,6 @@ from .build import (
     stats_from_totals,
     term_bucket_col,
 )
-
-
-def _decode_row(r) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Full decode of one packed row -> (ids, tfs, dls, stream, markers).
-    ``stream`` is the raw [tf, gap0, gaps...] position stream; ``markers``
-    the per-doc start offsets into it."""
-    ids = codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
-    tfs = codec.vbyte_decode(bytes(r["tfs_vb"])).astype(np.int64)
-    dls = codec.vbyte_decode(bytes(r["dls_vb"])).astype(np.int64)
-    stream = codec.vbyte_decode(bytes(r["pos_vb"])).astype(np.uint64)
-    markers = np.zeros(ids.size, dtype=np.int64)
-    if ids.size:
-        np.cumsum(tfs[:-1] + 1, out=markers[1:])
-    return ids, tfs, dls, stream, markers
 
 
 def _merge_rows(rows: list, avgdl: float, n_buckets: int) -> dict:
@@ -198,19 +185,14 @@ def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
     first = indexes[0]
     n_buckets = first.n_term_buckets
 
-    # streamed (to_index) and batch indexes carry different doc_map/postings
+    # streamed (to_index) and batch indexes carry different doc_map
     # metadata columns — merge on the intersection (doc_id, doc_len and
     # field_lens always present; serving never needs more)
-    def _union_common(dfs):
-        common = [
-            c for c in dfs[0].columns if all(c in d.columns for d in dfs[1:])
-        ]
-        out = dfs[0].select(common)
-        for d in dfs[1:]:
-            out = out.unionByName(d.select(common))
-        return out
-
-    doc_map = _union_common([ix.doc_map for ix in indexes])
+    common = [
+        c for c in first.doc_map.columns
+        if all(c in ix.doc_map.columns for ix in indexes[1:])
+    ]
+    doc_map = reduce(DataFrame.unionByName, [ix.doc_map.select(common) for ix in indexes])
     if not _ranges_disjoint([ix.stats for ix in indexes]):
         dup = (
             doc_map.groupBy("doc_id").count()
@@ -239,7 +221,6 @@ def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
 
     return Index(
         doc_map=doc_map,
-        postings=_union_common([ix.postings for ix in indexes]),
         term_stats=term_stats,
         packed=merged,
         stats=stats,

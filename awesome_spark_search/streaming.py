@@ -11,7 +11,8 @@ training-data pipeline needs:
   through the batch build's own repack path (``build.pack_postings``) with
   stats and term_stats from the same ``index_stats`` /
   ``packed_term_stats``, so a streamed index is byte-identical to a batch
-  build of the same final docs.
+  build of the same final docs. A base index's long rows are decoded from
+  its packed table (``Index.postings``), the only form an index stores.
 * ``tumbling_counts``: watermarked tumbling-window aggregation over an events
   stream (late data dropped deterministically by the watermark).
 * ``running_user_totals``: custom stateful operator via
@@ -58,8 +59,8 @@ from .textproc import doc_postings_flat, doc_len_col
 def batch_postings(source_df: DataFrame, *, do_stem: bool,
                    n_term_buckets: int = DEFAULT_TERM_BUCKETS) -> DataFrame:
     """One batch's posting partial: (term_bucket, term, doc_id, tf, positions).
-    Same shape as build.build_index's postings stage — map-side accumulation,
-    no shuffle."""
+    The batch build's tokenize pass (build.build_index) — map-side
+    accumulation, no shuffle."""
     return doc_postings_flat(
         source_df.select("doc_id", "content"), do_stem=do_stem
     ).drop("doc_len").withColumn(
@@ -257,8 +258,10 @@ class IncrementalIndexer:
     ):
         """Materialize a queryable Index over base + streamed deltas — the
         same QueryExecutor runs unchanged over a continuously-ingested
-        corpus. stats re-derive from the merged doc lens and term_stats from
-        the packed groups, exactly as in build_index.
+        corpus; any Index is a base (its postings decode from its packed
+        rows), one opened from disk included. stats re-derive from the
+        merged doc lens and term_stats from the packed groups, exactly as in
+        build_index.
 
         The merged postings pack into the delta+VByte block-directory form
         through the batch build's repack path — the form every query serves
@@ -278,7 +281,6 @@ class IncrementalIndexer:
         ).withColumn("field_lens", F.create_map(F.lit(field), F.col("doc_len")))
         stats = index_stats(doc_map, StageRunner(self.spark, None), PLAIN_FIELDS)
         doc_map = doc_map.persist()
-        postings = postings.persist()
         shard = doc_shard_size or DEFAULT_DOC_SHARD_SIZE
         packed = pack_postings(
             postings.join(doc_map, "doc_id")
@@ -287,7 +289,6 @@ class IncrementalIndexer:
         ).persist()
         return Index(
             doc_map=doc_map,
-            postings=postings,
             term_stats=packed_term_stats(packed, self.n_buckets).persist(),
             packed=packed,
             stats=stats,

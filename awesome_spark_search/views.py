@@ -4,9 +4,11 @@ the engine with plain `spark.sql` alongside the Python API.
     register_index_views(spark, index)
     spark.sql("SELECT term, df FROM term_stats ORDER BY df DESC LIMIT 10")
 
-Plus a convenience BM25 SQL generator over the long postings view (the
-formula of scoring.py) for exploratory SQL use; the Python executor, which
-serves from the packed index, remains the production path.
+The ``postings`` view is the long rows decoded from the packed table
+(``Index.postings``; packed is the only stored form). Plus a convenience
+BM25 SQL generator over it (the formula of scoring.py) for exploratory SQL
+use; the Python executor, which serves from the packed index, remains the
+production path.
 """
 
 from __future__ import annotations
@@ -18,9 +20,8 @@ from .scoring import K1, B
 
 
 def register_index_views(spark: SparkSession, index: Index, prefix: str = "") -> list[str]:
-    """Registers doc_map / postings / term_stats / packed (a table set to
-    None is skipped).
-    Returns the view names."""
+    """Registers doc_map / postings / term_stats / packed. Returns the view
+    names."""
     names = []
     for name, df in (
         ("doc_map", index.doc_map),
@@ -28,8 +29,6 @@ def register_index_views(spark: SparkSession, index: Index, prefix: str = "") ->
         ("term_stats", index.term_stats),
         ("packed", index.packed),
     ):
-        if df is None:
-            continue
         vname = f"{prefix}{name}"
         df.createOrReplaceTempView(vname)
         names.append(vname)

@@ -66,7 +66,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import codec
-from .build import Index, _py_term_bucket, doc_shard_col, K1, B
+from .build import Index, _py_term_bucket, doc_shard_col, unpack_postings, K1, B
 from .scoring import JM_LAMBDA, idf_col
 
 # decoded-postings instrumentation (per-process; in distributed runs each
@@ -1042,37 +1042,12 @@ def decode_postings(index: Index, term: str, with_positions: bool = False) -> Da
     """Decode one term's packed blobs back to (doc_id, tf[, pos]) rows —
     the external round-trip gate for the delta+VByte+position-stream codec
     (ref semantics: src/postings/TokenPostings.java:201-243,
-    EagerPositionMap.java:128-171)."""
+    EagerPositionMap.java:128-171), through the one decoder of packed rows
+    (``build.unpack_postings``)."""
     bucket = _py_term_bucket(term, index.n_term_buckets)
-    rows = index.packed.filter(
+    rows = unpack_postings(index.packed.filter(
         (F.col("term_bucket") == bucket) & (F.col("term") == term)
-    ).select("doc_ids_vb", "tfs_vb", "pos_vb")
-
+    ))
     if not with_positions:
-        def gen(batches):
-            for pdf in batches:
-                for _, r in pdf.iterrows():
-                    ids = codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
-                    tfs = codec.vbyte_decode(bytes(r["tfs_vb"]))
-                    yield pd.DataFrame(
-                        {"doc_id": ids.astype(np.int64), "tf": tfs.astype(np.int32)}
-                    )
-
-        return rows.mapInPandas(gen, "doc_id long, tf int")
-
-    def gen_pos(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                ids = codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"]))
-                stream = codec.vbyte_decode(bytes(r["pos_vb"])).astype(np.int64)
-                out_ids, out_pos = [], []
-                i = 0
-                for d in ids:
-                    n = int(stream[i]); i += 1
-                    gaps = stream[i: i + n]; i += n
-                    out_pos.extend(np.cumsum(gaps).tolist())
-                    out_ids.extend([int(d)] * n)
-                yield pd.DataFrame({"doc_id": out_ids, "pos": out_pos})
-
-    return rows.mapInPandas(gen_pos, "doc_id long, pos int")
-
+        return rows.select("doc_id", "tf")
+    return rows.select("doc_id", F.explode("positions").alias("pos"))

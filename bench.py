@@ -3,8 +3,9 @@
 Runs the headline pipeline at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32):
 
-* full index build (tokenize -> postings -> term_stats -> packed VByte blobs
-  with block-max) over the documents table, reported as build_sec and
+* full index build (tokenize -> packed VByte blobs with block-max ->
+  term_stats; packed is the only stored form of the postings) over the
+  documents table, reported as build_sec and
   build_docs_per_sec,
 * best-of-2 timings over the headline query/operator set (BM25 keyword,
   phrase, boolean, prefix, mixed, PRF, block-max WAND on the packed index,
@@ -95,11 +96,11 @@ def run(sf_dir: str, cpus: int, do_stem: bool = True) -> dict:
     n_docs = src.count()
 
     def _build():
-        # a one-field build never caches the long postings table: every
-        # query serves off the packed index
+        # a one-field build never caches its tokenized rows: they stream
+        # into the pack shuffle, and every query serves off the packed index
         idx = build_index(spark, src, do_stem=do_stem)
         # force full materialization: packed.count() runs the whole
-        # tokenize->postings->pack chain in ONE action; doc_map is narrow,
+        # tokenize->pack chain in ONE action; doc_map is narrow,
         # term_stats a tiny rollup off the cached packed table
         idx.packed.count()
         idx.doc_map.count()

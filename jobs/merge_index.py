@@ -13,11 +13,14 @@ pass through byte-identical, block_max refreshed against the merged
 avgdl). No stats job runs: each input's IndexStats load from the totals
 its build_summary.json records, the merged stats are their sums, and the
 merged totals are recorded in turn. The output root uses the same stage
-layout, so jobs/query.py serves it unchanged. Doc sets must be disjoint
-(re-ingest/tombstone resolution belongs to the streaming path, upstream of
-packing): inputs whose doc_id ranges do not overlap are disjoint as they
-stand, and overlapping ones pay one doc_map duplicate probe. Sources
-that cannot merge (shared doc_ids, mismatched doc_shard_size, bucket count
+layout (doc_map, packed and term_stats; no long postings table is read or
+written), so jobs/query.py serves it unchanged. The output keeps the
+sources' recorded term-bucket count. A stages/postings directory left in a
+root by an older build is never read and can be deleted. Doc sets must be
+disjoint (re-ingest/tombstone resolution belongs to the streaming path,
+upstream of packing): inputs whose doc_id ranges do not overlap are
+disjoint as they stand, and overlapping ones pay one doc_map duplicate
+probe. Sources that cannot merge (shared doc_ids, mismatched doc_shard_size, bucket count
 or stemming, a root load_index cannot serve) and an ``--out`` that is one
 of the input roots end with a one-line error on stderr and exit code 2,
 before anything is written. An existing build_summary.json under ``--out``
@@ -42,13 +45,6 @@ from pyspark.sql import SparkSession
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", required=True, help="merged index root")
-    ap.add_argument(
-        "--term-buckets", type=int, default=None,
-        help="defaults to the sources' recorded bucket count; a different "
-        "value is rejected (the copied postings stage keeps the sources' "
-        "term_bucket values, so re-bucketing only packed/term_stats would "
-        "leave long-table bucket pruning inconsistent with the layout)",
-    )
     ap.add_argument("roots", nargs="+", help="2+ input index roots")
     args = ap.parse_args(argv)
     if len(args.roots) < 2:
@@ -68,18 +64,6 @@ def main(argv=None) -> int:
     spark = SparkSession.builder.appName("ass-merge-index").getOrCreate()
     try:
         indexes = [load_index(spark, r) for r in args.roots]
-        buckets = indexes[0].n_term_buckets
-        if args.term_buckets is not None and args.term_buckets != buckets:
-            raise ValueError(
-                f"--term-buckets {args.term_buckets} != the sources' bucket "
-                f"count {buckets}; re-bucketing a merge is not supported (the "
-                "postings stage is copied with its original term_bucket values)"
-            )
-        for r, ix in zip(args.roots, indexes):
-            # serving never reads the long table; the merged root still
-            # carries it as the build intermediate later merges and
-            # compactions fold
-            ix.postings = spark.read.parquet(os.path.join(r, "stages", "postings"))
         t0 = time.time()
         merged = merge_packed_indexes(spark, indexes)
     except ValueError as e:  # sources that cannot merge (overlap, mismatch)
@@ -101,9 +85,6 @@ def main(argv=None) -> int:
         .sortWithinPartitions("term")
         .write.mode("overwrite").partitionBy("term_bucket")
         .parquet(os.path.join(stages, "term_stats"))
-    )
-    merged.postings.write.mode("overwrite").partitionBy("term_bucket").parquet(
-        os.path.join(stages, "postings")
     )
     summary = {
         **stats_record(merged.stats),

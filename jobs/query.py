@@ -5,11 +5,13 @@ Usage:
         --index /path/to/index_root --source /path/to/source_table \
         [--k 10] [--scorer bm25|ql] [--batch] "query one" '"a phrase"' ...
 
-Every query serves from the index's packed postings (stages/packed) with
-the term-bucket count, stemming and stage schemas recorded in its
-build_summary.json. An index without them (or one built before packed rows
-carried their field), or a query the chosen mode cannot serve, ends with a
-one-line error on stderr and exit code 2.
+Every query serves from the index's packed postings (stages/packed, the
+only stored form of the postings) with the term-bucket count, stemming and
+stage schemas recorded in its build_summary.json; a stages/postings
+directory left by an older build is never read and can be deleted. An
+index without them (or one built before packed rows carried their field),
+or a query the chosen mode cannot serve, ends with a one-line error on
+stderr and exit code 2.
 
 Prints one JSON line per query: {"query", "k", "wall_ms", "corrections",
 "results": [{"doc_id", "score"}, ...]}. With --batch, every query serves in
@@ -78,9 +80,8 @@ def write_summary(root: str, summary: dict) -> None:
 
 def load_index(spark: SparkSession, root: str) -> Index:
     """The serving view of an index root written by jobs/build_index.py or
-    jobs/merge_index.py: packed postings, term_stats and doc_map (the long
-    postings stage is a build intermediate and is not read), laid out as
-    its build_summary.json records. Each stage is read with the schema the
+    jobs/merge_index.py: packed postings, term_stats and doc_map, laid out
+    as its build_summary.json records. Each stage is read with the schema the
     summary records (``stage_schemas``), so no Parquet footer is read for
     schema inference, and the IndexStats come from the summary's recorded
     totals (``stats_from_totals``), so no stats job runs: opening a root
@@ -120,7 +121,7 @@ def load_index(spark: SparkSession, root: str) -> Index:
     }
     # jobs/build_index.py builds plain (one-field) indexes only
     return Index(
-        doc_map=read["doc_map"], postings=None, term_stats=read["term_stats"],
+        doc_map=read["doc_map"], term_stats=read["term_stats"],
         packed=read["packed"], stats=stats_from_totals(**{k: s[k] for k in TOTALS}),
         do_stem=s["do_stem"], doc_shard_size=s["doc_shard_size"],
         n_term_buckets=s["term_buckets"],

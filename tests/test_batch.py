@@ -82,14 +82,16 @@ def test_search_many_matches_search(spark, packed_index):
         ], qid
 
 
-def test_search_many_is_lazy_and_never_scans_long_postings(spark, packed_index):
+def test_search_many_is_lazy_and_never_scans_long_postings(
+    spark, packed_index, no_long_postings
+):
     """The batch is ONE user-level action by construction (a single collect
     on one composed plan); pinned here: building the plan schedules NO Spark
     job (laziness — a typo-free batch has zero driver-side actions once the
     vocab is warm; a typo'd term costs the usual single batched correction
-    job, same as search()), and the long postings table is not needed."""
-    idx = dataclasses.replace(packed_index, postings=None)
-    ex = QueryExecutor(spark, idx)
+    job, same as search()), and the long postings table is not needed: its
+    decoder (``build.unpack_postings``) raises."""
+    ex = QueryExecutor(spark, packed_index)
     ex._get_vocab()  # warm the vocab cache (one-time per executor, not per query)
     clean = {k: v for k, v in BATCH.items() if k != "q4"}  # q4 is a typo
     tracker = spark.sparkContext.statusTracker()

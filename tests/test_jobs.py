@@ -44,9 +44,14 @@ def test_build_then_query_jobs(corpus_dir, tmp_path_factory):
     stdout = _run(["jobs/build_index.py", "--source", corpus_dir, "--out", out])
     summary = json.loads(stdout.strip().splitlines()[-1])
     assert summary["n_docs"] == 150
-    assert {m["stage"] for m in summary["stages"]} >= {
-        "postings", "doc_map", "term_stats", "packed"
+    # packed is the only stored form of the postings
+    assert {m["stage"] for m in summary["stages"]} == {
+        "doc_map", "stats", "packed", "term_stats"
     }
+    assert sorted(os.listdir(os.path.join(out, "stages"))) == sorted(
+        f for s in ("doc_map", "stats", "packed", "term_stats")
+        for f in (s, f"{s}._manifest.json")
+    )
     assert os.path.exists(os.path.join(out, "build_summary.json"))
 
     # resume: a second run must skip every stage
@@ -136,6 +141,7 @@ def test_build_then_query_jobs(corpus_dir, tmp_path_factory):
     msummary = json.loads(mout.strip().splitlines()[-1])
     assert msummary["n_docs"] == 150
     assert os.path.exists(os.path.join(out_m, "build_summary.json"))
+    assert sorted(os.listdir(os.path.join(out_m, "stages"))) == ["doc_map", "packed", "term_stats"]
 
     stdout5 = _run([
         "jobs/query.py", "--index", out_m, "--source", corpus_dir,

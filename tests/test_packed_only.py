@@ -1,7 +1,8 @@
-"""Packed-only serving: with the long postings table gone
-(``index.postings = None``), search() answers EVERY query type off the
-packed index — under bm25, under ql, and on a fielded executor — rank+score
-identical to the pure-Python oracle (tests/oracle.py). With
+"""Packed-only serving: with the decoder of the long posting rows made to
+raise (``build.unpack_postings``, behind ``Index.postings``), search()
+answers EVERY query type off the packed index — under bm25, under ql, and
+on a fielded executor — rank+score identical to the pure-Python oracle
+(tests/oracle.py). With
 ``VOCAB_CACHE_MAX = 0`` no prefix can be expanded from a cached vocabulary,
 so prefixes reach the packed plans as term ranges."""
 
@@ -14,6 +15,8 @@ from awesome_spark_search.executor import QueryExecutor
 from awesome_spark_search.pagerank import pack_citations
 
 from oracle import OracleIndex
+
+pytestmark = pytest.mark.usefixtures("no_long_postings")
 
 N_DOCS = 250
 TARGET = 3  # LinkTo target, cited by every doc d with d % 7 == 3
@@ -32,9 +35,7 @@ def src(spark, pdf):
 
 @pytest.fixture(scope="module")
 def index(spark, src):
-    idx = build_index(spark, src, do_stem=True, doc_shard_size=64)
-    idx.postings = None  # serving must never need the long table
-    return idx
+    return build_index(spark, src, do_stem=True, doc_shard_size=64)
 
 
 @pytest.fixture(scope="module")
@@ -111,7 +112,6 @@ def test_fielded_executor_serves_packed_only(spark, citations):
         spark, fsrc, do_stem=True, doc_shard_size=64,
         field_weights={"content": 1.0, "title": 0.5},
     )
-    fidx.postings = None
     plain = fsrc.select("doc_id", F.concat_ws(" ", "content", "title").alias("content"))
 
     def executor():
@@ -149,23 +149,42 @@ def test_boolean_unions_a_terms_fields(spark, citations):
         assert _rows(ex_f, query) == want, query
 
 
-def test_in_memory_build_persists_postings_only_when_read_again(spark, src, pdf, oracle):
-    """A one-field in-memory build reads its long postings once (the pack
-    job), so it does not persist them; a two-field build reads them again
-    for term_stats (``any_field_term_stats``), so it does. doc_map, packed
-    and term_stats are persisted either way, and the one-field build's
-    answers still equal the oracle's."""
-    one = build_index(spark, src, do_stem=True, doc_shard_size=64)
-    two = build_index(
-        spark, src.select("doc_id", "content", "path"), do_stem=True, doc_shard_size=64,
-        field_weights={"content": 1.0, "path": 0.5},
-    )
-    assert not one.postings.is_cached
-    assert two.postings.is_cached
+def _persisted(spark) -> set:
+    """Ids of the session's persisted RDDs (a cached frame's, once built)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_in_memory_build_persists_postings_only_when_read_again(spark, src, pdf, tmp_path):
+    """A one-field in-memory build reads its tokenized posting rows once
+    (the pack job), so it does not persist them: once its frames are
+    computed, the session holds exactly three new caches (doc_map, packed,
+    term_stats). A two-field build reads them again for term_stats
+    (``any_field_term_stats``), so it holds a fourth; a checkpointed
+    two-field build drops it once term_stats is written. The one-field
+    build's answers still equal the oracle's."""
+    # a source no other build of the session reads (an equal plan would
+    # share that build's caches), and the checkpointed build first, so its
+    # tokenized rows are a cache of its own
+    own = src.filter(F.col("doc_id") < N_DOCS - 1)
+    fielded = own.select("doc_id", "content", "path")
+    weights = {"content": 1.0, "path": 0.5}
+
+    def new_caches(**kw):
+        before = _persisted(spark)
+        ix = build_index(spark, kw.pop("source", own), do_stem=True, doc_shard_size=64, **kw)
+        ix.packed.count(), ix.term_stats.count(), ix.doc_map.count()
+        return ix, len(_persisted(spark) - before)
+
+    _, n_ckpt = new_caches(source=fielded, field_weights=weights,
+                           checkpoint_dir=str(tmp_path / "stages"))
+    two, n_two = new_caches(source=fielded, field_weights=weights)
+    one, n_one = new_caches()
+    assert (n_one, n_two, n_ckpt) == (3, 4, 0)
     for ix in (one, two):
         assert ix.doc_map.is_cached and ix.packed.is_cached and ix.term_stats.is_cached
-    ex = QueryExecutor(spark, one, source_df=src)
-    contents = dict(zip(pdf["doc_id"], pdf["content"]))
+    ex = QueryExecutor(spark, one, source_df=own)
+    contents = {d: c for d, c in zip(pdf["doc_id"], pdf["content"]) if d < N_DOCS - 1}
+    oracle = OracleIndex(contents, do_stem=True)
     for query in ["buffer merge scan", '"merge sort" buffer', "token* AND merge"]:
         want = oracle.search(query, scorer="bm25", corrections={}, contents=contents)
         assert want, query

@@ -2,7 +2,6 @@
 pure-Python oracle, and checkpoint-resume semantics of the stage runner
 (SURVEY.md §5 items 4-5)."""
 
-import dataclasses
 import json
 import os
 
@@ -12,7 +11,7 @@ from pyspark.sql import functions as F
 from awesome_spark_search import corpus
 from awesome_spark_search.build import build_index
 from awesome_spark_search.executor import QueryExecutor
-from awesome_spark_search.textproc import preprocess_query_terms
+from awesome_spark_search.textproc import doc_postings_flat, preprocess_query_terms
 from awesome_spark_search.wand import wand_topk
 
 from oracle import OracleIndex
@@ -129,13 +128,13 @@ def test_packed_ql_matches_dataframe_path(spark, packed_index, oracle, query):
 
 @pytest.mark.parametrize("scorer", ["bm25", "ql"])
 def test_packed_serving_never_scans_long_postings(
-    spark, packed_index, packed_src, scorer
+    spark, packed_index, packed_src, scorer, no_long_postings
 ):
-    """Serving needs no long postings table (the cache_postings=False
-    deployment): with it removed, every query type still answers under
-    BOTH scorers (tests/test_packed_only.py checks the answers)."""
-    idx = dataclasses.replace(packed_index, postings=None)
-    ex = QueryExecutor(spark, idx, source_df=packed_src, scorer=scorer)
+    """Serving needs no long postings table: with its decoder
+    (``build.unpack_postings``) made to raise, every query type still
+    answers under BOTH scorers (tests/test_packed_only.py checks the
+    answers)."""
+    ex = QueryExecutor(spark, packed_index, source_df=packed_src, scorer=scorer)
     for query in [
         "buffer merge scan",
         "token*",
@@ -171,14 +170,12 @@ def test_phrase_topk_no_match(spark, packed_index):
     assert phrase_topk(spark, packed_index, ["buffer", "zzznope"], k=10).collect() == []
 
 
-def test_decode_postings_roundtrip(spark, packed_index):
+def test_decode_postings_roundtrip(spark, packed_index, packed_src):
+    """The packed blobs decode back to the tokenizer's own posting rows."""
     from awesome_spark_search.wand import decode_postings
 
-    want = {
-        (r["doc_id"], r["tf"])
-        for r in packed_index.postings.filter(F.col("term") == "buffer")
-        .select("doc_id", "tf").collect()
-    }
+    tokenized = doc_postings_flat(packed_src, do_stem=True).filter(F.col("term") == "buffer")
+    want = {(r["doc_id"], r["tf"]) for r in tokenized.select("doc_id", "tf").collect()}
     got = {
         (r["doc_id"], r["tf"])
         for r in decode_postings(packed_index, "buffer").collect()
@@ -187,8 +184,7 @@ def test_decode_postings_roundtrip(spark, packed_index):
 
     want_pos = {
         (r["doc_id"], r["pos"])
-        for r in packed_index.postings.filter(F.col("term") == "buffer")
-        .select("doc_id", F.explode("positions").alias("pos")).collect()
+        for r in tokenized.select("doc_id", F.explode("positions").alias("pos")).collect()
     }
     got_pos = {
         (r["doc_id"], r["pos"])
@@ -218,22 +214,29 @@ def test_checkpoint_resume_skips_completed_stages(spark, tmp_path):
     idx1 = build_index(spark, src, do_stem=False, checkpoint_dir=ckpt)
     first = {r["term"]: (r["df"], r["cf"]) for r in idx1.term_stats.collect()}
     manifests = _manifests(ckpt)
-    assert {"doc_map._manifest.json",
-            "postings._manifest.json", "term_stats._manifest.json"} <= set(manifests)
+    # packed is the only stored form of the postings: no long-table stage
+    assert set(manifests) == {
+        f"{s}._manifest.json" for s in ("doc_map", "stats", "packed", "term_stats")
+    }
 
-    # every manifest records per-partition lineage
-    with open(os.path.join(ckpt, "postings._manifest.json")) as f:
-        m = json.load(f)
-    assert m["complete"] and m["rows"] > 0 and len(m["partitions"]) > 0
-    assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
+    # every manifest records per-partition lineage, each file relative to
+    # its stage directory
+    for name in manifests:
+        with open(os.path.join(ckpt, name)) as f:
+            m = json.load(f)
+        assert m["complete"] and m["rows"] > 0 and len(m["partitions"]) > 0
+        assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
+        stage_dir = os.path.join(ckpt, m["stage"])
+        for p in m["partitions"]:
+            assert os.path.isfile(os.path.join(stage_dir, p["file"])), p["file"]
 
-    # simulate a kill AFTER postings but BEFORE term_stats: delete downstream
+    # simulate a kill AFTER packed but BEFORE term_stats: delete downstream
     # manifests, corrupt nothing else
     for name in ("term_stats._manifest.json", "stats._manifest.json"):
         p = os.path.join(ckpt, name)
         if os.path.exists(p):
             os.remove(p)
-    postings_mtime = os.path.getmtime(os.path.join(ckpt, "postings._manifest.json"))
+    packed_mtime = os.path.getmtime(os.path.join(ckpt, "packed._manifest.json"))
 
     idx2 = build_index(spark, src, do_stem=False, checkpoint_dir=ckpt)
     second = {r["term"]: (r["df"], r["cf"]) for r in idx2.term_stats.collect()}
@@ -241,10 +244,10 @@ def test_checkpoint_resume_skips_completed_stages(spark, tmp_path):
     # identical results after resume
     assert first == second
     # completed upstream stages were skipped (manifest untouched)
-    assert os.path.getmtime(os.path.join(ckpt, "postings._manifest.json")) == postings_mtime
+    assert os.path.getmtime(os.path.join(ckpt, "packed._manifest.json")) == packed_mtime
     # only the re-run stages appear in the second run's metrics
     rerun = {m["stage"] for m in idx2.build_metrics}
-    assert "postings" not in rerun and "doc_map" not in rerun
+    assert "packed" not in rerun and "doc_map" not in rerun
     assert "term_stats" in rerun
 
 

@@ -146,15 +146,13 @@ def worker(cores: int, corpus_path: str, run_queries: bool = True) -> dict:
     # doc_shard_size bounds every (term, doc_shard) pack group — the skew
     # control that at 10^12 docs comes from the default 1M shard; scaled down
     # to the bench corpus so hot Zipf terms split across many groups here too
-    # a one-field in-memory build never caches the long posting table:
-    # serving below runs off the packed index (the designed query path) —
-    # at scale that table is written to Parquet by the checkpointing runner
+    # a one-field build never caches or stores its tokenized rows: serving
+    # below runs off the packed index, the only stored form of the postings
     idx = build_index(spark, src, do_stem=True, doc_shard_size=2048)
-    # packed.count() materializes the whole tokenize->postings->pack chain in
-    # ONE action (postings stream straight into the pack shuffle, NOT
-    # cached); doc_map is a narrow sha256
-    # pass and term_stats a tiny rollup off the cached packed table — no
-    # separate full-postings action remains
+    # packed.count() materializes the whole tokenize->pack chain in ONE
+    # action (the tokenized rows stream straight into the pack shuffle);
+    # doc_map is a narrow sha256 pass and term_stats a tiny rollup off the
+    # cached packed table
     idx.packed.count()
     idx.doc_map.count()
     idx.term_stats.count()
@@ -371,8 +369,8 @@ def _render_md(s: dict) -> str:
     lines = [
         "# BENCH / BASELINE — scaling-efficiency evidence",
         "",
-        "Same job (full index build: tokenize+stem -> postings -> term_stats ->",
-        "packed delta+VByte blobs with block-max; then the 8-query golden BM25",
+        "Same job (full index build: tokenize+stem -> packed delta+VByte blobs",
+        "with block-max -> term_stats; then the 8-query golden BM25",
         f"set) on the identical {s['n_docs']}-doc seeded corpus at two local",
         "parallelism levels (stand-ins for N and 4N executors; no real cluster",
         "in this sandbox). Levels run interleaved, best of",
