@@ -41,6 +41,10 @@ merging; what stays explicit is what the optimizer cannot infer:
   fields df counts the docs holding the term in ANY field
   (``any_field_term_stats``), which no one field's rows give.
 
+* **one root format**: a checkpointed ``build_index`` and ``save_index``
+  write the ``STAGE_LAYOUT`` stages, ``commit`` seals them, ``load_index``
+  opens them (ref: index()/loadIndex(), SearchEngine.java:41-56).
+
 At 100 TB: tokenize is a narrow map (Arrow batches) with no shuffle, the
 single wide shuffle is the pack's (field, term, doc_shard) sort-shuffle, and
 every later stage groups on keys that include doc_shard/term_bucket,
@@ -49,8 +53,11 @@ keeping state bounded.
 
 from __future__ import annotations
 
+import json
 import operator
-from dataclasses import dataclass, field
+import os
+import time
+from dataclasses import dataclass, field, replace
 from functools import reduce
 
 import numpy as np
@@ -60,7 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec
-from .lineage import StageRunner
+from .lineage import StageRunner, write_json_atomic
 from .textproc import doc_postings_flat, doc_len_col
 
 K1 = 1.2
@@ -160,6 +167,15 @@ class Index:
         """The long posting rows (term_bucket, field, term, doc_id, tf,
         positions, doc_len), decoded from ``packed`` on every read."""
         return unpack_postings(self.packed)
+
+
+# THE stored layout of an index root's serving stages, as StageRunner.run
+# arguments (see "index roots" below)
+STAGE_LAYOUT: dict[str, dict] = {
+    "doc_map": {},
+    "packed": {"partition_by": ["term_bucket"], "sort_within": ["term", "doc_shard"]},
+    "term_stats": {"partition_by": ["term_bucket"], "sort_within": ["term"]},
+}
 
 
 PACKED_SCHEMA = T.StructType(
@@ -563,6 +579,7 @@ def build_index(
                 *[x for f, c in zip(fields, lens) for x in (F.lit(f), F.col(c))]
             ).alias("field_lens"),
         ),
+        **STAGE_LAYOUT["doc_map"],
     )
     if in_memory:
         # persisted BEFORE the stats action below: that one collect both
@@ -577,7 +594,7 @@ def build_index(
     packed = runner.run(
         "packed",
         lambda: pack_postings(postings, stats.avgdl_by_field, n_term_buckets, doc_shard_size),
-        partition_by=["term_bucket"], sort_within=["term", "doc_shard"],
+        **STAGE_LAYOUT["packed"],
     )
     if in_memory:
         # without this, every query replays the whole
@@ -590,7 +607,7 @@ def build_index(
             packed_term_stats(packed, n_term_buckets) if len(fields) == 1
             else any_field_term_stats(postings, n_term_buckets)
         ),
-        partition_by=["term_bucket"], sort_within=["term"],
+        **STAGE_LAYOUT["term_stats"],
     )
     if in_memory:
         term_stats = term_stats.persist()
@@ -607,4 +624,112 @@ def build_index(
         doc_shard_size=doc_shard_size,
         n_term_buckets=n_term_buckets,
         field_weights=fields,
+    )
+
+
+# ---------------------------------------------------------------------------
+# index roots: <root>/stages/<stage> (Parquet + lineage manifest, laid out by
+# STAGE_LAYOUT) and <root>/build_summary.json, the commit record written last
+# ---------------------------------------------------------------------------
+
+
+def summary_path(root: str) -> str:
+    """The root's build_summary.json: its presence marks a whole index."""
+    return os.path.join(root, "build_summary.json")
+
+
+def drop_summary(root: str) -> None:
+    """Remove the root's summary before the first stage write: a crash
+    mid-write then leaves a root load_index refuses, never old layout
+    metadata beside half-written stages."""
+    if os.path.exists(summary_path(root)):
+        os.remove(summary_path(root))
+
+
+def commit(root: str, index: Index, **extra) -> dict:
+    """Write the root's summary last, atomically: ``index``'s TOTALS (and
+    avgdl), layout, stemming, field weights, ``extra``, and the schemas of
+    its stage frames, which must be read back from the root's written stages
+    (so load_index infers none). Returns the summary."""
+    stats = index.stats
+    summary = {
+        **{k: getattr(stats, k) for k in TOTALS},
+        "avgdl": stats.avgdl,
+        "doc_shard_size": index.doc_shard_size,
+        "term_buckets": index.n_term_buckets,
+        "do_stem": index.do_stem,
+        "field_weights": index.field_weights,
+        **extra,
+        "schemas": {s: getattr(index, s).schema.jsonValue() for s in STAGE_LAYOUT},
+    }
+    os.makedirs(root, exist_ok=True)
+    write_json_atomic(summary_path(root), summary)
+    return summary
+
+
+def save_index(spark: SparkSession, index: Index, root: str, **extra) -> dict:
+    """Write ``index`` to ``root`` as a checkpointed build_index does, every
+    stage through ``StageRunner`` with its manifest, then ``commit`` it with
+    the stages' metrics, wall_sec and ``extra``. The summary and the
+    manifests go first, so no stage of an index already under ``root`` is
+    skipped and a crash mid-write leaves a root load_index refuses. Never
+    save into a root ``index`` reads from. Returns the summary."""
+    t0 = time.time()
+    drop_summary(root)
+    runner = StageRunner(spark, os.path.join(root, "stages"))
+    for stage in STAGE_LAYOUT:
+        runner.invalidate(stage)
+    saved = {
+        stage: runner.run(stage, lambda df=getattr(index, stage): df, **layout)
+        for stage, layout in STAGE_LAYOUT.items()
+    }
+    return commit(root, replace(index, **saved), **{
+        "wall_sec": round(time.time() - t0, 3), "stages": runner.metrics, **extra,
+    })
+
+
+def load_index(spark: SparkSession, root: str) -> Index:
+    """The index a root holds, as its build_summary.json records it. Stages
+    are read with the recorded schemas and the IndexStats rebuilt from the
+    recorded totals, so opening a root runs only Spark's listing of the
+    term_bucket= directories. A summary without field weights is a plain
+    index's. ValueError when the root has no stages/packed or no summary
+    (an unfinished or interrupted write), or predates packed rows carrying
+    their field and the recorded term-bucket count, stemming, stats totals
+    and stage schemas."""
+    stages = os.path.join(root, "stages")
+    if not os.path.isdir(os.path.join(stages, "packed")):
+        raise ValueError(
+            f"the index at {root!r} has no packed postings (stages/packed); "
+            "rebuild it with jobs/build_index.py"
+        )
+    if not os.path.exists(summary_path(root)):
+        raise ValueError(
+            f"the index at {root!r} has no build_summary.json (an unfinished or "
+            "interrupted build or merge); rebuild it with jobs/build_index.py"
+        )
+    with open(summary_path(root)) as f:
+        s = json.load(f)
+    schemas = s.get("schemas", {})
+    recorded = all(k in s for k in ("doc_shard_size", "term_buckets", "do_stem", *TOTALS))
+    if not recorded or set(schemas) != set(STAGE_LAYOUT) or "field" not in {
+        f["name"] for f in schemas["packed"]["fields"]
+    }:
+        raise ValueError(
+            f"the index at {root!r} was built by an older version (no field "
+            "column or no recorded term_buckets/do_stem/stats totals/stage "
+            "schemas); rebuild it with jobs/build_index.py"
+        )
+    read = {
+        stage: spark.read.schema(T.StructType.fromJson(schemas[stage])).parquet(
+            os.path.join(stages, stage)
+        )
+        for stage in STAGE_LAYOUT
+    }
+    return Index(
+        doc_map=read["doc_map"], term_stats=read["term_stats"],
+        packed=read["packed"], stats=stats_from_totals(**{k: s[k] for k in TOTALS}),
+        do_stem=s["do_stem"], doc_shard_size=s["doc_shard_size"],
+        n_term_buckets=s["term_buckets"],
+        field_weights=s.get("field_weights", dict(PLAIN_FIELDS)),
     )

@@ -10,7 +10,9 @@ re-reads their Parquet, so a kill between any two stages loses at most one
 stage of work. The tokenized posting rows are not a stage (they are never
 stored), so a build killed before ``packed`` completes re-tokenizes on
 resume, as does a multi-field build's ``term_stats``. Each manifest's
-``partitions[].file`` is relative to its stage directory.
+``partitions[].file`` is relative to its stage directory. Every index root
+is written through a StageRunner (``build.save_index`` writes merged and
+compacted roots), so every root's stages carry manifests.
 """
 
 from __future__ import annotations

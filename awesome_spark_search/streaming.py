@@ -24,7 +24,8 @@ Scale notes: each micro-batch's posting partial is one narrow map over its
 documents (``batch_postings``: the batch build's map-side accumulation, no
 shuffle); the base + deltas merge is a doc-keyed join plus a duplicate
 collapse, and compaction (``compact_deltas``) periodically folds the deltas
-into one base so that merge stays O(#deltas since the last compaction).
+into one index root, the base of the next ``to_index``, so that merge stays
+O(#deltas since the last compaction).
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ from .build import (
     index_stats,
     pack_postings,
     packed_term_stats,
+    save_index,
     term_bucket_col,
 )
 from .lineage import StageRunner
@@ -233,22 +235,15 @@ class IncrementalIndexer:
             )
         return latest.select("doc_id", "doc_len")
 
-    def compact_deltas(self, out_dir: str) -> None:
-        """Fold the append-only delta area into one consolidated base:
-        merged postings + doc lens rewritten term-bucket-partitioned and
-        term-sorted (row-group pruning layout). Run periodically so the
-        query-side merge stays O(#deltas since last compaction)."""
-        (
-            self.merged_postings()
-            .repartition(F.col("term_bucket"))
-            .sortWithinPartitions("term", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(os.path.join(out_dir, "postings"))
-        )
-        self.doc_lens().write.mode("overwrite").parquet(
-            os.path.join(out_dir, "doc_lens")
-        )
+    def compact_deltas(self, out_dir: str) -> dict:
+        """Fold the append-only delta area into one index root at
+        ``out_dir``: the deltas' ``to_index()``, written by
+        ``build.save_index`` like every other root (packed; no long postings
+        table). The root is the next base: stream into a fresh delta area
+        and serve ``to_index(base=load_index(spark, out_dir))``. Run it
+        periodically, so the query-side merge stays O(#deltas since the last
+        compaction). Returns the root's summary."""
+        return save_index(self.spark, self.to_index(), out_dir)
 
     def to_index(
         self,

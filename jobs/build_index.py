@@ -11,8 +11,9 @@ input_hint shape; ``doc_id`` is assigned deterministically by
 (repo, path, commit) order if absent. Every stage checkpoints to
 ``<out>/stages/<name>`` with a ``_manifest.json`` (per-partition lineage +
 metrics); a rerun after a kill skips completed stages. ``<out>/build_summary.json``
-is removed before the first stage runs and written last, atomically, so a
-killed build leaves a root jobs/query.py refuses until the rerun completes.
+is removed before the first stage runs and written last, atomically
+(``build.commit``), so a killed build leaves a root ``build.load_index``
+(and so jobs/query.py) refuses until the rerun completes.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 from awesome_spark_search import corpus
-from awesome_spark_search.build import build_index
+from awesome_spark_search.build import build_index, commit, drop_summary
 
 
 def main(argv=None) -> int:
@@ -45,8 +46,6 @@ def main(argv=None) -> int:
     if "doc_id" not in src.columns:
         src = corpus.assign_doc_ids(src, ["repo", "path", "commit"])
 
-    from query import drop_summary, stage_schemas, stats_record, write_summary  # same jobs/ dir
-
     drop_summary(args.out)
     t0 = time.time()
     idx = build_index(
@@ -57,17 +56,12 @@ def main(argv=None) -> int:
         n_term_buckets=args.term_buckets,
         doc_shard_size=args.doc_shard_size,
     )
-    summary = {
-        **stats_record(idx.stats),
-        "doc_shard_size": args.doc_shard_size,
-        "term_buckets": args.term_buckets,
-        "do_stem": not args.no_stem,
-        "wall_sec": round(time.time() - t0, 3),
-        "docs_per_sec": round(idx.stats.n_docs / max(time.time() - t0, 1e-9), 2),
-        "stages": idx.build_metrics,
-        "schemas": stage_schemas(spark, args.out),
-    }
-    write_summary(args.out, summary)
+    summary = commit(
+        args.out, idx,
+        wall_sec=round(time.time() - t0, 3),
+        docs_per_sec=round(idx.stats.n_docs / max(time.time() - t0, 1e-9), 2),
+        stages=idx.build_metrics,
+    )
     print(json.dumps(summary))
     return 0
 

@@ -141,7 +141,11 @@ def test_build_then_query_jobs(corpus_dir, tmp_path_factory):
     msummary = json.loads(mout.strip().splitlines()[-1])
     assert msummary["n_docs"] == 150
     assert os.path.exists(os.path.join(out_m, "build_summary.json"))
-    assert sorted(os.listdir(os.path.join(out_m, "stages"))) == ["doc_map", "packed", "term_stats"]
+    # the merge writes the serving stages alone, each with its manifest
+    assert sorted(os.listdir(os.path.join(out_m, "stages"))) == sorted(
+        f for s in ("doc_map", "packed", "term_stats")
+        for f in (s, f"{s}._manifest.json")
+    )
 
     stdout5 = _run([
         "jobs/query.py", "--index", out_m, "--source", corpus_dir,

@@ -1,9 +1,14 @@
-"""Library operations over index roots opened with jobs/query.load_index,
+"""Library operations over index roots opened with build.load_index,
 which reads the packed table and no long postings: a merge of two opened
 roots and streaming onto an opened base must each equal a build of the
-whole corpus. The job mains run in-process, on the test session."""
+whole corpus. ``build.save_index``, the writer of merged roots, writes any
+index (fielded too) so that load_index opens it as it was, and a merge into
+a root that holds an index replaces that index whole. The job mains run
+in-process, on the test session."""
 
+import json
 import os
+import shutil
 import sys
 
 import pytest
@@ -12,10 +17,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "jobs"))
 
 import build_index as build_job  # noqa: E402
-from query import load_index  # noqa: E402
+import merge_index as merge_job  # noqa: E402
 
 from awesome_spark_search import corpus  # noqa: E402
-from awesome_spark_search.build import build_index  # noqa: E402
+from awesome_spark_search.build import (  # noqa: E402
+    STAGE_LAYOUT, build_index, load_index, save_index,
+)
 from awesome_spark_search.executor import QueryExecutor  # noqa: E402
 from awesome_spark_search.merge import merge_packed_indexes  # noqa: E402
 from awesome_spark_search.streaming import IncrementalIndexer  # noqa: E402
@@ -46,11 +53,13 @@ def full(spark, halves):
 def _norm(v):
     if isinstance(v, (bytes, bytearray)):
         return bytes(v)
+    if isinstance(v, dict):
+        return tuple(sorted(v.items()))
     return tuple(map(_norm, v)) if isinstance(v, list) else v
 
 
-def _sorted_rows(df, cols):
-    return sorted(tuple(_norm(r[c]) for c in cols) for r in df.collect())
+def _sorted_rows(df, cols=None):
+    return sorted(tuple(_norm(r[c]) for c in cols or sorted(df.columns)) for r in df.collect())
 
 
 def _term_stats(ix):
@@ -78,3 +87,76 @@ def test_streaming_onto_an_opened_base_equals_rebuild(spark, halves, full, tmp_p
         want = [(r["doc_id"], r["score"]) for r in ex_f.search(q, k=10).collect()]
         assert want, q
         assert [(r["doc_id"], r["score"]) for r in ex_s.search(q, k=10).collect()] == want, q
+
+
+def _ranked(spark, ix, q):
+    return [(r["doc_id"], r["score"]) for r in QueryExecutor(spark, ix).search(q, k=10).collect()]
+
+
+def _assert_complete_manifests(root):
+    """Every serving stage has a complete manifest whose per-file row
+    counts name the stage's files and add up to the stage's rows."""
+    for stage in STAGE_LAYOUT:
+        with open(os.path.join(root, "stages", f"{stage}._manifest.json")) as f:
+            m = json.load(f)
+        d = os.path.join(root, "stages", stage)
+        assert m["complete"] and m["stage"] == stage
+        assert all(os.path.exists(os.path.join(d, p["file"])) for p in m["partitions"])
+        assert m["rows"] == sum(p["rows"] for p in m["partitions"]) > 0
+
+
+def test_a_two_field_index_round_trips(spark, halves, tmp_path):
+    """save_index -> load_index keeps a fielded index's field weights,
+    stats and stage rows, and the opened root ranks and scores
+    zone-weighted queries exactly as the in-memory index."""
+    pdf = halves[1].copy()
+    pdf["title"] = pdf.content.str.split().str[:6].str.join(" ")
+    weights = {"content": 1.0, "title": 0.5}
+    idx = build_index(spark, spark.createDataFrame(pdf), field_weights=weights)
+    root = str(tmp_path / "fielded")
+    summary = save_index(spark, idx, root)
+    assert summary["field_weights"] == weights
+    assert [m["stage"] for m in summary["stages"]] == list(STAGE_LAYOUT)
+    _assert_complete_manifests(root)
+
+    opened = load_index(spark, root)
+    assert opened.field_weights == weights
+    assert opened.stats == idx.stats
+    assert (opened.do_stem, opened.doc_shard_size, opened.n_term_buckets) == (
+        idx.do_stem, idx.doc_shard_size, idx.n_term_buckets,
+    )
+    for stage in STAGE_LAYOUT:
+        assert _sorted_rows(getattr(opened, stage)) == _sorted_rows(getattr(idx, stage)), stage
+    for q in QUERIES:
+        want = _ranked(spark, idx, q)
+        assert want, q
+        assert _ranked(spark, opened, q) == want, q
+
+
+def test_merge_job_replaces_an_index_under_out(spark, halves, full, tmp_path):
+    """jobs/merge_index.py into a root that holds another whole index (its
+    manifests complete) writes every serving stage anew, each with a
+    complete manifest, and the root serves the merged rows: those of a
+    build of the whole corpus."""
+    _, _, roots = halves
+    out = str(tmp_path / "out")
+    shutil.copytree(roots[0], out)
+    assert merge_job.main(["--out", out, *roots]) == 0
+    _assert_complete_manifests(out)
+    with open(os.path.join(out, "build_summary.json")) as f:
+        summary = json.load(f)
+    assert [m["stage"] for m in summary["stages"]] == list(STAGE_LAYOUT)
+    assert summary["merged_from"] == roots
+
+    merged = load_index(spark, out)
+    assert merged.stats == full.stats
+    cols = sorted(full.packed.columns)
+    assert _sorted_rows(merged.packed, cols) == _sorted_rows(full.packed, cols)
+    assert _term_stats(merged) == _term_stats(full)
+    assert _sorted_rows(merged.doc_map, ["doc_id", "content_sha256"]) == _sorted_rows(
+        full.doc_map, ["doc_id", "content_sha256"]
+    )
+    for q in QUERIES:
+        want = _ranked(spark, full, q)
+        assert want, q
+        assert _ranked(spark, merged, q) == want, q

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from awesome_spark_search import corpus
+from awesome_spark_search.build import load_index
 from awesome_spark_search.streaming import (
     IncrementalIndexer,
     batch_postings,
@@ -148,6 +149,9 @@ def test_merged_postings_idempotent_under_replay(spark, tmp_path, doc_pdf):
 
 
 def test_compact_deltas_preserves_postings(spark, tmp_path, doc_pdf):
+    """Compaction writes an index root: opened with load_index, its
+    postings (decoded from packed) are the merged deltas' and its doc_map
+    holds every doc."""
     delta_dir = str(tmp_path / "delta3")
     out_dir = str(tmp_path / "compacted")
     ingest = IncrementalIndexer(spark, delta_dir, do_stem=False)
@@ -158,13 +162,10 @@ def test_compact_deltas_preserves_postings(spark, tmp_path, doc_pdf):
         for r in ingest.merged_postings().collect()
     }
     ingest.compact_deltas(out_dir)
-    got = {
-        (r["term"], r["doc_id"], r["tf"])
-        for r in spark.read.parquet(f"{out_dir}/postings").collect()
-    }
+    root = load_index(spark, out_dir)
+    got = {(r["term"], r["doc_id"], r["tf"]) for r in root.postings.collect()}
     assert got == want and len(got) > 0
-    lens = spark.read.parquet(f"{out_dir}/doc_lens")
-    assert lens.count() == 80
+    assert root.doc_map.count() == 80
 
 
 def test_tumbling_counts_stream_matches_batch(spark, tmp_path):

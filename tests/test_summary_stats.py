@@ -1,5 +1,5 @@
 """An index root's IndexStats travel in its build_summary.json as additive
-totals: jobs/query.load_index rebuilds them from there with no Spark job,
+totals: build.load_index rebuilds them from there with no Spark job,
 a summary without them is refused, and a resumed build whose checkpointed
 ``stats`` stage predates the totals re-runs that one stage. The job mains
 run in-process, on the test session."""
@@ -15,10 +15,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "jobs"))
 
 import build_index as build_job  # noqa: E402
-from query import load_index, summary_path  # noqa: E402
 
 from awesome_spark_search import corpus  # noqa: E402
-from awesome_spark_search.build import build_index  # noqa: E402
+from awesome_spark_search.build import build_index, load_index, summary_path  # noqa: E402
 
 
 @pytest.fixture(scope="module")
