@@ -670,15 +670,16 @@ def commit(root: str, index: Index, **extra) -> dict:
 def save_index(spark: SparkSession, index: Index, root: str, **extra) -> dict:
     """Write ``index`` to ``root`` as a checkpointed build_index does, every
     stage through ``StageRunner`` with its manifest, then ``commit`` it with
-    the stages' metrics, wall_sec and ``extra``. The summary and the
-    manifests go first, so no stage of an index already under ``root`` is
-    skipped and a crash mid-write leaves a root load_index refuses. Never
+    the stages' metrics, wall_sec and ``extra``. The summary and every
+    stage manifest under ``root/stages`` go first, so no stage of an index
+    already under ``root`` is skipped, a crash mid-write leaves a root
+    load_index refuses, and a later resumed build into ``root`` resumes no
+    stage of the old index (a build's ``stats`` stage included). Never
     save into a root ``index`` reads from. Returns the summary."""
     t0 = time.time()
     drop_summary(root)
     runner = StageRunner(spark, os.path.join(root, "stages"))
-    for stage in STAGE_LAYOUT:
-        runner.invalidate(stage)
+    runner.invalidate_all()
     saved = {
         stage: runner.run(stage, lambda df=getattr(index, stage): df, **layout)
         for stage, layout in STAGE_LAYOUT.items()

@@ -23,7 +23,7 @@ spelling and PRF read the same index:
                   snippets of the top-N docs at weight 0.25
 * scorer="ql"  -> the same shapes through ``wand.ql_topk``
 
-Every query is ONE Spark action: term lookups prune partitions via
+Every query is at most ONE Spark action: term lookups prune partitions via
 term_bucket. The driver's cached dictionary (``_get_vocab``, {term: (idf,
 cf)}) answers every per-term question — existence, the kernels' idf/cf,
 spelling candidates — so a ranked query runs no term_stats job, its plan
@@ -36,9 +36,14 @@ dispatch (``_plans``) — and every ranked plan comes out of
 one builder (``wand._ranked_rows``); a single query ends in a
 TakeOrderedAndProject, a batch in a per-query window. On an index with one
 doc_shard (``wand._one_shard``) those plans, and Boolean/LinkTo ones, run
-on the driver (``wand._run_shards``): the ``wand`` entry points collect the
-rows once (the query's ONE Spark job), run the shard step in the calling
-thread and return a local frame, which ``search`` returns as it is.
+on the driver (``wand._run_shards``): the shard step runs in the calling
+thread and the ``wand`` entry points return a local frame, which
+``search`` returns as it is. Its rows are slices of the dictionary's
+driver-side copy of the packed table (``wand.PackedCopy``, collected once
+with the dictionary while the index holds at most
+``PACKED_COPY_MAX_TOKENS`` tokens), so such a query runs NO Spark job (a
+LinkTo leaf collects its citation rows, PRF reads its snippets' sources);
+past that bound one Arrow collect of the rows is the query's ONE job.
 Corrections travel as values, never as executor state, so concurrent
 ``search`` calls on one executor are safe — the kernel then runs in the
 calling threads.
@@ -131,6 +136,13 @@ class QueryExecutor:
     # because equal dfs share one idf float (a float per term: ~111MB; a
     # frozenset: ~34MB; tracemalloc, 1M synthetic Zipf terms)
     VOCAB_CACHE_MAX = 1_000_000
+    # driver-side copy cutoff (wand.PackedCopy, one-shard indexes only):
+    # the copy holds every posting and position in its packed encoding,
+    # 2.6 bytes per indexed token as an Arrow table (2.58 at 5k docs, 0.66M
+    # tokens; 2.55 at 20k docs, 2.6M tokens; corpus.generate_pandas), so
+    # 50M tokens take ~130MB, and the collect peaks at about twice that
+    # while the table is sorted. total_tokens bounds it without a job.
+    PACKED_COPY_MAX_TOKENS = 50_000_000
 
     def _get_vocab(self) -> dict[str, tuple[float, int]] | None:
         """Driver-cached {term: (idf, cf)} dictionary when it is small
@@ -139,7 +151,11 @@ class QueryExecutor:
         equals the broadcast plan's idf bit for bit; equal dfs share one
         idf float. It answers existence, the ranked plans' idf/cf (with the
         pruned packed frame built here once, ``wand.TermDictionary``) and
-        spelling candidates (by cf) with zero Spark actions per query. For
+        spelling candidates (by cf) with zero Spark actions per query. On a
+        one-shard index (``wand._one_shard``) of at most
+        ``PACKED_COPY_MAX_TOKENS`` tokens the same load collects the packed
+        table into the dictionary's ``wand.PackedCopy`` (one more job, here
+        only), from which every plan then takes its rows. For
         huge vocabularies (10^8-term code corpora) this returns None:
         existence uses a Bloom filter built ONCE per index (``_get_bloom``)
         — still zero per-query actions — stats the broadcast join,
@@ -157,7 +173,10 @@ class QueryExecutor:
                             r["term"]: (idfs.setdefault(r["df"], r["idf"]), r["cf"])
                             for r in rows
                         }
-                        self._dictionary = wand.dictionary(self.index, self._vocab)
+                        self._dictionary = wand.dictionary(self.index, self._vocab, copy=(
+                            wand._one_shard(self.index)
+                            and self.index.stats.total_tokens <= self.PACKED_COPY_MAX_TOKENS
+                        ))
                 self._vocab_checked = True
         return self._vocab
 
@@ -307,7 +326,9 @@ class QueryExecutor:
         (ref: QueryProcessor.java:397-417). With the cached dictionary the
         existence check, the term stats and the spelling correction are
         all answered on the driver: ONE Spark action per query, typo or
-        not, with no term_stats job in it. Past ``VOCAB_CACHE_MAX`` a Bloom
+        not, with no term_stats job in it — and none at all on a one-shard
+        index whose packed rows the dictionary holds (``_get_vocab``), LinkTo
+        and PRF aside. Past ``VOCAB_CACHE_MAX`` a Bloom
         filter built once per index keeps the happy path at ONE action per
         query too (no false negatives on membership, so a wrong correction
         is never invented; a false positive (~2^-11/absent term) may rarely
@@ -343,7 +364,8 @@ class QueryExecutor:
         packed scan of the union of all terms, per-shard per-query
         kernels, one window for the global per-query top-k. It runs when
         the frame is collected, or, over one doc_shard, inside this call
-        (the frame comes back localized). Rank+score identical to calling
+        (the frame comes back localized; from the dictionary's copy of the
+        packed rows, with no Spark job). Rank+score identical to calling
         ``search`` per query (tests/test_batch.py). ValueError for k < 0,
         like ``search``."""
         _check_k(k)
@@ -387,7 +409,8 @@ class QueryExecutor:
         ``one(spec, k)`` ends in a TakeOrderedAndProject over (doc_id,
         score); ``many({qid: (phrase, keywords)}, k)`` in the per-query
         window — over one doc_shard both tails run in pandas and the
-        returned frame is already localized (wand.py). QL/JM under
+        returned frame is already localized, its rows taken from the
+        dictionary's copy when it holds one (wand.py). QL/JM under
         scorer="ql" (one-field indexes only — ``wand._ql`` raises on
         several fields); else block-max WAND, seeded by phrase survivors
         when the spec has a phrase, zone-weighted on every ranked query type
@@ -422,6 +445,7 @@ class QueryExecutor:
             return wand.boolean_docs(
                 self.spark, self.index, spec, k=k,
                 links=reduce(DataFrame.unionByName, links) if links else None,
+                stats=self._dictionary,
             )
         spec = self._ranked_spec(ast, corrections)
         one, _ = self._plans()

@@ -66,6 +66,15 @@ class StageRunner:
         if self.dir is not None and os.path.exists(self._paths(name)[1]):
             os.remove(self._paths(name)[1])
 
+    def invalidate_all(self) -> None:
+        """Mark every stage under the checkpoint dir incomplete, those this
+        runner will not run too (a later resumed build must not pick up a
+        stage of the index that was there before)."""
+        if self.dir is not None and os.path.isdir(self.dir):
+            for f in os.listdir(self.dir):
+                if f.endswith("._manifest.json"):
+                    os.remove(os.path.join(self.dir, f))
+
     def run(
         self,
         name: str,

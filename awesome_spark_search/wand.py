@@ -27,23 +27,26 @@ Spark shape — scalable by construction:
   (``Index.n_term_buckets``).
 * per-term stats (idf, the global cf) come with those rows
   (``term_rows``): with the executor's cached dictionary (``stats``, a
-  ``TermDictionary``) the plan is a plain filter of a packed frame pruned
-  once per executor, and the shard step attaches the stat from the
-  dictionary's JVM-computed values, so the action scans no term_stats,
-  broadcasts nothing and the plan holds no per-term expression; without
-  it a broadcast join of the terms' term_stats rows.
+  ``TermDictionary``) the shard step attaches the stat from the
+  dictionary's JVM-computed values, and the rows are either a row-range
+  slice of the dictionary's driver-side copy of a one-shard index's packed
+  table (``PackedCopy``: no Spark job, no plan at all) or a plain filter
+  of a packed frame pruned once per executor (no term_stats scan, no
+  broadcast, no per-term expression); without the dictionary, a broadcast
+  join of the terms' term_stats rows.
 * one plan builder (``_ranked_rows``) serves every scorer, one query or a
   batch: each shard emits every query's local top-k; the global top-k of
   one query is a tiny TakeOrderedAndProject over n_shards*k rows, that of
   a batch a per-query window.
 * two executions of every packed plan, ranked or Boolean, chosen in ONE
   place (``_run_shards``, by ``_one_shard``): an index whose doc_ids all
-  fall in doc_shard 0 (below ``DEFAULT_DOC_SHARD_SIZE`` docs) has its
-  plan's rows collected with ONE Arrow collect, and the same shard step
-  runs on the driver, in the calling thread, with the top-k tail in pandas
-  and the result returned localized — no shuffle and no kernel task per
-  query. Over several shards the step runs as one applyInPandas per
-  doc_shard.
+  fall in doc_shard 0 (below ``DEFAULT_DOC_SHARD_SIZE`` docs) runs the
+  shard step on the driver, in the calling thread, with the top-k tail in
+  pandas and the result returned localized — no shuffle and no kernel task
+  per query. Its rows come from the executor's ``PackedCopy`` when it holds
+  one (zero Spark jobs; only a LinkTo leaf's citation rows are collected),
+  else from ONE Arrow collect. Over several shards the step runs as one
+  applyInPandas per doc_shard.
 * inside a shard the evaluation is numpy-vectorized document-at-a-time over
   terms ordered by descending bound: once the k-th best exact score exceeds
   the cumulative bound of the remaining terms, docs not already seen cannot
@@ -302,46 +305,101 @@ STATS = ("idf", "cf_global")
 POSITION_COLS = ("pos_vb", "blk_pos_off")
 
 
+class PackedCopy(NamedTuple):
+    """The driver's copy of a one-shard index's packed table, collected once
+    per executor (``collect``): ``table`` sorted by (term, field), and its
+    term -> row ranges: ``terms`` are the sorted distinct terms and term i
+    owns rows ``starts[i]:starts[i + 1]``. A plan's rows are a few row
+    ranges of it (``rows``), converted to pandas alone.
+
+    Driver memory: the copy holds every posting and position of the index
+    in its packed encoding, which the executor bounds by the index's
+    ``total_tokens`` (``QueryExecutor.PACKED_COPY_MAX_TOKENS``)."""
+
+    table: pa.Table
+    terms: np.ndarray
+    starts: np.ndarray
+
+    @classmethod
+    def collect(cls, packed: DataFrame) -> "PackedCopy":
+        table = packed.toArrow().sort_by([("term", "ascending"), ("field", "ascending")])
+        col = table.column("term").to_numpy(zero_copy_only=False)
+        first = np.flatnonzero(np.r_[True, col[1:] != col[:-1]]) if len(col) else np.zeros(0, int)
+        return cls(table, col[first], np.append(first, len(col)))
+
+    def rows(self, terms: list[str], prefixes, columns: list[str]) -> pd.DataFrame:
+        """The rows ``_term_filter`` selects — exact ``terms`` and every term
+        in the ranges [p, p + U+FFFF) of ``prefixes`` (each one binary-
+        searched slice of the sorted terms) — as pandas with ``columns``,
+        each row once, in (term, field) order."""
+        ask = np.array(terms, dtype=object)
+        at = np.searchsorted(self.terms, ask)
+        hit = at < len(self.terms)
+        hit[hit] = self.terms[at[hit]] == ask[hit]
+        spans = [(i, i + 1) for i in at[hit].tolist()] + [
+            np.searchsorted(self.terms, np.array([p, p + "\uffff"], dtype=object))
+            for p in prefixes
+        ]
+        idx = [np.arange(self.starts[i], self.starts[j]) for i, j in spans]
+        # a term inside a prefix range is selected once, as by the filter
+        idx = np.unique(np.concatenate(idx)) if idx else np.zeros(0, np.int64)
+        return self.table.select(columns).take(idx).to_pandas()
+
+
 class TermDictionary(NamedTuple):
-    """An executor's cached dictionary as its ranked plans read it: ``terms``
-    maps every indexed term to its ``STATS`` values (idf evaluated in the
-    JVM by ``scoring.idf_col``, the global cf), and ``packed`` holds the
-    packed frame pruned to the columns the kernels read, with and without
-    the position stream (keyed by whether a plan has a phrase). Built once
-    per executor (``dictionary``), so a query's plan is a filter of a frame
-    that already exists."""
+    """An executor's cached dictionary as its plans read it: ``terms`` maps
+    every indexed term to its ``STATS`` values (idf evaluated in the JVM by
+    ``scoring.idf_col``, the global cf); ``packed`` holds the packed frame
+    pruned to the columns the kernels read, with and without the position
+    stream (keyed by whether a plan has a phrase); ``copy`` is the driver's
+    ``PackedCopy`` of a one-shard index, or None. Built once per executor
+    (``dictionary``), so a query's rows are a slice of the copy, or else a
+    filter of a frame that already exists."""
 
     terms: dict
     packed: dict
+    copy: PackedCopy | None = None
 
 
-def dictionary(index: Index, terms: dict) -> TermDictionary:
+def dictionary(index: Index, terms: dict, copy: bool = False) -> TermDictionary:
     """The ``TermDictionary`` of an executor over ``index`` whose cached
-    {term: (idf, cf)} dictionary is ``terms``."""
-    return TermDictionary(terms, {True: index.packed, False: index.packed.drop(*POSITION_COLS)})
+    {term: (idf, cf)} dictionary is ``terms``; with ``copy``, ONE Spark job
+    collects the packed table into its ``PackedCopy``."""
+    return TermDictionary(
+        terms, {True: index.packed, False: index.packed.drop(*POSITION_COLS)},
+        PackedCopy.collect(index.packed) if copy else None,
+    )
 
 
 def term_rows(
     index: Index, terms: list[str], stat: str, prefixes=(), phrase: bool = True,
     *, stats: TermDictionary | None = None,
-) -> tuple[DataFrame, dict]:
+) -> tuple[DataFrame | pd.DataFrame, dict]:
     """THE term-row selector of every ranked packed plan: the packed rows of
     ``terms`` and ``prefixes`` (``_term_filter``), without the position
     stream unless the plan has a ``phrase``, and the kernels' per-term
     ``stat`` (one of ``STATS``). Returns (rows, {stat: {term: value}} for
     the shard step to attach, or {} when the rows carry it):
 
-    * ``stats`` given (the executor's ``TermDictionary``, holding every one
-      of ``terms``) and no prefix ranges: the rows are a plain bucket and
-      term filter of the dictionary's pruned packed frame and nothing else
-      (no term_stats scan, no join, no per-term literal); the stat is the
-      dictionary's value for the plan's terms;
+    * ``stats`` given (the executor's ``TermDictionary``, holding every
+      indexed term) with a ``PackedCopy``: the rows are the copy's row
+      ranges of the terms and prefix ranges, as a pandas frame (no Spark
+      job, no plan); the stat is the dictionary's value for their terms;
+    * ``stats`` given without a copy, and no prefix ranges: the rows are a
+      plain bucket and term filter of the dictionary's pruned packed frame
+      and nothing else (no term_stats scan, no join, no per-term literal);
+      the stat is the dictionary's value for the plan's terms;
     * otherwise: the same terms' term_stats rows, with the stat as a JVM
       column, broadcast-joined on, so the query stays ONE Spark action with
       no driver-side stats collect.
 
     The dictionary's idf is ``idf_col`` over the same df, evaluated in the
     JVM when the dictionary is collected, so scores are bit-identical."""
+    if stats is not None and stats.copy is not None:
+        cols = [c for c in stats.copy.table.column_names if phrase or c not in POSITION_COLS]
+        rows = stats.copy.rows(terms, prefixes, cols)
+        i = STATS.index(stat)
+        return rows, {stat: {t: stats.terms[t][i] for t in rows["term"].unique()}}
     if stats is None or prefixes:
         col = (
             idf_col(F.col("df"), index.stats.n_docs) if stat == "idf" else F.col("cf")
@@ -463,46 +521,59 @@ def _shard_step(specs: dict[str, QuerySpec], parse, score, k: int, attach=None):
 
 
 def _one_shard(index: Index) -> bool:
-    """THE path rule of every packed plan (read by ``_run_shards`` only):
-    when every doc_id of ``index`` falls in doc_shard 0 (an empty index
-    too), the plan runs on the driver (``_collect_shards``); over several
-    shards it stays the distributed applyInPandas plan. Structural: no
-    option, no size threshold."""
+    """THE path rule of every packed plan: when every doc_id of ``index``
+    falls in doc_shard 0 (an empty index too), the plan runs on the driver
+    (``_run_shards``), and an executor may hold the index's ``PackedCopy``
+    (its gate, ``QueryExecutor._get_vocab``, is the other reader); over
+    several shards it stays the distributed applyInPandas plan. Structural:
+    no option, no size threshold."""
     return index.stats.max_doc_id < index.doc_shard_size
 
 
-def _collect_shards(rows: DataFrame, step, empty: pd.DataFrame) -> pd.DataFrame:
-    """The driver execution of a one-shard plan: ONE Arrow collect of the
-    plan's ``rows`` (no shuffle; term rows are a JVM-only scan and filter,
-    with a join only without the cached dictionary, and a LinkTo leaf adds
-    its citation decode), then ``step`` per doc_shard group in the calling
-    thread — the same function, on the same rows, that the distributed
-    plan's pandas-group task runs. The step attaches what the JVM did not
-    compute (the dictionary's stat column of a ranked plan, ``term_rows``)
-    to the collected frame. ``empty`` when no row matched.
+def _collect_shards(rows: DataFrame) -> pd.DataFrame:
+    """The one Spark job of a driver execution that reads rows the driver
+    does not hold (``_run_shards``): ONE Arrow collect of ``rows`` (no
+    shuffle; term rows are a JVM-only scan and filter, with a join only
+    without the cached dictionary, and a LinkTo leaf adds its citation
+    decode). The step then attaches what the JVM did not compute (the
+    dictionary's stat column of a ranked plan, ``term_rows``).
 
     Driver memory: the collect holds exactly the rows the distributed
     plan's one kernel task would receive — one per (field, term) of the
     plan, each bounded by doc_shard_size postings (``build._encode_group``
-    guards the blob size), so no byte cap is needed on top."""
-    pdf = rows.toArrow().to_pandas()
-    if not len(pdf):
-        return empty
-    return pd.concat([step(g) for _, g in pdf.groupby("doc_shard", sort=True)], ignore_index=True)
+    guards the blob size), so no byte cap is needed on top. (An executor's
+    ``PackedCopy`` holds a whole one-shard index instead; its bound is the
+    index's ``total_tokens``, ``QueryExecutor.PACKED_COPY_MAX_TOKENS``.)"""
+    return rows.toArrow().to_pandas()
 
 
-def _run_shards(index: Index, rows: DataFrame, step, schema, empty: pd.DataFrame):
+def _run_shards(index: Index, parts: list, step, schema, empty):
     """THE shard runner of every packed plan, ranked or Boolean: ``step``
-    (one doc_shard's rows -> its pandas output) over ``rows``, grouped by
-    doc_shard. Over one doc_shard (``_one_shard``) the driver execution
-    (``_collect_shards``) gives a pandas frame, ``empty`` when no row
-    matched; over several, a Spark DataFrame of ``groupBy("doc_shard")
+    (one doc_shard's rows -> its pandas output) over the union of ``parts``
+    — DataFrames, and pandas frames the driver already holds (slices of a
+    ``PackedCopy``) — grouped by doc_shard. Over one doc_shard
+    (``_one_shard``), or when a part is held, the driver execution: the
+    DataFrame parts' ONE Arrow collect (``_collect_shards``; none when every
+    part is held, so the plan runs no Spark job), then ``step`` per doc_shard
+    group in the calling thread, giving a pandas frame (``empty()`` when no
+    row matched). Over several, a Spark DataFrame of ``groupBy("doc_shard")
     .applyInPandas(step, schema)``. The same step sees the same rows either
     way, so answers are equal; the caller's tail takes either. ``step``
     must not close over a DataFrame: it is shipped to the Python workers."""
-    if _one_shard(index):
-        return _collect_shards(rows, step, empty)
-    return rows.groupBy("doc_shard").applyInPandas(step, schema)
+    held = [p for p in parts if isinstance(p, pd.DataFrame)]
+    frames = [p for p in parts if not isinstance(p, pd.DataFrame)]
+    union = (
+        reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames) if frames else None
+    )
+    if not held and not _one_shard(index):
+        return union.groupBy("doc_shard").applyInPandas(step, schema)
+    if union is not None:
+        held.append(_collect_shards(union))
+    held = [p for p in held if len(p)]
+    if not held:
+        return empty()
+    rows = held[0] if len(held) == 1 else pd.concat(held, ignore_index=True)
+    return pd.concat([step(g) for _, g in rows.groupby("doc_shard", sort=True)], ignore_index=True)
 
 
 def _localized(spark, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
@@ -541,8 +612,8 @@ def _ranked_rows(
     phrase = any(s.phrase for s in specs.values())
     rows, attach = term_rows(index, terms, stat, prefixes, phrase, stats=stats)
     return _run_shards(
-        index, rows, _shard_step(specs, parse, score, k, attach),
-        SHARD_ROWS_SCHEMA, _empty_batch_pdf(),
+        index, [rows], _shard_step(specs, parse, score, k, attach),
+        SHARD_ROWS_SCHEMA, _empty_batch_pdf,
     )
 
 
@@ -983,6 +1054,8 @@ def boolean_docs(
     spec,
     k: int = 10,
     links: DataFrame | None = None,
+    *,
+    stats: TermDictionary | None = None,
 ) -> DataFrame:
     """Boolean doc-set query over the packed index: per-shard decode of the
     involved terms' doc_id blobs, numpy set algebra (``_eval_docset``),
@@ -991,28 +1064,28 @@ def boolean_docs(
     bare LinkTo is the one-leaf spec ("link", target). Keyed by doc_shard,
     the link rows join the term rows in ONE union, and each doc_shard's
     step sees both. The union runs through ``_run_shards``, like every
-    ranked plan: over one doc_shard it is collected and evaluated on the
-    driver, with the top-k tail in numpy and the result returned localized;
-    over several, one applyInPandas and a tiny top-k. Either way the query
-    is ONE Spark action. Returns (doc_id, score NULL)."""
+    ranked plan: over one doc_shard it is evaluated on the driver, with the
+    top-k tail in numpy and the result returned localized — its term rows
+    sliced from the executor's ``PackedCopy`` when ``stats`` (its
+    ``TermDictionary``) holds one, so only a LinkTo leaf's rows are
+    collected; over several, one applyInPandas and a tiny top-k. Either way
+    the query is at most ONE Spark action. Returns (doc_id, score NULL)."""
     terms, prefixes = _spec_leaves(spec)
     terms = sorted(set(terms))
     if k == 0 or (not terms and not prefixes and links is None):
         return _localized(spark, pd.DataFrame({"doc_id": [], "score": []}), RESULT_SCHEMA)
-    parts = []
-    if terms or prefixes:
-        parts.append(
-            _term_filter(index.packed, terms, index.n_term_buckets, prefixes)
-            .select("doc_shard", "term", "doc_ids_vb")
-        )
+    parts, cols = [], ["doc_shard", "term", "doc_ids_vb"]
+    if (terms or prefixes) and stats is not None and stats.copy is not None:
+        parts.append(stats.copy.rows(terms, prefixes, cols))
+    elif terms or prefixes:
+        rows = _term_filter(index.packed, terms, index.n_term_buckets, prefixes)
+        parts.append(rows.select(*cols))
     if links is not None:
         parts.append(links.withColumn("doc_shard", doc_shard_col(index.doc_shard_size)))
-    rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-    has_links = links is not None
 
     def shard_docs(g: pd.DataFrame) -> pd.DataFrame:
         by_link: dict[int, np.ndarray] = {}
-        if has_links:
+        if "target" in g:
             # the union's link rows carry a target, its term rows none
             is_link = g["target"].notna()
             linked = g.loc[is_link, ["target", "doc_id"]].astype("int64")
@@ -1027,7 +1100,9 @@ def boolean_docs(
         out = _eval_docset(spec, by_term, by_link)
         return pd.DataFrame({"doc_id": np.sort(out)[::-1][:k]})  # shard-local recency top-k
 
-    local = _run_shards(index, rows, shard_docs, DOCSET_SCHEMA, pd.DataFrame({"doc_id": []}))
+    local = _run_shards(
+        index, parts, shard_docs, DOCSET_SCHEMA, lambda: pd.DataFrame({"doc_id": []})
+    )
     if isinstance(local, pd.DataFrame):
         # the NULL score is built in pandas, so the frame stays local
         top = np.sort(local["doc_id"].to_numpy(np.int64))[::-1][:k]

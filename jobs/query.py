@@ -14,6 +14,11 @@ and can be deleted. An index without them (or one built before packed rows
 carried their field), or a query the chosen mode cannot serve, ends with a
 one-line error on stderr and exit code 2.
 
+On a one-shard index of at most ``QueryExecutor.PACKED_COPY_MAX_TOKENS``
+tokens the first query also reads the whole packed table once into the
+executor's driver-side copy, from which every query then takes its rows
+with no Spark job; the first query's wall_ms includes that read.
+
 Prints one JSON line per query: {"query", "k", "wall_ms", "corrections",
 "results": [{"doc_id", "score"}, ...]}. With --batch, every query serves in
 ONE Spark action (search_many) and each line carries the shared

@@ -74,10 +74,12 @@ def test_chunked_build_matches_single_chunk(spark):
 def test_huge_vocab_happy_path_one_action(spark):
     """VOCAB_CACHE_MAX=0 simulates a >1M-term vocabulary. After the
     one-time Bloom build, a well-spelled search costs exactly one job more
-    than the cached-vocab path: the broadcast of the term_stats rows, whose
-    df/cf the cached path carries as plan literals. No per-query existence
-    job is added (one would fail the exact count), and a typo'd search
-    still corrects (no false negatives)."""
+    than the cached-vocab path with its one collect (the copy's gate shut):
+    the broadcast of the term_stats rows, whose idf/cf the cached path
+    takes from the dictionary. No per-query existence job is added (one
+    would fail the exact count), and a typo'd search still corrects (no
+    false negatives). The cached path from the executor's copy of the
+    packed rows runs no job at all."""
     idx = _build(
         spark,
         [
@@ -92,8 +94,12 @@ def test_huge_vocab_happy_path_one_action(spark):
     assert big._vocab is None and big._bloom is not None
 
     small = QueryExecutor(spark, idx)
+    small.PACKED_COPY_MAX_TOKENS = -1  # the one-collect fallback
     small.search("buffer merge", k=5).collect()  # warm: caches the vocab
-    assert small._vocab is not None
+    assert small._vocab is not None and small._dictionary.copy is None
+    copied = QueryExecutor(spark, idx)
+    copied.search("buffer merge", k=5).collect()  # warm: vocab and copy
+    assert copied._dictionary.copy is not None
 
     j_big = _jobs_for(
         spark, "bloom_path", lambda: big.search("buffer merge", k=5).collect()
@@ -102,6 +108,10 @@ def test_huge_vocab_happy_path_one_action(spark):
         spark, "vocab_path", lambda: small.search("buffer merge", k=5).collect()
     )
     assert j_big == j_small + 1, (j_big, j_small)
+    j_copied = _jobs_for(
+        spark, "copy_path", lambda: copied.search("buffer merge", k=5).collect()
+    )
+    assert j_copied == 0, j_copied
 
     # typo detection stays exact on the Bloom path
     rows = big.search("bufer mrege", k=5).collect()

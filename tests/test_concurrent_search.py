@@ -93,3 +93,52 @@ def test_concurrent_searches_keep_their_own_corrections(spark, src, index, monke
             assert [d for d, _ in rows] == [d for d, _ in want], (name, query)
             for (_, g), (_, w) in zip(rows, want):
                 assert (g is None) if w is None else abs(g - w) < 1e-9, (name, query)
+
+
+def test_threads_racing_the_first_copy_load_share_one_copy(spark, src, index, monkeypatch):
+    """Threads whose first searches on a fresh executor start together load
+    the driver-side copy of the packed rows once (under the dictionary
+    lock), and each answers as a lone executor does."""
+    from awesome_spark_search import wand
+
+    queries = ["merge delta", '"kappa lambda"', "alpha AND NOT gamma", "buffer theta"]
+    lone = QueryExecutor(spark, index)
+    want = {q: [(r["doc_id"], r["score"]) for r in lone.search(q, k=10).collect()] for q in queries}
+    assert all(want.values())
+    loads = []
+    real = wand.PackedCopy.collect
+
+    def counting(packed):
+        loads.append(threading.get_ident())
+        return real(packed)
+
+    monkeypatch.setattr(wand.PackedCopy, "collect", counting)
+    ex = QueryExecutor(spark, index)
+    n_threads = 2 * len(queries)  # more threads than the session's cores
+    barrier = threading.Barrier(n_threads, timeout=300)
+    got: dict[int, list] = {}
+    errors: list[BaseException] = []
+
+    def run(i):
+        try:
+            barrier.wait()  # every thread's first search starts together
+            query = queries[i % len(queries)]
+            got[i] = [(r["doc_id"], r["score"]) for r in ex.search(query, k=10).collect()]
+        except Exception as e:  # surfaced below
+            errors.append(e)
+            barrier.abort()
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often while they race
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(loads) == 1 and ex._dictionary.copy is not None
+    assert got == {i: want[queries[i % len(queries)]] for i in range(n_threads)}

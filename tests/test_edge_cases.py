@@ -344,39 +344,45 @@ def test_k_zero_returns_no_rows_and_negative_k_raises(spark, doc_shard_size):
         ex.search_many(batch, k=-1)
 
 
-def test_one_shard_search_runs_one_job_without_arrow(spark):
+def test_one_shard_search_runs_one_job_without_arrow(spark, monkeypatch):
     """With the session's Arrow conf off (Spark's default), a one-shard
-    search() still runs ONE Spark job, its collect included, for a keyword
-    and a Boolean query: the driver-path result is a local relation built
-    from a pyarrow Table, never an RDD-backed frame re-collected and
-    re-wrapped. NULL scores stay NULL; a k = 0 search runs no job."""
+    search() runs at most ONE Spark job, its collect included, for a
+    keyword and a Boolean query: the driver-path result is a local relation
+    built from a pyarrow Table, never an RDD-backed frame re-collected and
+    re-wrapped. Served from the executor's copy of the packed rows it runs
+    none; with the copy's gate shut, one (the collect of the term rows).
+    NULL scores stay NULL; a k = 0 search runs no job."""
     idx = _build(spark, [(0, "alpha beta"), (1, "beta gamma"), (2, "gamma alpha")])
-    ex = QueryExecutor(spark, idx)
     sc = spark.sparkContext
     key = "spark.sql.execution.arrow.pyspark.enabled"
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        ex.search("beta", k=5).collect()  # warm: caches the dictionary
-        for name, query, k, n_jobs in (
-            ("keyword", "alpha beta", 5, 1),
-            ("boolean", "alpha AND beta", 5, 1),
-            ("k0", "alpha beta", 0, 0),
-        ):
-            group = f"no_arrow_{name}"
-            sc.setJobGroup(group, group)
-            try:
-                df = ex.search(query, k=k)
-                rows = df.collect()
-            finally:
-                sc.setJobGroup(None, None)
-            assert df.isLocal(), name
-            assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs, name
-            if name == "boolean":
-                assert [(r["doc_id"], r["score"]) for r in rows] == [(0, None)]
-            elif name == "keyword":
-                assert rows and all(r["score"] > 0 for r in rows)
-            else:
-                assert rows == []
+        for copy in (True, False):
+            if not copy:
+                monkeypatch.setattr(QueryExecutor, "PACKED_COPY_MAX_TOKENS", -1)
+            ex = QueryExecutor(spark, idx)
+            ex.search("beta", k=5).collect()  # warm: caches the dictionary
+            assert (ex._dictionary.copy is not None) == copy
+            for name, query, k, n_jobs in (
+                ("keyword", "alpha beta", 5, 0 if copy else 1),
+                ("boolean", "alpha AND beta", 5, 0 if copy else 1),
+                ("k0", "alpha beta", 0, 0),
+            ):
+                group = f"no_arrow_{name}_{copy}"
+                sc.setJobGroup(group, group)
+                try:
+                    df = ex.search(query, k=k)
+                    rows = df.collect()
+                finally:
+                    sc.setJobGroup(None, None)
+                assert df.isLocal(), name
+                assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs, name
+                if name == "boolean":
+                    assert [(r["doc_id"], r["score"]) for r in rows] == [(0, None)]
+                elif name == "keyword":
+                    assert rows and all(r["score"] > 0 for r in rows)
+                else:
+                    assert rows == []
     finally:
         spark.conf.set(key, old)

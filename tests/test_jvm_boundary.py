@@ -57,14 +57,14 @@ def _round_trips(monkeypatch):
 
 
 def test_one_shard_query_plan_costs_a_few_round_trips_per_term(spark, served, monkeypatch):
-    """search() over the cached dictionary: the collected selection is a
-    plain filter of the packed rows (no map literal, no struct re-pack), and
-    a ~20-term keyword query (a dictionary-expanded prefix) costs at most
-    MAX_TRIPS_PER_TERM round trips per term more than a one-term query."""
+    """search() over the cached dictionary of a one-shard index. Served from
+    the executor's copy of the packed rows, a ~20-term keyword query (a
+    dictionary-expanded prefix) collects nothing and costs no more py4j
+    round trips than a one-term query. With the copy's gate shut, the
+    collected selection is a plain filter of the packed rows (no map
+    literal, no struct re-pack), and the ~20-term query costs at most
+    MAX_TRIPS_PER_TERM round trips per term more than the one-term query."""
     index, _, _ = served
-    ex = QueryExecutor(spark, index)
-    expanded, ranges = ex._expand_prefixes(["qu"])
-    assert 18 <= len(expanded) <= 30 and not ranges, expanded
 
     collected = []
     real = wand._collect_shards
@@ -74,19 +74,32 @@ def test_one_shard_query_plan_costs_a_few_round_trips_per_term(spark, served, mo
         return real(rows, *args)
 
     monkeypatch.setattr(wand, "_collect_shards", recording)
-    ex.search(expanded[0], k=10).collect()  # warm both shapes once
-    ex.search("qu*", k=10).collect()
-    counts = _round_trips(monkeypatch)
-    trips = {}
-    for name, query in (("one", expanded[0]), ("many", "qu*")):
-        collected.clear()
-        counts.clear()
-        assert ex.search(query, k=10).collect(), name
-        trips[name] = counts["calls"]
-        plans = collected[0]._jdf.queryExecution().toString()
-        assert "map(" not in plans and "struct(" not in plans, (name, plans[:3000])
-    per_term = (trips["many"] - trips["one"]) / (len(expanded) - 1)
-    assert per_term <= MAX_TRIPS_PER_TERM, (trips, len(expanded))
+    for copy in (True, False):
+        if not copy:
+            monkeypatch.setattr(QueryExecutor, "PACKED_COPY_MAX_TOKENS", -1)
+        ex = QueryExecutor(spark, index)
+        expanded, ranges = ex._expand_prefixes(["qu"])
+        assert 18 <= len(expanded) <= 30 and not ranges, expanded
+        assert (ex._dictionary.copy is not None) == copy
+        ex.search(expanded[0], k=10).collect()  # warm both shapes once
+        ex.search("qu*", k=10).collect()
+        counts = _round_trips(monkeypatch)
+        trips = {}
+        for name, query in (("one", expanded[0]), ("many", "qu*")):
+            collected.clear()
+            counts.clear()
+            assert ex.search(query, k=10).collect(), name
+            trips[name] = counts["calls"]
+            if copy:
+                assert not collected, name
+                continue
+            plans = collected[0]._jdf.queryExecution().toString()
+            assert "map(" not in plans and "struct(" not in plans, (name, plans[:3000])
+        if copy:
+            assert trips["many"] <= trips["one"], trips
+            continue
+        per_term = (trips["many"] - trips["one"]) / (len(expanded) - 1)
+        assert per_term <= MAX_TRIPS_PER_TERM, (trips, len(expanded))
 
 
 def test_serving_leaves_cached_frames_and_the_catalog_alone(spark, served):

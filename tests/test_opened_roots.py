@@ -160,3 +160,24 @@ def test_merge_job_replaces_an_index_under_out(spark, halves, full, tmp_path):
         want = _ranked(spark, full, q)
         assert want, q
         assert _ranked(spark, merged, q) == want, q
+
+
+def test_save_index_leaves_no_manifest_of_the_index_it_replaces(spark, halves, full, tmp_path):
+    """save_index into a root that holds a checkpointed build removes every
+    stage manifest of that build, its ``stats`` stage's too: none survives
+    beside the new serving stages, so a build resumed into the root later
+    recomputes its stats from the stages it resumes and commits stats that
+    match them (a surviving manifest would commit the old build's)."""
+    _, pdf, roots = halves
+    out = str(tmp_path / "out")
+    shutil.copytree(roots[0], out)
+    stages = os.path.join(out, "stages")
+    assert os.path.exists(os.path.join(stages, "stats._manifest.json"))
+    save_index(spark, full, out)
+    assert sorted(f for f in os.listdir(stages) if f.endswith("._manifest.json")) == sorted(
+        f"{s}._manifest.json" for s in STAGE_LAYOUT
+    )
+    src = str(tmp_path / "full.parquet")
+    pdf.to_parquet(src, index=False)
+    assert build_job.main(["--source", src, "--out", out]) == 0
+    assert load_index(spark, out).stats == full.stats

@@ -1,9 +1,11 @@
-"""The two executions of one packed plan give the same answers. With the
-path rule ``wand._one_shard`` forced each way on the same multi-shard index,
-the driver path (one collect, the shard kernel per doc_shard in the calling
-thread, pandas tails) and the distributed path (applyInPandas per
-doc_shard, Spark tails) return equal (doc_id, repr(score)) rows for every
-query type: both run the same kernel over the same rows in the same order."""
+"""The executions of one packed plan give the same answers. With the path
+rule ``wand._one_shard`` forced each way on the same multi-shard index, the
+driver path — its rows sliced from the executor's copy of the packed table
+(``wand.PackedCopy``), or with the copy's gate shut, taken by one collect;
+the shard kernel per doc_shard in the calling thread, pandas tails — and
+the distributed path (applyInPandas per doc_shard, Spark tails) return
+equal (doc_id, repr(score)) rows for every query type: all run the same
+kernel over the same rows in the same order."""
 
 import pytest
 
@@ -50,11 +52,14 @@ def _rows(df, key=("doc_id", "score")):
     return [tuple(repr(r[c]) if c == "score" else r[c] for c in key) for r in df.collect()]
 
 
-def _both_paths(monkeypatch, run):
-    """run() with the driver path forced, then with the distributed one."""
+def _each_path(monkeypatch, run):
+    """run() (which builds its own executor, so each path loads its own
+    dictionary) on the driver path from the copy, on the driver path with
+    the copy's gate shut, then on the distributed path."""
     out = []
-    for local in (True, False):
+    for local, copy in ((True, True), (True, False), (False, False)):
         monkeypatch.setattr(wand, "_one_shard", lambda index, local=local: local)
+        monkeypatch.setattr(QueryExecutor, "PACKED_COPY_MAX_TOKENS", 1 << 62 if copy else -1)
         out.append(run())
     return out
 
@@ -62,29 +67,32 @@ def _both_paths(monkeypatch, run):
 @pytest.mark.parametrize("scorer", ["bm25", "ql"])
 def test_search_is_equal_on_both_paths(spark, src, index, citations, monkeypatch, scorer):
     assert not wand._one_shard(index)  # the fixture really has several shards
-    ex = QueryExecutor(spark, index, source_df=src, packed_citations=citations, scorer=scorer)
 
     def run():
+        ex = QueryExecutor(spark, index, source_df=src, packed_citations=citations, scorer=scorer)
         got = {q: _rows(ex.search(q, k=10)) for q in QUERIES}
         ex.PREFIX_EXPAND_MAX = 0  # the prefix as a term range
         got["token* range"] = _rows(ex.search("token* scan", k=10))
-        del ex.PREFIX_EXPAND_MAX
+        got["copy"] = ex._dictionary.copy is not None
         return got
 
-    local, distributed = _both_paths(monkeypatch, run)
-    assert local == distributed
-    assert all(local[q] for q in QUERIES if q != "zzzznothing")
+    copied, collected, distributed = _each_path(monkeypatch, run)
+    assert (copied.pop("copy"), collected.pop("copy"), distributed.pop("copy")) == (
+        True, False, False
+    )
+    assert copied == collected == distributed
+    assert all(copied[q] for q in QUERIES if q != "zzzznothing")
 
 
 @pytest.mark.parametrize("scorer", ["bm25", "ql"])
 def test_search_many_is_equal_on_both_paths(spark, index, monkeypatch, scorer):
-    ex = QueryExecutor(spark, index, scorer=scorer)
     key = ("query_id", "rank", "doc_id", "score")
-    local, distributed = _both_paths(
-        monkeypatch, lambda: _rows(ex.search_many(BATCH, k=10), key)
+    copied, collected, distributed = _each_path(
+        monkeypatch,
+        lambda: _rows(QueryExecutor(spark, index, scorer=scorer).search_many(BATCH, k=10), key),
     )
-    assert local == distributed
-    assert {r[0] for r in local} == set(BATCH)
+    assert copied == collected == distributed
+    assert {r[0] for r in copied} == set(BATCH)
 
 
 def test_two_field_index_is_equal_on_both_paths(spark, src, monkeypatch):
@@ -92,15 +100,15 @@ def test_two_field_index_is_equal_on_both_paths(spark, src, monkeypatch):
         spark, src.select("doc_id", "content", "path"), do_stem=True, doc_shard_size=64,
         field_weights={"content": 1.0, "path": 0.5},
     )
-    ex = QueryExecutor(spark, idx, source_df=src.select("doc_id", "content"))
     queries = ["buffer merge", '"merge sort" buffer', "buffer merge #3", "buffer AND merge"]
 
     def run():
+        ex = QueryExecutor(spark, idx, source_df=src.select("doc_id", "content"))
         return (
             {q: _rows(ex.search(q, k=10)) for q in queries},
             _rows(ex.search_many(BATCH, k=10), ("query_id", "rank", "doc_id", "score")),
         )
 
-    local, distributed = _both_paths(monkeypatch, run)
-    assert local == distributed
-    assert all(local[0].values())
+    copied, collected, distributed = _each_path(monkeypatch, run)
+    assert copied == collected == distributed
+    assert all(copied[0].values())

@@ -6,7 +6,9 @@ on the executor path with a cached dictionary, a plain term filter with
 no stats in the plan) and
 single-shuffle shapes. Each serving section names its path: the
 distributed plan of an index with several doc_shards, or the driver path
-of a one-shard index, whose plan is the one collect of its term rows.
+of a one-shard index past the executor's copy gate, whose plan is the one
+collect of its term rows (under the gate a one-shard query has no plan: it
+slices the executor's driver-side copy of the packed rows).
 
 Usage: python tools/dump_plans.py [out.md]
 """
@@ -59,20 +61,26 @@ def main() -> int:
 
     def _one_shard_plan():
         # default doc_shard_size: the 300 docs are one doc_shard, so the
-        # query runs on the driver; its plan is the frame it collects
+        # query runs on the driver; with the copy's gate shut its plan is
+        # the frame it collects
+        from awesome_spark_search.executor import QueryExecutor
+
         one = build_index(spark, src, do_stem=True,
                           checkpoint_dir=tempfile.mkdtemp(prefix="ass_plans_one_"))
         seen, real = [], wand._collect_shards
+        limit = QueryExecutor.PACKED_COPY_MAX_TOKENS
 
         def recording(rows, *args):
             seen.append(rows)
             return real(rows, *args)
 
         wand._collect_shards = recording
+        QueryExecutor.PACKED_COPY_MAX_TOKENS = -1
         try:
             _executor_plan(one, ["buffer", "merg", "scan"])
         finally:
             wand._collect_shards = real
+            QueryExecutor.PACKED_COPY_MAX_TOKENS = limit
         return seen[0]
 
     def _fielded_plan():
@@ -174,16 +182,18 @@ def main() -> int:
          "it takes idf from the cached dictionary - no term_stats scan, no "
          "join, no broadcast, no stat projection.",
          _fielded_plan),
-        ("Keyword top-10, executor, one doc_shard (driver path)",
+        ("Keyword top-10, executor, one doc_shard past the copy gate (driver path)",
          "Driver path: 1 doc_shard (the same 300 docs at the default "
-         "doc_shard_size).",
+         "doc_shard_size), the executor's copy gate shut.",
          "The plan the executor's keyword query collects when the index has "
-         "one doc_shard: the bucket-pruned packed scan and term filter, with "
+         "one doc_shard but more tokens than PACKED_COPY_MAX_TOKENS: the "
+         "bucket-pruned packed scan and term filter, with "
          "no stat projection and no position stream, collected with one "
          "Arrow collect - no "
          "exchange, no pandas UDF. The shard kernel and the top-k then run "
          "on the driver, over exactly the rows the distributed plan's one "
-         "kernel task would get.",
+         "kernel task would get. Under the gate the executor holds the "
+         "packed rows on the driver and the query has no plan at all.",
          _one_shard_plan),
     ]
     lines = [
