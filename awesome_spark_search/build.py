@@ -26,10 +26,13 @@ merging; what stays explicit is what the optimizer cannot infer:
   10^12 docs never produces one giant array row; every row is <= shard_size
   entries and the query side intersects per-shard (embarrassingly parallel
   WAND).
-* **term-bucket layout**: the final index is hash-bucketed on term
-  (``term_bucket`` partition column), so a query's term lookup prunes to
-  q buckets (the role of the reference's seek list, via partition pruning +
-  Parquet min/max stats).
+* **term-bucket layout**: the final index is hash-bucketed on term into
+  the constant ``TERM_BUCKETS`` (``term_bucket`` partition column), so a
+  query's term lookup prunes to q buckets (the role of the reference's
+  seek list, via partition pruning + Parquet min/max stats).
+* **one build tail**: ``build_index`` and the streaming
+  ``IncrementalIndexer.to_index`` tokenize their own way, then both end in
+  ``assemble`` (stats, packed, term_stats and their persist rules).
 * **one repack path**: every packed table — this build, the streaming
   ``IncrementalIndexer.to_index`` and the merge — goes through ``repack``
   (a (field, term, doc_shard) sort-shuffle streamed through one
@@ -72,7 +75,11 @@ from .textproc import doc_postings_flat, doc_len_col
 
 K1 = 1.2
 B = 0.75
-DEFAULT_TERM_BUCKETS = 64
+# the term-bucket count of every index: the fan-out of its term lookup (the
+# reference fixes its seek list's sampling interval in code the same way,
+# ref: InvertedIndexSeekList.java:14); load_index refuses a root built with
+# another
+TERM_BUCKETS = 64
 DEFAULT_DOC_SHARD_SIZE = 1 << 20  # 1M docs per shard row at scale
 
 # A plain index is the one-field case: the source column it tokenizes, at
@@ -157,9 +164,8 @@ class Index:
     stats: IndexStats
     do_stem: bool = True
     build_metrics: list = field(default_factory=list)
-    # the packed layout; the query side reads both from here
+    # the packed layout; the query side reads it from here
     doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE
-    n_term_buckets: int = DEFAULT_TERM_BUCKETS
     field_weights: dict[str, float] = field(default_factory=lambda: dict(PLAIN_FIELDS))
 
     @property
@@ -240,7 +246,7 @@ def _groups(pdf: pd.DataFrame):
         yield s, e, {c: a[s] for c, a in cols.items()}
 
 
-def _pack_many(pdf: pd.DataFrame, avgdl_by_field: dict, n_buckets: int) -> pd.DataFrame:
+def _pack_many(pdf: pd.DataFrame, avgdl_by_field: dict) -> pd.DataFrame:
     """Pack MANY groups from one frame sorted by (*PACK_KEYS, doc_id); each
     group's block_max is bounded against its field's avgdl.
 
@@ -281,7 +287,7 @@ def _pack_many(pdf: pd.DataFrame, avgdl_by_field: dict, n_buckets: int) -> pd.Da
         mask[marker_idx] = False
         stream[mask] = seg.astype(np.uint64)
         row = _encode_group(key["term"], int(key["doc_shard"]), ids, t, dls[s:e],
-                            stream, avgdl_by_field[key["field"]], n_buckets)
+                            stream, avgdl_by_field[key["field"]])
         row.update(key)
         for name, v in row.items():
             cols[name].append(v)
@@ -296,7 +302,6 @@ def _encode_group(
     dls_seg: np.ndarray,
     stream: np.ndarray,
     avgdl: float,
-    n_buckets: int,
 ) -> dict:
     """Encode ONE (field, term, doc_shard) group — sorted doc_ids ``ids``, per-doc
     tfs ``t`` and doc lengths ``dls_seg``, and the concatenated
@@ -329,7 +334,7 @@ def _encode_group(
         pos_enc_off[marker_idx[blk_heads]] if k else np.zeros(0, dtype=np.int64)
     )
     return {
-        "term_bucket": _py_term_bucket(term, n_buckets),
+        "term_bucket": _py_term_bucket(term),
         "term": term,
         "doc_shard": shard,
         "n": k,
@@ -429,30 +434,28 @@ def repack(df: DataFrame, order: list[str], head) -> DataFrame:
     )
 
 
-def pack_postings(
-    postings: DataFrame, avgdl_by_field: dict, n_buckets: int, doc_shard_size: int
-) -> DataFrame:
+def pack_postings(postings: DataFrame, avgdl_by_field: dict, doc_shard_size: int) -> DataFrame:
     """Long posting rows (field, term, doc_id, tf, positions, doc_len) ->
     packed rows, one per (field, term, doc_shard) group (doc_shard bounds
     every group to doc_shard_size postings); ``unpack_postings`` inverts it."""
     return repack(
         postings.withColumn("doc_shard", doc_shard_col(doc_shard_size)), ["doc_id"],
-        lambda pdf: _pack_many(pdf, avgdl_by_field, n_buckets),
+        lambda pdf: _pack_many(pdf, avgdl_by_field),
     )
 
 
-def _py_term_bucket(term: str, n_buckets: int) -> int:
+def _py_term_bucket(term: str) -> int:
     """Deterministic term->bucket hash shared by build (JVM crc32 expression)
     and query (driver-side pruning). CRC32 is identical across zlib and Spark;
     Python's hash() is process-salted and unusable here."""
     import zlib
 
-    return zlib.crc32(term.encode("utf-8")) % n_buckets
+    return zlib.crc32(term.encode("utf-8")) % TERM_BUCKETS
 
 
-def term_bucket_col(term_col, n_buckets: int):
+def term_bucket_col(term_col):
     """JVM-side bucket id == _py_term_bucket, pure codegen (no UDF)."""
-    return F.pmod(F.crc32(F.encode(term_col, "UTF-8")), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.crc32(F.encode(term_col, "UTF-8")), F.lit(TERM_BUCKETS)).cast("int")
 
 
 def index_stats(doc_map: DataFrame, runner: StageRunner, fields) -> IndexStats:
@@ -488,7 +491,7 @@ def index_stats(doc_map: DataFrame, runner: StageRunner, fields) -> IndexStats:
     )
 
 
-def packed_term_stats(packed: DataFrame, n_buckets: int) -> DataFrame:
+def packed_term_stats(packed: DataFrame) -> DataFrame:
     """term_stats (term, df, cf, term_bucket) of a ONE-field packed table.
     The pack shuffle already grouped every posting by term, so df/cf are a
     cheap rollup of the (term, doc_shard) group rows — one aggregation
@@ -496,11 +499,11 @@ def packed_term_stats(packed: DataFrame, n_buckets: int) -> DataFrame:
     return (
         packed.groupBy("term")
         .agg(F.sum("n").cast("long").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
+        .withColumn("term_bucket", term_bucket_col(F.col("term")))
     )
 
 
-def any_field_term_stats(postings: DataFrame, n_buckets: int) -> DataFrame:
+def any_field_term_stats(postings: DataFrame) -> DataFrame:
     """term_stats (term, df, cf, term_bucket) of a multi-field build: df
     counts the docs holding the term in ANY field (the reference's seek is
     per term, not per (term, field)), so it rolls up from the tokenized
@@ -511,7 +514,70 @@ def any_field_term_stats(postings: DataFrame, n_buckets: int) -> DataFrame:
         .agg(F.countDistinct("doc_id").alias("pdf"), F.sum("tf").alias("pcf"))
         .groupBy("term")
         .agg(F.sum("pdf").alias("df"), F.sum("pcf").alias("cf"))
-        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
+        .withColumn("term_bucket", term_bucket_col(F.col("term")))
+    )
+
+
+def assemble(
+    runner: StageRunner,
+    postings: DataFrame,
+    doc_map: DataFrame,
+    fields: dict[str, float],
+    do_stem: bool,
+    doc_shard_size: int,
+) -> Index:
+    """THE build tail every tokenizing producer ends in (``build_index`` and
+    the streaming ``IncrementalIndexer.to_index``): stats, packed and
+    term_stats of an index over ``doc_map`` (doc_id, doc_len, field_lens,
+    ...) and its tokenized ``postings`` (field, term, doc_id, tf,
+    positions, doc_len — the field's length), run as ``runner``'s stages.
+
+    Persist rules: a runner without a checkpoint dir builds in memory and
+    persists doc_map (before the stats action, whose one collect then both
+    fills the cache and aggregates it), packed and term_stats, which queries
+    read. Only a multi-field index persists its postings, which it reads a
+    second time (``any_field_term_stats``); a checkpointed one drops them
+    once term_stats is written."""
+    in_memory = runner.dir is None
+    if len(fields) > 1:
+        postings = postings.persist()
+    if in_memory:
+        doc_map = doc_map.persist()
+
+    stats = index_stats(doc_map, runner, fields)
+
+    packed = runner.run(
+        "packed",
+        lambda: pack_postings(postings, stats.avgdl_by_field, doc_shard_size),
+        **STAGE_LAYOUT["packed"],
+    )
+    if in_memory:
+        # without this, every query replays the whole
+        # repartition+sort+pack pipeline (minutes at 10^6 docs)
+        packed = packed.persist()
+
+    term_stats = runner.run(
+        "term_stats",
+        lambda: (
+            packed_term_stats(packed) if len(fields) == 1
+            else any_field_term_stats(postings)
+        ),
+        **STAGE_LAYOUT["term_stats"],
+    )
+    if in_memory:
+        term_stats = term_stats.persist()
+    else:
+        postings.unpersist()  # both readers are written stages now
+
+    return Index(
+        doc_map=doc_map,
+        term_stats=term_stats,
+        packed=packed,
+        stats=stats,
+        do_stem=do_stem,
+        build_metrics=runner.metrics,
+        doc_shard_size=doc_shard_size,
+        field_weights=fields,
     )
 
 
@@ -521,7 +587,6 @@ def build_index(
     *,
     do_stem: bool = True,
     checkpoint_dir: str | None = None,
-    n_term_buckets: int = DEFAULT_TERM_BUCKETS,
     doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE,
     field_weights: dict[str, float] | None = None,
 ) -> Index:
@@ -533,29 +598,23 @@ def build_index(
     Each field tokenizes independently, so positions (and phrases) never
     run across fields. ``checkpoint_dir`` enables stage-resumable
     materialization of doc_map, stats, packed and term_stats (see
-    lineage.py); None builds in memory (same plan shapes), persisting
-    doc_map, packed and term_stats, which queries read. Only a multi-field
-    build persists its tokenized rows, which it reads a second time
-    (``any_field_term_stats``); a checkpointed one drops them after.
+    lineage.py); None builds in memory (same plan shapes). The tokenized
+    rows and doc_map go to ``assemble``, which holds the persist rules.
     """
     fields = dict(field_weights or PLAIN_FIELDS)
     runner = StageRunner(spark, checkpoint_dir)
-    in_memory = checkpoint_dir is None
     meta_cols = [c for c in ("repo", "path", "commit", "lang") if c in source_df.columns]
 
     # Per-document posting accumulation happens map-side inside the Arrow
     # batch (the reference's PostingTable.put loop, ref: DocumentIndexer.java:
     # 220-242): ONE narrow mapInPandas pass per field, with NO (term, doc_id)
     # shuffle, straight into the pack shuffle; the long rows are never stored.
+    # doc_len (the field's length) rides along, so packing joins no doc_map.
     postings = reduce(DataFrame.unionByName, [
         doc_postings_flat(source_df, do_stem=do_stem, content_col=f)
         .withColumn("field", F.lit(f))
         for f in fields
     ])
-    if len(fields) > 1:
-        # only a multi-field build reads the tokenized rows twice (pack, then
-        # any_field_term_stats)
-        postings = postings.persist()
 
     # doc_map never needs Python: sha256 and the stopword-inclusive token
     # counts are whole-stage-codegen expressions over the source (doc_len
@@ -581,50 +640,7 @@ def build_index(
         ),
         **STAGE_LAYOUT["doc_map"],
     )
-    if in_memory:
-        # persisted BEFORE the stats action below: that one collect both
-        # fills the doc_map cache and aggregates it — no separate doc_len
-        # scan over the content column ever runs
-        doc_map = doc_map.persist()
-
-    stats = index_stats(doc_map, runner, fields)
-
-    # doc_len (the field's length) rides along from the tokenize pass — no
-    # doc_map join
-    packed = runner.run(
-        "packed",
-        lambda: pack_postings(postings, stats.avgdl_by_field, n_term_buckets, doc_shard_size),
-        **STAGE_LAYOUT["packed"],
-    )
-    if in_memory:
-        # without this, every query replays the whole
-        # repartition+sort+pack pipeline (minutes at 10^6 docs)
-        packed = packed.persist()
-
-    term_stats = runner.run(
-        "term_stats",
-        lambda: (
-            packed_term_stats(packed, n_term_buckets) if len(fields) == 1
-            else any_field_term_stats(postings, n_term_buckets)
-        ),
-        **STAGE_LAYOUT["term_stats"],
-    )
-    if in_memory:
-        term_stats = term_stats.persist()
-    else:
-        postings.unpersist()  # both readers are written stages now
-
-    return Index(
-        doc_map=doc_map,
-        term_stats=term_stats,
-        packed=packed,
-        stats=stats,
-        do_stem=do_stem,
-        build_metrics=runner.metrics,
-        doc_shard_size=doc_shard_size,
-        n_term_buckets=n_term_buckets,
-        field_weights=fields,
-    )
+    return assemble(runner, postings, doc_map, fields, do_stem, doc_shard_size)
 
 
 # ---------------------------------------------------------------------------
@@ -656,7 +672,7 @@ def commit(root: str, index: Index, **extra) -> dict:
         **{k: getattr(stats, k) for k in TOTALS},
         "avgdl": stats.avgdl,
         "doc_shard_size": index.doc_shard_size,
-        "term_buckets": index.n_term_buckets,
+        "term_buckets": TERM_BUCKETS,
         "do_stem": index.do_stem,
         "field_weights": index.field_weights,
         **extra,
@@ -695,9 +711,10 @@ def load_index(spark: SparkSession, root: str) -> Index:
     recorded totals, so opening a root runs only Spark's listing of the
     term_bucket= directories. A summary without field weights is a plain
     index's. ValueError when the root has no stages/packed or no summary
-    (an unfinished or interrupted write), or predates packed rows carrying
+    (an unfinished or interrupted write), predates packed rows carrying
     their field and the recorded term-bucket count, stemming, stats totals
-    and stage schemas."""
+    and stage schemas, or records a bucket count other than
+    ``TERM_BUCKETS`` (its terms would be looked up in the wrong buckets)."""
     stages = os.path.join(root, "stages")
     if not os.path.isdir(os.path.join(stages, "packed")):
         raise ValueError(
@@ -721,6 +738,11 @@ def load_index(spark: SparkSession, root: str) -> Index:
             "column or no recorded term_buckets/do_stem/stats totals/stage "
             "schemas); rebuild it with jobs/build_index.py"
         )
+    if s["term_buckets"] != TERM_BUCKETS:
+        raise ValueError(
+            f"the index at {root!r} was built with {s['term_buckets']} term "
+            f"buckets, not {TERM_BUCKETS}; rebuild it with jobs/build_index.py"
+        )
     read = {
         stage: spark.read.schema(T.StructType.fromJson(schemas[stage])).parquet(
             os.path.join(stages, stage)
@@ -731,6 +753,5 @@ def load_index(spark: SparkSession, root: str) -> Index:
         doc_map=read["doc_map"], term_stats=read["term_stats"],
         packed=read["packed"], stats=stats_from_totals(**{k: s[k] for k in TOTALS}),
         do_stem=s["do_stem"], doc_shard_size=s["doc_shard_size"],
-        n_term_buckets=s["term_buckets"],
         field_weights=s.get("field_weights", dict(PLAIN_FIELDS)),
     )

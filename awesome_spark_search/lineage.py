@@ -89,7 +89,10 @@ class StageRunner:
         row counts are recorded as lineage. ``sort_within`` clusters rows
         inside the written files (after co-locating partition_by values) so
         Parquet row-group min/max statistics prune point/range lookups — the
-        role of the reference's seek list (GenericSeekList.java:51-71).
+        role of the reference's seek list (GenericSeekList.java:51-71). The
+        sort leads with ``partition_by``: that is the order the partitioned
+        writer needs, so it adds no sort of its own, which would replace
+        ours and leave each file in arrival order.
         """
         if self.dir is None:
             return build()
@@ -101,7 +104,7 @@ class StageRunner:
         if sort_within:
             if partition_by:
                 df = df.repartition(*[F.col(c) for c in partition_by])
-            df = df.sortWithinPartitions(*sort_within)
+            df = df.sortWithinPartitions(*(partition_by or []), *sort_within)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)

@@ -34,7 +34,8 @@ everywhere. These are the metadata-only statistics of Delta Lake's log
 to learn them. term_stats is the sum of the sources' term_stats — exact
 for one field and for several (df over ANY field) because the doc sets are
 disjoint. Inputs are checked with ValueError (source count, packed
-present, equal doc_shard_size / do_stem / field_weights / n_term_buckets).
+present, equal doc_shard_size / do_stem / field_weights); every index has
+the one bucket count ``build.TERM_BUCKETS``, so a row's term_bucket holds.
 Doc sets must be disjoint. When the non-empty sources' [min_doc_id,
 max_doc_id] ranges do not overlap, they are, and no row is read; when
 ranges overlap (interleaved doc_ids), a doc_map duplicate probe decides,
@@ -61,14 +62,13 @@ from .build import (
     _decode_row,
     _encode_group,
     _groups,
-    _py_term_bucket,
     repack,
     stats_from_totals,
     term_bucket_col,
 )
 
 
-def _merge_rows(rows: list, avgdl: float, n_buckets: int) -> dict:
+def _merge_rows(rows: list, avgdl: float) -> dict:
     """Merge 2+ packed rows of the SAME (field, term, doc_shard) into one row.
     Per-doc [tf, gaps...] segments are self-contained, so the merged
     position stream is a pure segment gather in merged doc order — no
@@ -105,23 +105,22 @@ def _merge_rows(rows: list, avgdl: float, n_buckets: int) -> dict:
     stream = big[ptr]
     return _encode_group(
         rows[0]["term"], int(rows[0]["doc_shard"]), ids, t, dls_seg,
-        stream, avgdl, n_buckets,
+        stream, avgdl,
     )
 
 
-def _refresh_bounds(r, avgdl: float, n_buckets: int) -> dict:
-    """Single-source group: pass every blob through byte-identical, only
-    recompute block_max against the merged avgdl (tf/dl streams decode;
-    doc_id/position bytes are untouched)."""
+def _refresh_bounds(r, avgdl: float) -> dict:
+    """Single-source group: pass every blob (and its term_bucket) through
+    byte-identical, only recompute block_max against the merged avgdl
+    (tf/dl streams decode; doc_id/position bytes are untouched)."""
     tfs = codec.vbyte_decode(bytes(r["tfs_vb"])).astype(np.int64)
     dls = codec.vbyte_decode(bytes(r["dls_vb"])).astype(np.int64)
     out = {name: r[name] for name in (f.name for f in PACKED_SCHEMA.fields)}
-    out["term_bucket"] = _py_term_bucket(r["term"], n_buckets)
     out["block_max"] = codec.block_max_scores(tfs, dls, avgdl, K1, B).tolist()
     return out
 
 
-def _merge_many(pdf: pd.DataFrame, avgdl_by_field: dict, n_buckets: int) -> pd.DataFrame:
+def _merge_many(pdf: pd.DataFrame, avgdl_by_field: dict) -> pd.DataFrame:
     """``repack`` head over packed rows sorted by PACK_KEYS: a single-source
     group refreshes its bounds, a multi-source one merges, each against its
     field's merged avgdl; every key column rides into the output row."""
@@ -129,9 +128,9 @@ def _merge_many(pdf: pd.DataFrame, avgdl_by_field: dict, n_buckets: int) -> pd.D
     for s, e, key in _groups(pdf):
         avgdl = avgdl_by_field[key["field"]]
         if e - s == 1:
-            row = _refresh_bounds(pdf.iloc[s], avgdl, n_buckets)
+            row = _refresh_bounds(pdf.iloc[s], avgdl)
         else:
-            row = _merge_rows([pdf.iloc[i] for i in range(s, e)], avgdl, n_buckets)
+            row = _merge_rows([pdf.iloc[i] for i in range(s, e)], avgdl)
         row.update(key)
         out_rows.append(row)
     return pd.DataFrame(out_rows)
@@ -177,13 +176,12 @@ def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
     returned frames are lazy); overlapping ranges pay one doc_map duplicate
     probe. doc_map, packed and term_stats are persisted: later merges and
     queries read them."""
-    _check_sources(indexes, "doc_shard_size", "do_stem", "field_weights", "n_term_buckets")
+    _check_sources(indexes, "doc_shard_size", "do_stem", "field_weights")
     if any(ix.packed is None for ix in indexes):
         raise ValueError(
             "merge_packed_indexes requires indexes with packed postings"
         )
     first = indexes[0]
-    n_buckets = first.n_term_buckets
 
     # streamed (to_index) and batch indexes carry different doc_map
     # metadata columns — merge on the intersection (doc_id, doc_len and
@@ -208,7 +206,7 @@ def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
 
     merged = repack(
         reduce(DataFrame.unionByName, [ix.packed for ix in indexes]), [],
-        lambda pdf: _merge_many(pdf, stats.avgdl_by_field, n_buckets),
+        lambda pdf: _merge_many(pdf, stats.avgdl_by_field),
     ).persist()
 
     # df/cf add up over disjoint doc sets, in one field or several
@@ -216,7 +214,7 @@ def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
         reduce(DataFrame.unionByName, [ix.term_stats.select("term", "df", "cf") for ix in indexes])
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn("term_bucket", term_bucket_col(F.col("term"), n_buckets))
+        .withColumn("term_bucket", term_bucket_col(F.col("term")))
     ).persist()
 
     return Index(
@@ -226,6 +224,5 @@ def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
         stats=stats,
         do_stem=first.do_stem,
         doc_shard_size=first.doc_shard_size,
-        n_term_buckets=n_buckets,
         field_weights=dict(first.field_weights),
     )

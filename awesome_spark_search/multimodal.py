@@ -87,8 +87,7 @@ def _decode_stub(payload: bytes, kind: str) -> np.ndarray:
     return raw / 65535.0
 
 
-def extract_features(media: DataFrame, batch_size_hint: int = 256,
-                     decoder="stub") -> DataFrame:
+def extract_features(media: DataFrame, decoder="stub") -> DataFrame:
     """mapInPandas feature extraction: binary payload -> fixed-dim vector.
     One Arrow batch in, one out; never materializes the whole partition.
     ``decoder``: 'stub' | 'strict' | callable(payload, kind)->ndarray."""

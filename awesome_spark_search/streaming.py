@@ -7,12 +7,12 @@ training-data pipeline needs:
 * ``IncrementalIndexer``: readStream over a documents directory ->
   ``foreachBatch`` appends per-batch posting partials to a delta area
   partitioned by term_bucket. The merged view (base + deltas) keeps each
-  doc's latest batch and drops tombstoned docs; ``to_index`` packs it
-  through the batch build's own repack path (``build.pack_postings``) with
-  stats and term_stats from the same ``index_stats`` /
-  ``packed_term_stats``, so a streamed index is byte-identical to a batch
-  build of the same final docs. A base index's long rows are decoded from
-  its packed table (``Index.postings``), the only form an index stores.
+  doc's latest batch and drops tombstoned docs (one rule, ``_latest_rows``,
+  for postings and doc lengths alike); ``to_index`` hands it to the batch
+  build's own tail (``build.assemble``: stats, repack, term_stats), so a
+  streamed index is byte-identical to a batch build of the same final
+  docs. A base index's long rows are decoded from its packed table
+  (``Index.postings``), the only form an index stores.
 * ``tumbling_counts``: watermarked tumbling-window aggregation over an events
   stream (late data dropped deterministically by the watermark).
 * ``running_user_totals``: custom stateful operator via
@@ -41,12 +41,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .build import (
     DEFAULT_DOC_SHARD_SIZE,
-    DEFAULT_TERM_BUCKETS,
     PLAIN_FIELDS,
     Index,
-    index_stats,
-    pack_postings,
-    packed_term_stats,
+    assemble,
     save_index,
     term_bucket_col,
 )
@@ -58,19 +55,16 @@ from .textproc import doc_postings_flat, doc_len_col
 # ---------------------------------------------------------------------------
 
 
-def batch_postings(source_df: DataFrame, *, do_stem: bool,
-                   n_term_buckets: int = DEFAULT_TERM_BUCKETS) -> DataFrame:
+def batch_postings(source_df: DataFrame, *, do_stem: bool) -> DataFrame:
     """One batch's posting partial: (term_bucket, term, doc_id, tf, positions).
     The batch build's tokenize pass (build.build_index) — map-side
     accumulation, no shuffle."""
     return doc_postings_flat(
         source_df.select("doc_id", "content"), do_stem=do_stem
-    ).drop("doc_len").withColumn(
-        "term_bucket", term_bucket_col(F.col("term"), n_term_buckets)
-    )
+    ).drop("doc_len").withColumn("term_bucket", term_bucket_col(F.col("term")))
 
 
-def batch_doc_lens(source_df: DataFrame, *, do_stem: bool) -> DataFrame:
+def batch_doc_lens(source_df: DataFrame) -> DataFrame:
     return source_df.select("doc_id", doc_len_col("content").alias("doc_len"))
 
 
@@ -90,24 +84,20 @@ class IncrementalIndexer:
       same rows)
     """
 
-    def __init__(self, spark: SparkSession, delta_dir: str, *, do_stem: bool = True,
-                 n_term_buckets: int = DEFAULT_TERM_BUCKETS):
+    def __init__(self, spark: SparkSession, delta_dir: str, *, do_stem: bool = True):
         self.spark = spark
         self.delta_dir = delta_dir
         self.do_stem = do_stem
-        self.n_buckets = n_term_buckets
 
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        postings = batch_postings(
-            batch_df, do_stem=self.do_stem, n_term_buckets=self.n_buckets
-        )
+        postings = batch_postings(batch_df, do_stem=self.do_stem)
         (
             postings.withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")
             .partitionBy("term_bucket")
             .parquet(os.path.join(self.delta_dir, "postings"))
         )
-        batch_doc_lens(batch_df, do_stem=self.do_stem).withColumn(
+        batch_doc_lens(batch_df).withColumn(
             "batch_id", F.lit(batch_id)
         ).write.mode("append").parquet(os.path.join(self.delta_dir, "doc_lens"))
 
@@ -153,15 +143,45 @@ class IncrementalIndexer:
             raise
         return t.groupBy("doc_id").agg(F.max("batch_id").alias("_tb"))
 
+    def _latest_rows(self, parts: DataFrame) -> DataFrame:
+        """The rows of ``parts`` (doc_id, batch_id long, ...; a base joins in
+        as batch -1, losing to any delta) from their doc's LATEST batch that
+        no later tombstone removes: THE replace-and-tombstone rule of every
+        merged view. The per-doc latest batch comes from the doc_lens delta
+        — one row per (doc_id, batch) REGARDLESS of token count — not from
+        postings rows: a doc re-ingested with empty/all-stopword text has no
+        postings rows in its new batch, and a postings-derived watermark
+        would leave its OLD batch 'latest' (stale terms searchable while
+        doc_lens reports the new length). Docs only in the base (no delta
+        row) keep the base watermark -1. Both joins are doc-keyed against
+        delta-sized frames."""
+        latest = (
+            self.spark.read.parquet(os.path.join(self.delta_dir, "doc_lens"))
+            .groupBy("doc_id")
+            .agg(F.max(F.col("batch_id").cast("long")).alias("_latest"))
+        )
+        kept = (
+            parts.join(latest, "doc_id", "left")
+            .withColumn("_eff", F.coalesce(F.col("_latest"), F.lit(-1).cast("long")))
+            .filter(F.col("batch_id") == F.col("_eff"))
+        )
+        tomb = self._tombstone_max()
+        if tomb is not None:
+            # a doc survives only if something was ingested AFTER its last
+            # tombstone
+            kept = kept.join(tomb, "doc_id", "left").filter(
+                F.col("_tb").isNull() | (F.col("_tb") < F.col("_eff"))
+            )
+        return kept
+
     def merged_postings(self, base: DataFrame | None = None) -> DataFrame:
         """Queryable postings = base (batch build) + streamed deltas.
         Idempotent under replay AND re-ingest: a document's postings are
-        taken from its LATEST batch only (doc-level replacement — a doc-keyed
-        max-batch aggregate + join, uniform keys). All of a row's fields come
-        from the same record, so tf == len(positions) always holds, and a
-        term dropped by the new version of a doc disappears (independent
-        max(tf)/max(positions) across versions could mix records and corrupt
-        the packed position stream downstream)."""
+        taken from its LATEST batch only (``_latest_rows``). All of a row's
+        fields come from the same record, so tf == len(positions) always
+        holds, and a term dropped by the new version of a doc disappears
+        (independent max(tf)/max(positions) across versions could mix
+        records and corrupt the packed position stream downstream)."""
         delta = self.spark.read.parquet(os.path.join(self.delta_dir, "postings"))
         parts = delta.select(
             "term_bucket", "term", "doc_id",
@@ -170,36 +190,10 @@ class IncrementalIndexer:
         if base is not None:
             parts = base.select(
                 "term_bucket", "term", "doc_id",
-                F.lit(-1).cast("long").alias("batch_id"),  # base loses to any delta
-                "tf", "positions",
+                F.lit(-1).cast("long").alias("batch_id"), "tf", "positions",
             ).unionByName(parts)
-        # the per-doc latest-batch watermark comes from the doc_lens delta —
-        # one row per (doc_id, batch) REGARDLESS of token count — not from
-        # postings rows: a doc re-ingested with empty/all-stopword text has
-        # no postings rows in its new batch, and a postings-derived watermark
-        # would leave its OLD batch 'latest' (stale terms searchable while
-        # doc_lens reports the new length). Docs only in the base (no delta
-        # row) keep the base watermark -1 via the coalesce.
-        latest = (
-            self.spark.read.parquet(os.path.join(self.delta_dir, "doc_lens"))
-            .groupBy("doc_id")
-            .agg(F.max(F.col("batch_id").cast("long")).alias("_latest"))
-        )
-        merged = (
-            parts.join(latest, "doc_id", "left")
-            .withColumn("_eff", F.coalesce(F.col("_latest"), F.lit(-1).cast("long")))
-            .filter(F.col("batch_id") == F.col("_eff"))
-        )
-        tomb = self._tombstone_max()
-        if tomb is not None:
-            # a doc survives only if something was ingested AFTER its last
-            # tombstone (doc-keyed join, uniform keys)
-            merged = (
-                merged.join(tomb, "doc_id", "left")
-                .filter(F.col("_tb").isNull() | (F.col("_tb") < F.col("_eff")))
-            )
         return (
-            merged
+            self._latest_rows(parts)
             # replay of the winning batch duplicates identical rows -> collapse
             .groupBy("term_bucket", "term", "doc_id")
             .agg(F.max("tf").alias("tf"), F.max("positions").alias("positions"))
@@ -207,9 +201,9 @@ class IncrementalIndexer:
 
     def doc_lens(self, base_lens: DataFrame | None = None) -> DataFrame:
         """(doc_id, doc_len) under the same latest-batch-wins + tombstone
-        rules as merged_postings. ``base_lens`` (doc_id, doc_len) joins in as
-        batch -1, so batch-built docs are replaced by re-ingests and removed
-        by tombstones exactly like streamed ones."""
+        rule as merged_postings (``_latest_rows``). ``base_lens`` (doc_id,
+        doc_len) joins in as batch -1, so batch-built docs are replaced by
+        re-ingests and removed by tombstones exactly like streamed ones."""
         d = self.spark.read.parquet(os.path.join(self.delta_dir, "doc_lens"))
         parts = d.select(
             "doc_id", F.col("batch_id").cast("long").alias("batch_id"), "doc_len"
@@ -218,22 +212,8 @@ class IncrementalIndexer:
             parts = base_lens.select(
                 "doc_id", F.lit(-1).cast("long").alias("batch_id"), "doc_len"
             ).unionByName(parts)
-        latest = (
-            parts.groupBy("doc_id")
-            .agg(F.max(F.struct("batch_id", "doc_len")).alias("_s"))
-            .select(
-                "doc_id",
-                F.col("_s.batch_id").alias("_b"),
-                F.col("_s.doc_len").alias("doc_len"),
-            )
-        )
-        tomb = self._tombstone_max()
-        if tomb is not None:
-            latest = (
-                latest.join(tomb, "doc_id", "left")
-                .filter(F.col("_tb").isNull() | (F.col("_tb") < F.col("_b")))
-            )
-        return latest.select("doc_id", "doc_len")
+        # replay of the winning batch duplicates identical rows -> collapse
+        return self._latest_rows(parts).groupBy("doc_id").agg(F.max("doc_len").alias("doc_len"))
 
     def compact_deltas(self, out_dir: str) -> dict:
         """Fold the append-only delta area into one index root at
@@ -249,47 +229,34 @@ class IncrementalIndexer:
         self,
         base: Index | None = None,
         *,
-        doc_shard_size: int | None = None,
-    ):
+        doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE,
+    ) -> Index:
         """Materialize a queryable Index over base + streamed deltas — the
         same QueryExecutor runs unchanged over a continuously-ingested
         corpus; any Index is a base (its postings decode from its packed
-        rows), one opened from disk included. stats re-derive from the
-        merged doc lens and term_stats from the packed groups, exactly as in
-        build_index.
-
-        The merged postings pack into the delta+VByte block-directory form
-        through the batch build's repack path — the form every query serves
-        from — so run it per compaction, not per query."""
+        rows), one opened from disk included. The merged doc lens and
+        postings go through the batch build's own tail (``build.assemble``):
+        stats, the repack into the delta+VByte block-directory form every
+        query serves from, and term_stats — so run it per compaction, not
+        per query."""
         # a streamed index is plain: its one field is the whole content
         if base is not None and base.field_weights != PLAIN_FIELDS:
             raise ValueError("to_index streams onto a plain (one-field) base only")
         (field,) = PLAIN_FIELDS
-        postings = self.merged_postings(
-            base.postings if base is not None else None
-        ).withColumn("field", F.lit(field))
-        # base doc lens merge under the SAME latest-wins + tombstone rules as
+        # base doc lens merge under the SAME latest-wins + tombstone rule as
         # the postings (a tombstoned or re-ingested base doc must not leak
         # its old doc_len into n_docs/avgdl/BM25 normalization)
         doc_map = self.doc_lens(
             base.doc_map.select("doc_id", "doc_len") if base is not None else None
         ).withColumn("field_lens", F.create_map(F.lit(field), F.col("doc_len")))
-        stats = index_stats(doc_map, StageRunner(self.spark, None), PLAIN_FIELDS)
-        doc_map = doc_map.persist()
-        shard = doc_shard_size or DEFAULT_DOC_SHARD_SIZE
-        packed = pack_postings(
-            postings.join(doc_map, "doc_id")
-            .select("field", "term", "doc_id", "tf", "positions", "doc_len"),
-            stats.avgdl_by_field, self.n_buckets, shard,
-        ).persist()
-        return Index(
-            doc_map=doc_map,
-            term_stats=packed_term_stats(packed, self.n_buckets).persist(),
-            packed=packed,
-            stats=stats,
-            do_stem=self.do_stem,
-            doc_shard_size=shard,
-            n_term_buckets=self.n_buckets,
+        postings = (
+            self.merged_postings(base.postings if base is not None else None)
+            .join(doc_map, "doc_id")
+            .select(F.lit(field).alias("field"), "term", "doc_id", "tf", "positions", "doc_len")
+        )
+        return assemble(
+            StageRunner(self.spark, None), postings, doc_map, PLAIN_FIELDS,
+            self.do_stem, doc_shard_size,
         )
 
 

@@ -23,8 +23,8 @@ Spark shape — scalable by construction:
   the zone weight and its tfnorm normalized by its field's avgdl (the
   reference's ContentType weighting, ref: DocumentRanker.java:138-167).
   QL scores one-field indexes only.
-* every entry point prunes with the index's own term-bucket count
-  (``Index.n_term_buckets``).
+* every entry point prunes term_bucket partitions by the one bucket count
+  ``build.TERM_BUCKETS``.
 * per-term stats (idf, the global cf) come with those rows
   (``term_rows``): with the executor's cached dictionary (``stats``, a
   ``TermDictionary``) the shard step attaches the stat from the
@@ -279,15 +279,13 @@ def _isin(col, values: list):
     return Column(col._jc.isin(_to_seq(SparkContext._active_spark_context, values)))
 
 
-def _term_filter(
-    table: DataFrame, terms: list[str], n_term_buckets: int, prefixes=()
-) -> DataFrame:
+def _term_filter(table: DataFrame, terms: list[str], prefixes=()) -> DataFrame:
     """Rows of a term-keyed table (packed or term_stats) for exact ``terms``
     plus every term in the ranges [p, p + U+FFFF) of ``prefixes``. Exact
     terms prune term_bucket partitions and push the term filter to the scan;
     a prefix range cannot prune buckets (the hash spreads it over all of
     them) but still pushes down as a min/max-prunable range."""
-    buckets = sorted({_py_term_bucket(t, n_term_buckets) for t in terms})
+    buckets = sorted({_py_term_bucket(t) for t in terms})
     # the table's own columns (one round trip each; F.col takes a dozen)
     bucket_col, term_col = table["term_bucket"], table["term"]
     if not prefixes:
@@ -404,15 +402,15 @@ def term_rows(
         col = (
             idf_col(F.col("df"), index.stats.n_docs) if stat == "idf" else F.col("cf")
         ).alias(stat)
-        ts = _term_filter(index.term_stats, terms, index.n_term_buckets, prefixes).select(
+        ts = _term_filter(index.term_stats, terms, prefixes).select(
             "term", col
         )
         packed = index.packed if phrase else index.packed.drop(*POSITION_COLS)
-        rows = _term_filter(packed, terms, index.n_term_buckets, prefixes)
+        rows = _term_filter(packed, terms, prefixes)
         return rows.join(F.broadcast(ts), "term"), {}
     i = STATS.index(stat)
     return (
-        _term_filter(stats.packed[phrase], terms, index.n_term_buckets),
+        _term_filter(stats.packed[phrase], terms),
         {stat: {t: stats.terms[t][i] for t in terms}},
     )
 
@@ -588,7 +586,7 @@ def _localized(spark, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
 
 
 def _ranked_rows(
-    spark, index: Index, stat: str, specs: dict[str, QuerySpec], parse, score, k: int,
+    index: Index, stat: str, specs: dict[str, QuerySpec], parse, score, k: int,
     stats: TermDictionary | None = None,
 ):
     """THE ranked-plan builder of every scorer, for one query or a batch:
@@ -691,7 +689,7 @@ def wand_topk(
     query term too. ONE Spark action (``term_rows``)."""
     spec = QuerySpec([], list(terms), tuple(prefixes), weights)
     return _topk(spark, _ranked_rows(
-        spark, index, "idf", {"q": spec}, *_bm25(_field_norms(index), k), k,
+        index, "idf", {"q": spec}, *_bm25(_field_norms(index), k), k,
     ), k)
 
 
@@ -716,7 +714,7 @@ def mixed_topk(
     (``term_rows``)."""
     spec = QuerySpec(list(phrase_terms), list(keyword_terms), tuple(prefixes), weights)
     return _topk(spark, _ranked_rows(
-        spark, index, "idf", {"q": spec}, *_bm25(_field_norms(index), k), k, stats,
+        index, "idf", {"q": spec}, *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
 
@@ -732,7 +730,7 @@ def phrase_topk(
     no shard holds every term, so each returns empty on its own — no
     driver-side existence collect."""
     return _topk(spark, _ranked_rows(
-        spark, index, "idf", {"q": QuerySpec(list(terms), [])},
+        index, "idf", {"q": QuerySpec(list(terms), [])},
         *_bm25(_field_norms(index), k), k,
     ), k)
 
@@ -762,7 +760,7 @@ def batch_topk(
     AwesomeSearchEngine.java; batching is the Spark-first upgrade of that
     loop)."""
     return _batch_global_topk(spark, _ranked_rows(
-        spark, index, "idf", _pairs(specs), *_bm25(_field_norms(index), k), k, stats,
+        index, "idf", _pairs(specs), *_bm25(_field_norms(index), k), k, stats,
     ), k)
 
 
@@ -849,7 +847,7 @@ def ql_topk(
     doc_map join), tiny global top-k."""
     spec = QuerySpec(list(phrase_terms), list(terms), tuple(prefixes), weights)
     return _topk(spark, _ranked_rows(
-        spark, index, "cf_global", {"q": spec}, *_ql(index), k, stats,
+        index, "cf_global", {"q": spec}, *_ql(index), k, stats,
     ), k)
 
 
@@ -869,7 +867,7 @@ def ql_topk_many(
     (tests/test_batch.py). ``stats`` is the executor's ``TermDictionary``
     (``term_rows``)."""
     return _batch_global_topk(spark, _ranked_rows(
-        spark, index, "cf_global", _pairs(specs), *_ql(index), k, stats,
+        index, "cf_global", _pairs(specs), *_ql(index), k, stats,
     ), k)
 
 
@@ -1078,7 +1076,7 @@ def boolean_docs(
     if (terms or prefixes) and stats is not None and stats.copy is not None:
         parts.append(stats.copy.rows(terms, prefixes, cols))
     elif terms or prefixes:
-        rows = _term_filter(index.packed, terms, index.n_term_buckets, prefixes)
+        rows = _term_filter(index.packed, terms, prefixes)
         parts.append(rows.select(*cols))
     if links is not None:
         parts.append(links.withColumn("doc_shard", doc_shard_col(index.doc_shard_size)))
@@ -1119,7 +1117,7 @@ def decode_postings(index: Index, term: str, with_positions: bool = False) -> Da
     (ref semantics: src/postings/TokenPostings.java:201-243,
     EagerPositionMap.java:128-171), through the one decoder of packed rows
     (``build.unpack_postings``)."""
-    bucket = _py_term_bucket(term, index.n_term_buckets)
+    bucket = _py_term_bucket(term)
     rows = unpack_postings(index.packed.filter(
         (F.col("term_bucket") == bucket) & (F.col("term") == term)
     ))

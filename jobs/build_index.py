@@ -4,7 +4,7 @@ Usage:
     spark-submit --py-files awesome_spark_search.zip jobs/build_index.py \
         --source /path/to/source_table_parquet \
         --out    /path/to/index_root \
-        [--no-stem] [--term-buckets 64] [--doc-shard-size 1048576]
+        [--no-stem] [--doc-shard-size 1048576]
 
 The source table must carry (repo, path, commit, lang, content) per the
 input_hint shape; ``doc_id`` is assigned deterministically by
@@ -13,7 +13,8 @@ input_hint shape; ``doc_id`` is assigned deterministically by
 metrics); a rerun after a kill skips completed stages. ``<out>/build_summary.json``
 is removed before the first stage runs and written last, atomically
 (``build.commit``), so a killed build leaves a root ``build.load_index``
-(and so jobs/query.py) refuses until the rerun completes.
+(and so jobs/query.py) refuses until the rerun completes. The term-bucket
+count is not a setting: every index has ``build.TERM_BUCKETS``.
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ def main(argv=None) -> int:
     ap.add_argument("--source", required=True, help="parquet dir of the source table")
     ap.add_argument("--out", required=True, help="index root (stages + manifests)")
     ap.add_argument("--no-stem", action="store_true")
-    ap.add_argument("--term-buckets", type=int, default=64)
     ap.add_argument("--doc-shard-size", type=int, default=1 << 20)
     args = ap.parse_args(argv)
 
@@ -53,7 +53,6 @@ def main(argv=None) -> int:
         src,
         do_stem=not args.no_stem,
         checkpoint_dir=os.path.join(args.out, "stages"),
-        n_term_buckets=args.term_buckets,
         doc_shard_size=args.doc_shard_size,
     )
     summary = commit(

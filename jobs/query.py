@@ -11,8 +11,9 @@ with the term-bucket count, stemming and stage schemas recorded in its
 build_summary.json, and its recorded field weights (none recorded: a plain
 index); a stages/postings directory left by an older build is never read
 and can be deleted. An index without them (or one built before packed rows
-carried their field), or a query the chosen mode cannot serve, ends with a
-one-line error on stderr and exit code 2.
+carried their field, or with a term-bucket count other than
+``build.TERM_BUCKETS``), or a query the chosen mode cannot serve, ends with
+a one-line error on stderr and exit code 2.
 
 On a one-shard index of at most ``QueryExecutor.PACKED_COPY_MAX_TOKENS``
 tokens the first query also reads the whole packed table once into the

@@ -55,7 +55,7 @@ def _pack_for_query(postings: dict[str, list[tuple[int, int]]], doc_lens: dict[i
             "doc_len": [r[5] for r in rows],
         }
     )
-    packed = _pack_many(pdf, {"content": avgdl}, 64)
+    packed = _pack_many(pdf, {"content": avgdl})
     packed["idf"] = [
         _idf(len(postings[t]), n_docs) for t in packed["term"]
     ]
@@ -175,7 +175,7 @@ def test_phrase_positions_decode_candidate_blocks_only():
             "doc_len": [r[5] for r in rows],
         }
     )
-    packed = _pack_many(pdf, {"content": 50.0}, 64)
+    packed = _pack_many(pdf, {"content": 50.0})
     packed["idf"] = [
         _idf(n_docs if t == "aa" else 8, n_docs) for t in packed["term"]
     ]

@@ -162,31 +162,31 @@ def test_build_then_query_jobs(corpus_dir, tmp_path_factory):
             assert abs(mr["score"] - fr["score"]) < 1e-9
 
 
-def test_query_job_reads_the_index_bucket_count(corpus_dir, tmp_path_factory):
-    """jobs/query.py prunes with the bucket count and stemming the build
-    recorded: an index built with --term-buckets 8 answers exactly like a
-    default (64-bucket) build — before, terms whose bucket differs mod 8
-    and mod 64 silently returned nothing. A root without the recorded
-    layout is refused with a one-line error."""
-    roots = {}
-    for name, extra in (("b8", ["--term-buckets", "8"]), ("b64", [])):
-        roots[name] = str(tmp_path_factory.mktemp(f"jobs_{name}"))
-        _run(["jobs/build_index.py", "--source", corpus_dir, "--out", roots[name], *extra])
-    queries = ["buffer", "table", "sort"]
-    got, want = (
-        [l["results"] for l in _json_lines(_run(["jobs/query.py", "--index", roots[n], *queries]))]
-        for n in ("b8", "b64")
-    )
-    assert all(want) and got == want
-
-    summary = os.path.join(roots["b8"], "build_summary.json")
+def test_query_job_refuses_another_bucket_count(corpus_dir, tmp_path_factory):
+    """jobs/query.py serves only roots whose build_summary.json records the
+    one term-bucket count, build.TERM_BUCKETS: a root recording 8 buckets
+    (a build of an older version with a bucket setting) is refused with one
+    error line that says to rebuild, never pruned with the wrong hash into
+    a silent []. A root without the recorded layout is refused the same
+    way."""
+    root = str(tmp_path_factory.mktemp("jobs_buckets"))
+    _run(["jobs/build_index.py", "--source", corpus_dir, "--out", root])
+    summary = os.path.join(root, "build_summary.json")
     with open(summary) as f:
         s = json.load(f)
-    del s["term_buckets"]
-    with open(summary, "w") as f:
-        json.dump(s, f)
-    err = _run(["jobs/query.py", "--index", roots["b8"], "buffer"], returncode=2)
-    assert "error:" in err and "rebuild" in err and "Traceback" not in err
+    assert s["term_buckets"] == 64
+
+    for edit, why in (
+        (lambda s: s.update(term_buckets=8), "built with 8 term buckets"),
+        (lambda s: s.pop("term_buckets"), "older version"),
+    ):
+        edit(s)
+        with open(summary, "w") as f:
+            json.dump(s, f)
+        err = _run(["jobs/query.py", "--index", root, "buffer"], returncode=2)
+        errors = [l for l in err.splitlines() if l.startswith("error:")]
+        assert len(errors) == 1 and why in errors[0] and "rebuild" in errors[0], err
+        assert "Traceback" not in err
 
 
 def _tree(root):

@@ -178,21 +178,19 @@ def test_fielded_mismatched_doc_shard_size_rejected(spark):
         merge_packed_indexes(spark, [fa, dataclasses.replace(fa, doc_shard_size=16)])
 
 
-def test_mismatched_field_weights_and_buckets_rejected(spark):
-    """Sources with different fields, zone weights or term-bucket counts
-    would merge into an index no plan can serve consistently."""
+def test_mismatched_field_weights_rejected(spark):
+    """Sources with different fields or zone weights would merge into an
+    index no plan can serve consistently."""
     df = spark.createDataFrame(
         [(0, "merge buffer", "sort")], "doc_id long, body string, title string"
     )
     fa = build_index(
         spark, df, do_stem=False, field_weights={"body": 1.0, "title": 0.5},
     )
-    for change, name in (
-        ({"field_weights": {"body": 1.0, "title": 0.25}}, "field_weights"),
-        ({"n_term_buckets": 8}, "n_term_buckets"),
-    ):
-        with pytest.raises(ValueError, match=name):
-            merge_packed_indexes(spark, [fa, dataclasses.replace(fa, **change)])
+    with pytest.raises(ValueError, match="field_weights"):
+        merge_packed_indexes(spark, [
+            fa, dataclasses.replace(fa, field_weights={"body": 1.0, "title": 0.25}),
+        ])
 
 
 def test_fielded_merge_rejects_shared_doc_ids(spark):
@@ -398,7 +396,7 @@ def _pack_group(rows):
             "positions": [r[3] for r in rows],
         }
     ).sort_values("doc_id")
-    return _pack_many(pdf, {"content": 10.0}, 8)  # pack-time avgdl irrelevant to blobs
+    return _pack_many(pdf, {"content": 10.0})  # pack-time avgdl irrelevant to blobs
 
 
 @given(_split_groups())
@@ -410,7 +408,7 @@ def test_merge_rows_equals_direct_pack_property(case):
     n_srcs, src_of, docs, avgdl = case
     per_src = [[d for d, s in zip(docs, src_of) if s == i] for i in range(n_srcs)]
     rows = [_pack_group(p).iloc[0] for p in per_src if p]
-    merged = _merge_rows(rows, avgdl, 8)
+    merged = _merge_rows(rows, avgdl)
 
     want = _pack_many(
         pd.DataFrame(
@@ -424,7 +422,7 @@ def test_merge_rows_equals_direct_pack_property(case):
                 "positions": [d[3] for d in docs],
             }
         ).sort_values("doc_id"),
-        {"content": avgdl}, 8,
+        {"content": avgdl},
     ).iloc[0]
     for col in ("n", "cf", "doc_ids_vb", "tfs_vb", "dls_vb", "pos_vb"):
         assert merged[col] == want[col], col

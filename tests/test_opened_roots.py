@@ -122,9 +122,7 @@ def test_a_two_field_index_round_trips(spark, halves, tmp_path):
     opened = load_index(spark, root)
     assert opened.field_weights == weights
     assert opened.stats == idx.stats
-    assert (opened.do_stem, opened.doc_shard_size, opened.n_term_buckets) == (
-        idx.do_stem, idx.doc_shard_size, idx.n_term_buckets,
-    )
+    assert (opened.do_stem, opened.doc_shard_size) == (idx.do_stem, idx.doc_shard_size)
     for stage in STAGE_LAYOUT:
         assert _sorted_rows(getattr(opened, stage)) == _sorted_rows(getattr(idx, stage)), stage
     for q in QUERIES:
@@ -181,3 +179,56 @@ def test_save_index_leaves_no_manifest_of_the_index_it_replaces(spark, halves, f
     pdf.to_parquet(src, index=False)
     assert build_job.main(["--source", src, "--out", out]) == 0
     assert load_index(spark, out).stats == full.stats
+
+
+def _unsorted_files(stages, stage, keys):
+    """(files of ``stage`` whose rows are out of ``keys`` order, files read),
+    read file by file with pyarrow."""
+    import pyarrow.parquet as pq
+
+    bad, n = [], 0
+    for d, _, files in os.walk(os.path.join(stages, stage)):
+        for f in (f for f in files if f.endswith(".parquet")):
+            t = pq.read_table(os.path.join(d, f), columns=keys)
+            rows = list(zip(*(t.column(k).to_pylist() for k in keys)))
+            n += 1
+            if rows != sorted(rows):
+                bad.append(os.path.relpath(os.path.join(d, f), stages))
+    return bad, n
+
+
+def test_every_stage_file_is_in_key_order(spark, tmp_path):
+    """Every written packed file holds its rows in (term, doc_shard) order
+    and every term_stats file in term order, in a checkpointed two-field
+    build and in a save_index root alike, so Parquet's per-row-group min/max
+    statistics prune term lookups inside a term_bucket. (A sort on the
+    partition column that the partitioned writer adds would replace the
+    runner's own sort and leave rows in arrival order.)"""
+    pdf = corpus.generate_pandas(60, seed=27)
+    pdf["title"] = pdf.content.str.split().str[:6].str.join(" ")
+    src = spark.createDataFrame(pdf)
+    weights = {"content": 1.0, "title": 0.5}
+    ckpt = str(tmp_path / "ckpt" / "stages")
+    build_index(spark, src, checkpoint_dir=ckpt, doc_shard_size=16, field_weights=weights)
+    saved = str(tmp_path / "saved")
+    save_index(spark, build_index(spark, src, doc_shard_size=16, field_weights=weights), saved)
+    for stages in (ckpt, os.path.join(saved, "stages")):
+        for stage, keys in (("packed", ["term", "doc_shard"]), ("term_stats", ["term"])):
+            bad, n = _unsorted_files(stages, stage, keys)
+            assert n > 1 and not bad, (stages, stage, bad)
+
+
+def test_load_index_refuses_another_bucket_count(spark, halves, tmp_path):
+    """A root whose summary records a term-bucket count other than
+    build.TERM_BUCKETS (a build of an older version with a bucket setting)
+    is refused with a ValueError that says to rebuild: its terms sit in
+    other buckets than the ones a lookup prunes to."""
+    root = str(tmp_path / "b8")
+    shutil.copytree(halves[2][0], root)
+    path = os.path.join(root, "build_summary.json")
+    with open(path) as f:
+        s = json.load(f)
+    with open(path, "w") as f:
+        json.dump({**s, "term_buckets": 8}, f)
+    with pytest.raises(ValueError, match="built with 8 term buckets.*rebuild"):
+        load_index(spark, root)

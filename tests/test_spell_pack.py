@@ -108,7 +108,7 @@ def test_pack_many_roundtrip(rows):
             "doc_len": [600] * len(rows),
         }
     )
-    packed = _pack_many(pdf, {"content": 100.0}, 64)
+    packed = _pack_many(pdf, {"content": 100.0})
     # groups count == distinct (term, shard)
     assert len(packed) == len({(t[0], t[1]) for t in rows})
     # decode every group and compare to the input
