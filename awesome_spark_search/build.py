@@ -30,18 +30,20 @@ merging; what stays explicit is what the optimizer cannot infer:
   the constant ``TERM_BUCKETS`` (``term_bucket`` partition column), so a
   query's term lookup prunes to q buckets (the role of the reference's
   seek list, via partition pruning + Parquet min/max stats).
-* **one build tail**: ``build_index`` and the streaming
-  ``IncrementalIndexer.to_index`` tokenize their own way, then both end in
-  ``assemble`` (stats, packed, term_stats and their persist rules).
-* **one repack path**: every packed table — this build, the streaming
-  ``IncrementalIndexer.to_index`` and the merge — goes through ``repack``
-  (a (field, term, doc_shard) sort-shuffle streamed through one
-  tail-buffered mapInPandas body). Build and streaming take their stats
-  from ``index_stats`` (one aggregate of additive totals), the merge sums
-  its sources' totals, and both turn totals into stats through the one
-  avgdl formula, ``stats_from_totals``. term_stats of a one-field build
-  rolls up from the packed groups (``packed_term_stats``); with several
-  fields df counts the docs holding the term in ANY field
+* **one producer**: ``build_index`` is the only code that tokenizes; the
+  streaming ``IncrementalIndexer.to_index`` is ``build_index`` over each
+  doc's latest version, folded into a base by the packed merge after
+  ``merge.drop_docs`` removed the base docs it replaces or deletes.
+* **one repack path**: every shuffled packed table — this build and the
+  merge — goes through ``repack`` (a (field, term, doc_shard)
+  sort-shuffle streamed through one tail-buffered mapInPandas body);
+  ``drop_docs`` rewrites packed rows in place with the merge's own head,
+  no shuffle. The build and ``drop_docs`` take their stats from
+  ``index_stats`` (one aggregate of additive totals), the merge sums its
+  sources' totals, and both turn totals into stats through the one avgdl
+  formula, ``stats_from_totals``. term_stats of a one-field index rolls
+  up from the packed groups (``packed_term_stats``); with several fields
+  df counts the docs holding the term in ANY field
   (``any_field_term_stats``), which no one field's rows give.
 
 * **one root format**: a checkpointed ``build_index`` and ``save_index``
@@ -152,8 +154,8 @@ class Index:
     BM25 scores sum ``w_f * idf * tfnorm_f`` over every field, each field
     normalized by its own avgdl. ``packed`` is the only stored form of the
     postings and queries serve from it alone; ``postings`` is a lazy decode
-    of it into long rows for the few readers that want them (SQL views,
-    streaming onto a base). Positions stay their own stream (``pos_vb``),
+    of it into long rows for the few readers that want them (the SQL views
+    and their tests). Positions stay their own stream (``pos_vb``),
     mirroring the reference's frequency/positional file split
     (ref: src/SearchEngine/AwesomeSearchEngine.java:91-100).
     """
@@ -518,29 +520,74 @@ def any_field_term_stats(postings: DataFrame) -> DataFrame:
     )
 
 
-def assemble(
-    runner: StageRunner,
-    postings: DataFrame,
-    doc_map: DataFrame,
-    fields: dict[str, float],
-    do_stem: bool,
-    doc_shard_size: int,
+def build_index(
+    spark: SparkSession,
+    source_df: DataFrame,
+    *,
+    do_stem: bool = True,
+    checkpoint_dir: str | None = None,
+    doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE,
+    field_weights: dict[str, float] | None = None,
 ) -> Index:
-    """THE build tail every tokenizing producer ends in (``build_index`` and
-    the streaming ``IncrementalIndexer.to_index``): stats, packed and
-    term_stats of an index over ``doc_map`` (doc_id, doc_len, field_lens,
-    ...) and its tokenized ``postings`` (field, term, doc_id, tf,
-    positions, doc_len — the field's length), run as ``runner``'s stages.
+    """Build the full index from a source table.
 
-    Persist rules: a runner without a checkpoint dir builds in memory and
-    persists doc_map (before the stats action, whose one collect then both
-    fills the cache and aggregates it), packed and term_stats, which queries
-    read. Only a multi-field index persists its postings, which it reads a
-    second time (``any_field_term_stats``); a checkpointed one drops them
-    once term_stats is written."""
-    in_memory = runner.dir is None
+    ``source_df`` must carry doc_id and every column of ``field_weights``
+    (a {source column: zone weight} map; None is the plain index, the one
+    field ``content`` at 1.0), and may carry (repo, path, commit, lang).
+    Each field tokenizes independently, so positions (and phrases) never
+    run across fields. ``checkpoint_dir`` enables stage-resumable
+    materialization of doc_map, stats, packed and term_stats (see
+    lineage.py); None builds in memory (same plan shapes).
+
+    Persist rules: a build without a checkpoint dir persists doc_map
+    (before the stats action, whose one collect then both fills the cache
+    and aggregates it), packed and term_stats, which queries read. Only a
+    multi-field index persists its tokenized rows, which it reads a second
+    time (``any_field_term_stats``); a checkpointed one drops them once
+    term_stats is written.
+    """
+    fields = dict(field_weights or PLAIN_FIELDS)
+    runner = StageRunner(spark, checkpoint_dir)
+    meta_cols = [c for c in ("repo", "path", "commit", "lang") if c in source_df.columns]
+
+    # Per-document posting accumulation happens map-side inside the Arrow
+    # batch (the reference's PostingTable.put loop, ref: DocumentIndexer.java:
+    # 220-242): ONE narrow mapInPandas pass per field, with NO (term, doc_id)
+    # shuffle, straight into the pack shuffle; the long rows are never stored.
+    # doc_len (the field's length) rides along, so packing joins no doc_map.
+    postings = reduce(DataFrame.unionByName, [
+        doc_postings_flat(source_df, do_stem=do_stem, content_col=f)
+        .withColumn("field", F.lit(f))
+        for f in fields
+    ])
     if len(fields) > 1:
         postings = postings.persist()
+
+    # doc_map never needs Python: sha256 and the stopword-inclusive token
+    # counts are whole-stage-codegen expressions over the source (doc_len
+    # parity with the Python tokenizer is pinned by tests). Each field's
+    # length is computed once, then summed into doc_len and mapped into
+    # field_lens.
+    lens = [f"_len{i}" for i in range(len(fields))]
+    doc_map = runner.run(
+        "doc_map",
+        lambda: source_df.select(
+            "doc_id",
+            *meta_cols,
+            F.sha2(F.concat_ws(" ", *fields), 256).alias("content_sha256"),
+            *[doc_len_col(f).alias(c) for f, c in zip(fields, lens)],
+        ).select(
+            "doc_id",
+            *meta_cols,
+            "content_sha256",
+            reduce(operator.add, map(F.col, lens)).alias("doc_len"),
+            F.create_map(
+                *[x for f, c in zip(fields, lens) for x in (F.lit(f), F.col(c))]
+            ).alias("field_lens"),
+        ),
+        **STAGE_LAYOUT["doc_map"],
+    )
+    in_memory = runner.dir is None
     if in_memory:
         doc_map = doc_map.persist()
 
@@ -579,68 +626,6 @@ def assemble(
         doc_shard_size=doc_shard_size,
         field_weights=fields,
     )
-
-
-def build_index(
-    spark: SparkSession,
-    source_df: DataFrame,
-    *,
-    do_stem: bool = True,
-    checkpoint_dir: str | None = None,
-    doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE,
-    field_weights: dict[str, float] | None = None,
-) -> Index:
-    """Build the full index from a source table.
-
-    ``source_df`` must carry doc_id and every column of ``field_weights``
-    (a {source column: zone weight} map; None is the plain index, the one
-    field ``content`` at 1.0), and may carry (repo, path, commit, lang).
-    Each field tokenizes independently, so positions (and phrases) never
-    run across fields. ``checkpoint_dir`` enables stage-resumable
-    materialization of doc_map, stats, packed and term_stats (see
-    lineage.py); None builds in memory (same plan shapes). The tokenized
-    rows and doc_map go to ``assemble``, which holds the persist rules.
-    """
-    fields = dict(field_weights or PLAIN_FIELDS)
-    runner = StageRunner(spark, checkpoint_dir)
-    meta_cols = [c for c in ("repo", "path", "commit", "lang") if c in source_df.columns]
-
-    # Per-document posting accumulation happens map-side inside the Arrow
-    # batch (the reference's PostingTable.put loop, ref: DocumentIndexer.java:
-    # 220-242): ONE narrow mapInPandas pass per field, with NO (term, doc_id)
-    # shuffle, straight into the pack shuffle; the long rows are never stored.
-    # doc_len (the field's length) rides along, so packing joins no doc_map.
-    postings = reduce(DataFrame.unionByName, [
-        doc_postings_flat(source_df, do_stem=do_stem, content_col=f)
-        .withColumn("field", F.lit(f))
-        for f in fields
-    ])
-
-    # doc_map never needs Python: sha256 and the stopword-inclusive token
-    # counts are whole-stage-codegen expressions over the source (doc_len
-    # parity with the Python tokenizer is pinned by tests). Each field's
-    # length is computed once, then summed into doc_len and mapped into
-    # field_lens.
-    lens = [f"_len{i}" for i in range(len(fields))]
-    doc_map = runner.run(
-        "doc_map",
-        lambda: source_df.select(
-            "doc_id",
-            *meta_cols,
-            F.sha2(F.concat_ws(" ", *fields), 256).alias("content_sha256"),
-            *[doc_len_col(f).alias(c) for f, c in zip(fields, lens)],
-        ).select(
-            "doc_id",
-            *meta_cols,
-            "content_sha256",
-            reduce(operator.add, map(F.col, lens)).alias("doc_len"),
-            F.create_map(
-                *[x for f, c in zip(fields, lens) for x in (F.lit(f), F.col(c))]
-            ).alias("field_lens"),
-        ),
-        **STAGE_LAYOUT["doc_map"],
-    )
-    return assemble(runner, postings, doc_map, fields, do_stem, doc_shard_size)
 
 
 # ---------------------------------------------------------------------------

@@ -17,12 +17,13 @@ Spark shape:
   contribution ceiling and break WAND's skip exactness). That needs only
   the tf/dl streams — the doc_id and position bytes (the bulk of the
   blob) are never decoded.
-* only groups whose doc ranges genuinely interleave (same field, term AND
-  doc_shard in 2+ sources) decode fully and re-encode via the builder's
-  own ``_encode_group`` — byte-compatible output by construction. With
-  monotonically assigned doc_ids (the streaming watermark), delta and
-  base occupy different doc_shards, so this path touches at most one
-  boundary shard per term.
+* a group present in 2+ sources (same field, term AND doc_shard) decodes
+  fully and re-encodes via the builder's own ``_encode_group`` —
+  byte-compatible output by construction. doc_shard spans
+  ``doc_shard_size`` doc_ids (2^20 by default), so below that many docs
+  every index is ONE doc_shard and every term two sources share is
+  re-encoded whole; only sources in different doc_shards pass their
+  groups through.
 
 Over range-disjoint sources no Spark job runs before the repack. stats
 (with every field's avgdl) are the sources' additive totals summed (doc
@@ -39,8 +40,10 @@ the one bucket count ``build.TERM_BUCKETS``, so a row's term_bucket holds.
 Doc sets must be disjoint. When the non-empty sources' [min_doc_id,
 max_doc_id] ranges do not overlap, they are, and no row is read; when
 ranges overlap (interleaved doc_ids), a doc_map duplicate probe decides,
-and the merge kernel checks again defensively. replace/delete semantics
-belong to streaming.IncrementalIndexer, which resolves them BEFORE packing.
+and the merge kernel checks again defensively. Replace and delete are
+resolved by ``drop_docs``, which removes docs from an index before it is
+merged (the remove actions of Delta Lake's log: only the packed rows that
+hold a removed doc are rewritten).
 """
 
 from __future__ import annotations
@@ -62,17 +65,26 @@ from .build import (
     _decode_row,
     _encode_group,
     _groups,
+    any_field_term_stats,
+    index_stats,
+    packed_term_stats,
     repack,
     stats_from_totals,
     term_bucket_col,
+    unpack_postings,
 )
+from .lineage import StageRunner
 
 
-def _merge_rows(rows: list, avgdl: float) -> dict:
-    """Merge 2+ packed rows of the SAME (field, term, doc_shard) into one row.
-    Per-doc [tf, gaps...] segments are self-contained, so the merged
-    position stream is a pure segment gather in merged doc order — no
-    position arithmetic re-runs."""
+_NO_DROP = np.zeros(0, dtype=np.int64)
+
+
+def _merge_rows(rows: list, avgdl: float, drop: np.ndarray = _NO_DROP) -> dict | None:
+    """Merge packed rows of the SAME (field, term, doc_shard) into one row,
+    leaving out the docs in ``drop`` (None when none is left). Per-doc
+    [tf, gaps...] segments are self-contained, so the merged position
+    stream is a pure segment gather in merged doc order — no position
+    arithmetic re-runs."""
     decoded = [_decode_row(r) for r in rows]
     all_ids = np.concatenate([d[0] for d in decoded])
     all_tfs = np.concatenate([d[1] for d in decoded])
@@ -85,6 +97,9 @@ def _merge_rows(rows: list, avgdl: float) -> dict:
         base += stream.size
     seg_start = np.concatenate(seg_start_parts)
     order = np.argsort(all_ids, kind="stable")
+    order = order[~np.isin(all_ids[order], drop)]
+    if not order.size:
+        return None
     ids = all_ids[order]
     if ids.size > 1 and (np.diff(ids) == 0).any():
         raise ValueError(
@@ -120,20 +135,33 @@ def _refresh_bounds(r, avgdl: float) -> dict:
     return out
 
 
-def _merge_many(pdf: pd.DataFrame, avgdl_by_field: dict) -> pd.DataFrame:
-    """``repack`` head over packed rows sorted by PACK_KEYS: a single-source
-    group refreshes its bounds, a multi-source one merges, each against its
-    field's merged avgdl; every key column rides into the output row."""
+def _holds(r, drop: np.ndarray) -> bool:
+    """Whether packed row ``r`` holds a doc of ``drop`` (decodes doc_ids
+    only, and only when something is dropped)."""
+    return bool(drop.size) and bool(
+        np.isin(codec.delta_vbyte_decode_blocked(bytes(r["doc_ids_vb"])), drop).any()
+    )
+
+
+def _merge_many(pdf: pd.DataFrame, avgdl_by_field: dict,
+                drop: np.ndarray = _NO_DROP) -> pd.DataFrame:
+    """Head over packed rows sorted by PACK_KEYS (``repack``'s, or any frame
+    whose rows are distinct groups): a single-source group that holds no
+    doc of ``drop`` refreshes its bounds, any other merges without the
+    dropped docs, each against its field's avgdl; a group left empty is
+    omitted. Every key column rides into the output row."""
     out_rows = []
     for s, e, key in _groups(pdf):
         avgdl = avgdl_by_field[key["field"]]
-        if e - s == 1:
+        if e - s == 1 and not _holds(pdf.iloc[s], drop):
             row = _refresh_bounds(pdf.iloc[s], avgdl)
         else:
-            row = _merge_rows([pdf.iloc[i] for i in range(s, e)], avgdl)
+            row = _merge_rows([pdf.iloc[i] for i in range(s, e)], avgdl, drop)
+            if row is None:
+                continue
         row.update(key)
         out_rows.append(row)
-    return pd.DataFrame(out_rows)
+    return pd.DataFrame(out_rows, columns=PACKED_SCHEMA.fieldNames())
 
 
 def _check_sources(sources: list, *attrs: str) -> None:
@@ -174,8 +202,8 @@ def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
     keeping WAND skipping exact); term_stats sums the sources'. Over
     sources whose doc_id ranges do not overlap no Spark job runs here (the
     returned frames are lazy); overlapping ranges pay one doc_map duplicate
-    probe. doc_map, packed and term_stats are persisted: later merges and
-    queries read them."""
+    probe, which also fills doc_map's cache. doc_map, packed and
+    term_stats are persisted: later merges and queries read them."""
     _check_sources(indexes, "doc_shard_size", "do_stem", "field_weights")
     if any(ix.packed is None for ix in indexes):
         raise ValueError(
@@ -190,18 +218,18 @@ def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
         c for c in first.doc_map.columns
         if all(c in ix.doc_map.columns for ix in indexes[1:])
     ]
-    doc_map = reduce(DataFrame.unionByName, [ix.doc_map.select(common) for ix in indexes])
-    if not _ranges_disjoint([ix.stats for ix in indexes]):
-        dup = (
-            doc_map.groupBy("doc_id").count()
-            .filter(F.col("count") > 1).limit(1).count()
+    doc_map = reduce(
+        DataFrame.unionByName, [ix.doc_map.select(common) for ix in indexes]
+    ).persist()
+    # the probe's one pass over doc_map also fills its cache
+    if not _ranges_disjoint([ix.stats for ix in indexes]) and not (
+        doc_map.groupBy("doc_id").count().filter(F.col("count") > 1).isEmpty()
+    ):
+        doc_map.unpersist()
+        raise ValueError(
+            "merge_packed_indexes: sources share doc_ids — resolve "
+            "replacements upstream (merge.drop_docs) first"
         )
-        if dup:
-            raise ValueError(
-                "merge_packed_indexes: sources share doc_ids — resolve "
-                "replacements upstream (streaming.IncrementalIndexer) first"
-            )
-    doc_map = doc_map.persist()
     stats = _merged_stats([ix.stats for ix in indexes], first.field_weights)
 
     merged = repack(
@@ -225,4 +253,44 @@ def merge_packed_indexes(spark: SparkSession, indexes: list[Index]) -> Index:
         do_stem=first.do_stem,
         doc_shard_size=first.doc_shard_size,
         field_weights=dict(first.field_weights),
+    )
+
+
+def drop_docs(spark: SparkSession, index: Index, doc_ids) -> Index:
+    """``index`` without the docs ``doc_ids`` names (ids it does not hold are
+    ignored): equal to a build of the docs that remain, in packed bytes,
+    term_stats and stats. Nothing is re-tokenized. doc_map is an anti-join
+    against the broadcast ids and stats ONE aggregate over it
+    (``build.index_stats``); packed is one narrow pass in which a row that
+    holds no dropped doc only has its block_max refreshed against the new
+    avgdl, and a row that holds one is re-encoded without it, or left out
+    when it empties; term_stats follow the build's rule. The frames are
+    lazy and not persisted: a merge reads them once into its own persisted
+    frames (persist them to serve the result directly)."""
+    drop = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
+    fields = index.field_weights
+    doc_map = index.doc_map.join(
+        F.broadcast(spark.createDataFrame(pd.DataFrame({"doc_id": drop}), "doc_id long")),
+        "doc_id", "left_anti",
+    )
+    stats = index_stats(doc_map, StageRunner(spark, None), fields)
+
+    def kept(batches):
+        for pdf in batches:
+            yield _merge_many(pdf, stats.avgdl_by_field, drop)
+
+    packed = index.packed.select(*PACKED_SCHEMA.fieldNames()).mapInPandas(
+        kept, PACKED_SCHEMA
+    )
+    return Index(
+        doc_map=doc_map,
+        term_stats=(
+            packed_term_stats(packed) if len(fields) == 1
+            else any_field_term_stats(unpack_postings(packed))
+        ),
+        packed=packed,
+        stats=stats,
+        do_stem=index.do_stem,
+        doc_shard_size=index.doc_shard_size,
+        field_weights=dict(fields),
     )

@@ -5,14 +5,14 @@ operators extend the engine to continuous corpora, which a 100 TB
 training-data pipeline needs:
 
 * ``IncrementalIndexer``: readStream over a documents directory ->
-  ``foreachBatch`` appends per-batch posting partials to a delta area
-  partitioned by term_bucket. The merged view (base + deltas) keeps each
-  doc's latest batch and drops tombstoned docs (one rule, ``_latest_rows``,
-  for postings and doc lengths alike); ``to_index`` hands it to the batch
-  build's own tail (``build.assemble``: stats, repack, term_stats), so a
-  streamed index is byte-identical to a batch build of the same final
-  docs. A base index's long rows are decoded from its packed table
-  (``Index.postings``), the only form an index stores.
+  ``foreachBatch`` appends the batch's documents to ONE append-only events
+  table; ``delete_docs`` appends tombstones to the same table (the add and
+  remove actions of Delta Lake's log, VLDB 2020). ``latest_docs`` applies
+  the one replace-and-tombstone rule, and ``to_index`` is ``build_index``
+  over those docs, so a streamed index is byte-identical to a batch build
+  of the same final docs. A base index is folded in by the packed merge
+  after ``merge.drop_docs`` removed every base doc an event names: the
+  base is never decoded or re-tokenized.
 * ``tumbling_counts``: watermarked tumbling-window aggregation over an events
   stream (late data dropped deterministically by the watermark).
 * ``running_user_totals``: custom stateful operator via
@@ -20,12 +20,12 @@ training-data pipeline needs:
   micro-batches (GroupState), the Spark-native analog of a hand-rolled
   stateful operator.
 
-Scale notes: each micro-batch's posting partial is one narrow map over its
-documents (``batch_postings``: the batch build's map-side accumulation, no
-shuffle); the base + deltas merge is a doc-keyed join plus a duplicate
-collapse, and compaction (``compact_deltas``) periodically folds the deltas
-into one index root, the base of the next ``to_index``, so that merge stays
-O(#deltas since the last compaction).
+Scale notes: a micro-batch is one narrow append of its rows, no
+tokenizing; the latest-version rule is one doc-keyed aggregate over the
+events, and the doc_ids it names go to the driver once per ``to_index``
+as ``drop_docs``'s drop set. Compaction (``compact_deltas``) periodically
+folds the events into one index root, the base of the next ``to_index``,
+so both stay O(#events since the last compaction).
 """
 
 from __future__ import annotations
@@ -39,49 +39,41 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .build import (
-    DEFAULT_DOC_SHARD_SIZE,
-    PLAIN_FIELDS,
-    Index,
-    assemble,
-    save_index,
-    term_bucket_col,
-)
-from .lineage import StageRunner
+from .build import DEFAULT_DOC_SHARD_SIZE, Index, build_index, save_index, term_bucket_col
+from .merge import drop_docs, merge_packed_indexes
 from .textproc import doc_postings_flat, doc_len_col
 
 # ---------------------------------------------------------------------------
 # incremental index ingestion
 # ---------------------------------------------------------------------------
 
+EVENTS_SCHEMA = "doc_id long, batch_id long, content string"
+
 
 def batch_postings(source_df: DataFrame, *, do_stem: bool) -> DataFrame:
-    """One batch's posting partial: (term_bucket, term, doc_id, tf, positions).
-    The batch build's tokenize pass (build.build_index) — map-side
-    accumulation, no shuffle."""
+    """The posting rows (term_bucket, term, doc_id, tf, positions) of
+    ``source_df``'s (doc_id, content): the batch build's tokenize pass
+    (build.build_index) — map-side accumulation, no shuffle."""
     return doc_postings_flat(
         source_df.select("doc_id", "content"), do_stem=do_stem
     ).drop("doc_len").withColumn("term_bucket", term_bucket_col(F.col("term")))
 
 
-def batch_doc_lens(source_df: DataFrame) -> DataFrame:
-    return source_df.select("doc_id", doc_len_col("content").alias("doc_len"))
-
-
 class IncrementalIndexer:
-    """Streaming document ingestion -> append-only posting deltas.
+    """Streaming document ingestion -> one append-only table of document
+    events, ``<delta_dir>/events`` (doc_id, batch_id, content; NULL content
+    is a tombstone).
 
     Mutation model (everything is append-only on disk; semantics come from
-    the merge):
+    ``latest_docs``):
 
-    * new doc_id        -> indexed from its batch's partial
+    * new doc_id        -> indexed from its batch's row
     * re-ingested doc   -> wholly REPLACED by its latest batch
-      (``merged_postings`` keeps only the max-batch rows per doc)
     * deleted doc       -> ``delete_docs`` appends a tombstone; the doc
-      disappears from every merged view until a LATER batch re-ingests it
+      disappears from every view until a LATER batch re-ingests it
       (takedown/right-to-be-forgotten flow for a training corpus)
     * replayed batch    -> idempotent (at-least-once sinks collapse to the
-      same rows)
+      same row)
     """
 
     def __init__(self, spark: SparkSession, delta_dir: str, *, do_stem: bool = True):
@@ -89,17 +81,20 @@ class IncrementalIndexer:
         self.delta_dir = delta_dir
         self.do_stem = do_stem
 
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        postings = batch_postings(batch_df, do_stem=self.do_stem)
-        (
-            postings.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .partitionBy("term_bucket")
-            .parquet(os.path.join(self.delta_dir, "postings"))
+    def _append(self, events: DataFrame) -> None:
+        events.write.mode("append").parquet(os.path.join(self.delta_dir, "events"))
+
+    def _events(self) -> DataFrame:
+        return self.spark.read.schema(EVENTS_SCHEMA).parquet(
+            os.path.join(self.delta_dir, "events")
         )
-        batch_doc_lens(batch_df).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(os.path.join(self.delta_dir, "doc_lens"))
+
+    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        self._append(batch_df.select(
+            F.col("doc_id").cast("long"),
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            F.col("content").cast("string"),
+        ))
 
     def start(self, stream_df: DataFrame, checkpoint: str, *,
               trigger_available_now: bool = True):
@@ -114,114 +109,43 @@ class IncrementalIndexer:
 
     def delete_docs(self, doc_ids, batch_id: int) -> None:
         """Append tombstones for ``doc_ids``. ``batch_id`` orders the delete
-        against ingests: the doc is gone from merged views unless a LATER
-        batch re-ingests it. Append-only like everything else — no rewrite of
-        existing delta files; the merge applies the semantics."""
-        df = self.spark.createDataFrame(
-            [(int(d), int(batch_id)) for d in doc_ids], "doc_id long, batch_id long"
-        )
-        df.write.mode("append").parquet(os.path.join(self.delta_dir, "tombstones"))
+        against ingests: the doc is gone from every view unless a LATER
+        batch re-ingests it. Append-only like everything else — no rewrite
+        of existing event files; ``latest_docs`` applies the semantics."""
+        self._append(self.spark.createDataFrame(
+            [(int(d), int(batch_id), None) for d in doc_ids], EVENTS_SCHEMA
+        ))
 
-    def _tombstone_max(self) -> DataFrame | None:
-        """(doc_id, _tb = latest tombstone batch), or None if no deletes.
-
-        Existence is probed through Spark itself (PATH_NOT_FOUND -> None),
-        NOT os.path: delta_dir may be an hdfs://... or s3a://... URI where a
-        driver-local isdir() is always False — which would silently no-op
-        every tombstone (the takedown flow must never fail open). Any other
-        read failure (permissions, corrupt files) re-raises."""
-        from pyspark.errors import AnalysisException
-
-        path = os.path.join(self.delta_dir, "tombstones")
-        try:
-            t = self.spark.read.parquet(path)
-            t.schema  # force analysis so a missing path surfaces here
-        except AnalysisException as exc:
-            cls = exc.getCondition() if hasattr(exc, "getCondition") else exc.getErrorClass()
-            if cls == "PATH_NOT_FOUND":
-                return None
-            raise
-        return t.groupBy("doc_id").agg(F.max("batch_id").alias("_tb"))
-
-    def _latest_rows(self, parts: DataFrame) -> DataFrame:
-        """The rows of ``parts`` (doc_id, batch_id long, ...; a base joins in
-        as batch -1, losing to any delta) from their doc's LATEST batch that
-        no later tombstone removes: THE replace-and-tombstone rule of every
-        merged view. The per-doc latest batch comes from the doc_lens delta
-        — one row per (doc_id, batch) REGARDLESS of token count — not from
-        postings rows: a doc re-ingested with empty/all-stopword text has no
-        postings rows in its new batch, and a postings-derived watermark
-        would leave its OLD batch 'latest' (stale terms searchable while
-        doc_lens reports the new length). Docs only in the base (no delta
-        row) keep the base watermark -1. Both joins are doc-keyed against
-        delta-sized frames."""
-        latest = (
-            self.spark.read.parquet(os.path.join(self.delta_dir, "doc_lens"))
-            .groupBy("doc_id")
-            .agg(F.max(F.col("batch_id").cast("long")).alias("_latest"))
-        )
-        kept = (
-            parts.join(latest, "doc_id", "left")
-            .withColumn("_eff", F.coalesce(F.col("_latest"), F.lit(-1).cast("long")))
-            .filter(F.col("batch_id") == F.col("_eff"))
-        )
-        tomb = self._tombstone_max()
-        if tomb is not None:
-            # a doc survives only if something was ingested AFTER its last
-            # tombstone
-            kept = kept.join(tomb, "doc_id", "left").filter(
-                F.col("_tb").isNull() | (F.col("_tb") < F.col("_eff"))
-            )
-        return kept
-
-    def merged_postings(self, base: DataFrame | None = None) -> DataFrame:
-        """Queryable postings = base (batch build) + streamed deltas.
-        Idempotent under replay AND re-ingest: a document's postings are
-        taken from its LATEST batch only (``_latest_rows``). All of a row's
-        fields come from the same record, so tf == len(positions) always
-        holds, and a term dropped by the new version of a doc disappears
-        (independent max(tf)/max(positions) across versions could mix
-        records and corrupt the packed position stream downstream)."""
-        delta = self.spark.read.parquet(os.path.join(self.delta_dir, "postings"))
-        parts = delta.select(
-            "term_bucket", "term", "doc_id",
-            F.col("batch_id").cast("long").alias("batch_id"), "tf", "positions",
-        )
-        if base is not None:
-            parts = base.select(
-                "term_bucket", "term", "doc_id",
-                F.lit(-1).cast("long").alias("batch_id"), "tf", "positions",
-            ).unionByName(parts)
+    def latest_docs(self) -> DataFrame:
+        """(doc_id, content) of every doc's latest version: THE
+        replace-and-tombstone rule. Per doc the max of (batch_id, is
+        tombstone, content) wins, so a tombstone beats an ingest of the
+        same batch, a replayed batch collapses to one row, and the doc is
+        dropped when its winner is a tombstone. Every event is one row, so a
+        version that tokenizes to nothing still replaces the old one."""
+        latest = F.max(F.struct(
+            "batch_id", F.col("content").isNull().alias("gone"), "content"
+        ))
         return (
-            self._latest_rows(parts)
-            # replay of the winning batch duplicates identical rows -> collapse
-            .groupBy("term_bucket", "term", "doc_id")
-            .agg(F.max("tf").alias("tf"), F.max("positions").alias("positions"))
+            self._events().groupBy("doc_id").agg(latest.alias("v"))
+            .filter(~F.col("v.gone"))
+            .select("doc_id", F.col("v.content").alias("content"))
         )
 
-    def doc_lens(self, base_lens: DataFrame | None = None) -> DataFrame:
-        """(doc_id, doc_len) under the same latest-batch-wins + tombstone
-        rule as merged_postings (``_latest_rows``). ``base_lens`` (doc_id,
-        doc_len) joins in as batch -1, so batch-built docs are replaced by
-        re-ingests and removed by tombstones exactly like streamed ones."""
-        d = self.spark.read.parquet(os.path.join(self.delta_dir, "doc_lens"))
-        parts = d.select(
-            "doc_id", F.col("batch_id").cast("long").alias("batch_id"), "doc_len"
-        )
-        if base_lens is not None:
-            parts = base_lens.select(
-                "doc_id", F.lit(-1).cast("long").alias("batch_id"), "doc_len"
-            ).unionByName(parts)
-        # replay of the winning batch duplicates identical rows -> collapse
-        return self._latest_rows(parts).groupBy("doc_id").agg(F.max("doc_len").alias("doc_len"))
+    def merged_postings(self) -> DataFrame:
+        """The posting rows of ``latest_docs`` (``batch_postings``)."""
+        return batch_postings(self.latest_docs(), do_stem=self.do_stem)
+
+    def doc_lens(self) -> DataFrame:
+        """(doc_id, doc_len) of ``latest_docs``."""
+        return self.latest_docs().select("doc_id", doc_len_col("content").alias("doc_len"))
 
     def compact_deltas(self, out_dir: str) -> dict:
-        """Fold the append-only delta area into one index root at
-        ``out_dir``: the deltas' ``to_index()``, written by
-        ``build.save_index`` like every other root (packed; no long postings
-        table). The root is the next base: stream into a fresh delta area
-        and serve ``to_index(base=load_index(spark, out_dir))``. Run it
-        periodically, so the query-side merge stays O(#deltas since the last
+        """Fold the events into one index root at ``out_dir``: the events'
+        ``to_index()``, written by ``build.save_index`` like every other
+        root. The root is the next base: stream into a fresh delta area and
+        serve ``to_index(base=load_index(spark, out_dir))``. Run it
+        periodically, so ``to_index`` stays O(#events since the last
         compaction). Returns the root's summary."""
         return save_index(self.spark, self.to_index(), out_dir)
 
@@ -231,33 +155,35 @@ class IncrementalIndexer:
         *,
         doc_shard_size: int = DEFAULT_DOC_SHARD_SIZE,
     ) -> Index:
-        """Materialize a queryable Index over base + streamed deltas — the
-        same QueryExecutor runs unchanged over a continuously-ingested
-        corpus; any Index is a base (its postings decode from its packed
-        rows), one opened from disk included. The merged doc lens and
-        postings go through the batch build's own tail (``build.assemble``):
-        stats, the repack into the delta+VByte block-directory form every
-        query serves from, and term_stats — so run it per compaction, not
-        per query."""
-        # a streamed index is plain: its one field is the whole content
-        if base is not None and base.field_weights != PLAIN_FIELDS:
-            raise ValueError("to_index streams onto a plain (one-field) base only")
-        (field,) = PLAIN_FIELDS
-        # base doc lens merge under the SAME latest-wins + tombstone rule as
-        # the postings (a tombstoned or re-ingested base doc must not leak
-        # its old doc_len into n_docs/avgdl/BM25 normalization)
-        doc_map = self.doc_lens(
-            base.doc_map.select("doc_id", "doc_len") if base is not None else None
-        ).withColumn("field_lens", F.create_map(F.lit(field), F.col("doc_len")))
-        postings = (
-            self.merged_postings(base.postings if base is not None else None)
-            .join(doc_map, "doc_id")
-            .select(F.lit(field).alias("field"), "term", "doc_id", "tf", "positions", "doc_len")
+        """A queryable Index over base + events: ``build_index`` over
+        ``latest_docs``. A ``base`` (any Index, one opened from disk
+        included) loses every doc an event names — each was replaced or
+        deleted — through ``merge.drop_docs``, and the packed merge folds
+        the built docs in; its source checks refuse a base of another
+        do_stem, doc_shard_size or field set. The merged packed and
+        term_stats are filled (one pass each through Spark's no-op sink)
+        before the built frames are unpersisted, so the returned Index's
+        three frames are all this leaves cached and nothing is tokenized
+        twice; the merged doc_map needs no tokenizing, and the merge's
+        duplicate probe fills it whenever ranges overlap. Run it per
+        compaction, not per query."""
+        delta = build_index(
+            self.spark, self.latest_docs(), do_stem=self.do_stem,
+            doc_shard_size=doc_shard_size,
         )
-        return assemble(
-            StageRunner(self.spark, None), postings, doc_map, PLAIN_FIELDS,
-            self.do_stem, doc_shard_size,
-        )
+        if base is None:
+            return delta
+        named = self._events().select("doc_id").toPandas()["doc_id"]
+        try:
+            merged = merge_packed_indexes(
+                self.spark, [drop_docs(self.spark, base, named), delta]
+            )
+            for df in (merged.packed, merged.term_stats):
+                df.write.format("noop").mode("overwrite").save()
+        finally:
+            for df in (delta.doc_map, delta.packed, delta.term_stats):
+                df.unpersist()
+        return merged
 
 
 # ---------------------------------------------------------------------------

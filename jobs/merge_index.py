@@ -14,7 +14,8 @@ layout, each stage with its manifest, replacing any index already under
 ``--out``: the summary and manifests go first and the summary is written
 last, atomically, so a merge that dies mid-write leaves a root jobs/query.py
 refuses. Doc sets must be disjoint (re-ingest and tombstones belong to the
-streaming path). Sources that cannot merge (shared doc_ids, mismatched
+streaming path, which removes replaced and deleted docs from its base with
+``merge.drop_docs`` before it merges). Sources that cannot merge (shared doc_ids, mismatched
 doc_shard_size, stemming or field weights, a root load_index cannot serve)
 and an ``--out`` that is one of the input roots end with a one-line error on
 stderr and exit code 2, before anything is written.

@@ -346,6 +346,81 @@ def test_three_way_merge(spark):
 
 
 # ---------------------------------------------------------------------------
+# drop_docs: an index without some docs equals a build of the docs that remain
+# ---------------------------------------------------------------------------
+
+DROP_WORDS = ["merge", "buffer", "sort", "alpha", "beta", "gamma", "delta"]
+
+
+def _drop_corpus():
+    """300 docs: "common" is in every body, so its group spans three
+    128-posting blocks; "zebra" is doc 5's alone."""
+    rows = []
+    for d in range(300):
+        body = " ".join(["common"] + [DROP_WORDS[(d + j) % 7] for j in range(1 + d % 5)])
+        if d == 5:
+            body += " zebra"
+        rows.append((d, body, " ".join(DROP_WORDS[(d * 3 + j) % 7] for j in range(1 + d % 2))))
+    return rows
+
+
+@pytest.fixture(scope="module", params=["plain", "two_field"])
+def drop_case(request, spark):
+    """(source frame, build kwargs, index over every doc)."""
+    src = spark.createDataFrame(_drop_corpus(), "doc_id long, body string, title string")
+    if request.param == "plain":
+        src = src.selectExpr("doc_id", "body AS content")
+        kw = dict(do_stem=False)
+    else:
+        kw = dict(do_stem=False, field_weights={"body": 1.0, "title": 0.5})
+    return src, kw, build_index(spark, src, **kw)
+
+
+def _packed_bytes(ix):
+    return {
+        (r["field"], r["term"], r["doc_shard"]): {
+            c: bytes(v) if isinstance(v, (bytes, bytearray)) else v
+            for c, v in r.asDict().items()
+        }
+        for r in ix.packed.collect()
+    }
+
+
+def _term_stats_rows(ix):
+    return sorted(tuple(r) for r in ix.term_stats.select("term", "df", "cf", "term_bucket").collect())
+
+
+@pytest.mark.parametrize("drop", [
+    pytest.param([5], id="only_posting_of_a_group"),
+    pytest.param([200], id="inside_a_multi_block_group"),
+    pytest.param(list(range(300)), id="every_doc"),
+    pytest.param([1000, 1001], id="ids_not_held"),
+])
+def test_drop_docs_equals_rebuild_of_the_rest(spark, drop_case, drop):
+    from awesome_spark_search.merge import drop_docs
+
+    src, kw, full = drop_case
+    got = drop_docs(spark, full, drop)
+    want = build_index(spark, src.filter(~src.doc_id.isin(drop)), **kw)
+    packed = _packed_bytes(got)
+    assert packed == _packed_bytes(want)
+    assert _term_stats_rows(got) == _term_stats_rows(want)
+    assert got.stats == want.stats
+    assert sorted(r["doc_id"] for r in got.doc_map.collect()) == sorted(
+        r["doc_id"] for r in want.doc_map.collect()
+    )
+    before = _packed_bytes(full)
+    if drop == [5]:  # zebra's group held only doc 5 and is gone
+        zebra = [k for k in before if k[1] == "zebra"]
+        assert zebra and not any(k in packed for k in zebra)
+    if drop == [200]:
+        common = next(v for k, v in before.items() if k[1] == "common")
+        assert common["n"] == 300 and len(common["blk_first_doc"]) == 3
+    if drop == [1000, 1001]:
+        assert packed == before
+
+
+# ---------------------------------------------------------------------------
 # kernel-level property: for ANY split of a posting group across sources,
 # _merge_rows produces byte-identical output to packing the union directly
 # (the merged == rebuilt invariant at codec granularity, incl. groups that

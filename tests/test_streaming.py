@@ -503,3 +503,54 @@ def test_tombstone_and_reingest_against_batch_base(spark, tmp_path):
     assert [r["doc_id"] for r in ex.search("banana", k=5).collect()] == [1]
     assert ex.search("apple", k=5).collect() == []
     assert ex.search("bread", k=5).collect() == []  # dropped by re-ingest
+
+
+@pytest.mark.parametrize("other", ["do_stem", "doc_shard_size", "fields"])
+def test_to_index_refuses_a_base_of_other_settings(spark, tmp_path, other):
+    """A base built with another stemming, doc_shard_size or field set would
+    merge into an index whose docs do not answer the same query terms (a
+    do_stem=False base under a stemming indexer finds "running buffers
+    quickly" for no stemmed query): to_index raises instead."""
+    from awesome_spark_search.build import build_index
+
+    docs = spark.createDataFrame(
+        [(0, "running buffers quickly", "run")], "doc_id long, content string, title string"
+    )
+    kw = dict(do_stem=True)
+    if other == "do_stem":
+        kw["do_stem"] = False
+    elif other == "doc_shard_size":
+        kw["doc_shard_size"] = 16
+    else:
+        kw["field_weights"] = {"content": 1.0, "title": 0.5}
+    base = build_index(spark, docs, **kw)
+    ingest = IncrementalIndexer(spark, str(tmp_path / "delta_other"), do_stem=True)
+    ingest.foreach_batch(
+        spark.createDataFrame([(1, "buffers running")], "doc_id long, content string"), 0
+    )
+    with pytest.raises(ValueError):
+        ingest.to_index(base)
+
+
+def test_to_index_leaves_no_cached_frame(spark, tmp_path, doc_pdf):
+    """After to_index(base) with a re-ingest and a delete, and an unpersist
+    of the returned Index's three frames, the session caches no frame
+    to_index created."""
+    from awesome_spark_search.build import build_index
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    entries = cache.getClass().getDeclaredField("cachedData")
+    entries.setAccessible(True)
+
+    base = build_index(spark, spark.createDataFrame(doc_pdf.iloc[:80]), do_stem=True)
+    ingest = IncrementalIndexer(spark, str(tmp_path / "delta_cache"), do_stem=True)
+    ingest.foreach_batch(spark.createDataFrame(doc_pdf.iloc[80:]), 0)
+    redo = doc_pdf[doc_pdf.doc_id == 3].assign(content="merge sort buffer")
+    ingest.foreach_batch(spark.createDataFrame(redo), 1)
+    ingest.delete_docs([4], batch_id=2)
+    before = entries.get(cache).size()
+    idx = ingest.to_index(base)
+    assert idx.stats.n_docs == N_DOCS - 1
+    for df in (idx.doc_map, idx.packed, idx.term_stats):
+        df.unpersist()
+    assert entries.get(cache).size() == before
